@@ -31,12 +31,6 @@ def month_start(col: Column | str) -> Column:
     return F.date_trunc("month", c).cast("date")
 
 
-def fmt_datetime(col: Column | str) -> Column:
-    """Reference's `'%Y-%m-%d %H:%M:%S'` coercion (F5)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-
-
 def epoch_seconds(col: Column | str) -> Column:
     """Fractional epoch seconds (microsecond precision) for timestamp
     arithmetic — DuckDB `epoch(ts)` equivalent.

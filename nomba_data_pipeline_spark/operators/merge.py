@@ -37,11 +37,13 @@ partitions present in the incoming batch — no full rewrite at 100 TB.
 
 from __future__ import annotations
 
-import os
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from nomba_data_pipeline_spark.operators import footers
 
 
 def fs_and_path(spark: SparkSession, p: str):
@@ -157,7 +159,7 @@ class ParquetTable:
             spark.conf.set(
                 "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
             )
-        except Exception:
+        except AnalysisException:
             pass  # conf locked down (e.g. Connect policy) — writes still work
 
     # -- filesystem plumbing -------------------------------------------------
@@ -211,90 +213,44 @@ class ParquetTable:
         difference between a metadata read and rescanning the fact's
         tracking column on every refresh.
 
-        Exactness guard: string stats may be TRUNCATED by writers
-        (parquet allows bound prefixes), so only numeric / date /
-        timestamp columns use the stats path; anything else — or a
-        non-locally-readable filesystem, or any file missing stats —
-        falls back to the exact scan agg. On object stores the same
-        footer reads are range requests (cheap); this implementation
-        reads them with pyarrow and therefore gates on local paths,
-        falling back to the scan elsewhere.
+        The footers answer when the table is a local directory
+        (footers.data_files) and every non-empty data file holds exact
+        min/max for the column (footers.read_footer: not a partition
+        column, not a string, no all-NULL row group). Otherwise the
+        exact scan (high_water_mark) answers. A footer pyarrow cannot
+        read raises. On object stores the same footer reads would be
+        range requests; this implementation reads them with pyarrow and
+        therefore scans there.
         """
         if not self.exists():
             return None
-        local = self.path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isdir(local):
+        files = footers.data_files(self.path)
+        if not files:
             return self.high_water_mark(tracking_col)
-        try:
-            import datetime
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(
-                _glob.glob(os.path.join(local, "**", "*.parquet"), recursive=True)
-            )
-            if not files:
+        best = None
+        for f in files:
+            rows, stats = footers.read_footer(f, [tracking_col])
+            if rows == 0:
+                continue
+            if tracking_col not in stats:
                 return self.high_water_mark(tracking_col)
-            best = None
-            for f in files:
-                md = _pq.ParquetFile(f).metadata
-                try:
-                    idx = md.schema.names.index(tracking_col)
-                except ValueError:  # partition column — not in data files
-                    return self.high_water_mark(tracking_col)
-                typ = md.schema.column(idx).logical_type.type
-                phys = md.schema.column(idx).physical_type
-                stats_safe = phys in (
-                    "INT32", "INT64", "FLOAT", "DOUBLE",
-                ) or typ in ("TIMESTAMP", "DATE", "DECIMAL")
-                if not stats_safe:
-                    return self.high_water_mark(tracking_col)
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        return self.high_water_mark(tracking_col)
-                    v = st.max
-                    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                        # Spark returns session-tz-naive datetimes; the
-                        # runner compares via F.lit, which accepts aware
-                        # datetimes too — normalize to UTC-naive to
-                        # match the catalog's pinned UTC session
-                        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-                    best = v if best is None else max(best, v)
-            return best
-        except Exception:  # any footer surprise → exact scan
-            return self.high_water_mark(tracking_col)
+            hi = stats[tracking_col][1]
+            best = hi if best is None else max(best, hi)
+        return best
 
     def row_count_stats(self) -> int | None:
         """Total row count from parquet FOOTER metadata — zero data scan,
-        zero Spark jobs on local layouts (same pyarrow footer walk as
-        high_water_mark_stats). Returns None when the table is absent;
-        falls back to a Spark count() on non-local schemes or any footer
-        surprise. Exact by construction: parquet footers record num_rows
-        per file."""
+        zero Spark jobs on local layouts. Returns None when the table is
+        absent, and a Spark count() when the table is not a local
+        directory of data files. Exact by construction: parquet footers
+        record num_rows per file, and footers.data_files lists the files
+        Spark's reader lists."""
         if not self.exists():
             return None
-        local = self.path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isdir(local):
+        files = footers.data_files(self.path)
+        if not files:
             return self.read().count()
-        try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(
-                _glob.glob(os.path.join(local, "**", "*.parquet"), recursive=True)
-            )
-            if not files:
-                return self.read().count()
-            return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-        except Exception:  # any footer surprise → exact count
-            return self.read().count()
+        return sum(footers.read_footer(f)[0] for f in files)
 
     # -- write modes ---------------------------------------------------------
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:

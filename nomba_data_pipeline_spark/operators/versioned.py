@@ -73,15 +73,24 @@ repartition) gives the same skip behavior with file-count control.
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
+import glob
 import json
 import os
 import re
+import shutil
 import uuid
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from nomba_data_pipeline_spark.operators.footers import (
+    local_path,
+    read_footer,
+)
 from nomba_data_pipeline_spark.operators.merge import (
     ParquetTable,
     _align_to_target,
@@ -102,100 +111,79 @@ def _stats_safe(dtype: str) -> bool:
     return dtype.startswith(_STATS_SAFE_PREFIXES)
 
 
-def _local_dir(p: str) -> str | None:
-    """OS path when `p` is handled on the driver's LOCAL filesystem,
-    else None (caller falls back to the Hadoop/Spark path). `file:`
-    URIs are local by definition; a scheme-qualified anything else
-    (hdfs://, s3a://) never is; a scheme-less path counts only when
-    its PARENT directory exists locally — on a cluster whose default
-    FS is HDFS that probe fails and the Hadoop path is used, so this
-    fast path can never misroute metadata to the wrong filesystem."""
-    if p.startswith("file:"):
-        q = p[len("file:"):]
-        while q.startswith("//"):  # file:/// form
-            q = q[1:]
-        return q
-    if "://" in p:
-        return None
-    return p if os.path.isdir(os.path.dirname(p)) else None
-
-
-def _write_json_dir_local(d: str, payload, col: str = "j") -> None:
-    """Driver-side twin of the Spark 1-row-parquet JSON write: same
-    directory shape (one `*.parquet` part file + `_SUCCESS`), same
-    single string column (`j` for versioned metadata; the IVM sidecars
-    use `meta`), so Spark and pyarrow readers mix freely with the
-    Spark-written form. makedirs without exist_ok: the tmp name is
-    uuid-fresh, and failing on an impossible collision is safer than
-    writing into someone else's directory."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(d)
-    pq.write_table(
-        pa.table({col: [json.dumps(payload)]}),
-        os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet"),
-    )
-    with open(os.path.join(d, "_SUCCESS"), "w"):
-        pass
+# what reading a damaged 1-row JSON sidecar raises on either path:
+# pyarrow I/O and format errors (ArrowIOError is an OSError,
+# ArrowInvalid a ValueError), a missing column or row (KeyError,
+# IndexError; TypeError from Spark's first() on no rows), a payload
+# that is not JSON (ValueError), and from the Spark reader, which
+# plans every directory without `_SUCCESS` (a crashed write's temp
+# dir): AnalysisException when no part file is left, Py4JJavaError
+# when the part file is truncated
+UNREADABLE_SIDECAR = (
+    OSError, ValueError, KeyError, IndexError, TypeError,
+    AnalysisException, Py4JJavaError,
+)
 
 
 def read_json_sidecar(spark: SparkSession, p: str, col: str = "j"):
-    """Read a 1-row JSON parquet sidecar, pyarrow-fast on local
-    filesystems (microseconds, zero Spark jobs), Spark reader
-    otherwise — the r15 metadata fast path (OPTIMIZATION_r15 §2),
-    shared by the versioned table and the IVM sidecars
-    (JoinViewTable/AggJoinView `._view_meta`/`._agg_meta`/intents)."""
-    local = _local_dir(p)
+    """Read a 1-row JSON parquet sidecar. A local directory holding
+    exactly one part file and the `_SUCCESS` commit marker is read
+    with pyarrow on the driver (microseconds, zero Spark jobs); any
+    other directory (another scheme, a hand-copied partial directory)
+    goes through the Spark reader. Shared by the versioned table and
+    the IVM sidecars (JoinViewTable/AggJoinView `._view_meta`/
+    `._agg_meta`/intents). A damaged sidecar raises one of
+    UNREADABLE_SIDECAR on either path; it is never retried the other
+    way."""
+    local = local_path(p)
     if local is not None and os.path.isdir(local):
-        try:
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-        except ImportError:
-            _pa = None
-        if _pa is not None:
-            import glob as _glob
+        files = glob.glob(os.path.join(local, "*.parquet"))
+        if len(files) == 1 and os.path.exists(os.path.join(local, "_SUCCESS")):
+            import pyarrow.parquet as pq
 
-            files = _glob.glob(os.path.join(local, "*.parquet"))
-            # require the _SUCCESS commit marker: a hand-copied partial
-            # directory (one part file, no marker) goes to the Spark
-            # reader rather than being silently accepted here
-            if len(files) == 1 and os.path.exists(
-                os.path.join(local, "_SUCCESS")
-            ):
-                # narrow except (ADVICE r15): only storage/format errors
-                # fall back to Spark — a genuinely corrupt JSON payload
-                # (json.loads below) raises the same way on either path,
-                # so retrying it through Spark would just re-fail slower
-                # with a vaguer error
-                try:
-                    payload = (
-                        _pq.read_table(files[0], columns=[col])
-                        .column(col)[0]
-                        .as_py()
-                    )
-                except (OSError, KeyError, IndexError, _pa.lib.ArrowInvalid):
-                    payload = None
-                if payload is not None:
-                    return json.loads(payload)
+            payload = pq.read_table(files[0], columns=[col]).column(col)[0]
+            return json.loads(payload.as_py())
     return json.loads(spark.read.parquet(p).first()[col])
 
 
+def _write_sidecar_local(spark: SparkSession, p: str, table) -> None:
+    """Driver-side twin of a 1-partition Spark write of `table` to
+    local `p`: same directory shape (one `*.parquet` part file +
+    `_SUCCESS`) under the same temp + atomic-swap contract as
+    ParquetTable.overwrite, so Spark and pyarrow readers and writers
+    mix freely. A failed write removes its temp directory and raises;
+    the previous sidecar stays in place. makedirs without exist_ok:
+    the tmp name is uuid-fresh, and failing on an impossible collision
+    is safer than writing into someone else's directory."""
+    import pyarrow.parquet as pq
+
+    tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
+    d = local_path(tmp)
+    os.makedirs(d)
+    try:
+        pq.write_table(
+            table, os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet")
+        )
+        with open(os.path.join(d, "_SUCCESS"), "w"):
+            pass
+    except BaseException:
+        shutil.rmtree(d, ignore_errors=True)
+        raise
+    ParquetTable(spark, p)._swap_in(tmp)
+
+
 def write_json_sidecar(spark: SparkSession, p: str, payload, col: str = "j") -> None:
-    """Write a 1-row JSON parquet sidecar with the same temp+atomic-swap
-    crash contract as ParquetTable.overwrite, pyarrow-fast on local
-    filesystems, Spark writer otherwise. Bytes on disk are identical
-    either way, so the two paths mix freely across writers/readers."""
-    local = _local_dir(p)
-    if local is not None:
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            _write_json_dir_local(_local_dir(tmp), payload, col=col)
-        except Exception:
-            _rm_local_dir(_local_dir(tmp))
-        else:
-            ParquetTable(spark, p)._swap_in(tmp)
-            return
+    """Write a 1-row JSON parquet sidecar (single string column `col`:
+    `j` for versioned metadata, `meta` for the IVM sidecars) with the
+    same temp + atomic-swap crash contract as ParquetTable.overwrite:
+    pyarrow on local filesystems, the Spark writer on every other
+    scheme. Bytes on disk are identical either way, so the two forms
+    mix freely across writers and readers."""
+    if local_path(p) is not None:
+        import pyarrow as pa
+
+        _write_sidecar_local(spark, p, pa.table({col: [json.dumps(payload)]}))
+        return
     ParquetTable(spark, p).overwrite(
         spark.createDataFrame([(json.dumps(payload),)], f"{col} string").coalesce(1)
     )
@@ -204,77 +192,49 @@ def write_json_sidecar(spark: SparkSession, p: str, payload, col: str = "j") -> 
 def read_table_sidecar_local(p: str):
     """pyarrow fast path for a small TYPED sidecar table (ANN index
     params/centroids and friends): the whole table when `p` is a local
-    single-part parquet dir, None otherwise — the caller falls back to
-    the Spark reader. Zero Spark jobs on the fast path."""
-    local = _local_dir(p)
+    single-part parquet dir, None otherwise — the caller then uses the
+    Spark reader. Zero Spark jobs on the fast path; a part file pyarrow
+    cannot read raises."""
+    local = local_path(p)
     if local is None or not os.path.isdir(local):
         return None
-    try:
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        files = _glob.glob(os.path.join(local, "*.parquet"))
-        if len(files) != 1:
-            return None
-        return _pq.read_table(files[0])
-    except Exception:
+    files = glob.glob(os.path.join(local, "*.parquet"))
+    if len(files) != 1:
         return None
+    import pyarrow.parquet as pq
+
+    return pq.read_table(files[0])
 
 
 def write_table_sidecar(spark: SparkSession, p: str, make_arrow, make_spark_df) -> None:
-    """Write a small typed sidecar table with the same temp+atomic-swap
+    """Write a small typed sidecar table with the same temp + atomic-swap
     contract as the JSON sidecars: pyarrow on local filesystems (zero
-    Spark jobs), the Spark writer otherwise. `make_arrow` returns a
-    pyarrow Table and `make_spark_df` the equivalent 1-partition
-    DataFrame — the two must carry IDENTICAL schemas (arrow int32 for a
-    Spark int, list_(float64) for array<double>) so readers mix freely
-    across the two written forms."""
-    local = _local_dir(p)
-    if local is not None:
-        tmp = f"{p}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            import pyarrow.parquet as _pq
-
-            d = _local_dir(tmp)
-            os.makedirs(d)
-            _pq.write_table(
-                make_arrow(),
-                os.path.join(d, f"part-00000-{uuid.uuid4().hex}.parquet"),
-            )
-            with open(os.path.join(d, "_SUCCESS"), "w"):
-                pass
-        except Exception:
-            _rm_local_dir(_local_dir(tmp))
-        else:
-            ParquetTable(spark, p)._swap_in(tmp)
-            return
-    # non-local fallback honors the same temp+atomic-swap contract as
-    # the fast path (ADVICE r15): a crash mid-write must leave the
-    # previous sidecar readable, never a deleted/partial directory
+    Spark jobs), the Spark writer on every other scheme. `make_arrow`
+    returns a pyarrow Table and `make_spark_df` the equivalent
+    1-partition DataFrame — the two must carry IDENTICAL schemas (arrow
+    int32 for a Spark int, list_(float64) for array<double>) so readers
+    mix freely across the two written forms. A failed local write
+    raises and leaves the previous sidecar readable."""
+    if local_path(p) is not None:
+        _write_sidecar_local(spark, p, make_arrow())
+        return
     ParquetTable(spark, p).overwrite(make_spark_df().coalesce(1))
 
 
-def _rm_local_dir(d: str | None) -> None:
-    if d:
-        import shutil
+def _session_to_utc(v: _dt.datetime, session_tz: str) -> _dt.datetime | None:
+    """Session wall time `v` as the UTC-naive datetime manifest stats
+    are rendered from (footers.read_footer normalizes footer bounds the
+    same way). None when Python cannot resolve the session zone (Spark
+    also accepts Java-only ids such as '+08:00') or the UTC instant
+    leaves Python's datetime range — no bound is safe, a wrong one is
+    not."""
+    from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _stat_str(v) -> str:
-    """Canonical string rendering for a manifest stat value.
-
-    pyarrow decodes Spark timestamp footer stats as TZ-AWARE datetimes
-    (str() renders '...+00:00'), while callers of read_range /
-    high_water_mark_str pass session-naive renderings — the lexical
-    comparison in _ranges_intersect and the HWM round-trip would only
-    line up under the repo's pinned-UTC session. Normalize to UTC-naive
-    before rendering (mirroring merge.high_water_mark_stats) so the
-    comparison is correct by construction, not by session config."""
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return str(v)
+    try:
+        return (v.replace(tzinfo=ZoneInfo(session_tz))
+                .astimezone(_dt.timezone.utc).replace(tzinfo=None))
+    except (ZoneInfoNotFoundError, ValueError, OverflowError):
+        return None
 
 
 # simple-comparison conjunct for _predicate_bounds: col OP literal,
@@ -298,8 +258,8 @@ def _norm_ts_literal(lit: str, dtype: str, session_tz: str) -> str | None:
     purge_where). Parse the literal (offset-aware), convert to UTC the
     way Spark evaluates the predicate (a naive `timestamp` literal is
     session wall time; `timestamp_ntz` and `date` shift nothing), and
-    render via _stat_str. Returns None when the literal does not parse
-    or the session zone cannot be resolved — contributing no bound is
+    render via str. Returns None when the literal does not parse or
+    the session zone cannot be resolved — contributing no bound is
     always safe, a wrong bound never is."""
     s = lit.strip().replace("T", " ")
     if dtype == "date" or dtype.startswith("date"):
@@ -315,14 +275,10 @@ def _norm_ts_literal(lit: str, dtype: str, session_tz: str) -> str | None:
         v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     elif dtype == "timestamp":
         # naive literal = session wall time; stats are UTC-naive
-        try:
-            from zoneinfo import ZoneInfo
-
-            v = (v.replace(tzinfo=ZoneInfo(session_tz))
-                 .astimezone(_dt.timezone.utc).replace(tzinfo=None))
-        except Exception:
+        v = _session_to_utc(v, session_tz)
+        if v is None:
             return None
-    return _stat_str(v)
+    return str(v)
 
 
 class ConstraintViolation(ValueError):
@@ -390,15 +346,14 @@ class VersionedTable:
 
     # -- pointer / manifest IO (1-row parquet, atomic swap — the same
     # sidecar pattern JoinViewTable._write_meta documents: a crash
-    # mid-write must leave the previous bytes readable). On LOCAL
-    # layouts both directions go through pyarrow on the driver —
-    # the same footer-walk precedent as high_water_mark_stats and the
-    # versioned_cdf stream source (which already reads these dirs with
-    # pq.read_table) — so pointer/manifest metadata costs microseconds
-    # instead of one Spark job per access; non-local schemes and any
-    # surprise fall back to the Spark reader/writer unchanged. The
-    # bytes on disk are identical either way (1-row parquet, column
-    # `j`), so readers and writers mix freely across the two paths. --
+    # mid-write must leave the previous bytes readable). Which path
+    # runs is decided by the path alone (footers.local_path): local
+    # layouts go through pyarrow on the driver, so pointer/manifest
+    # metadata costs microseconds instead of one Spark job per access;
+    # every other scheme uses the Spark reader/writer. A read or write
+    # that fails raises — it is not retried through the other path.
+    # The bytes on disk are identical either way (1-row parquet,
+    # column `j`), so readers and writers mix freely. --
     def _read_json(self, p: str) -> dict:
         return read_json_sidecar(self.spark, p)
 
@@ -440,11 +395,9 @@ class VersionedTable:
         # untouched — only pointer copies die here).
         def _backup_version(p) -> int:
             try:
-                return int(json.loads(
-                    self.spark.read.parquet(p.toString()).first()["j"]
-                )["version"])
-            except Exception:
-                return -1
+                return int(self._read_json(p.toString())["version"])
+            except UNREADABLE_SIDECAR:
+                return -1  # partial residue: never the one restored
 
         best = max(backups, key=_backup_version)
         for b in backups:
@@ -578,8 +531,8 @@ class VersionedTable:
                     }
             else:
                 # clustered generation (per-file tightness is the
-                # point), or a local-FS footer miss (pyarrow absent /
-                # a file without usable min-max): ONE read-back
+                # point), or a local-FS footer miss (a file without
+                # usable min-max — all-NULL or empty): ONE read-back
                 # aggregation over the generation just written
                 # (page-cache warm, O(generation) — never O(table))
                 rb_stats, rb_rows = self._stats_readback(gen, want, df.schema)
@@ -599,37 +552,25 @@ class VersionedTable:
         _delta_stat_str — observed timestamps arrive session-naive,
         same as collect())."""
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        try:
-            vals = obs.get
-            out = {}
-            for c in cols:
-                lo, hi = vals.get(f"lo_{c}"), vals.get(f"hi_{c}")
-                if lo is None:
-                    continue
-                lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
-                hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
-                if lo_s is not None and hi_s is not None:
-                    out[c] = [lo_s, hi_s]
-            return out or None
-        except Exception:
-            return None  # stats stay an optimization, never a dependency
+        vals = obs.get
+        out = {}
+        for c in cols:
+            lo, hi = vals.get(f"lo_{c}"), vals.get(f"hi_{c}")
+            if lo is None:
+                continue
+            lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
+            hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
+            if lo_s is not None and hi_s is not None:
+                out[c] = [lo_s, hi_s]
+        return out or None
 
     def _file_rows(self, abs_path: str) -> int | None:
         """A file's row count from the parquet FOOTER (no data scan)
         — local filesystems only, same reachability rule as
         _file_stats; None elsewhere (the readback pass fills it on
         footer-less schemes)."""
-        local = abs_path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isfile(local):
-            return None
-        try:
-            import pyarrow.parquet as _pq
-
-            return int(_pq.ParquetFile(local).metadata.num_rows)
-        except Exception:
-            return None
+        local = local_path(abs_path)
+        return None if local is None else read_footer(local)[0]
 
     def row_count(self, version: int | None = None) -> int:
         """COUNT(*) from the MANIFEST alone (Delta's numRecords): the
@@ -650,16 +591,13 @@ class VersionedTable:
 
     def _footers_reachable(self) -> bool:
         """Whether _file_stats' pyarrow footer fast path can work for
-        this table: local paths only (plain or file:-scheme) — the
-        same reachability rule _file_stats itself applies."""
-        p = self.path
-        if p.startswith("file:"):
-            return True
-        return "://" not in p
+        this table — the same footers.local_path rule _file_stats
+        applies to each file."""
+        return local_path(self.path) is not None
 
     def _stats_readback(
         self, gen: str, cols: list[str], schema: StructType,
-    ) -> tuple[dict | None, dict[str, int] | None]:
+    ) -> tuple[dict[str, dict | None], dict[str, int]]:
         """Per-file min/max computed FROM THE DATA of one generation —
         the scheme-agnostic fallback when pyarrow cannot reach the
         footers locally. Exact (tighter than footer stats, which may
@@ -676,34 +614,30 @@ class VersionedTable:
         — the same grouped pass yields both, so COUNT(*)-from-metadata
         stays available off local filesystems too."""
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        try:
-            aggs = [F.count(F.lit(1)).alias("__n")]
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for c in cols:
+            aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
+        rows = (
+            self.spark.read.schema(schema).parquet(gen)
+            .groupBy(F.input_file_name().alias("__f"))
+            .agg(*aggs)
+            .collect()
+        )
+        out: dict[str, dict | None] = {}
+        counts: dict[str, int] = {}
+        for r in rows:
+            st = {}
             for c in cols:
-                aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-            rows = (
-                self.spark.read.schema(schema).parquet(gen)
-                .groupBy(F.input_file_name().alias("__f"))
-                .agg(*aggs)
-                .collect()
-            )
-            out: dict[str, dict | None] = {}
-            counts: dict[str, int] = {}
-            for r in rows:
-                st = {}
-                for c in cols:
-                    lo, hi = r[f"__lo_{c}"], r[f"__hi_{c}"]
-                    if lo is not None:
-                        lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
-                        hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
-                        if lo_s is not None and hi_s is not None:
-                            st[c] = [lo_s, hi_s]
-                rel = self._rel(r["__f"])
-                out[rel] = st or None
-                counts[rel] = int(r["__n"])
-            return out, counts
-        except Exception:
-            # stats stay an optimization, never a dependency
-            return None, None
+                lo, hi = r[f"__lo_{c}"], r[f"__hi_{c}"]
+                if lo is not None:
+                    lo_s = self._delta_stat_str(lo, dtypes.get(c, ""))
+                    hi_s = self._delta_stat_str(hi, dtypes.get(c, ""))
+                    if lo_s is not None and hi_s is not None:
+                        st[c] = [lo_s, hi_s]
+            rel = self._rel(r["__f"])
+            out[rel] = st or None
+            counts[rel] = int(r["__n"])
+        return out, counts
 
     def _stats_targets(self, schema: StructType) -> list[str]:
         cols = [f.name for f in schema.fields
@@ -714,42 +648,17 @@ class VersionedTable:
 
     def _file_stats(self, abs_path: str, cols: list[str]):
         """Per-file min/max from the parquet FOOTER — no data scan.
-        Local filesystems only (pyarrow path), like
-        high_water_mark_stats: elsewhere stats are simply omitted and
-        read_range keeps the file (pruning is an optimization, never a
-        correctness dependency)."""
-        if not cols:
+        Local filesystems only (footers.local_path), like
+        high_water_mark_stats: elsewhere this returns None and
+        _write_gen takes the bounds from the write's Observation or a
+        readback aggregate instead. Rendered with str(): JSON-portable,
+        and compared against str(value) bounds in read_range, exact for
+        the stats-safe types (timestamps arrive UTC-naive)."""
+        local = local_path(abs_path) if cols else None
+        if local is None:
             return None
-        local = abs_path
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-        if "://" in local or not os.path.isfile(local):
-            return None
-        try:
-            import pyarrow.parquet as _pq
-
-            md = _pq.ParquetFile(local).metadata
-            out = {}
-            for c in cols:
-                try:
-                    idx = md.schema.names.index(c)
-                except ValueError:
-                    continue
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if lo is not None:
-                    # JSON-portable; compared against str(value) bounds
-                    # in read_range, exact for the stats-safe types
-                    out[c] = [_stat_str(lo), _stat_str(hi)]
-            return out or None
-        except Exception:
-            return None
+        _, st = read_footer(local, cols)
+        return {c: [str(lo), str(hi)] for c, (lo, hi) in st.items()} or None
 
     # sentinel: "caller took no snapshot" (first-write overwrite) vs a
     # genuine expected parent of None
@@ -1097,16 +1006,6 @@ class VersionedTable:
         t = self._manifest(latest).get("txns") or {}
         return int(t[app]) if app in t else None
 
-    def _cdf_enabled(self) -> bool:
-        """The table-level feed flag: this handle's write_cdf OR the
-        property carried in the latest manifest (one metadata read)."""
-        if self.write_cdf:
-            return True
-        latest = self.latest_version()
-        if latest is None:
-            return False
-        return bool(self._manifest(latest).get("write_cdf"))
-
     def _txn_applied(self, txn: tuple[str, int] | None) -> bool:
         if txn is None:
             return False
@@ -1403,15 +1302,12 @@ class VersionedTable:
         the session zone cannot be resolved — no bound beats a wrong
         one."""
         if isinstance(v, _dt.datetime) and v.tzinfo is None and dtype == "timestamp":
-            tz = self.spark.conf.get("spark.sql.session.timeZone")
-            try:
-                from zoneinfo import ZoneInfo
-
-                v = (v.replace(tzinfo=ZoneInfo(tz))
-                     .astimezone(_dt.timezone.utc).replace(tzinfo=None))
-            except Exception:
+            v = _session_to_utc(
+                v, self.spark.conf.get("spark.sql.session.timeZone")
+            )
+            if v is None:
                 return None
-        return _stat_str(v)
+        return str(v)
 
     def _bounded_candidate_files(self, man: dict,
                                  bounds: dict[str, tuple]) -> list[str]:
@@ -1686,44 +1582,37 @@ class VersionedTable:
         """MAX(tracking_col) as its string rendering — from MANIFEST
         stats when every file carries them (pure metadata, zero scan:
         the versioned analogue of ParquetTable.high_water_mark_stats),
-        falling back to an exact scan otherwise. String form because
-        the runner's delta predicate re-parses it with a cast to the
-        column's own dtype — the same pinned round-trip the join-view
-        HWM sidecar uses."""
+        the exact scan otherwise. String form because the runner's
+        delta predicate re-parses it with a cast to the column's own
+        dtype — the same pinned round-trip the join-view HWM sidecar
+        uses. Integer and decimal stats compare as Decimal (exact past
+        2^53, where float() ties distinct bigints), float and double as
+        float, timestamps and dates lexically (ISO renderings). A stat
+        string that does not parse as its column's number (e.g. the
+        undecoded-bytes repr an older pyarrow left) also takes the
+        exact scan."""
         if not self.exists():
             return None
         man = self._resolve(None)
-        best: str | None = None
-        stats_ok = len(man["files"]) > 0
         dtype = next(
             (f.dataType.simpleString()
              for f in StructType.fromJson(json.loads(man["schema"])).fields
              if f.name == tracking_col),
             "",
         )
-        numeric = dtype.startswith(("int", "bigint", "smallint", "tinyint",
-                                    "float", "double", "decimal"))
-        try:
-            for f in man["files"]:
-                st = (f.get("stats") or {}).get(tracking_col)
-                if st is None:
-                    stats_ok = False
-                    break
-                hi = st[1]
-                if best is None:
-                    best = hi
-                elif numeric:
-                    best = hi if float(hi) > float(best) else best
-                else:  # ISO timestamps/dates compare lexically
-                    best = max(best, hi)
-            if stats_ok and best is not None:
-                return best
-        except Exception:
-            # e.g. a decimal column whose footer stats an older pyarrow
-            # left as undecoded bytes — float() would raise. Stats are
-            # an optimization, never a correctness dependency: any
-            # parse surprise falls back to the exact scan below.
-            pass
+        if dtype.startswith(("float", "double")):
+            key = float
+        elif dtype.startswith(("int", "bigint", "smallint", "tinyint", "decimal")):
+            key = decimal.Decimal
+        else:
+            key = str
+        his = [(f.get("stats") or {}).get(tracking_col, [None, None])[1]
+               for f in man["files"]]
+        if his and None not in his:
+            try:
+                return max(his, key=key)
+            except (ValueError, decimal.InvalidOperation):
+                pass  # unparseable stat string: exact scan below
         row = self.read().agg(F.max(tracking_col).alias("m")).first()
         return None if row is None or row["m"] is None else str(row["m"])
 
@@ -1991,7 +1880,7 @@ class VersionedTable:
                 out.append(
                     (name, self._read_json(f"{self.path}/_clones/{name}"))
                 )
-            except Exception:
+            except UNREADABLE_SIDECAR:
                 continue
         return out
 

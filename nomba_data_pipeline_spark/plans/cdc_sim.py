@@ -15,7 +15,7 @@ mechanically:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,23 +63,3 @@ def simulate_plan_updates(
         "updated_at",
         F.when(pick, F.lit(max_ts) + F.expr("INTERVAL 1 DAY")).otherwise(F.col("updated_at")),
     )
-
-
-def simulate_new_transactions(
-    txns: DataFrame, n: int = 100, seed: int = 42
-) -> DataFrame:
-    """Append n synthetic new transactions with fresh ids/timestamps
-    (reference simulate_cdc.py:89-118 inserts new txn rows)."""
-    # one fused aggregation: two separate .first() calls are two full
-    # scan jobs over txns
-    mx = txns.agg(
-        F.max("transaction_id").alias("id"), F.max("updated_at").alias("ts")
-    ).first()
-    max_id = mx["id"] or 0
-    max_ts = mx["ts"]
-    template = txns.orderBy(F.abs(F.hash("transaction_id", F.lit(seed)))).limit(n)
-    # n is small (test harness); the single-partition window is fine here
-    fresh = template.withColumn(
-        "transaction_id", F.lit(max_id) + F.row_number().over(Window.orderBy("transaction_id"))
-    ).withColumn("updated_at", F.lit(max_ts) + F.expr("INTERVAL 1 DAY"))
-    return txns.unionByName(fresh)

@@ -13,8 +13,7 @@ Quality specs transcribe the reference's schema.yml declarations
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from nomba_data_pipeline_spark.plans import models as M
 from nomba_data_pipeline_spark.plans.quality import QualitySpec
@@ -168,11 +167,3 @@ def build_pipeline(
         )
     )
     return runner
-
-
-def summarize_fact(fact: DataFrame) -> DataFrame:
-    """The reference README's manual verification rollup shape."""
-    return fact.groupBy("region", "product_type").agg(
-        F.round(F.sum(F.col("amount").cast("decimal(18,4)")), 2).alias("revenue"),
-        F.count(F.lit(1)).alias("txn_count"),
-    )

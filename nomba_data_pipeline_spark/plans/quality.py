@@ -10,8 +10,7 @@ All declared checks for a model run as ONE aggregation pass
 out-of-set counts fold into a single `df.agg(...)`, so a model pays one
 scan for its whole test battery + row count instead of one action per
 test — at 100 TB the difference between "tests are free-ish" and
-"tests double the load time". The standalone per-check functions remain
-for ad-hoc use.
+"tests double the load time".
 """
 
 from __future__ import annotations
@@ -20,22 +19,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def unique_violations(df: DataFrame, col: str) -> int:
-    """Number of duplicated key groups (0 = unique holds)."""
-    return df.groupBy(col).count().filter(F.col("count") > 1).count()
-
-
-def not_null_violations(df: DataFrame, col: str) -> int:
-    """Number of NULL rows (0 = not_null holds)."""
-    return df.filter(F.col(col).isNull()).count()
-
-
-def accepted_values_violations(df: DataFrame, col: str, values: list) -> int:
-    """Rows whose value is outside the accepted set (NULLs pass — pair
-    with not_null when NULL is also invalid). dbt's accepted_values."""
-    return df.filter(F.col(col).isNotNull() & ~F.col(col).isin(values)).count()
 
 
 def relationship_violations(df: DataFrame, col: str, parent: DataFrame, parent_col: str) -> int:

@@ -262,10 +262,10 @@ class PipelineRunner:
                 for f in done_futs:
                     n = fut_to_name[f]
                     del running[n]
-                    try:
+                    if f.exception() is not None:  # re-raised below
+                        errors[n] = f.exception()
+                    else:
                         done[n], timings[n] = f.result()
-                    except BaseException as e:  # noqa: BLE001 re-raised below
-                        errors[n] = e
         self.last_timings = {n: timings[n] for n in names if n in timings}
         if errors:
             raise errors[min(errors, key=names.index)]
@@ -862,24 +862,20 @@ class PipelineRunner:
     def _save_view_state(self, state_path: str,
                          fact_hwm: str | None, dim_hwm: str | None,
                          fact_version: int | None = None) -> None:
-        # temp+atomic-rename (ParquetTable.overwrite's swap), not a
-        # plain parquet overwrite: a crash mid-save must leave the
-        # PREVIOUS state readable, never a half-written sidecar.
+        # a JSON sidecar: temp + atomic swap, so a crash mid-save leaves
+        # the PREVIOUS state readable, never a half-written sidecar.
         # fact_version: the versioned-fact CDF cursor (the fact table
         # VERSION whose changes are already folded into the view) —
         # None for plain HWM-tracked facts.
-        import json as _json
-
-        ParquetTable(self.spark, state_path).overwrite(
-            self.spark.createDataFrame(
-                [(_json.dumps({
-                    "fact_hwm": fact_hwm,
-                    "dim_hwm": dim_hwm,
-                    "fact_version": fact_version,
-                }),)],
-                "state string",
-            ).coalesce(1)
+        from nomba_data_pipeline_spark.operators.versioned import (
+            write_json_sidecar,
         )
+
+        write_json_sidecar(self.spark, state_path, {
+            "fact_hwm": fact_hwm,
+            "dim_hwm": dim_hwm,
+            "fact_version": fact_version,
+        }, col="state")
 
     def _load_view_state(self, state_path: str) -> dict:
         # a missing or unreadable sidecar (crash between build() and
@@ -888,20 +884,21 @@ class PipelineRunner:
         # the full fact/dim as deltas and converges — one
         # expensive-but-correct recovery run instead of raising until a
         # manual full_refresh
-        import json as _json
-
         from nomba_data_pipeline_spark.operators.merge import fs_and_path
+        from nomba_data_pipeline_spark.operators.versioned import (
+            UNREADABLE_SIDECAR,
+            read_json_sidecar,
+        )
 
         st_fs, st_jp = fs_and_path(self.spark, state_path)
         if st_fs.exists(st_jp):
             try:
-                st = _json.loads(
-                    self.spark.read.parquet(state_path).first()["state"]
-                )
+                st = read_json_sidecar(self.spark, state_path, col="state")
+            except UNREADABLE_SIDECAR:
+                pass
+            else:
                 st.setdefault("fact_version", None)  # pre-CDF sidecars
                 return st
-            except Exception:
-                pass
         return {"fact_hwm": None, "dim_hwm": None, "fact_version": None}
 
     def _apply_schema_policy(self, spec: ModelSpec, target, df: DataFrame) -> None:

@@ -20,15 +20,7 @@ schema on read; no pushdown, so never the at-rest format).
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def stage_key(load_type: str, source: str, target: str, ts: datetime | None = None) -> str:
-    """Reference key pattern {load_type}/{src}_to_{tgt}_{ts} (base_loader.py:784-786)."""
-    ts = ts or datetime.now(timezone.utc)
-    return f"{load_type}/{source}_to_{target}_{ts.strftime('%Y%m%d_%H%M%S')}"
 
 
 def write_stage(df: DataFrame, stage_path: str, fmt: str = "parquet") -> None:

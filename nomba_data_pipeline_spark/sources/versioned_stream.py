@@ -60,17 +60,18 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from nomba_data_pipeline_spark.operators.footers import local_path
+from nomba_data_pipeline_spark.operators.versioned import UNREADABLE_SIDECAR
+
 
 def _local(path: str) -> str:
-    p = path
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    if "://" in p:
+    if not path:
+        raise ValueError("versioned_cdf requires the path option")
+    p = local_path(path)
+    if p is None:
         raise ValueError(
             f"versioned_cdf reads feed files with pyarrow and supports "
-            f"local paths only; got {path!r}"
+            f"existing local paths only; got {path!r}"
         )
     return p
 
@@ -102,8 +103,8 @@ def _latest_version(root: str) -> int | None:
             continue
         try:
             v = int(_read_json_parquet(os.path.join(root, name))["version"])
-        except Exception:
-            continue
+        except UNREADABLE_SIDECAR:
+            continue  # partial residue, never the committed pointer
         if best is None or v > best:
             best = v
     # a backup holds the PRE-swap version: if `_latest` reappeared
@@ -115,8 +116,8 @@ def _latest_version(root: str) -> int | None:
         try:
             cur = int(_read_json_parquet(p)["version"])
             return cur if best is None else max(cur, best)
-        except Exception:
-            pass
+        except UNREADABLE_SIDECAR:
+            pass  # caught mid-swap again: the backup answers
     return best
 
 
@@ -129,8 +130,6 @@ class VersionedCdfDataSource(DataSource):
 
     def schema(self):
         root = _local(self.options.get("path") or "")
-        if not root:
-            raise ValueError("versioned_cdf requires the path option")
         latest = _latest_version(root)
         if latest is None:
             raise ValueError(f"{root} is not a versioned table (no _latest)")
@@ -156,8 +155,6 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options):
         self.schema = schema
         self.root = _local(options.get("path") or "")
-        if not self.root:
-            raise ValueError("versioned_cdf requires the path option")
         sv = options.get("starting_version")
         self._starting = None if sv is None else int(sv)
         # include_preimages=true additionally yields the stored
@@ -248,28 +245,19 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition):
-        version, fpath = partition.value
-        # Arrow fast path (guide §4.2): yield the feed file as ONE
-        # RecordBatch instead of per-row Python tuples — the r16
-        # conversion of the last row-at-a-time Python boundary in the
-        # streaming family. Column alignment (preimage filter, NULL-fill
-        # for post-evolution schemas, the _commit_version constant,
-        # tz-aware -> schema-exact timestamp cast) happens as pyarrow
-        # compute over whole columns. Any surprise falls back to the
-        # original row path below — byte-identical semantics.
-        try:
-            yield from self._read_arrow(version, fpath)
-            return
-        except Exception:
-            pass
-        yield from self._read_rows(version, fpath)
-
-    def _read_arrow(self, version: int, fpath: str):
+        """Yield one feed file as Arrow RecordBatches: no
+        per-row Python objects cross the boundary. Column alignment is
+        pyarrow compute over whole columns: the preimage filter,
+        NULL-fill for columns added after the feed was written, the
+        `_commit_version` constant, and a cast to the declared arrow
+        type — exact for widened integers/decimals and for tz-aware
+        timestamps, and raising on anything genuinely incompatible."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        version, fpath = partition.value
         tbl = pq.read_table(fpath)
         if not self._preimages:
             tbl = tbl.filter(
@@ -284,48 +272,10 @@ class VersionedCdfStreamReader(DataSourceStreamReader):
                     pa.array([version] * tbl.num_rows, type=field.type)
                 )
             elif field.name in have:
-                col = tbl.column(field.name)
-                if col.type != field.type:
-                    # Spark-written timestamps decode tz-aware UTC; the
-                    # declared arrow type may differ only in tz/unit —
-                    # cast is exact for those, and raises (-> row
-                    # fallback) on anything genuinely incompatible
-                    col = col.cast(field.type)
-                cols.append(col)
+                cols.append(tbl.column(field.name).cast(field.type))
             else:  # schema evolved after this feed: NULL-fill
                 cols.append(pa.nulls(tbl.num_rows, type=field.type))
         yield from pa.table(cols, schema=want).to_batches()
-
-    def _read_rows(self, version: int, fpath: str):
-        import datetime as _dt
-
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(fpath)
-        have = set(tbl.column_names)
-        names = [f.name for f in self.schema.fields]
-
-        def _norm(v):
-            # Spark-written timestamps decode tz-aware; the Spark-side
-            # converter expects naive-UTC python datetimes
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return v
-
-        for rec in tbl.to_pylist():
-            # 'update_preimage' rows (r14+ feeds) exist for exact span
-            # folding in diff_versions — stream consumers apply
-            # post-semantics only, same default as changes_between;
-            # include_preimages=true opts in (group-moving updates)
-            if (rec.get("change_type") == "update_preimage"
-                    and not self._preimages):
-                continue
-            yield tuple(
-                version if name == "_commit_version"
-                else _norm(rec.get(name)) if name in have
-                else None  # schema evolved after this feed: NULL-fill
-                for name in names
-            )
 
     def commit(self, end: dict) -> None:
         # offsets live in the stream's checkpoint; feed retention is

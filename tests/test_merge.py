@@ -213,6 +213,63 @@ def test_high_water_mark_stats_matches_scan(spark, tmp_path):
     assert tp.high_water_mark_stats("p") == tp.high_water_mark("p")  # fallback
 
 
+
+def test_footer_stats_skip_uncommitted_residue(spark, tmp_path):
+    """The footer walk lists files the way Spark's reader does: a path
+    component starting with `_` or `.` is metadata or uncommitted
+    residue. A crashed writer's `_temporary` attempt file must not
+    raise the HWM (an incremental model would then skip every source
+    row up to it) or the row count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = ParquetTable(spark, os.path.join(tmp_path, "tbl"))
+    t.overwrite(spark.range(100).select(F.col("id").alias("k")))
+    attempt = os.path.join(t.path, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    pq.write_table(pa.table({"k": pa.array([1_000_000], pa.int64())}),
+                   os.path.join(attempt, "part-00000.parquet"))
+    os.makedirs(os.path.join(t.path, ".hidden"))
+    pq.write_table(pa.table({"k": pa.array([2_000_000], pa.int64())}),
+                   os.path.join(t.path, ".hidden", "part-00000.parquet"))
+    assert t.high_water_mark_stats("k") == t.high_water_mark("k") == 99
+    assert t.row_count_stats() == t.read().count() == 100
+
+
+def test_footer_stats_read_underscore_partition_dirs(spark, tmp_path):
+    """Spark keeps `_`-prefixed names that hold `=` (a partition
+    column named `_p`), so the footer walk must count those files."""
+    t = ParquetTable(spark, os.path.join(tmp_path, "tbl"))
+    t.overwrite(
+        spark.range(30).select(F.col("id").alias("k"), (F.col("id") % 3).alias("_p")),
+        partition_by=["_p"],
+    )
+    assert any(d.startswith("_p=") for d in os.listdir(t.path))
+    assert t.row_count_stats() == t.read().count() == 30
+    assert t.high_water_mark_stats("k") == t.high_water_mark("k") == 29
+
+
+def test_locked_timestamp_conf_still_writes(spark, tmp_path, monkeypatch):
+    """A session that refuses the outputTimestampType conf (Connect
+    policy) still gets a working writer; only an AnalysisException is
+    tolerated, and the footer HWM still equals the scan."""
+    from pyspark.errors import AnalysisException
+
+    def locked(key, value):
+        raise AnalysisException("CANNOT_MODIFY_CONFIG: " + key)
+
+    monkeypatch.setattr(spark.conf, "set", locked)
+    t = ParquetTable(spark, os.path.join(tmp_path, "tbl"))
+    t.overwrite(spark.range(10).select(F.col("id").alias("k")))
+    assert t.high_water_mark_stats("k") == t.high_water_mark("k") == 9
+
+    def broken(key, value):
+        raise RuntimeError("not a conf refusal")
+
+    monkeypatch.setattr(spark.conf, "set", broken)
+    with pytest.raises(RuntimeError):
+        ParquetTable(spark, os.path.join(tmp_path, "tbl"))
+
 def test_merge_roundtrip_explicit_file_scheme(spark, tmp_path):
     """S8: the writer must be filesystem-scheme-clean — the same code
     path serves file://, s3a://, gs:// via the Hadoop FileSystem API.

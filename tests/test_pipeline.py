@@ -671,6 +671,29 @@ def test_join_view_missing_state_sidecar_recovers(spark, tmp_path):
     } == got
 
 
+def test_view_state_sidecar_roundtrip_and_damage(spark, tmp_path):
+    """The view-state sidecar reads back what was saved; a damaged one
+    (part file truncated, or a crash left only the directory) loads as
+    the {None, None} state whose full replay
+    test_join_view_missing_state_sidecar_recovers proves convergent."""
+    from nomba_data_pipeline_spark.plans.runner import PipelineRunner
+
+    r = PipelineRunner(spark, os.path.join(tmp_path, "wh"), SF_SMALL)
+    p = os.path.join(tmp_path, "mart._view_state")
+    blank = {"fact_hwm": None, "dim_hwm": None, "fact_version": None}
+    assert r._load_view_state(p) == blank
+    r._save_view_state(p, "5", "7", 3)
+    assert r._load_view_state(p) == {
+        "fact_hwm": "5", "dim_hwm": "7", "fact_version": 3,
+    }
+    part = os.path.join(p, [f for f in os.listdir(p) if f.endswith(".parquet")][0])
+    with open(part, "r+b") as fh:
+        fh.truncate(8)
+    assert r._load_view_state(p) == blank
+    os.remove(part)
+    assert r._load_view_state(p) == blank
+
+
 @pytest.mark.parametrize(
     "dtype,lo,hi",
     [

@@ -923,6 +923,109 @@ def test_hwm_str_falls_back_on_unparseable_stats(spark, tmp_path):
     assert t.high_water_mark_str("v") == "98"  # exact scan: max(id*2), n=50
 
 
+
+def test_hwm_str_compares_bigint_stats_exactly(spark, tmp_path):
+    """Two bigint maxima above 2^53 tie under float(), so the manifest
+    HWM must compare integer stats exactly — with the SMALLER value's
+    file first in the manifest, a float compare returns the lower one
+    and an incremental model re-reads the row it already loaded."""
+    t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"))
+    rows = spark.sparkContext.parallelize(
+        [(9007199254740992,), (9007199254740993,)], 2
+    )
+    t.overwrite(spark.createDataFrame(rows, "k long"))
+    his = [f["stats"]["k"][1] for f in t._manifest(1)["files"]]
+    assert his == ["9007199254740992", "9007199254740993"]  # smaller first
+    scan = t.read().agg(F.max("k")).first()[0]
+    assert t.high_water_mark_str("k") == str(scan) == "9007199254740993"
+
+
+def test_recover_pointer_skips_unreadable_backups(spark, tmp_path):
+    """A crash inside the pointer swap leaves `_latest.old-*` backups;
+    crash residue among them (an empty directory, a part file that is
+    not parquet) cannot be read and must never be restored — the table
+    reads exactly as it did before the crash."""
+    import shutil
+
+    t = _mk(spark, tmp_path, n=50, files=2)
+    t.merge_upsert(
+        spark.createDataFrame([(1, -1, 0)], "k long, v long, grp int"), ["k"]
+    )
+    want = _rows(t.read())
+    shutil.move(t._latest_path(), f"{t.path}/_latest.old-00000001")
+    os.makedirs(f"{t.path}/_latest.old-00000002")
+    garbage = f"{t.path}/_latest.old-00000003"
+    os.makedirs(garbage)
+    with open(f"{garbage}/part-00000.parquet", "w") as fh:
+        fh.write("not parquet")
+    open(f"{garbage}/_SUCCESS", "w").close()
+    fresh = VersionedTable(spark, t.path)
+    assert fresh.latest_version() == 2
+    assert _rows(fresh.read()) == want
+    assert not [n for n in os.listdir(t.path) if n.startswith("_latest.old-")]
+
+
+def test_clone_registry_skips_crashed_registrations(spark, tmp_path):
+    """A registration that crashed mid-write leaves a temp directory in
+    `_clones/` (empty, or with a truncated part file and no _SUCCESS).
+    The registry lists exactly the committed entries, as if the crashed
+    write had never started."""
+    src = _mk(spark, tmp_path, n=50, files=2)
+    src.clone(os.path.join(str(tmp_path), "dev"))
+    want = src._clone_registry()
+    assert len(want) == 1
+    name = want[0][0]
+    os.makedirs(f"{src.path}/_clones/{name}.tmp-00000001")
+    trunc = f"{src.path}/_clones/{name}.tmp-00000002"
+    os.makedirs(trunc)
+    part = [f for f in os.listdir(f"{src.path}/_clones/{name}")
+            if f.endswith(".parquet")][0]
+    with open(f"{src.path}/_clones/{name}/{part}", "rb") as fh:
+        data = fh.read()
+    with open(f"{trunc}/{part}", "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    assert src._clone_registry() == want
+
+
+def test_unresolvable_session_zone_contributes_no_bound(spark, tmp_path):
+    """Spark accepts session zones Python's zoneinfo cannot resolve
+    (offset ids like '+08:00'). Bounds that need the zone are then
+    dropped — never guessed — so merges and deletes under that session
+    still equal the unpruned result."""
+    import datetime as dt
+
+    from nomba_data_pipeline_spark.operators.versioned import (
+        _norm_ts_literal,
+        _session_to_utc,
+    )
+
+    assert _session_to_utc(dt.datetime(1, 1, 1), "Asia/Tokyo") is None  # < year 1
+    t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"))
+    t.overwrite(
+        spark.range(40).select(
+            F.col("id").alias("k"),
+            F.expr("timestamp'2020-01-01 00:00:00' + make_interval(0, 0, 0, id)")
+            .alias("ts"),
+        ),
+        cluster_by=["ts"], target_files=4,
+    )
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "+08:00")
+        assert t._delta_stat_str(dt.datetime(2020, 1, 1), "timestamp") is None
+        assert _norm_ts_literal("2020-01-02 00:00:00", "timestamp", "+08:00") is None
+        day3 = dt.datetime(2020, 1, 4, tzinfo=dt.timezone.utc)
+        t.merge_upsert(
+            spark.createDataFrame([(103, day3)], "k long, ts timestamp"), ["ts"]
+        )
+        t.delete_where("ts >= timestamp'2020-01-30 08:00:00'")
+        got = sorted(r["k"] for r in t.read().collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    # the upsert found day 3's row (no duplicate key), and
+    # '2020-01-30 08:00:00 +08:00' is day 29 at 00:00 UTC
+    assert got == sorted([k for k in range(29) if k != 3] + [103])
+
 # -- stat-pruned key location (r13) ------------------------------------------
 def _spy_read_files(monkeypatch, t):
     """Capture every file list handed to _read_files (the location

@@ -596,3 +596,174 @@ def test_write_cdf_is_a_table_property_not_a_handle_flag(spark, tmp_path):
     flagless.purge_where("k < 3")
     names = os.listdir(t._cdf_dir(flagless.latest_version()))
     assert "_CDF_FULL" in names
+
+
+# -- the Arrow read path over every feed shape --------------------------------
+def _reader(t, preimages=False):
+    from nomba_data_pipeline_spark.sources.versioned_stream import (
+        VersionedCdfDataSource,
+    )
+
+    opts = {"path": t.path}
+    if preimages:
+        opts["include_preimages"] = "true"
+    src = VersionedCdfDataSource(opts)
+    return src.streamReader(src.schema())
+
+
+def _arrow_rows(t, lo, hi, preimages=False):
+    """Feed rows for versions (lo, hi] exactly as the stream source
+    hands them to Spark: RecordBatches from `read`, one partition per
+    feed file, in the stream schema (the LATEST manifest's columns)."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    r = _reader(t, preimages)
+    batches = [
+        b for p in r.partitions({"version": lo}, {"version": hi})
+        for b in r.read(p)
+    ]
+    names = [f.name for f in r.schema.fields]
+    assert all(b.schema.names == names for b in batches)
+
+    def utc_naive(v):
+        if isinstance(v, dt.datetime) and v.tzinfo is not None:
+            return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return v
+
+    rows = pa.Table.from_batches(batches).to_pylist() if batches else []
+    return names, sorted(
+        (tuple(utc_naive(row[n]) for n in names) for row in rows), key=repr
+    )
+
+
+def _spark_rows(spark, t, lo, hi, names, preimages=False):
+    df = t.changes_between(lo, hi, include_preimages=preimages)
+    have = set(df.columns)
+    cols = [F.col(n) if n in have else F.lit(None).alias(n) for n in names]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def _assert_read_equals_changes_between(spark, t, lo, hi, preimages=False):
+    names, got = _arrow_rows(t, lo, hi, preimages)
+    assert got == _spark_rows(spark, t, lo, hi, names, preimages)
+    return got
+
+
+def test_read_matches_changes_between_with_and_without_preimages(spark, tmp_path):
+    t = _mk(spark, tmp_path)
+    t.merge_upsert(
+        spark.createDataFrame([(5, -5), (200, -200)], "k long, v long"), ["k"]
+    )
+    t.delete_where("k = 7")
+    post = _assert_read_equals_changes_between(spark, t, 1, 3)
+    pre = _assert_read_equals_changes_between(spark, t, 1, 3, preimages=True)
+    assert ("update_preimage", 5, 10, 2) in pre
+    assert not [r for r in post if r[0] == "update_preimage"]
+
+
+def test_read_null_fills_columns_added_after_the_feed(spark, tmp_path):
+    t = _mk(spark, tmp_path)
+    t.merge_upsert(spark.createDataFrame([(5, -5)], "k long, v long"), ["k"])
+    t.evolve_schema_to(
+        spark.createDataFrame([(0, 0, "x")], "k long, v long, w string")
+    )
+    t.merge_upsert(
+        spark.createDataFrame([(6, -6, "six")], "k long, v long, w string"),
+        ["k"],
+    )
+    got = _assert_read_equals_changes_between(
+        spark, t, 1, t.latest_version()
+    )
+    assert ("update", 5, -5, None, 2) in got
+    assert ("update", 6, -6, "six", t.latest_version()) in got
+
+
+def test_read_widens_int_feed_to_promoted_bigint(spark, tmp_path):
+    """Feeds written before an int -> bigint promotion are read under
+    the stream's (latest) bigint schema."""
+    t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"),
+                       write_cdf=True)
+    t.overwrite(spark.range(20).select(
+        F.col("id").alias("k"), F.col("id").cast("int").alias("x")
+    ))
+    t.merge_upsert(spark.createDataFrame([(3, -3)], "k long, x int"), ["k"])
+    t.evolve_schema_to(spark.createDataFrame([(0, 0)], "k long, x bigint"))
+    r = _reader(t)
+    assert dict((f.name, f.dataType.simpleString())
+                for f in r.schema.fields)["x"] == "bigint"
+    got = _assert_read_equals_changes_between(spark, t, 1, 2)
+    assert got == [("update", 3, -3, 2)]
+
+
+def test_read_timestamps_match_changes_between(spark, tmp_path):
+    """tz-aware (timestamp) and wall-clock (timestamp_ntz) columns
+    cross the Arrow boundary with the instants changes_between reads."""
+    import datetime as dt
+
+    t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl"),
+                       write_cdf=True)
+    t.overwrite(spark.range(10).select(
+        F.col("id").alias("k"),
+        F.expr("timestamp'2024-03-10 01:30:00' + make_interval(0, 0, 0, 0, id)")
+        .alias("ts"),
+        F.expr("timestamp_ntz'2024-03-10 01:30:00'").alias("wall"),
+    ))
+    t.merge_upsert(
+        spark.createDataFrame(
+            [(4, dt.datetime(2030, 1, 1, 12, tzinfo=dt.timezone.utc),
+              dt.datetime(2030, 1, 1, 12))],
+            "k long, ts timestamp, wall timestamp_ntz",
+        ),
+        ["k"],
+    )
+    got = _assert_read_equals_changes_between(spark, t, 1, 2)
+    assert got == [("update", 4, dt.datetime(2030, 1, 1, 12),
+                    dt.datetime(2030, 1, 1, 12), 2)]
+
+
+def test_read_of_an_empty_feed_file_yields_no_rows(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    t = _mk(spark, tmp_path)
+    t.merge_upsert(spark.createDataFrame([(5, -5)], "k long, v long"), ["k"])
+    d = t._cdf_dir(2)
+    part = [n for n in os.listdir(d) if n.endswith(".parquet")][0]
+    empty = pq.read_table(os.path.join(d, part)).slice(0, 0)
+    pq.write_table(empty, os.path.join(d, "part-99999-empty.parquet"))
+    spark.catalog.refreshByPath(d)
+    r = _reader(t)
+    parts = [p for p in r.partitions({"version": 1}, {"version": 2})
+             if p.value[1].endswith("part-99999-empty.parquet")]
+    assert len(parts) == 1
+    assert sum(b.num_rows for b in r.read(parts[0])) == 0
+    got = _assert_read_equals_changes_between(spark, t, 1, 2)
+    assert got == [("update", 5, -5, 2)]
+
+
+def test_latest_version_skips_unreadable_pointer_copies(spark, tmp_path, monkeypatch):
+    """Inside a writer's swap window the stream reads the pointer
+    backup; crash residue among the backups, or a `_latest` caught
+    mid-swap, is skipped and the committed version still answers."""
+    import shutil
+
+    from nomba_data_pipeline_spark.sources import versioned_stream as vs
+
+    t = _mk(spark, tmp_path)
+    t.merge_upsert(spark.createDataFrame([(5, -5)], "k long, v long"), ["k"])
+    assert vs._latest_version(t.path) == 2
+    shutil.move(t._latest_path(), f"{t.path}/_latest.old-00000001")
+    os.makedirs(f"{t.path}/_latest.old-00000002")  # empty residue
+    assert vs._latest_version(t.path) == 2
+
+    real_listdir = os.listdir
+
+    def swap_lands_damaged(p):
+        names = real_listdir(p)
+        os.makedirs(t._latest_path(), exist_ok=True)  # no part file yet
+        return names
+
+    monkeypatch.setattr(vs.os, "listdir", swap_lands_damaged)
+    assert vs._latest_version(t.path) == 2
