@@ -593,15 +593,16 @@ def main() -> None:
             delta = emb.select(
                 (F.col("vec_id") + 100_000_000).alias("vec_id"), "embedding"
             )
-            # direct append: O(delta) compute but one commit per touched
-            # bucket dir (~2^n_planes) — right for sizable batches
+            # direct append into the flat lists: O(delta) compute, one
+            # file per delta partition; not replay-safe on its own
             t0 = time.perf_counter()
             lsh_index_append(delta, ipath)
             timings["ann_x64_lsh_index_append_1x"] = round(
                 time.perf_counter() - t0, 3
             )
-            # LSM staging: single-dir commit, the micro-batch/firehose
-            # path (fold amortizes the dir fan-out across many batches)
+            # LSM staging: the micro-batch/firehose path — the
+            # batch-addressed overwrite makes a replayed batch clobber
+            # its own output instead of duplicating it
             t0 = time.perf_counter()
             lsh_index_stage_batch(delta, ipath, 0)
             timings["ann_x64_lsh_index_stage_1x"] = round(

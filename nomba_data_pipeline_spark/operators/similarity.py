@@ -1225,9 +1225,9 @@ def lsh_index(
     hyperplane family as cosine_topk_lsh). Map-only BLAS, no shuffle.
 
     This is the 100 TB amortization of ANN: write the result to parquet
-    (optionally partitioned/bucketed by `buckets[0]`) ONCE, then every
-    query prunes on a materialized long column — a plain codegen filter,
-    zero signature flops at query time. cosine_topk_lsh recomputes
+    ONCE (lsh_index_write stores it flat), then every query filters on
+    the materialized bucket longs — a plain codegen filter after the
+    scan, zero signature flops at query time. cosine_topk_lsh recomputes
     signatures per query because it indexes nothing; at one query per
     corpus that's optimal, at many queries this index wins.
     """
@@ -1299,17 +1299,17 @@ def cosine_topk_lsh_indexed(
     """ANN top-k over a prebuilt lsh_index frame. Query time does ZERO
     signature math on the corpus: candidate pruning is
     `buckets[t] IN (<query buckets>)` — a whole-stage-codegen filter on
-    materialized longs (pushable to the scan when the index is stored
-    partitioned by bucket) — and only surviving rows cross the Arrow
-    boundary for exact scoring. Produces the same candidate set (hence
-    the same top-k) as cosine_topk_lsh with identical
-    n_planes/n_tables/probe_hamming, because both use the same numpy
-    bucketize and collision test.
+    materialized longs, applied after the scan (an array element is
+    neither a partition column nor a pushed parquet filter) — and only
+    surviving rows cross the Arrow boundary for exact scoring. Produces
+    the same candidate set (hence the same top-k) as cosine_topk_lsh
+    with identical n_planes/n_tables/probe_hamming, because both use the
+    same numpy bucketize and collision test.
 
     probe_hamming=1 (multi-probe, matching cosine_topk_lsh's default)
     expands the IN-list per table with the one-bit flips of each query
-    bucket — still a pushable codegen filter / partition-prune list,
-    (n_planes+1)x longer; the exact radius test runs in-batch. n_planes
+    bucket — still one codegen filter, its IN-list (n_planes+1)x
+    longer; the exact radius test runs in-batch. n_planes
     must match the value the index was built with (it sizes the flip
     set, default NUM_HYPERPLANES for both).
     """
@@ -1357,8 +1357,8 @@ def cosine_topk_lsh_indexed(
 
     # mapInArrow, not mapInPandas (guide §4.2): embedding and bucket
     # matrices are reshapes of the list columns' contiguous values
-    # buffers; columns are looked up by name because a read-back index
-    # may carry extra columns (e.g. a partition column)
+    # buffers; columns are looked up by name because the caller's index
+    # frame may carry extra columns
     def run(batches):
         import pyarrow as pa
 
@@ -1590,10 +1590,12 @@ def cosine_topk_ivf_indexed(
 #     quantizer must be FROZEN at append time (retraining would silently
 #     disagree with the assignments already on disk), so the build
 #     persists a centroid sidecar that appends read back.
-# Layout: <path>/lists partitioned by the prune column (list_id / b0), so
-# queries partition-prune at the scan; appends only create files inside
-# the partitions the new vectors land in — existing files are never
-# touched (no read-modify-write, safe under concurrent readers).
+# Layout: the IVF <path>/lists is partitioned by list_id, so a query's
+# `list_id IN (probed lists)` prunes directories at the scan. The LSH
+# <path>/lists is flat: its prune is a filter on an array element, which
+# no partition column can serve. Appends in both only add files —
+# existing files are never touched (no read-modify-write, safe under
+# concurrent readers).
 # Quantizer drift: after heavy appends the frozen IVF centroids describe
 # the corpus less well (recall decays at fixed n_probe). ivf_index_stats
 # reports per-list counts; rebalance by rebuilding when the hot/cold
@@ -1664,14 +1666,20 @@ def ivf_index_append(
     current ids (one column-pruned vec_id scan of lists), or stage
     through the LSM path for streaming sources."""
     if skip_existing:
-        existing = new_vectors.sparkSession.read.parquet(path + "/lists").select(
-            F.col("vec_id").alias(id_col)
-        )
-        new_vectors = new_vectors.join(existing, id_col, "left_anti")
+        new_vectors = _drop_indexed(new_vectors, path, id_col)
     C = ivf_index_centroids(new_vectors.sparkSession, path)
     assign_ivf_lists(new_vectors, C, id_col=id_col, vec_col=vec_col).repartition(
         "list_id"
     ).write.mode("append").partitionBy("list_id").parquet(path + "/lists")
+
+
+def _drop_indexed(new_vectors: DataFrame, path: str, id_col: str) -> DataFrame:
+    """`new_vectors` minus the ids already in `<path>/lists` — the
+    skip_existing anti-join (one column-pruned vec_id scan of lists)."""
+    existing = new_vectors.sparkSession.read.parquet(path + "/lists").select(
+        F.col("vec_id").alias(id_col)
+    )
+    return new_vectors.join(existing, id_col, "left_anti")
 
 
 def ivf_index_centroids(spark: SparkSession, path: str):
@@ -1760,27 +1768,14 @@ def lsh_index_write(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist the LSH index partitioned by the table-0 bucket (the
-    prune column queries filter on) + a parameter sidecar so appends
+    """Persist the LSH index as one flat parquet directory
+    (`<path>/lists`, lsh_index schema) + a parameter sidecar so appends
     provably use the same hyperplane family."""
     spark = embeddings.sparkSession
-    idx = lsh_index(
+    lsh_index(
         embeddings, dim=dim, n_planes=n_planes, n_tables=n_tables,
         id_col=id_col, vec_col=vec_col,
-    ).withColumn("b0", F.col("buckets")[0])
-    # co-locate per bucket: one file per partition dir, not task x dir.
-    # EXPLICIT task count (still keyed by b0, so the one-file-per-dir
-    # guarantee holds — every bucket is owned by exactly one task): a
-    # keyless-count repartition lets AQE coalesce a small input to ONE
-    # task that then writes all ~2^n_planes partition dirs serially —
-    # measured 5.5s -> 3.9s (write) / 5.0s -> 1.5s (2k-row append) on
-    # the 128k-vector bench corpus. Scale-adaptive: defaultParallelism,
-    # capped by the bucket-id space (more tasks than buckets can only
-    # sit empty).
-    n_split = _bucket_write_tasks(spark, n_planes)
-    idx.repartition(n_split, "b0").write.mode("overwrite").partitionBy(
-        "b0"
-    ).parquet(path + "/lists")
+    ).write.mode("overwrite").parquet(path + "/lists")
     _write_lsh_params(spark, path, dim, n_planes, n_tables)
 
 
@@ -1805,33 +1800,33 @@ def lsh_index_append(
     """
     spark = new_vectors.sparkSession
     if skip_existing:
-        existing = spark.read.parquet(path + "/lists").select(
-            F.col("vec_id").alias(id_col)
-        )
-        new_vectors = new_vectors.join(existing, id_col, "left_anti")
+        new_vectors = _drop_indexed(new_vectors, path, id_col)
     p = _read_lsh_params(spark, path)
-    idx = lsh_index(
+    _lsh_lists_append(spark, path, lsh_index(
         new_vectors, dim=p["dim"], n_planes=p["n_planes"], n_tables=p["n_tables"],
         id_col=id_col, vec_col=vec_col,
-    ).withColumn("b0", F.col("buckets")[0])
-    # explicit task count: see lsh_index_write — an AQE-coalesced
-    # single task would write every touched bucket dir serially
-    idx.repartition(
-        _bucket_write_tasks(spark, p["n_planes"]), "b0"
-    ).write.mode("append").partitionBy("b0").parquet(path + "/lists")
+    ))
 
 
-def _bucket_write_tasks(spark: SparkSession, n_planes: int) -> int:
-    """Write-side parallelism for the bucket-partitioned index layout:
-    one task per core up to the bucket-id space. Keyed by b0 either
-    way, so each partition dir still receives exactly one file per
-    write (the small-file guarantee the keyed repartition exists for)."""
-    return max(1, min(spark.sparkContext.defaultParallelism, 1 << n_planes))
+def _lsh_lists_append(spark: SparkSession, path: str, idx: DataFrame) -> None:
+    """Append signed rows to the flat `<path>/lists`. Refuses an index
+    whose lists hold `b0=` partition directories (the earlier
+    bucket-partitioned layout): partition discovery would then ignore
+    every file at the lists root, so the appended vectors would vanish
+    from every read."""
+    from nomba_data_pipeline_spark.operators.merge import fs_and_path
+
+    fs, pattern = fs_and_path(spark, path + "/lists/b0=*")
+    if fs.globStatus(pattern):
+        raise ValueError(
+            f"{path}/lists holds bucket-partitioned b0= directories; "
+            "rebuild with lsh_index_write before appending"
+        )
+    idx.write.mode("append").parquet(path + "/lists")
 
 
 def lsh_index_read(spark: SparkSession, path: str) -> DataFrame:
-    """The persisted index as a DataFrame (lsh_index schema); `b0` is
-    re-derivable from buckets[0] so it is dropped on read."""
+    """The persisted index as a DataFrame (lsh_index schema)."""
     return spark.read.parquet(path + "/lists").select("vec_id", "embedding", "buckets")
 
 
@@ -1850,11 +1845,10 @@ def lsh_index_stage_batch(
     clobbers its own partial output, never duplicates it."""
     spark = new_vectors.sparkSession
     p = _read_lsh_params(spark, path)
-    idx = lsh_index(
+    lsh_index(
         new_vectors, dim=p["dim"], n_planes=p["n_planes"], n_tables=p["n_tables"],
         id_col=id_col, vec_col=vec_col,
-    ).withColumn("b0", F.col("buckets")[0])
-    idx.write.mode("overwrite").parquet(f"{path}/incoming/batch={batch_id}")
+    ).write.mode("overwrite").parquet(f"{path}/incoming/batch={batch_id}")
 
 
 def _incoming_batch_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -1883,9 +1877,9 @@ def _incoming_batch_dirs(spark: SparkSession, path: str) -> list[str]:
 
 def lsh_index_read_all(spark: SparkSession, path: str) -> DataFrame:
     """The queryable index: folded lists ∪ staged incoming batches.
-    Incoming is small (recent micro-batches) and unpartitioned, so the
-    union costs a second scan of MBs, not the index; fold on the
-    maintenance cadence to restore pure partition pruning."""
+    Incoming is small (recent micro-batches), so the union costs a
+    second scan of MBs, not the index; fold on the maintenance cadence
+    to bring queries back to the single lists scan."""
     base = spark.read.parquet(path + "/lists").select("vec_id", "embedding", "buckets")
     staged = _incoming_batch_dirs(spark, path)
     if not staged:
@@ -1911,7 +1905,7 @@ def lsh_index_read_all(spark: SparkSession, path: str) -> DataFrame:
 
 
 def lsh_index_fold_incoming(spark: SparkSession, path: str) -> int:
-    """Fold staged batches into the partitioned lists layout. Replay-
+    """Fold staged batches into the flat lists directory. Replay-
     idempotent via an anti-join on vec_id (a rerun after a crash
     between the append and the staging delete re-appends nothing): the
     anti-join's right side is the column-pruned vec_id scan of the
@@ -1931,17 +1925,10 @@ def lsh_index_fold_incoming(spark: SparkSession, path: str) -> int:
         .select("vec_id", "embedding", "buckets")
         .dropDuplicates(["vec_id"])  # same vector in two staged batches
     )
-    existing_ids = spark.read.parquet(path + "/lists").select("vec_id")
-    fresh = inc.join(existing_ids, "vec_id", "left_anti").withColumn(
-        "b0", F.col("buckets")[0]
-    )
+    fresh = _drop_indexed(inc, path, "vec_id")
     n = fresh.count()
     if n:
-        # explicit task count: see lsh_index_write
-        fresh.repartition(
-            _bucket_write_tasks(spark, _read_lsh_params(spark, path)["n_planes"]),
-            "b0",
-        ).write.mode("append").partitionBy("b0").parquet(path + "/lists")
+        _lsh_lists_append(spark, path, fresh)
     fs.delete(jp, True)
     spark.catalog.refreshByPath(path + "/lists")
     return n

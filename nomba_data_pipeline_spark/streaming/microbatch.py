@@ -622,7 +622,8 @@ def run_index_maintenance_stream(
     OVERWRITE, so a checkpoint replay clobbers its own partial output —
     replay-idempotent with no bookkeeping). Queries read
     `lsh_index_read_all` (lists ∪ incoming); `lsh_index_fold_incoming`
-    restores pure partition pruning on the maintenance cadence.
+    moves the staged rows into lists on the maintenance cadence, so
+    queries go back to a single lists scan.
     Blocks until the available backlog drains (availableNow)."""
     from nomba_data_pipeline_spark.operators.similarity import lsh_index_stage_batch
 

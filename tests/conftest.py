@@ -132,14 +132,10 @@ _SLOW_TIER = {
     "test_queries_vs_duckdb.py::test_query_matches_oracle[versioned_clone_roundtrip]",  # 38s
     "test_similarity.py::test_distributed_ivf_training_matches_scale_contract",  # 15s
     "test_similarity.py::test_ivf_index_append_equals_frozen_assignment",  # 80s
-    "test_similarity.py::test_lsh_index_append_matches_rebuild",  # 54s
-    "test_similarity.py::test_lsh_index_append_skip_existing_is_replay_idempotent",  # 63s
-    "test_similarity.py::test_lsh_read_all_never_emits_a_vector_twice",  # 44s
     "test_similarity.py::test_multiprobe_recovers_clustered_recall",  # 28s
     "test_similarity.py::test_near_dup_exact_never_collects_corpus",  # 34s
     "test_similarity.py::test_near_dup_lsh_recall_and_precision",  # 25s
     "test_similarity.py::test_near_dup_two_pass_kernel_matches_float64_ground_truth",  # 29s
-    "test_streaming_pipeline.py::test_streaming_index_maintenance_stage_and_fold",  # 18s
     "test_versioned.py::test_check_constraints_enforced_on_writes",  # 16s
     "test_versioned.py::test_checkpoint_compacts_without_changing_content",  # 52s
     "test_versioned.py::test_cli_versioned_lifecycle",  # 32s

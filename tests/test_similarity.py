@@ -625,18 +625,25 @@ def test_semantic_dedup_kmeans_matches_true_clusters(spark):
         synth.unpersist()
 
 
-def test_lsh_index_write_one_file_per_bucket_dir(spark, tmp_path):
-    """The explicit-task-count repartition keeps the layout guarantee
-    the keyed repartition exists for: each b0 partition dir receives
-    EXACTLY one data file per write (write + one append = at most two),
-    never tasks x dirs — while spreading the file writes over many
-    tasks instead of one AQE-coalesced task that writes every dir
-    serially."""
+def _data_files(root):
+    """Relative paths of the parquet data files under `root`."""
     import os
 
-    from pyspark.sql import functions as F
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
 
-    from nomba_data_pipeline_spark.catalog import load_table
+
+def test_lsh_index_lists_are_flat(spark, tmp_path):
+    """The LSH lists directory is flat: the query-time prune filters on
+    an array element, which no partition column serves, so the index
+    keeps no bucket directories and an append adds at most one file per
+    input partition of the delta."""
+    import os
+
     from nomba_data_pipeline_spark.operators.similarity import (
         lsh_index_append,
         lsh_index_write,
@@ -644,17 +651,96 @@ def test_lsh_index_write_one_file_per_bucket_dir(spark, tmp_path):
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     path = str(tmp_path / "idx")
+    lists = os.path.join(path, "lists")
     lsh_index_write(emb, path)
+    before = _data_files(lists)
     delta = emb.select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
     lsh_index_append(delta, path)
 
-    lists = os.path.join(path, "lists")
-    dirs = [d for d in os.listdir(lists) if d.startswith("b0=")]
-    assert len(dirs) > 1
-    for d in dirs:
-        files = [
-            f
-            for f in os.listdir(os.path.join(lists, d))
-            if f.endswith(".parquet")
-        ]
-        assert 1 <= len(files) <= 2, (d, files)
+    assert not [d for d in os.listdir(lists) if os.path.isdir(os.path.join(lists, d))]
+    added = _data_files(lists) - before
+    assert 1 <= len(added) <= delta.rdd.getNumPartitions(), added
+
+
+def test_lsh_append_refuses_bucket_partitioned_lists(spark, tmp_path):
+    """An index whose lists hold `b0=` directories (the earlier
+    bucket-partitioned layout) must not take a flat append: partition
+    discovery would ignore every file at the lists root, so the appended
+    vectors would vanish from reads. Append and fold both refuse, and
+    write nothing."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from nomba_data_pipeline_spark.operators.similarity import (
+        lsh_index_append,
+        lsh_index_fold_incoming,
+        lsh_index_stage_batch,
+        lsh_index_write,
+    )
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    base = emb.filter(F.col("vec_id") % 2 == 0)
+    extra = emb.filter(F.col("vec_id") % 2 == 1)
+    path = str(tmp_path / "idx")
+    lsh_index_write(base, path)
+    lsh_index_stage_batch(extra, path, batch_id=0)
+    os.makedirs(os.path.join(path, "lists", "b0=1"), exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([-1], pa.int64()),
+            "embedding": pa.array([[1.0] * 64], pa.list_(pa.float64())),
+            "buckets": pa.array([[1]], pa.list_(pa.int64())),
+        }),
+        os.path.join(path, "lists", "b0=1", "part-0.parquet"),
+    )
+    files = _data_files(path)
+
+    with pytest.raises(ValueError, match="rebuild with lsh_index_write"):
+        lsh_index_append(extra, path)
+    with pytest.raises(ValueError, match="rebuild with lsh_index_write"):
+        lsh_index_fold_incoming(spark, path)
+    assert _data_files(path) == files
+
+
+def test_ivf_indexed_query_prunes_list_partitions(spark, tmp_path):
+    """Why the IVF lists stay partitioned by list_id: the probed-list
+    `list_id IN (...)` reaches the scan as a partition filter, so
+    unprobed lists are never listed or read."""
+    from nomba_data_pipeline_spark.operators.similarity import (
+        cosine_topk_ivf_indexed,
+        ivf_index_centroids,
+        ivf_index_read,
+        ivf_index_write,
+    )
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        emb = load_table(spark, SF_SMALL, "embeddings")
+        path = str(tmp_path / "ivf")
+        ivf_index_write(emb, path, n_lists=8)
+        res = cosine_topk_ivf_indexed(
+            ivf_index_read(spark, path), F.col("vec_id") % 50 == 0, k=5,
+            n_lists=8, n_probe=2, centroids=ivf_index_centroids(spark, path),
+        )
+        plan = res._sc._jvm.PythonSQLUtils.explainString(
+            res._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    part_filters = [
+        line for line in plan.splitlines() if line.strip().startswith("PartitionFilters:")
+    ]
+    assert part_filters and all("list_id" in line for line in part_filters), plan

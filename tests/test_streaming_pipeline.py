@@ -105,7 +105,7 @@ def test_streaming_index_maintenance_stage_and_fold(spark, tmp_path):
     Pins (1) streamed+staged index == full rebuild, (2) staging is
     replay-idempotent (same batch id overwrites itself), (3) fold is
     replay-idempotent (second fold appends nothing), (4) after fold the
-    partitioned lists alone carry the full corpus."""
+    lists alone carry the full corpus."""
     import os
 
     from pyspark.sql import functions as F
