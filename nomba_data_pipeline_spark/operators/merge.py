@@ -371,7 +371,6 @@ class ParquetTable:
         delta: DataFrame,
         keys: list[str],
         partition_by: list[str] | None = None,
-        partition_stable: bool = False,
         evolve_schema: bool = False,
     ) -> list | None:
         """O7 incremental upsert (base_loader.py:344-417).
@@ -425,8 +424,13 @@ class ParquetTable:
             self.widen_to(delta, partition_by=partition_by)
             self.promote_types(delta, partition_by=partition_by)
         if partition_by:
-            return self._merge_upsert_partitioned(
-                delta, keys, partition_by, partition_stable
+            return self._merge_scoped_partitions(
+                delta,
+                keys,
+                partition_by,
+                lambda target_slice, d, dkeys: _semi_anti_null_safe(
+                    target_slice, dkeys, keys, "left_anti"
+                ).unionByName(d),
             )
         target = self.read()
         delta = _align_to_target(delta, target)
@@ -442,7 +446,6 @@ class ParquetTable:
         cdf_path: str,
         batch_id: str,
         partition_by: list[str] | None = None,
-        partition_stable: bool = False,
     ) -> int:
         """merge_upsert + a change-data-feed: compute the batch's
         row-level changes (Delta-CDF shape — `insert` rows,
@@ -514,9 +517,7 @@ class ParquetTable:
         # replica held changes the primary never committed until retry.
         if n_changes:
             feed.write.mode("overwrite").parquet(staging)
-        self.merge_upsert(
-            delta, keys, partition_by=partition_by, partition_stable=partition_stable
-        )
+        self.merge_upsert(delta, keys, partition_by=partition_by)
         if n_changes:
             if fs.exists(jfinal):
                 # replay after a completed publish: the existing feed is
@@ -617,26 +618,6 @@ class ParquetTable:
             applied.append(bid)
         return applied
 
-    def _merge_upsert_partitioned(
-        self,
-        delta: DataFrame,
-        keys: list[str],
-        partition_by: list[str],
-        partition_stable: bool = False,
-    ) -> list:
-        target = self.read()
-        delta = _align_to_target(delta, target)
-        dkeys = delta.select(*keys).dropDuplicates(keys)
-        return self._merge_scoped_partitions(
-            delta,
-            keys,
-            partition_by,
-            lambda target_slice, d: _semi_anti_null_safe(
-                target_slice, dkeys, keys, "left_anti"
-            ).unionByName(d),
-            partition_stable=partition_stable,
-        )
-
     def insert_overwrite_partitions(
         self, delta: DataFrame, partition_by: list[str]
     ) -> list | None:
@@ -669,46 +650,35 @@ class ParquetTable:
         keys: list[str],
         partition_by: list[str],
         combine,
-        partition_stable: bool = False,
     ) -> list:
         """Rewrite only the partitions the delta touches, returning the
         affected partition-value rows (the maintenance hook downstream
         materializations — e.g. AggJoinView — scope THEIR refresh by).
-        `combine` maps (target_slice, delta) -> merged content for those
-        partitions.
-
-        partition_stable=True declares that a key's partition value never
-        changes (event-time partitions on immutable facts): affected =
-        the delta's own partitions, skipping the key-location scan over
-        the target — at 100 TB that scan (column-pruned but full-table)
-        is the dominant cost of a small merge. With the default False,
-        key migrations are handled by also rewriting the partitions that
-        currently hold the delta's keys.
+        `combine` maps (target_slice, aligned delta, deduplicated delta
+        keys) -> merged content for those partitions. Affected = where
+        the delta's rows land UNION where its keys currently live, so a
+        key whose partition value changed leaves its OLD partition too.
         """
         target = self.read()
         delta = _align_to_target(delta, target)
         dkeys = delta.select(*keys).dropDuplicates(keys)
-        if partition_stable:
-            affected = delta.select(*partition_by).dropDuplicates(partition_by)
-        else:
-            # where delta rows land + where the delta's keys currently live
-            # (null-safe: a NULL-key row's partition must still be located)
-            affected = (
-                delta.select(*partition_by)
-                .unionByName(
-                    _semi_anti_null_safe(target, dkeys, keys, "left_semi").select(
-                        *partition_by
-                    )
+        # null-safe: a NULL-key row's partition must still be located
+        affected = (
+            delta.select(*partition_by)
+            .unionByName(
+                _semi_anti_null_safe(target, dkeys, keys, "left_semi").select(
+                    *partition_by
                 )
-                .dropDuplicates(partition_by)
             )
+            .dropDuplicates(partition_by)
+        )
         affected_rows = affected.collect()
         if not affected_rows:
             return []
         # null-safe: the NULL partition's pre-existing rows must be in the
         # rewrite slice, or the directory swap below would drop them
         target_slice = _semi_anti_null_safe(target, affected, partition_by, "left_semi")
-        merged = combine(target_slice, delta)
+        merged = combine(target_slice, delta, dkeys)
         self._stage_and_swap_partitions(merged, partition_by, affected_rows)
         return affected_rows
 
@@ -1115,7 +1085,6 @@ class ParquetTable:
         keys: list[str],
         tracking_col: str,
         partition_by: list[str] | None = None,
-        partition_stable: bool = False,
         evolve_schema: bool = False,
     ) -> None:
         """O8 'special' load (base_loader.py:419-555): upsert then keep only
@@ -1169,12 +1138,11 @@ class ParquetTable:
                 delta,
                 keys,
                 partition_by,
-                lambda target_slice, d: keep_latest(
+                lambda target_slice, d, _dkeys: keep_latest(
                     target_slice.withColumn("__is_delta", F.lit(0)).unionByName(
                         d.withColumn("__is_delta", F.lit(1))
                     )
                 ),
-                partition_stable=partition_stable,
             )
             return
         base = target.withColumn("__is_delta", F.lit(0)).unionByName(

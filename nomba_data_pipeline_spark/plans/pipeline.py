@@ -46,7 +46,6 @@ def build_pipeline(
             materialization="scd2",
             scd2_key="user_id",
             check_cols=["segment", "acct_balance"],  # ref: ['state','occupation']
-            scd2_split=True,  # open rows rewritable, history append-only
             depends_on=["stg_users"],
             quality=QualitySpec(not_null=["user_id", "valid_from"]),
         )
@@ -96,9 +95,10 @@ def build_pipeline(
     # alternative is operators/incremental_join.JoinViewTable, which
     # propagates dim patches to a materialized enrichment view in
     # O(affected dim-key buckets) (graded row join_view_dim_update) —
-    # declarable directly in this runner as materialization="join_view"
-    # (PipelineRunner._run_join_view; graded row
-    # join_view_pipeline_roundtrip) when a mart should stay dim-fresh
+    # declarable directly in this runner as materialization="join_view",
+    # or "agg_view" for a rollup over such a view (both maintained by
+    # PipelineRunner._run_view; graded rows join_view_pipeline_roundtrip
+    # and agg_view_pipeline_roundtrip) when a mart should stay dim-fresh
     # without the dbt-parity staleness above.
     runner.register(
         ModelSpec(
@@ -156,8 +156,8 @@ def build_pipeline(
             tracking_column="updated_at",
             partition_by=["txn_month"],
             # txn_month derives from updated_at; txn updates re-stamp
-            # updated_at so a corrected txn DOES move partitions ->
-            # keep the default key-location scan (not partition_stable)
+            # updated_at so a corrected txn DOES move partitions — the
+            # merge's key-location scan finds and rewrites the old one
             depends_on=["stg_transactions", "dim_plans"],
             quality=QualitySpec(
                 unique=["transaction_id"],

@@ -65,27 +65,12 @@ class QualitySpec:
         return aggs
 
     def profile(self, df: DataFrame) -> tuple[dict[str, int], int]:
-        """All declared checks + the row count in ONE aggregation pass.
-        Returns ({check_name: violations}, total_rows). The `unique`
-        metric is excess duplicate rows (count - countDistinct over
-        non-null values); 0 iff unique holds, same assert semantics as
-        the dbt test."""
-        row = df.agg(*self._build_aggs()).first()
-        total = row["__total"]
-        results: dict[str, int] = {}
-        for c in self.unique:
-            results[f"unique:{c}"] = row[f"__u_cnt:{c}"] - row[f"__u_dst:{c}"]
-        for c in self.not_null:
-            results[f"not_null:{c}"] = total - row[f"__nn:{c}"]
-        for c in self.accepted_values:
-            results[f"accepted_values:{c}"] = row[f"__av:{c}"] or 0
-        if self.min_rows > 0:
-            results["min_rows"] = max(0, self.min_rows - total)
-        return results, total
-
-    def check(self, df: DataFrame) -> dict[str, int]:
-        """Run all declared checks; returns {check_name: violations}."""
-        return self.profile(df)[0]
+        """All declared checks + the row count in ONE aggregation pass,
+        relationships left out. Returns ({check_name: violations},
+        total_rows). The `unique` metric is excess duplicate rows
+        (count - countDistinct over non-null values); 0 iff unique
+        holds, same assert semantics as the dbt test."""
+        return self.violations(df)
 
     def profile_df(self, df: DataFrame) -> DataFrame:
         """The same fused single-pass profile as `profile`, but returned
@@ -122,11 +107,12 @@ class QualitySpec:
         )
 
     def violations(self, df: DataFrame, resolve=None) -> tuple[dict[str, int], int]:
-        """All checks incl. relationships; returns ({check: count},
-        total_rows) with EVERY check present (zero = clean). The one
-        shared implementation behind assert_ok (pipeline gate) and the
-        CLI `validate` verb — the check set and key format must never
-        drift between the two.
+        """All checks, plus relationships when `resolve` is given;
+        returns ({check: count}, total_rows) with EVERY check present
+        (zero = clean). The one decoder of the fused aggregate row,
+        behind profile, assert_ok (pipeline gate) and the CLI `validate`
+        verb — the check set and key format must never drift between
+        them.
 
         Relationships fold into the SAME single aggregation action as
         the profile: each declared (child, parent) pair becomes one
@@ -135,13 +121,11 @@ class QualitySpec:
         one `sum(child key present AND parent marker absent)` aggregate
         riding the fused scan — a model with N relationship tests pays
         one action, not 1 + N."""
-        if resolve is None or not self.relationships:
-            return self.profile(df)
         joined = df
         rel_aggs = []
         rel_names = []
         for i, (col, (parent_name, parent_col)) in enumerate(
-            self.relationships.items()
+            self.relationships.items() if resolve is not None else ()
         ):
             rk, rm = f"__rk{i}", f"__rm{i}"
             parent_keys = (

@@ -8092,7 +8092,7 @@ GROUP BY 1
 
 def q_join_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The join-view IVM as a PIPELINE materialization — the runner
-    verb (materialization='join_view', PipelineRunner._run_join_view)
+    verb (materialization='join_view', PipelineRunner._run_view)
     rather than the bare operator: register a lineitem fact model, an
     orders dim model, and a mart declared as their maintained join
     view. Run 1 builds everything (the one O(F⋈D) pass + HWM state
@@ -9048,7 +9048,7 @@ GROUP BY 1
 
 def q_agg_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aggregate-over-join IVM as a PIPELINE materialization
-    (materialization='agg_view', PipelineRunner._run_agg_view) — the
+    (materialization='agg_view', PipelineRunner._run_view) — the
     rollup mart owns BOTH layers (<mart>__view join view + <mart>
     bucket partials) and maintains them off persisted HWM state.
     Register a lineitem fact model and an orders dim model; the mart is
@@ -11292,7 +11292,7 @@ REGISTRY: dict[str, QuerySpec] = {
 #     JoinViewTable.retire_dim_keys — the documented tombstone pattern
 #     made a graded verb), join_view_pipeline_roundtrip (the
 #     join-view IVM as a runner materialization,
-#     PipelineRunner._run_join_view: dim patch + fact delta picked off
+#     PipelineRunner._run_view: dim patch + fact delta picked off
 #     persisted HWM state across fresh runner instances), and
 #     join_view_star_chain (star/snowflake CHAINING: F⋈D1⋈D2 as two
 #     views, an upstream dim patch propagating bucket-scoped through

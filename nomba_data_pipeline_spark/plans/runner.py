@@ -29,28 +29,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nomba_data_pipeline_spark.operators.merge import ParquetTable
-from nomba_data_pipeline_spark.operators.scd2 import scd2_merge
 from nomba_data_pipeline_spark.plans.quality import QualitySpec
 
 ModelFn = Callable[[SparkSession, str], DataFrame]
+
+
+def _past(df: DataFrame, col: str, hwm: str | None) -> DataFrame:
+    """Rows strictly past a stored string high-water mark, reparsed to
+    the column's own dtype (the round-trip is pinned per tracking dtype
+    in test_pipeline); every row when no mark is stored yet."""
+    if hwm is None:
+        return df
+    return df.filter(F.col(col) > F.lit(hwm).cast(dict(df.dtypes)[col]))
 
 
 @dataclass
 class ModelSpec:
     name: str
     fn: ModelFn
-    materialization: str = "table"  # table | incremental | scd2
+    # table | incremental | insert_overwrite | scd2 | versioned_incremental
+    # | join_view | agg_view | incremental_agg. scd2 is SPLIT storage:
+    # open rows in a small rewritable `<name>__open`, closed history
+    # append-only in `<name>__closed` by close date, so a run costs
+    # O(open rows), not O(history); read_model() returns the union.
+    materialization: str = "table"
     dedup: bool = False  # incremental + keep-latest-per-key (reference O8 'special')
     upsert_key: list[str] = field(default_factory=list)
     tracking_column: str | None = None  # hwm column for incremental
     scd2_key: str | None = None
     check_cols: list[str] = field(default_factory=list)
     partition_by: list[str] = field(default_factory=list)  # physical layout (F4)
-    partition_stable: bool = False  # keys never change partition (skip key-location scan)
-    # split SCD2 storage: open rows in a small rewritable table, closed
-    # history append-only by close date -> per-run cost O(open rows), not
-    # O(history). The combined view comes from read_model().
-    scd2_split: bool = False
     # dbt `on_schema_change` for incremental models (dbt-core docs;
     # the reference's models run the default):
     #   "ignore" (default)      — source-only columns dropped, exactly
@@ -69,17 +77,12 @@ class ModelSpec:
     depends_on: list[str] = field(default_factory=list)
     # materialization="join_view": a mart kept as a materialized
     # `fact LEFT JOIN dim` with DELTA maintenance
-    # (operators/incremental_join.JoinViewTable) — the delta-native
-    # alternative to full-refresh dim propagation (see the staleness
-    # NOTE in plans/pipeline.py). `fn` is unused (pass None): the two
-    # sides are other registered models; upsert_key is the fact key and
-    # tracking_column the fact side's HWM column. The dim side needs
-    # its own tracking column for delta detection. Per run: fact rows
-    # past the view's fact-HWM re-enrich + upsert (O(|ΔF|)); dim rows
-    # past the dim-HWM patch only the buckets their keys hash into
-    # (O(touched buckets), never a fact rescan). HWM state lives in a
-    # `._view_state` sidecar written AFTER the applies — both applies
-    # are idempotent, so a crash before the state write replays safely.
+    # (operators/incremental_join.JoinViewTable), driven by _run_view —
+    # the delta-native alternative to full-refresh dim propagation (see
+    # the staleness NOTE in plans/pipeline.py). `fn` is unused (pass
+    # None): the two sides are other registered models; upsert_key is
+    # the fact key and tracking_column the fact side's HWM column. The
+    # dim side needs its own tracking column for delta detection.
     view_fact: str | None = None  # fact-side model name
     view_dim: str | None = None  # dim-side model name
     view_dim_key: str | None = None  # join column
@@ -87,14 +90,11 @@ class ModelSpec:
     view_dim_tracking: str | None = None  # dim-side HWM column
     view_buckets: int = 32
     # materialization="agg_view": a ROLLUP mart kept as an
-    # aggregate-over-join IVM (operators/agg_join_view.AggJoinView).
-    # Reuses every join_view field above for the underlying fact ⋈ dim
-    # layer (owned by this model at <name>__view); the rollup's bucket
-    # partials live at <name> and refresh at O(touched buckets)
-    # whenever a delta lands — including dim patches that REASSIGN
-    # groups, which plain incremental aggregation cannot express.
-    # read_model() returns the finalized rollup (merge of the
-    # partials, <= buckets x groups rows).
+    # aggregate-over-join IVM (operators/agg_join_view.AggJoinView),
+    # driven by the same _run_view. Reuses every join_view field above
+    # for the underlying fact ⋈ dim layer (owned by this model at
+    # <name>__view); the rollup's bucket partials live at <name>, and
+    # read_model() returns the finalized rollup.
     # materialization="incremental_agg": the PLAIN delete-capable
     # maintained aggregate (operators/incremental_agg) over a
     # versioned fact's change feed — no join layer; `view_fact` names
@@ -203,7 +203,6 @@ class PipelineRunner:
             for name in only:
                 add(name)
             ordered = [s for s in ordered if s.name in wanted]
-        results: dict[str, int] = {}
         self.last_timings = {}
         # default 3 in flight — measured r16 (interleaved 1,3,3,1 at
         # sf0.1/local[32]): e2e fresh-warehouse build 25.4/27.5s -> 9.6/
@@ -213,13 +212,6 @@ class PipelineRunner:
         workers = max(
             1, int(os.environ.get("SPARK_GRAFT_PIPELINE_WORKERS", "3"))
         )
-        if workers == 1 or len(ordered) <= 1:
-            for spec in ordered:
-                t0 = time.perf_counter()
-                results[spec.name] = self.run_model(spec.name)
-                self.last_timings[spec.name] = round(time.perf_counter() - t0, 3)
-            return results
-
         import concurrent.futures as _cf
 
         names = [s.name for s in ordered]
@@ -230,7 +222,12 @@ class PipelineRunner:
         pending: list[ModelSpec] = list(ordered)
         running: dict[str, _cf.Future] = {}
 
-        def _run_timed(spec: ModelSpec) -> tuple[int, float]:
+        jsc = self.spark.sparkContext._jsc.sc()
+
+        def _run_timed(spec: ModelSpec, props) -> tuple[int, float]:
+            # the caller's local properties (e.g. its job group) carry
+            # into the pool thread; each model's jobs are tagged with it
+            jsc.setLocalProperties(props)
             self.spark.sparkContext.setJobDescription(f"model:{spec.name}")
             t0 = time.perf_counter()
             n = self.run_model(spec.name)
@@ -248,7 +245,9 @@ class PipelineRunner:
                         )
                         if deps_ok:
                             pending.remove(spec)
-                            running[spec.name] = pool.submit(_run_timed, spec)
+                            running[spec.name] = pool.submit(
+                                _run_timed, spec, jsc.getLocalProperties().clone()
+                            )
                 if not running:
                     if pending:  # unreachable: _toposort rejects cycles
                         raise RuntimeError(
@@ -274,10 +273,8 @@ class PipelineRunner:
     def run_model(self, name: str) -> int:
         spec = self.models[name]
         target = self.table(spec.name)
-        if spec.materialization == "join_view":
-            return self._run_join_view(spec)
-        if spec.materialization == "agg_view":
-            return self._run_agg_view(spec)
+        if spec.materialization in ("join_view", "agg_view"):
+            return self._run_view(spec)
         if spec.materialization == "versioned_incremental":
             return self._run_versioned(spec)
         if spec.materialization == "incremental_agg":
@@ -321,16 +318,7 @@ class PipelineRunner:
                     return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
 
         if spec.materialization == "scd2":
-            if spec.scd2_split:
-                self._run_scd2_split(spec, df)
-            else:
-                snapshot = target.read() if target.exists() else None
-                merged = scd2_merge(
-                    snapshot, df, key=spec.scd2_key or spec.upsert_key[0],
-                    check_cols=spec.check_cols,
-                    order_within_batch=spec.tracking_column,
-                )
-                target.overwrite(merged)
+            self._run_scd2_split(spec, df)
         elif spec.materialization == "insert_overwrite":
             # dbt insert_overwrite strategy: the model's delta replaces
             # whole partitions (backfill/reprocess semantics) — requires
@@ -347,14 +335,10 @@ class PipelineRunner:
             self._apply_schema_policy(spec, target, df)
             if spec.dedup and spec.tracking_column:
                 target.merge_upsert_dedup(
-                    df, spec.upsert_key, spec.tracking_column, partition_by=pb,
-                    partition_stable=spec.partition_stable,
+                    df, spec.upsert_key, spec.tracking_column, partition_by=pb
                 )
             else:
-                target.merge_upsert(
-                    df, spec.upsert_key, partition_by=pb,
-                    partition_stable=spec.partition_stable,
-                )
+                target.merge_upsert(df, spec.upsert_key, partition_by=pb)
         else:  # table
             target.overwrite(df, partition_by=spec.partition_by or None)
 
@@ -363,26 +347,33 @@ class PipelineRunner:
         out = self.read_model(spec.name)
         return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
 
-    def _run_join_view(self, spec: ModelSpec) -> int:
-        """Materialize/maintain a `materialization="join_view"` mart —
-        the delta answer to dbt's full-refresh-only dim propagation
+    def _run_view(self, spec: ModelSpec) -> int:
+        """Materialize/maintain a `join_view` or `agg_view` mart — the
+        delta answer to dbt's full-refresh-only dim propagation
         (pipeline.py staleness NOTE): a dim attribute change reaches
         ALREADY-LOADED mart rows in O(affected dim-key buckets) instead
         of an O(fact) rebuild.
 
-        First run: one O(F ⋈ D) build (JoinViewTable.build). Later
-        runs: fact rows past the stored fact-HWM re-enrich against the
-        CURRENT dim and upsert; dim rows past the dim-HWM patch only
-        their buckets. Dim patches apply FIRST so the fact delta joins
-        the already-patched dim. HWM state persists in a 1-row parquet
-        sidecar (same pattern as the view's parameter sidecar), written
-        AFTER the applies — both applies are idempotent keyed rewrites,
-        so a crash between apply and state write replays safely. The
-        dim side must be unique per key (apply_dim_delta raises on
-        duplicates — register the dim model with a `unique` gate)."""
-        import json as _json
+        Every delta goes to ONE maintenance target: the JoinViewTable
+        of a join_view, or the AggJoinView over the `<name>__view` join
+        layer of an agg_view, whose bucket partials then refresh for
+        exactly the buckets the view rewrote (dim patches that reassign
+        groups, tombstones and dim-key migration included). Both expose
+        the same apply_dim_delta / apply_fact_delta / apply_fact_cdf.
 
-        from nomba_data_pipeline_spark.operators.incremental_join import JoinViewTable
+        First run: one O(F ⋈ D) build (plus one O(view) aggregation for
+        an agg_view). Later runs: dim rows past the stored dim-HWM patch
+        FIRST, so the fact delta joins the already-patched dim; then
+        fact rows past the fact-HWM upsert — or, for a versioned fact,
+        its change feed since the stored version folds in, deletes
+        included. HWM state persists in the `._view_state` sidecar,
+        written AFTER the applies — every apply is an idempotent keyed
+        rewrite, so a crash between apply and state write replays
+        safely, and AggJoinView's own bucket-intent sidecar additionally
+        heals a crash BETWEEN the view apply and the partial refresh.
+        The dim side must be unique per key (apply_dim_delta raises on
+        duplicates — register the dim model with a `unique` gate)."""
+        from nomba_data_pipeline_spark.operators.incremental_join import _key_cols
 
         required = {
             "view_fact": spec.view_fact,
@@ -393,78 +384,71 @@ class PipelineRunner:
             "upsert_key (fact key)": spec.upsert_key,
             "tracking_column (fact HWM)": spec.tracking_column,
         }
+        if spec.materialization == "agg_view":
+            required["agg_group_keys"] = spec.agg_group_keys
+            required["agg_measures"] = spec.agg_measures
         missing = [k for k, v in required.items() if not v]
         if missing:
-            raise ValueError(f"model {spec.name}: join_view requires {missing}")
+            raise ValueError(
+                f"model {spec.name}: {spec.materialization} requires {missing}"
+            )
 
         fact = self.read_model(spec.view_fact)
         dim = self.read_model(spec.view_dim)
-        path = os.path.join(self.warehouse_dir, spec.name)
-        state_path = path + "._view_state"
-        view = JoinViewTable(
-            self.spark, path,
-            fact_key=spec.upsert_key, dim_key=spec.view_dim_key,
-            dim_cols=spec.view_dim_cols, n_buckets=spec.view_buckets,
-        )
+        view, agg = self._view_target(spec)
+        target = view if agg is None else agg
+        state_path = os.path.join(self.warehouse_dir, spec.name) + "._view_state"
 
-        def _hwm(df: DataFrame, col: str) -> str | None:
-            return self._hwm_str(df, col)
-
-        def _save(fact_hwm: str | None, dim_hwm: str | None,
-                  fact_version: int | None = None) -> None:
-            self._save_view_state(state_path, fact_hwm, dim_hwm,
-                                  fact_version=fact_version)
-
-        def _load_state() -> dict:
-            return self._load_view_state(state_path)
+        def build() -> None:
+            view.build(fact, dim)
+            if agg is not None:
+                agg.build()
 
         vt = self._fact_versioned_table(spec)
         if not view._table.exists():
-            view.build(fact, dim)
-            _save(
-                _hwm(fact, spec.tracking_column),
-                _hwm(dim, spec.view_dim_tracking),
+            build()
+            self._save_view_state(
+                state_path,
+                self._hwm_str(fact, spec.tracking_column),
+                self._hwm_str(dim, spec.view_dim_tracking),
                 fact_version=vt.latest_version() if vt is not None else None,
             )
         else:
-            state = _load_state()
-            dim_delta = dim
-            if state["dim_hwm"] is not None:
-                dim_delta = dim.filter(
-                    F.col(spec.view_dim_tracking)
-                    > F.lit(state["dim_hwm"]).cast(
-                        dict(dim.dtypes)[spec.view_dim_tracking]
-                    )
-                )
+            if agg is not None and not agg._exists():
+                # a crash landed between view.build() and agg.build()
+                # on the first run: complete it (build is a full
+                # recompute from the view, so this converges) instead
+                # of raising 'not built' on every later run
+                agg.build()
+            state = self._load_view_state(state_path)
+            dim_delta = _past(dim, spec.view_dim_tracking, state["dim_hwm"])
             if dim_delta.limit(1).count() > 0:
-                from nomba_data_pipeline_spark.operators.incremental_join import (
-                    _key_cols,
-                )
-
-                view.apply_dim_delta(
+                target.apply_dim_delta(
                     dim_delta.select(
                         *_key_cols(spec.view_dim_key), *spec.view_dim_cols
                     )
                 )
-            new_dim_hwm = (
-                _hwm(dim_delta, spec.view_dim_tracking) or state["dim_hwm"]
+            dim_hwm = (
+                self._hwm_str(dim_delta, spec.view_dim_tracking)
+                or state["dim_hwm"]
             )
+            fact_hwm, fact_version = state["fact_hwm"], None
             if vt is not None:
                 # versioned fact: consume its change feed between the
                 # last-applied and current version — inserts/updates
                 # upsert, DELETES tombstone (the HWM path below can
                 # never see a delete). O(changed files) per refresh.
-                latest_v = vt.latest_version()
-                applied_v = state.get("fact_version")
-                if applied_v is None:
+                fact_version = vt.latest_version()
+                applied = state["fact_version"]
+                if applied is None:
                     # pre-CDF sidecar or state loss: an HWM replay
                     # cannot propagate deletes that happened meanwhile,
                     # so pay one rebuild — expensive but correct.
-                    view.build(fact, dim)
-                elif latest_v is not None and latest_v > applied_v:
+                    build()
+                elif fact_version is not None and fact_version > applied:
                     try:
                         self._apply_fact_changes(
-                            vt, view, applied_v, latest_v,
+                            vt, target, applied, fact_version,
                             spec.upsert_key, dim,
                         )
                     except ValueError:
@@ -473,26 +457,46 @@ class PipelineRunner:
                         # commit spans the range): same recovery as a
                         # lost sidecar — one rebuild, never a
                         # permanently failing run
-                        view.build(fact, dim)
-                _save(state["fact_hwm"], new_dim_hwm, fact_version=latest_v)
+                        build()
             else:
-                fact_delta = fact
-                if state["fact_hwm"] is not None:
-                    fact_delta = fact.filter(
-                        F.col(spec.tracking_column)
-                        > F.lit(state["fact_hwm"]).cast(
-                            dict(fact.dtypes)[spec.tracking_column]
-                        )
-                    )
+                fact_delta = _past(fact, spec.tracking_column, fact_hwm)
                 if fact_delta.limit(1).count() > 0:
-                    view.apply_fact_delta(fact_delta, dim)
-                _save(
-                    _hwm(fact_delta, spec.tracking_column)
-                    or state["fact_hwm"],
-                    new_dim_hwm,
+                    target.apply_fact_delta(fact_delta, dim)
+                fact_hwm = (
+                    self._hwm_str(fact_delta, spec.tracking_column) or fact_hwm
                 )
+            if agg is not None:
+                # even a no-delta run heals a leftover bucket intent
+                agg.heal()
+            self._save_view_state(
+                state_path, fact_hwm, dim_hwm, fact_version=fact_version
+            )
         out = self.read_model(spec.name)
         return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
+
+    def _view_target(self, spec: ModelSpec):
+        """(view, agg) of a join_view / agg_view mart: the JoinViewTable
+        and, for an agg_view, the AggJoinView over it (None for a
+        join_view). An agg_view owns its join layer at `<name>__view`."""
+        from nomba_data_pipeline_spark.operators.incremental_join import JoinViewTable
+
+        path = os.path.join(self.warehouse_dir, spec.name)
+        is_agg = spec.materialization == "agg_view"
+        view = JoinViewTable(
+            self.spark, path + "__view" if is_agg else path,
+            fact_key=spec.upsert_key, dim_key=spec.view_dim_key,
+            dim_cols=spec.view_dim_cols, n_buckets=spec.view_buckets,
+        )
+        if not is_agg:
+            return view, None
+        from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
+
+        return view, AggJoinView(
+            self.spark, path,
+            view=view, group_keys=spec.agg_group_keys,
+            measures=spec.agg_measures,
+            distinct_cols=spec.agg_distinct_cols or None,
+        )
 
     def _run_versioned(self, spec: ModelSpec) -> int:
         """Materialize a `materialization="versioned_incremental"`
@@ -548,13 +552,10 @@ class PipelineRunner:
                         f"model {spec.name}: source schema drifted on "
                         f"{drift} and on_schema_change='fail'"
                     )
-            hwm = vt.high_water_mark_str(spec.tracking_column)
-            delta = df
-            if hwm is not None:
-                delta = df.filter(
-                    F.col(spec.tracking_column)
-                    > F.lit(hwm).cast(dict(df.dtypes)[spec.tracking_column])
-                )
+            delta = _past(
+                df, spec.tracking_column,
+                vt.high_water_mark_str(spec.tracking_column),
+            )
             if delta.limit(1).count() > 0:
                 vt.merge_upsert(delta, spec.upsert_key)
             if spec.versioned_max_files is not None:
@@ -565,144 +566,6 @@ class PipelineRunner:
                 vt.maybe_checkpoint(
                     spec.versioned_max_files,
                     cluster_by=(spec.partition_by or None),
-                )
-        out = self.read_model(spec.name)
-        return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
-
-    def _run_agg_view(self, spec: ModelSpec) -> int:
-        """Materialize/maintain a `materialization="agg_view"` rollup
-        mart — the aggregate-over-join IVM as a first-class pipeline
-        materialization. The model OWNS both layers: the fact ⋈ dim
-        join view at `<name>__view` and the bucket-partial aggregate
-        state at `<name>`; every delta flows through
-        AggJoinView.apply_* so the partials refresh for exactly the
-        buckets the view rewrote (dim patches that reassign groups,
-        tombstoned keys, and dim-key migration all included — the
-        shapes a fold-based incremental aggregate cannot express).
-
-        First run: one O(F ⋈ D) build + one O(view) aggregation pass.
-        Later runs: dim rows past the dim-HWM patch first (so the fact
-        delta joins the patched dim), fact rows past the fact-HWM
-        upsert, each at O(touched buckets) for BOTH layers. HWM state
-        persists like _run_join_view's (written AFTER the applies;
-        idempotent applies make a crash replay safe), and AggJoinView's
-        own bucket-intent sidecar additionally heals a crash BETWEEN
-        the view apply and the partial refresh."""
-        from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
-        from nomba_data_pipeline_spark.operators.incremental_join import (
-            JoinViewTable,
-            _key_cols,
-        )
-
-        required = {
-            "view_fact": spec.view_fact,
-            "view_dim": spec.view_dim,
-            "view_dim_key": spec.view_dim_key,
-            "view_dim_cols": spec.view_dim_cols,
-            "view_dim_tracking": spec.view_dim_tracking,
-            "upsert_key (fact key)": spec.upsert_key,
-            "tracking_column (fact HWM)": spec.tracking_column,
-            "agg_group_keys": spec.agg_group_keys,
-            "agg_measures": spec.agg_measures,
-        }
-        missing = [k for k, v in required.items() if not v]
-        if missing:
-            raise ValueError(f"model {spec.name}: agg_view requires {missing}")
-
-        fact = self.read_model(spec.view_fact)
-        dim = self.read_model(spec.view_dim)
-        agg_path = os.path.join(self.warehouse_dir, spec.name)
-        view = JoinViewTable(
-            self.spark, agg_path + "__view",
-            fact_key=spec.upsert_key, dim_key=spec.view_dim_key,
-            dim_cols=spec.view_dim_cols, n_buckets=spec.view_buckets,
-        )
-        agg = AggJoinView(
-            self.spark, agg_path,
-            view=view, group_keys=spec.agg_group_keys,
-            measures=spec.agg_measures,
-            distinct_cols=spec.agg_distinct_cols or None,
-        )
-        state_path = agg_path + "._view_state"
-
-        vt = self._fact_versioned_table(spec)
-        if not view._table.exists():
-            view.build(fact, dim)
-            agg.build()
-            self._save_view_state(
-                state_path,
-                self._hwm_str(fact, spec.tracking_column),
-                self._hwm_str(dim, spec.view_dim_tracking),
-                fact_version=vt.latest_version() if vt is not None else None,
-            )
-        else:
-            if not agg._exists():
-                # a crash landed between view.build() and agg.build()
-                # on the first run: complete it (build is a full
-                # recompute from the view, so this converges) instead
-                # of raising 'not built' on every later run
-                agg.build()
-            state = self._load_view_state(state_path)
-            dim_delta = dim
-            if state["dim_hwm"] is not None:
-                dim_delta = dim.filter(
-                    F.col(spec.view_dim_tracking)
-                    > F.lit(state["dim_hwm"]).cast(
-                        dict(dim.dtypes)[spec.view_dim_tracking]
-                    )
-                )
-            if dim_delta.limit(1).count() > 0:
-                agg.apply_dim_delta(
-                    dim_delta.select(
-                        *_key_cols(spec.view_dim_key), *spec.view_dim_cols
-                    )
-                )
-            new_dim_hwm = (
-                self._hwm_str(dim_delta, spec.view_dim_tracking)
-                or state["dim_hwm"]
-            )
-            if vt is not None:
-                # versioned fact: fold its change feed (incl. DELETES)
-                # into both layers at O(touched buckets); see
-                # _run_join_view for the recovery rationale
-                latest_v = vt.latest_version()
-                applied_v = state.get("fact_version")
-                if applied_v is None:
-                    view.build(fact, dim)
-                    agg.build()
-                elif latest_v is not None and latest_v > applied_v:
-                    try:
-                        self._apply_fact_changes(
-                            vt, agg, applied_v, latest_v,
-                            spec.upsert_key, dim,
-                        )
-                    except ValueError:
-                        # unreplayable cursor: rebuild (see join_view)
-                        view.build(fact, dim)
-                        agg.build()
-                agg.heal()
-                self._save_view_state(
-                    state_path, state["fact_hwm"], new_dim_hwm,
-                    fact_version=latest_v,
-                )
-            else:
-                fact_delta = fact
-                if state["fact_hwm"] is not None:
-                    fact_delta = fact.filter(
-                        F.col(spec.tracking_column)
-                        > F.lit(state["fact_hwm"]).cast(
-                            dict(fact.dtypes)[spec.tracking_column]
-                        )
-                    )
-                if fact_delta.limit(1).count() > 0:
-                    agg.apply_fact_delta(fact_delta, dim)
-                # even a no-delta run heals a leftover bucket intent
-                agg.heal()
-                self._save_view_state(
-                    state_path,
-                    self._hwm_str(fact_delta, spec.tracking_column)
-                    or state["fact_hwm"],
-                    new_dim_hwm,
                 )
         out = self.read_model(spec.name)
         return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
@@ -989,7 +852,7 @@ class PipelineRunner:
                 keys=spec.agg_group_keys, measure=spec.agg_measures,
                 distinct=spec.agg_distinct_cols or None,
             ).result()
-        if spec is not None and spec.materialization == "scd2" and spec.scd2_split:
+        if spec is not None and spec.materialization == "scd2":
             open_t = self.table(name + "__open")
             closed_t = self.table(name + "__closed")
             open_df = open_t.read()
@@ -1329,14 +1192,15 @@ class PipelineRunner:
             belongs to the subject (resolved from stg_plans BEFORE any
             deletion), plus fact rows carrying the user_id directly.
           * every registered join_view mart whose columns carry
-            user_id or plan_id: rewritten BUCKET-SCOPED (only the
-            dim-key buckets holding subject rows are swapped, emptied
-            buckets deleted) so the view's layout — and the O(touched
-            buckets) maintenance bound — survives the erasure.
+            user_id or plan_id: the subject's fact keys go through the
+            view's own delete_fact_keys, BUCKET-SCOPED (only the dim-key
+            buckets holding subject rows are swapped, emptied buckets
+            deleted) so the view's layout — and the O(touched buckets)
+            maintenance bound — survives the erasure.
           * every registered agg_view mart: its UNDERLYING view
-            (<name>__view) holds the row-level subject data and is
-            swept with the same bucket-scoped rewrite, then the rollup
-            PARTIALS of exactly those buckets are re-derived — an
+            (<name>__view) holds the row-level subject data; the
+            AggJoinView's delete_fact_keys sweeps it the same way, then
+            re-derives the rollup PARTIALS of exactly those buckets — an
             aggregate that kept counting an erased subject would leak
             their activity through the mart.
           * every registered versioned_incremental mart: PURGED
@@ -1449,131 +1313,48 @@ class PipelineRunner:
         erase_plain("stg_plans", [(ids_b, "user_id")])
         erase_plain("dim_plans", [(ids_b, "user_id")])
 
-        # join_view marts: a maintained fact⋈dim view keyed (directly or
-        # via plan_id) to the subject would silently RETAIN erased rows
-        # if skipped — and erase_plain's flat overwrite would destroy
-        # its bucket layout if used. Rewrite partition-scoped instead:
-        # one pruned semi-join finds the buckets holding subject rows,
-        # and only those directories are swapped (the same O(touched
-        # buckets) bound as the view's own maintenance).
-        for name, spec in self.models.items():
+        # join_view / agg_view marts: a maintained fact⋈dim view keyed
+        # (directly or via plan_id) to the subject would silently RETAIN
+        # erased rows if skipped — and erase_plain's flat overwrite would
+        # destroy its bucket layout. The maintenance target's own
+        # delete_fact_keys removes the subject's fact keys instead: only
+        # the buckets holding them are swapped (the same O(touched
+        # buckets) bound as the view's maintenance), and an agg_view
+        # re-derives exactly those buckets' rollup partials under its
+        # intent protocol — an aggregate that kept counting an erased
+        # subject would leak their activity through the mart.
+        for spec in self.models.values():
             if spec.materialization not in ("join_view", "agg_view"):
                 continue
-            # join_view: the mart itself is the bucketed view.
-            # agg_view: the mart is a ROLLUP whose row-level subject
-            # data lives in its underlying view at <name>__view —
-            # skipping it would retain erased rows at row grain, and
-            # the rollup partials must be re-derived for the touched
-            # buckets afterwards or the aggregate would keep COUNTING
-            # the erased subject.
-            vname = name if spec.materialization == "join_view" else name + "__view"
-            t = ParquetTable(self.spark, os.path.join(self.warehouse_dir, vname))
-            if not t.exists():
+            view, agg = self._view_target(spec)
+            if not view._table.exists():
                 continue
-            agg = None
-            if spec.materialization == "agg_view":
-                from nomba_data_pipeline_spark.operators.agg_join_view import (
-                    AggJoinView,
-                )
-                from nomba_data_pipeline_spark.operators.merge import (
-                    fs_and_path as _fs_and_path,
-                )
-
-                # a first run that crashed between view.build() and
-                # agg.build() leaves the __view on disk with NO
-                # ._agg_meta sidecar (the next _run_agg_view heals by
-                # completing the build) — open() would raise and fail
-                # the entire GDPR sweep across all models. With no
-                # sidecar there are no partials to refresh either:
-                # sweep the view's buckets below with agg=None.
-                meta_fs, meta_jp = _fs_and_path(
-                    self.spark,
-                    os.path.join(self.warehouse_dir, name) + "._agg_meta",
-                )
-                if meta_fs.exists(meta_jp):
-                    agg = AggJoinView.open(
-                        self.spark, os.path.join(self.warehouse_dir, name)
-                    )
-                    # a prior sweep crashed between the view rewrite and
-                    # the partial refresh: its intent names the buckets —
-                    # heal BEFORE recomputing counts from the current view
-                    agg.heal()
-            cur = t.read()  # includes __dim_bucket (raw table read)
-            kept = cur
-            for match_df, col in ((ids_b, "user_id"), (plan_ids, "plan_id")):
-                if match_df is None or col not in cur.columns:
-                    continue
-                kept = kept.join(match_df, col, "left_anti")
-            n_before, n_kept = cur.count(), kept.count()
-            touched_buckets: list = []
-            if n_kept == 0 and n_before > 0:
-                if agg is not None:
-                    # intent BEFORE the rewrite (same protocol as the
-                    # apply verbs): a crash between the view fallback
-                    # and the partial mirror heals on the next pass
-                    agg._write_intent([
-                        int(r["__dim_bucket"])
-                        for r in cur.select("__dim_bucket").distinct().collect()
-                    ])
-                # every bucket emptied: removing all dirs would leave an
-                # unreadable table — same schema-keeping fallback as
-                # erase_plain (one empty unpartitioned file)
-                t.overwrite(kept.repartition(1), partition_by=None)
-            elif n_kept < n_before:
-                gone = cur.join(kept, spec.upsert_key, "left_anti")
-                buckets = [
-                    r["__dim_bucket"]
-                    for r in gone.select("__dim_bucket").distinct().collect()
-                ]
-                touched_buckets = buckets
-                if agg is not None:
-                    agg._write_intent(buckets)
-                kept_slice = kept.filter(F.col("__dim_bucket").isin(buckets))
-                live = {
-                    r["__dim_bucket"]
-                    for r in kept_slice.select("__dim_bucket").distinct().collect()
-                }
-                if live:
-                    t.insert_overwrite_partitions(kept_slice, ["__dim_bucket"])
-                # dynamic overwrite only replaces partitions PRESENT in
-                # the delta: a bucket emptied of every row must be
-                # deleted explicitly or its subject rows would survive
-                for b in buckets:
-                    if b not in live:
-                        self._rm_dir(
-                            os.path.join(
-                                self.warehouse_dir, vname, f"__dim_bucket={b}"
-                            )
-                        )
-                self.spark.catalog.refreshByPath(
-                    os.path.join(self.warehouse_dir, vname)
-                )
-            removed[vname] = n_before - n_kept
-            if agg is not None and n_kept < n_before:
-                from nomba_data_pipeline_spark.operators.incremental_agg import (
-                    agg_state,
-                )
-
-                if n_kept == 0:
-                    # the view fell back to one empty flat file; mirror
-                    # that shape for the partials (an empty PARTITIONED
-                    # overwrite would write no data files and leave the
-                    # state unreadable) — the next build() restores the
-                    # bucketed layout
-                    agg._table.overwrite(
-                        agg_state(
-                            t.read(),
-                            ["__dim_bucket", *agg.group_keys],
-                            agg.measures,
-                            distinct=agg.distinct_cols,
-                        ).repartition(1)
-                    )
+            if agg is not None:
+                meta_fs, meta_jp = fs_and_path(self.spark, agg.path + "._agg_meta")
+                if not meta_fs.exists(meta_jp):
+                    # a first run that crashed between view.build() and
+                    # agg.build() left no partials (the next _run_view
+                    # completes the build): sweep the view alone
+                    agg = None
                 else:
-                    # recompute exactly the partials of the buckets the
-                    # erasure rewrote — same O(touched buckets) bound as
-                    # the view's own maintenance
-                    agg._refresh(touched_buckets)
-                agg._clear_intent()
+                    # a prior sweep that crashed between the view rewrite
+                    # and the partial refresh left an intent: heal it even
+                    # when this pass matches nothing
+                    agg.heal()
+            rows = view.read()
+            gone = None
+            for match_df, col in ((ids_b, "user_id"), (plan_ids, "plan_id")):
+                if match_df is None or col not in rows.columns:
+                    continue
+                hit = rows.join(match_df, col, "left_semi").select(*view.fact_key)
+                gone = hit if gone is None else gone.unionByName(hit)
+            n_gone = 0
+            if gone is not None:
+                gone = gone.distinct()
+                n_gone = gone.count()
+                if n_gone:
+                    (view if agg is None else agg).delete_fact_keys(gone)
+            removed[os.path.basename(view.path)] = n_gone
 
         # versioned marts: a plain delete is NOT an erasure here — time
         # travel and rollback would keep serving the subject from

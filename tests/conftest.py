@@ -28,8 +28,6 @@ def pytest_configure(config):
 # regardless of duration, and the gated tests still run with
 # SPARK_GRAFT_SLOW_TESTS=1 (CI cadence) or --run-soak-style opt-in.
 _SLOW_TIER = {
-    "test_agg_join_view.py::test_erasure_sweeps_agg_view_underlying_view_and_partials",  # 13s
-    "test_agg_join_view.py::test_erasure_with_missing_agg_meta_sidecar_sweeps_view",  # 11s
     "test_agg_join_view.py::test_streaming_fact_cdc_maintains_rollup",  # 13s
     "test_cdf.py::test_apply_cdf_replicates_source",  # 11s
     "test_corpus_dedup_stream.py::test_flag_semantics_and_batch_split_invariance",  # 12s
@@ -69,8 +67,6 @@ _SLOW_TIER = {
     "test_versioned.py::test_vacuum_prunes_stale_clone_registry_entries",  # 11s
     "test_versioned.py::test_versioned_incremental_materialization",  # 10s
     "test_versioned_cdf_stream.py::test_delete_keys_feed_and_empty_marker",  # 14s
-    "test_versioned_cdf_view.py::test_versioned_fact_cdf_feeds_mart[agg_view]",  # 15s
-    "test_versioned_cdf_view.py::test_versioned_fact_cdf_feeds_mart[join_view]",  # 13s
     "test_agg_join_view.py::test_agg_view_pipeline_incremental_across_runner_instances",  # 34s
     "test_agg_join_view.py::test_random_maintenance_sequence_equals_declarative",  # 32s
     "test_cdf.py::test_apply_cdf_preserves_partitioned_replica_layout",  # 15s

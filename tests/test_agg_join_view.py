@@ -387,7 +387,7 @@ def test_agg_view_requires_its_fields(spark, tmp_path):
     r.register(ModelSpec(name="f", fn=lambda s, d: None, materialization="table"))
     r.register(ModelSpec(name="d", fn=lambda s, d: None, materialization="table"))
     with pytest.raises(ValueError, match="agg_view requires"):
-        r._run_agg_view(r.models["bad"])
+        r._run_view(r.models["bad"])
 
 
 def test_erasure_sweeps_agg_view_underlying_view_and_partials(spark, tmp_path):

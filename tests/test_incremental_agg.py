@@ -352,7 +352,7 @@ def test_agg_join_view_distinct_survives_recompute(spark, tmp_path):
 
 
 def test_agg_view_pipeline_distinct_cols(spark, tmp_path):
-    """ModelSpec.agg_distinct_cols flows through _run_agg_view: the
+    """ModelSpec.agg_distinct_cols flows through _run_view: the
     mart's finalized rollup carries approx_distinct_<col>, maintained
     across a second run's fact delta."""
     import os

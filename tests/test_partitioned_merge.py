@@ -56,12 +56,12 @@ def test_partition_migration_with_survivors(spark, tmp_path):
     assert _state(t) == [(1, "a2", "2026-02"), (9, "z", "2026-01")]
 
 
-def test_partition_stable_skips_key_scan_and_matches(spark, tmp_path):
-    """With stable partitions the fast path must produce the same result
-    as the default (when no keys migrate)."""
+def test_partitioned_merge_without_migration_updates_and_inserts(spark, tmp_path):
+    """No key changes partition: an in-place update and an insert into a
+    new partition, the other partition carried unchanged."""
     t = _t(spark, tmp_path, [(1, "a", "2026-01"), (2, "b", "2026-02")])
     delta = spark.createDataFrame([(1, "a2", "2026-01"), (3, "c", "2026-03")], SCHEMA)
-    t.merge_upsert(delta, ["id"], partition_by=["m"], partition_stable=True)
+    t.merge_upsert(delta, ["id"], partition_by=["m"])
     assert _state(t) == [(1, "a2", "2026-01"), (2, "b", "2026-02"), (3, "c", "2026-03")]
 
 
