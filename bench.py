@@ -581,7 +581,6 @@ def main() -> None:
 
         from nomba_data_pipeline_spark.operators.similarity import (
             lsh_index_append,
-            lsh_index_stage_batch,
             lsh_index_write,
         )
 
@@ -593,19 +592,11 @@ def main() -> None:
             delta = emb.select(
                 (F.col("vec_id") + 100_000_000).alias("vec_id"), "embedding"
             )
-            # direct append into the flat lists: O(delta) compute, one
-            # file per delta partition; not replay-safe on its own
+            # raw append of fresh ids into the flat lists: O(delta)
+            # compute, one file per delta partition
             t0 = time.perf_counter()
             lsh_index_append(delta, ipath)
             timings["ann_x64_lsh_index_append_1x"] = round(
-                time.perf_counter() - t0, 3
-            )
-            # LSM staging: the micro-batch/firehose path — the
-            # batch-addressed overwrite makes a replayed batch clobber
-            # its own output instead of duplicating it
-            t0 = time.perf_counter()
-            lsh_index_stage_batch(delta, ipath, 0)
-            timings["ann_x64_lsh_index_stage_1x"] = round(
                 time.perf_counter() - t0, 3
             )
         finally:

@@ -346,9 +346,11 @@ def cmd_aggview(args) -> int:
 
 
 def cmd_index(args) -> int:
-    """Index lifecycle: build / append / fold / stats over the persisted
-    ANN layouts (operators/similarity.py) or the MinHash band index for
-    incremental corpus dedup (operators/dedup.py)."""
+    """Index lifecycle: build / append / stats over the persisted ANN
+    layouts (operators/similarity.py) or the MinHash band index for
+    incremental corpus dedup (operators/dedup.py). Every append
+    anti-joins out the ids the index already holds, so rerunning
+    `index append` adds nothing."""
     from nomba_data_pipeline_spark.catalog import load_table
     from nomba_data_pipeline_spark.operators import similarity as S
 
@@ -356,9 +358,6 @@ def cmd_index(args) -> int:
     # plausible-looking stats answer for an unsupported combination
     if args.action in ("dedup", "stream-dedup") and args.family != "minhash":
         print(f"`index {args.action}` requires --family minhash", file=sys.stderr)
-        return 2
-    if args.action == "fold" and args.family != "lsh":
-        print("`index fold` applies to the LSH LSM staging (--family lsh)", file=sys.stderr)
         return 2
     spark = _spark(args)
     if args.family == "minhash":
@@ -429,15 +428,12 @@ def cmd_index(args) -> int:
             S.ivf_index_append(delta, args.path, skip_existing=True)
         n_after = spark.read.parquet(args.path + "/lists").count()
         print(json.dumps({"appended": n_after - n_before}))
-    elif args.action == "fold":
-        n = S.lsh_index_fold_incoming(spark, args.path)
-        print(json.dumps({"folded": n}))
     else:  # stats
         if args.family == "ivf":
             rows = {r["list_id"]: r["n_vectors"] for r in S.ivf_index_stats(spark, args.path).collect()}
             print(json.dumps({"lists": rows}))
         else:
-            n = S.lsh_index_read_all(spark, args.path).count()
+            n = S.lsh_index_read(spark, args.path).count()
             print(json.dumps({"rows": n}))
     return 0
 
@@ -699,11 +695,11 @@ def main(argv: list[str] | None = None) -> int:
 
     ix = sub.add_parser(
         "index",
-        help="index lifecycle: build/append/fold/stats (LSH or IVF ANN), dedup (minhash)",
+        help="index lifecycle: build/append/stats (LSH or IVF ANN), dedup (minhash)",
     )
     ix.add_argument(
         "action",
-        choices=["build", "append", "fold", "stats", "dedup", "stream-dedup"],
+        choices=["build", "append", "stats", "dedup", "stream-dedup"],
     )
     ix.add_argument("--family", choices=["lsh", "ivf", "minhash"], default="lsh")
     ix.add_argument("--path", required=True, help="index root directory")

@@ -651,17 +651,25 @@ def minhash_index_write(docs: DataFrame, path: str) -> None:
     bands.repartition("band").write.mode("overwrite").partitionBy("band").parquet(path)
 
 
-def minhash_index_append(
-    docs: DataFrame, path: str, skip_existing: bool = True
-) -> None:
-    """Append new docs' bands (signature pass over the DELTA only).
-    skip_existing anti-joins on doc_id first — one column-pruned scan —
-    because a raw parquet append is not replay-idempotent."""
-    spark = docs.sparkSession
-    if skip_existing:
-        existing = spark.read.parquet(path).select("doc_id").distinct()
-        docs = docs.join(existing, "doc_id", "left_anti")
-    bands = minhash_bands(docs)
+def minhash_index_append(docs: DataFrame, path: str) -> None:
+    """Append new docs' bands, replay-safe: the docs already indexed are
+    anti-joined out on doc_id BEFORE signing, so the signature pass runs
+    over the delta only."""
+    _append_bands(minhash_bands(_not_indexed(docs, path)), path)
+
+
+def _not_indexed(df: DataFrame, path: str) -> DataFrame:
+    """`df` minus the doc_ids the band index at `path` already holds —
+    one column-pruned doc_id scan, because a raw parquet append is not
+    replay-idempotent."""
+    existing = df.sparkSession.read.parquet(path).select("doc_id").distinct()
+    return df.join(existing, "doc_id", "left_anti")
+
+
+def _append_bands(bands: DataFrame, path: str) -> None:
+    """The partitioned append of band rows. minhash_index_append and the
+    streaming corpus dedup (its cached batch bands, through
+    `_not_indexed`) both write here."""
     bands.repartition("band").write.mode("append").partitionBy("band").parquet(path)
 
 

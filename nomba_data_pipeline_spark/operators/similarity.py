@@ -1662,9 +1662,9 @@ def ivf_index_append(
 
     NOT replay-idempotent by default (raw parquet append — a rerun or
     an already-indexed vector duplicates rows permanently). Pass
-    skip_existing=True for an opt-in anti-join against the index's
-    current ids (one column-pruned vec_id scan of lists), or stage
-    through the LSM path for streaming sources."""
+    skip_existing=True for at-least-once sources: an id dedup plus an
+    anti-join against the index's current ids (one column-pruned vec_id
+    scan of lists) makes a replayed batch append nothing."""
     if skip_existing:
         new_vectors = _drop_indexed(new_vectors, path, id_col)
     C = ivf_index_centroids(new_vectors.sparkSession, path)
@@ -1674,12 +1674,16 @@ def ivf_index_append(
 
 
 def _drop_indexed(new_vectors: DataFrame, path: str, id_col: str) -> DataFrame:
-    """`new_vectors` minus the ids already in `<path>/lists` — the
-    skip_existing anti-join (one column-pruned vec_id scan of lists)."""
+    """`new_vectors`, one row per id, minus the ids already in
+    `<path>/lists` — the skip_existing anti-join (one column-pruned
+    vec_id scan of lists). The dropDuplicates covers an at-least-once
+    batch that carries the same vector twice (a re-delivered source file
+    landing in the same trigger as its original): the anti-join alone
+    would index both copies."""
     existing = new_vectors.sparkSession.read.parquet(path + "/lists").select(
         F.col("vec_id").alias(id_col)
     )
-    return new_vectors.join(existing, id_col, "left_anti")
+    return new_vectors.dropDuplicates([id_col]).join(existing, id_col, "left_anti")
 
 
 def ivf_index_centroids(spark: SparkSession, path: str):
@@ -1790,148 +1794,41 @@ def lsh_index_append(
     sidecar parameters (md5-derived hyperplanes), so appended rows get
     bit-identical buckets to a full rebuild — no drift, ever.
 
-    NOT replay-idempotent by default: this is a raw parquet append, so
-    re-running it (or appending vectors already indexed) duplicates
-    rows in lists permanently. For at-least-once delivery use the
-    staged path (lsh_index_stage_batch + lsh_index_fold_incoming),
-    which is replay-safe by construction; or pass skip_existing=True
-    to anti-join the batch against the index's current ids first — an
-    extra column-pruned vec_id scan of lists, the same cost fold pays.
+    The default is a raw parquet append for callers whose ids are
+    fresh: re-running it (or appending vectors already indexed)
+    duplicates rows in lists permanently. For at-least-once delivery
+    (a rerun, a streaming checkpoint replay) pass skip_existing=True:
+    the batch is deduplicated on id and anti-joined against the index's
+    current ids first, so a replay appends nothing and every id lands
+    once. That costs one extra column-pruned vec_id
+    scan of lists per append, which is why it is not the default.
+
+    Refuses an index whose lists hold `b0=` partition directories (the
+    earlier bucket-partitioned layout): partition discovery would then
+    ignore every file at the lists root, so the appended vectors would
+    vanish from every read.
     """
-    spark = new_vectors.sparkSession
-    if skip_existing:
-        new_vectors = _drop_indexed(new_vectors, path, id_col)
-    p = _read_lsh_params(spark, path)
-    _lsh_lists_append(spark, path, lsh_index(
-        new_vectors, dim=p["dim"], n_planes=p["n_planes"], n_tables=p["n_tables"],
-        id_col=id_col, vec_col=vec_col,
-    ))
-
-
-def _lsh_lists_append(spark: SparkSession, path: str, idx: DataFrame) -> None:
-    """Append signed rows to the flat `<path>/lists`. Refuses an index
-    whose lists hold `b0=` partition directories (the earlier
-    bucket-partitioned layout): partition discovery would then ignore
-    every file at the lists root, so the appended vectors would vanish
-    from every read."""
     from nomba_data_pipeline_spark.operators.merge import fs_and_path
 
+    spark = new_vectors.sparkSession
     fs, pattern = fs_and_path(spark, path + "/lists/b0=*")
     if fs.globStatus(pattern):
         raise ValueError(
             f"{path}/lists holds bucket-partitioned b0= directories; "
             "rebuild with lsh_index_write before appending"
         )
-    idx.write.mode("append").parquet(path + "/lists")
+    if skip_existing:
+        new_vectors = _drop_indexed(new_vectors, path, id_col)
+    p = _read_lsh_params(spark, path)
+    lsh_index(
+        new_vectors, dim=p["dim"], n_planes=p["n_planes"], n_tables=p["n_tables"],
+        id_col=id_col, vec_col=vec_col,
+    ).write.mode("append").parquet(path + "/lists")
 
 
 def lsh_index_read(spark: SparkSession, path: str) -> DataFrame:
     """The persisted index as a DataFrame (lsh_index schema)."""
     return spark.read.parquet(path + "/lists").select("vec_id", "embedding", "buckets")
-
-
-def lsh_index_stage_batch(
-    new_vectors: DataFrame,
-    path: str,
-    batch_id: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Stage one micro-batch of new vectors into the index's LSM-style
-    incoming area: `<path>/incoming/batch=<id>` written with OVERWRITE.
-    Structured Streaming replays a crashed batch under the SAME batch id
-    (it is part of the checkpoint), so the overwrite makes streaming
-    maintenance replay-idempotent with zero bookkeeping — the replay
-    clobbers its own partial output, never duplicates it."""
-    spark = new_vectors.sparkSession
-    p = _read_lsh_params(spark, path)
-    lsh_index(
-        new_vectors, dim=p["dim"], n_planes=p["n_planes"], n_tables=p["n_tables"],
-        id_col=id_col, vec_col=vec_col,
-    ).write.mode("overwrite").parquet(f"{path}/incoming/batch={batch_id}")
-
-
-def _incoming_batch_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Staged batch dirs that hold data files. A crash mid-stage can
-    leave an empty `batch=<id>` dir; feeding it to the parquet reader
-    fails schema inference, and its replay will overwrite it anyway —
-    so empty dirs are simply excluded, not deleted (deleting would race
-    the very replay that is about to rewrite them)."""
-    from nomba_data_pipeline_spark.operators.merge import fs_and_path
-
-    fs, jp = fs_and_path(spark, path + "/incoming")
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        p = st.getPath()
-        if not (st.isDirectory() and p.getName().startswith("batch=")):
-            continue
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            if not it.next().getPath().getName().startswith(("_", ".")):
-                out.append(p.toString())
-                break
-    return out
-
-
-def lsh_index_read_all(spark: SparkSession, path: str) -> DataFrame:
-    """The queryable index: folded lists ∪ staged incoming batches.
-    Incoming is small (recent micro-batches), so the union costs a
-    second scan of MBs, not the index; fold on the maintenance cadence
-    to bring queries back to the single lists scan."""
-    base = spark.read.parquet(path + "/lists").select("vec_id", "embedding", "buckets")
-    staged = _incoming_batch_dirs(spark, path)
-    if not staged:
-        return base
-    inc = (
-        spark.read.option("basePath", path + "/incoming")
-        .parquet(*staged)
-        .select("vec_id", "embedding", "buckets")
-        # a vector delivered in two staged batches (at-least-once
-        # source) appears once; incoming is micro-batch-sized, so this
-        # dedup shuffle moves MBs.
-        .dropDuplicates(["vec_id"])
-    )
-    # A vector present in BOTH lists and incoming (re-delivered after a
-    # fold) would otherwise emit twice and its two identical rows would
-    # take two row_number ranks in a top-k, displacing the k-th distinct
-    # neighbor. Incoming is tiny, so shadowing base by a broadcast
-    # anti-join is map-only over the index — no shuffle of lists.
-    base = base.join(
-        F.broadcast(inc.select("vec_id")), "vec_id", "left_anti"
-    )
-    return base.unionByName(inc)
-
-
-def lsh_index_fold_incoming(spark: SparkSession, path: str) -> int:
-    """Fold staged batches into the flat lists directory. Replay-
-    idempotent via an anti-join on vec_id (a rerun after a crash
-    between the append and the staging delete re-appends nothing): the
-    anti-join's right side is the column-pruned vec_id scan of the
-    index — a maintenance-cadence cost, not a query-path one. Returns
-    the number of rows folded."""
-    from nomba_data_pipeline_spark.operators.merge import fs_and_path
-
-    fs, jp = fs_and_path(spark, path + "/incoming")
-    staged = _incoming_batch_dirs(spark, path)
-    if not staged:
-        if fs.exists(jp):  # only empty crash-artifact dirs: clear them
-            fs.delete(jp, True)
-        return 0
-    inc = (
-        spark.read.option("basePath", path + "/incoming")
-        .parquet(*staged)
-        .select("vec_id", "embedding", "buckets")
-        .dropDuplicates(["vec_id"])  # same vector in two staged batches
-    )
-    fresh = _drop_indexed(inc, path, "vec_id")
-    n = fresh.count()
-    if n:
-        _lsh_lists_append(spark, path, fresh)
-    fs.delete(jp, True)
-    spark.catalog.refreshByPath(path + "/lists")
-    return n
 
 
 # ---------------------------------------------------------------------------

@@ -616,16 +616,16 @@ def run_index_maintenance_stream(
 ) -> None:
     """Streaming ANN index maintenance — the vector firehose shape: a
     file stream of new embeddings keeps a persisted LSH index current
-    without ever rebuilding it. Each micro-batch signs its vectors
-    under the index's frozen params and lands in the LSM-style
-    incoming area via `lsh_index_stage_batch` (batch-addressed
-    OVERWRITE, so a checkpoint replay clobbers its own partial output —
-    replay-idempotent with no bookkeeping). Queries read
-    `lsh_index_read_all` (lists ∪ incoming); `lsh_index_fold_incoming`
-    moves the staged rows into lists on the maintenance cadence, so
-    queries go back to a single lists scan.
+    without ever rebuilding it. Each micro-batch is signed under the
+    index's frozen params and appended to `<index>/lists` by
+    `lsh_index_append(..., skip_existing=True)`: the id dedup and
+    anti-join make a checkpoint replay (or a source file that
+    re-delivers vectors, in the same trigger or a later one) append
+    nothing, and each append costs O(new rows) plus one column-pruned
+    vec_id scan. Queries read `lsh_index_read` — there is
+    no second tier to fold.
     Blocks until the available backlog drains (availableNow)."""
-    from nomba_data_pipeline_spark.operators.similarity import lsh_index_stage_batch
+    from nomba_data_pipeline_spark.operators.similarity import lsh_index_append
 
     stream = (
         spark.readStream.schema(schema)
@@ -633,13 +633,13 @@ def run_index_maintenance_stream(
         .parquet(source_dir)
     )
 
-    def stage(batch_df: DataFrame, batch_id: int) -> None:
+    def append(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        lsh_index_stage_batch(batch_df, index_path, batch_id)
+        lsh_index_append(batch_df, index_path, skip_existing=True)
 
     q = (
-        stream.writeStream.foreachBatch(stage)
+        stream.writeStream.foreachBatch(append)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -727,7 +727,11 @@ def corpus_dedup_apply_batch(
     """
     if batch_df.isEmpty():
         return
-    from nomba_data_pipeline_spark.operators.dedup import minhash_bands
+    from nomba_data_pipeline_spark.operators.dedup import (
+        _append_bands,
+        _not_indexed,
+        minhash_bands,
+    )
     from nomba_data_pipeline_spark.operators.merge import fs_and_path
 
     spark = batch_df.sparkSession
@@ -774,11 +778,7 @@ def corpus_dedup_apply_batch(
         )
         flags.write.mode("overwrite").parquet(f"{flags_path}/batch={batch_id}")
         if has_index:
-            existing = spark.read.parquet(index_path).select("doc_id").distinct()
-            fresh = bands.join(existing, "doc_id", "left_anti")
-            fresh.repartition("band").write.mode("append").partitionBy(
-                "band"
-            ).parquet(index_path)
+            _append_bands(_not_indexed(bands, index_path), index_path)
         else:
             bands.repartition("band").write.mode("overwrite").partitionBy(
                 "band"

@@ -10,7 +10,7 @@ from tests.conftest import SF_SMALL
 def test_minhash_index_persisted_equals_inline(spark, tmp_path):
     """The persisted band index must give the SAME dedup verdicts as
     the inline band computation (one-time 100 TB signature pass), and
-    index append must be replay-safe via the skip_existing anti-join."""
+    index append must be replay-safe via its doc_id anti-join."""
     from pyspark.sql import functions as F
 
     from nomba_data_pipeline_spark.operators.dedup import (

@@ -215,7 +215,7 @@ def test_cli_run_query_compact(spark, tmp_path, capsys):
     assert rc == 0
     assert "flagship_revenue_by_region" in capsys.readouterr().out
 
-    # ANN index lifecycle: build -> append a slice -> stats -> fold(0)
+    # ANN index lifecycle: build -> stats -> append twice (replay-safe)
     ipath = os.path.join(tmp_path, "lshidx")
     rc = main(["--sf-dir", SF_SMALL, "index", "build", "--path", ipath])
     assert rc == 0
@@ -225,10 +225,15 @@ def test_cli_run_query_compact(spark, tmp_path, capsys):
     assert rc == 0
     sj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert sj["rows"] == bj["rows"]
-    rc = main(["--sf-dir", SF_SMALL, "index", "fold", "--path", ipath])
+    # the built index already holds every id: a rerun appends nothing
+    for _ in range(2):
+        rc = main(["--sf-dir", SF_SMALL, "index", "append", "--path", ipath])
+        assert rc == 0
+        aj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert aj == {"appended": 0}
+    rc = main(["--sf-dir", SF_SMALL, "index", "stats", "--path", ipath])
     assert rc == 0
-    fj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert fj["folded"] == 0  # nothing staged yet -> no-op
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) == sj
 
 
 def test_full_refresh_rebuilds_subgraph_and_downstream(spark, warehouse):

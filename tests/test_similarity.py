@@ -478,31 +478,6 @@ def test_ivf_index_append_skip_existing_is_replay_idempotent(spark, tmp_path):
     assert ivf_index_read(spark, path).count() == n1 == emb.count()
 
 
-def test_lsh_read_all_never_emits_a_vector_twice(spark, tmp_path):
-    """A vector present in BOTH lists and a staged incoming batch
-    (re-delivered after its fold) must surface once from read_all —
-    otherwise its two identical rows take two row_number ranks in a
-    top-k and displace the k-th distinct neighbor."""
-    from nomba_data_pipeline_spark.catalog import load_table
-    from nomba_data_pipeline_spark.operators.similarity import (
-        lsh_index_read_all,
-        lsh_index_stage_batch,
-        lsh_index_write,
-    )
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    path = str(tmp_path / "lsh")
-    lsh_index_write(emb, path)
-    # re-deliver a slice that is ALREADY folded into lists
-    redelivered = emb.filter(F.col("vec_id") % 10 == 0)
-    lsh_index_stage_batch(redelivered, path, batch_id=0)
-    all_rows = lsh_index_read_all(spark, path)
-    assert all_rows.count() == emb.count()
-    ids = [r["vec_id"] for r in all_rows.select("vec_id").collect()]
-    assert len(ids) == len(set(ids))
-
-
 def test_multiprobe_radius1_matches_popcount_definition():
     """The x & (x-1) trick must equal 'signature differs in <= 1 bit'."""
     import numpy as np
@@ -666,8 +641,8 @@ def test_lsh_append_refuses_bucket_partitioned_lists(spark, tmp_path):
     """An index whose lists hold `b0=` directories (the earlier
     bucket-partitioned layout) must not take a flat append: partition
     discovery would ignore every file at the lists root, so the appended
-    vectors would vanish from reads. Append and fold both refuse, and
-    write nothing."""
+    vectors would vanish from reads. The append refuses, and writes
+    nothing."""
     import os
 
     import pyarrow as pa
@@ -676,8 +651,6 @@ def test_lsh_append_refuses_bucket_partitioned_lists(spark, tmp_path):
 
     from nomba_data_pipeline_spark.operators.similarity import (
         lsh_index_append,
-        lsh_index_fold_incoming,
-        lsh_index_stage_batch,
         lsh_index_write,
     )
 
@@ -686,7 +659,6 @@ def test_lsh_append_refuses_bucket_partitioned_lists(spark, tmp_path):
     extra = emb.filter(F.col("vec_id") % 2 == 1)
     path = str(tmp_path / "idx")
     lsh_index_write(base, path)
-    lsh_index_stage_batch(extra, path, batch_id=0)
     os.makedirs(os.path.join(path, "lists", "b0=1"), exist_ok=True)
     pq.write_table(
         pa.table({
@@ -700,8 +672,6 @@ def test_lsh_append_refuses_bucket_partitioned_lists(spark, tmp_path):
 
     with pytest.raises(ValueError, match="rebuild with lsh_index_write"):
         lsh_index_append(extra, path)
-    with pytest.raises(ValueError, match="rebuild with lsh_index_write"):
-        lsh_index_fold_incoming(spark, path)
     assert _data_files(path) == files
 
 

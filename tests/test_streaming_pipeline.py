@@ -99,61 +99,81 @@ def test_subgraph_run_only_touches_closure(spark, tmp_path):
     assert calls == ["a", "b"]  # c untouched
 
 
-def test_streaming_index_maintenance_stage_and_fold(spark, tmp_path):
+def test_streaming_index_maintenance_is_replay_safe(spark, tmp_path):
     """Vector-firehose index maintenance: stream new embeddings into a
-    persisted LSH index's incoming area, query the union, then fold.
-    Pins (1) streamed+staged index == full rebuild, (2) staging is
-    replay-idempotent (same batch id overwrites itself), (3) fold is
-    replay-idempotent (second fold appends nothing), (4) after fold the
-    lists alone carry the full corpus."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    persisted LSH index. Pins (1) the streamed index == a full rebuild,
+    every id once; (2) a checkpoint replay of the last batch (its commit
+    log entry deleted, as a crash before the commit leaves it) appends
+    nothing; (3) a source file that re-delivers already-indexed vectors
+    appends nothing; (4) fresh vectors delivered twice inside ONE
+    trigger (two source files, max_files=2) land once each."""
     from nomba_data_pipeline_spark.catalog import load_table
     from nomba_data_pipeline_spark.operators.similarity import (
         lsh_index,
-        lsh_index_fold_incoming,
         lsh_index_read,
-        lsh_index_read_all,
-        lsh_index_stage_batch,
+        lsh_index_write,
     )
     from nomba_data_pipeline_spark.streaming.microbatch import (
         run_index_maintenance_stream,
     )
     from tests.conftest import SF_SMALL
-    from nomba_data_pipeline_spark.operators.similarity import lsh_index_write
 
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     cut = emb.agg(F.expr("percentile(vec_id, 0.7)")).first()[0]
     base = emb.filter(F.col("vec_id") <= cut)
-    extra = emb.filter(F.col("vec_id") > cut)
+    late_cond = (F.col("vec_id") > cut) & (F.col("vec_id") % 10 == 1)
+    late = emb.filter(late_cond)
+    extra = emb.filter((F.col("vec_id") > cut) & ~late_cond)
 
     path = str(tmp_path / "lshidx")
     lsh_index_write(base, path, n_tables=2)
-
     src = str(tmp_path / "src")
     extra.repartition(3).write.mode("overwrite").parquet(src)
     ckpt = str(tmp_path / "ckpt")
-    run_index_maintenance_stream(spark, src, extra.schema, path, ckpt, max_files=1)
+    commits = os.path.join(ckpt, "commits")
 
-    want = {r["vec_id"]: list(r["buckets"]) for r in lsh_index(emb, n_tables=2).collect()}
-    got = {r["vec_id"]: list(r["buckets"]) for r in lsh_index_read_all(spark, path).collect()}
-    assert got == want
+    def drain(max_files=1):
+        run_index_maintenance_stream(
+            spark, src, extra.schema, path, ckpt, max_files=max_files
+        )
 
-    # replay-idempotent staging: a batch id restaged (same payload, as a
-    # checkpoint replay would) overwrites itself — no growth; and a
-    # vector re-delivered in a SECOND batch is deduped by read/fold
-    redelivered = extra.orderBy("vec_id").limit(20)
-    lsh_index_stage_batch(redelivered, path, 999)
-    lsh_index_stage_batch(redelivered, path, 999)  # replay
-    assert spark.read.parquet(path + "/incoming/batch=999").count() == 20
-    assert lsh_index_read_all(spark, path).count() == emb.count()
+    def batch_ids():
+        return sorted(int(f) for f in os.listdir(commits) if f.isdigit())
 
-    # fold: full corpus lands in lists exactly once; refold is a no-op
-    folded = lsh_index_fold_incoming(spark, path)
-    assert folded > 0
-    assert not os.path.exists(path + "/incoming")
-    lists_only = {r["vec_id"]: list(r["buckets"]) for r in lsh_index_read(spark, path).collect()}
-    assert lists_only == want
-    assert lsh_index_fold_incoming(spark, path) == 0
+    def indexed():
+        # a sorted list, not a dict: a duplicated vector must show
+        return sorted(
+            (r["vec_id"], list(r["buckets"])) for r in lsh_index_read(spark, path).collect()
+        )
+
+    drain()
+    want_all = sorted(
+        (r["vec_id"], list(r["buckets"])) for r in lsh_index(emb, n_tables=2).collect()
+    )
+    late_ids = {r["vec_id"] for r in late.select("vec_id").collect()}
+    assert late_ids
+    want = [row for row in want_all if row[0] not in late_ids]
+    assert indexed() == want
+    assert len(batch_ids()) == 3
+
+    # replay: without its commit entry the last batch reruns on restart
+    last = batch_ids()[-1]
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    drain()
+    assert batch_ids()[-1] == last  # the batch ran again and committed
+    assert indexed() == want
+
+    # re-delivery: a new source file of vectors already in the index
+    emb.filter(F.col("vec_id") % 10 == 0).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    assert batch_ids()[-1] == last + 1
+    assert indexed() == want
+
+    # duplicate inside one trigger: the same fresh vectors in two files
+    for _ in range(2):
+        late.coalesce(1).write.mode("append").parquet(src)
+    drain(max_files=2)
+    assert batch_ids()[-1] == last + 2  # both files in one batch
+    assert indexed() == want_all

@@ -11,7 +11,8 @@ Arms (each its own subprocess = fresh JVM so the conf takes effect):
     C  = zstd only     : preferSortMergeJoin=true,  codec=zstd
     D  = HEAD (both)   : preferSortMergeJoin=false, codec=zstd
 
-Arm order rotates per round so box drift cancels. Registry rows use the
+Any ARMS dict works: a plain two-arm A/B is a two-entry dict, and arm
+order rotates per round so box drift cancels. Registry rows use the
 bench methodology (cold rep discarded, warm rep timed); the pipeline
 pair builds a fresh warehouse per rep and times the warm (2nd) rep of
 each; ann rows replicate bench.py's corpus setup and take the median of
@@ -172,7 +173,8 @@ def run(rounds: int, out_path: str) -> None:
     log.write(json.dumps({"arms": ARMS}) + "\n")
     order0 = list(ARMS)
     for rnd in range(rounds):
-        order = order0[rnd % 4:] + order0[: rnd % 4]  # rotate per round
+        shift = rnd % len(order0)
+        order = order0[shift:] + order0[:shift]  # rotate per round
         for armname in order:
             tmp = f"/tmp/ab4_{armname}_{rnd}.json"
             t0 = time.time()
@@ -194,7 +196,7 @@ def run(rounds: int, out_path: str) -> None:
             print(f"round {rnd} arm {armname}: total {sum(res.values()):.2f}s",
                   flush=True)
     # summary: per-query medians per arm
-    names = list(samples["A"].keys())
+    names = list(samples[order0[0]].keys())
     print(f"\n{'query':34s}" + "".join(f" {k:>8s}" for k in ARMS))
     summary: dict[str, dict[str, float]] = {}
     totals = dict.fromkeys(ARMS, 0.0)
