@@ -210,16 +210,6 @@ def pii_count_sql(expr: str, kind: str) -> str:
     return f"CAST(len(regexp_extract_all({expr}, '{pat}')) AS BIGINT)"
 
 
-def sanitize_mongo_json(col: Column | str) -> Column:
-    """P10 parity: the reference serializes Mongo docs through bson
-    json_util and strips '$' characters to kill `$oid`/`$date` wrappers
-    (reference mongo_loader.py:118-146, :143). With native struct
-    handling this is usually moot; provided for byte-parity ingestion of
-    extended-JSON payloads."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"\$", "")
-
-
 def tokens(col: Column | str) -> Column:
     """Array of lowercase whitespace tokens (for shingling)."""
     c = F.col(col) if isinstance(col, str) else col

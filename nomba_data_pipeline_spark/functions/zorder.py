@@ -20,7 +20,7 @@ whole-stage-codegen'd, no Python in the hot path) and as DuckDB SQL
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -83,3 +83,38 @@ def bounded_code(col: str, lo, hi, bits: int = 16) -> Column:
             ),
         )
     )
+
+
+def zorder_arrange(df: DataFrame, col_a: str, col_b: str, bits: int,
+                   n_files: int | None) -> DataFrame | None:
+    """`df` range-partitioned on the Morton key of `col_a` and `col_b`
+    and sorted by it within each partition, the key dropped — the shared
+    layout of ``ParquetTable.zorder`` and the versioned checkpoint and
+    optimize rewrites. One tiny min/max agg gives the bounds (no global
+    sort), then one shuffle into `n_files` ranges, or Spark's default
+    range partitioning when None. Returns None when either dimension is
+    empty or all NULL: there is nothing to order."""
+    bounds = df.agg(
+        F.min(col_a).alias("alo"),
+        F.max(col_a).alias("ahi"),
+        F.min(col_b).alias("blo"),
+        F.max(col_b).alias("bhi"),
+    ).first()
+    if bounds is None or bounds["alo"] is None or bounds["blo"] is None:
+        return None
+
+    def code(col, lo, hi):
+        # width_bucket(x, lo, lo, n) is NULL — a constant column
+        # contributes bucket 0 (it carries no ordering information)
+        if lo == hi:
+            return F.lit(0).cast("bigint")
+        return bounded_code(col, lo, hi, bits)
+
+    keyed = (
+        df.withColumn("__za", code(col_a, bounds["alo"], bounds["ahi"]))
+        .withColumn("__zb", code(col_b, bounds["blo"], bounds["bhi"]))
+        .withColumn("__zkey", zorder_key("__za", "__zb", bits))
+    )
+    rng = (keyed.repartitionByRange(n_files, "__zkey")
+           if n_files else keyed.repartitionByRange("__zkey"))
+    return rng.sortWithinPartitions("__zkey").drop("__za", "__zb", "__zkey")

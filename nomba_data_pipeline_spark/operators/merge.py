@@ -1034,10 +1034,7 @@ class ParquetTable:
         bucket are fine — pruning granularity is the file). Content-
         preserving: the key is computed, sorted on, and dropped.
         """
-        from nomba_data_pipeline_spark.functions.zorder import (
-            bounded_code,
-            zorder_key,
-        )
+        from nomba_data_pipeline_spark.functions.zorder import zorder_arrange
 
         if not self.exists():
             return
@@ -1047,34 +1044,10 @@ class ParquetTable:
                 "partitions is not supported — cluster the partition "
                 "columns via the directory layout and zorder flat tables"
             )
-        df = self.read()
-        bounds = df.agg(
-            F.min(col_a).alias("alo"),
-            F.max(col_a).alias("ahi"),
-            F.min(col_b).alias("blo"),
-            F.max(col_b).alias("bhi"),
-        ).first()
-        if bounds is None or bounds["alo"] is None or bounds["blo"] is None:
+        out = zorder_arrange(self.read(), col_a, col_b, bits,
+                             target_files or self._scan_split_count())
+        if out is None:
             return  # empty table or all-NULL key: nothing to order
-
-        def code(col, lo, hi):
-            # width_bucket(x, lo, lo, n) is NULL — a constant column
-            # contributes bucket 0 (it carries no ordering information)
-            if lo == hi:
-                return F.lit(0).cast("bigint")
-            return bounded_code(col, lo, hi, bits)
-
-        keyed = (
-            df.withColumn("__za", code(col_a, bounds["alo"], bounds["ahi"]))
-            .withColumn("__zb", code(col_b, bounds["blo"], bounds["bhi"]))
-            .withColumn("__zkey", zorder_key("__za", "__zb", bits))
-        )
-        n = target_files or self._scan_split_count()
-        out = (
-            keyed.repartitionByRange(n, "__zkey")
-            .sortWithinPartitions("__zkey")
-            .drop("__za", "__zb", "__zkey")
-        )
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
         out.write.mode("overwrite").parquet(tmp)
         self._swap_in(tmp)
@@ -1183,51 +1156,3 @@ class ParquetTable:
         return (
             self.read().groupBy(*keys).count().filter(F.col("count") > 1).count()
         )
-
-
-def ensure_inferred_members(
-    dim: ParquetTable,
-    fact_delta: DataFrame,
-    key: str,
-    defaults: dict | None = None,
-) -> int:
-    """Kimball late-arriving-dimension handling ("inferred members"):
-    fact rows can arrive before their dimension row. Instead of
-    failing the referential-integrity gate or dropping the fact, seed
-    the dimension with a placeholder row per missing key — the key
-    itself plus caller-supplied sentinel attributes (e.g. segment =
-    'UNKNOWN'), every other column NULL-filled at the dim's type. When
-    the real dimension row finally loads, the normal keyed upsert
-    replaces the placeholder wholesale — no special reconciliation
-    step.
-
-    Replay-idempotent: placeholders go in via merge_upsert on the key,
-    so re-running a batch inserts nothing new; and once the key exists
-    (placeholder OR real), it is never re-inferred. Cost: one
-    distinct + anti-join of the delta's keys against the dim's key
-    column (column-pruned scan; the delta side broadcasts) — at 100 TB
-    the dim key column is the only thing read. Returns the number of
-    placeholders created. NULL fact keys are skipped (a NULL foreign
-    key is a quality problem, not a missing member).
-
-    The dimension must already EXIST: bootstrapping it from a
-    placeholder would freeze its schema at (key + defaults), and every
-    later real load would be silently truncated to that narrow schema
-    by the merge's align-to-target projection. Create the dim (even
-    empty) with its real schema first."""
-    if not dim.exists():
-        raise ValueError(
-            f"dimension at {dim.path} does not exist: inferred members "
-            "require the dim's real schema (a placeholder-created table "
-            "would truncate every later load to key+defaults)"
-        )
-    missing = fact_delta.select(key).dropna().dropDuplicates([key])
-    missing = missing.join(dim.read().select(key), key, "left_anti")
-    n = missing.count()
-    if n == 0:
-        return 0
-    placeholder = missing
-    for c, v in (defaults or {}).items():
-        placeholder = placeholder.withColumn(c, F.lit(v))
-    dim.merge_upsert(placeholder, [key])
-    return n

@@ -2,10 +2,12 @@
 
 Scale-extension surface (BASELINE.json north star). The Spark-side
 plumbing is real and tested — schema, partition-preserving mapInPandas,
-Arrow batch shapes; the actual media decode is STUBBED (no PIL/ffmpeg in
-this container) behind `decode_available()`: the deterministic fake
-derives features from the bytes themselves so tests are stable, and a
-real decoder drops in by replacing `_fake_decode` only.
+Arrow batch shapes; the actual media decode is STUBBED (no image or
+audio decoder is a dependency): features are an integer byte-fold of
+the payload (`_fold_bytes`), so results are stable and oracle-checkable,
+and a real decoder drops in by replacing that fold only. Two registry
+rows grade this surface: `media_features` (extract_features) and
+`media_frame_sample` (sample_frames).
 
 Design for 100 TB:
   * binary payloads ride in parquet binary columns, scanned lazily;
@@ -41,34 +43,15 @@ MEDIA_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 
-def decode_available() -> bool:
-    """True when a real image/audio decoder is importable (not in this
-    container — PIL/torchvision/ffmpeg are absent by design)."""
-    try:  # pragma: no cover - environment probe
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _fold_bytes(payload: bytes | None, dim: int = FEATURE_DIM) -> np.ndarray:
     """Integer byte-fold: bucket b = sum of bytes at positions ≡ b mod
-    dim (zero-padded tail). Exact int64 — the oracle-reproducible core
-    of the fake decoder."""
+    dim (zero-padded tail). Exact int64 — the oracle-reproducible
+    stand-in for decode+embed."""
     if payload is None:
         return np.zeros(dim, dtype=np.int64)
     raw = np.frombuffer(payload, dtype=np.uint8)
     pad = (-len(raw)) % dim
     return np.pad(raw, (0, pad)).reshape(-1, dim).sum(axis=0, dtype=np.int64)
-
-
-def _fake_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for decode+embed: bytes -> unit vector.
-    Replace with a real model call when decoders are available."""
-    folded = _fold_bytes(payload, dim).astype(np.float64)
-    norm = np.linalg.norm(folded)
-    return folded / norm if norm > 0 else folded
 
 
 def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
@@ -142,68 +125,3 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.filter(F.col("kind") == "video").select(
         "media_id", "duration_ms", "payload"
     ).mapInPandas(run, out_schema)
-
-
-def resize_media(
-    media: DataFrame, max_w: int = 256, max_h: int = 256
-) -> DataFrame:
-    """Image resize (brief's decode→resize leg): aspect-preserving fit
-    of (width, height) into a (max_w, max_h) box — the dimension math
-    is REAL and tested (floor scaling, never upscale, min dim 1); the
-    pixel resample is stubbed as an area-ratio strided byte slice
-    (deterministic, no PIL in this container) behind the same
-    `_fake_decode`-style seam the feature extractor uses. Arrow-batched
-    mapInPandas, partition-preserving, payload never leaves the
-    executor; a real `Image.resize` drops into `_resample` only."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("out_w", T.IntegerType(), False),
-            T.StructField("out_h", T.IntegerType(), False),
-            T.StructField("resized_payload", T.BinaryType(), True),
-        ]
-    )
-
-    def fit(w: int, h: int) -> tuple[int, int]:
-        if w <= 0 or h <= 0:
-            return 1, 1
-        scale = min(max_w / w, max_h / h, 1.0)  # never upscale
-        return max(1, int(w * scale)), max(1, int(h * scale))
-
-    def _resample(payload: bytes, ratio: float) -> bytes:
-        # stub: keep every k-th byte so output size tracks the area
-        # ratio the way a real resample's pixel count would
-        if not payload:
-            return b""
-        k = max(1, int(round(1.0 / max(ratio, 1e-9))))
-        return payload[::k]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "out_w": [], "out_h": [], "resized_payload": []}
-            for _, r in pdf.iterrows():
-                w = 0 if pd.isna(r["width"]) else int(r["width"])
-                h = 0 if pd.isna(r["height"]) else int(r["height"])
-                ow, oh = fit(w, h)
-                ratio = (ow * oh) / (w * h) if w > 0 and h > 0 else 1.0
-                out["media_id"].append(r["media_id"])
-                out["out_w"].append(ow)
-                out["out_h"].append(oh)
-                out["resized_payload"].append(
-                    _resample(r["payload"] or b"", ratio)
-                )
-            yield pd.DataFrame(out)
-
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "width", "height", "payload"
-    ).mapInPandas(run, out_schema)
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only rollup — must NOT read payload bytes (column
-    pruning keeps the binary column out of the scan)."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(F.length(F.col("mime"))).alias("avg_mime_len"),
-        F.sum(F.when(F.col("payload").isNull(), 1).otherwise(0)).alias("null_payloads"),
-    )

@@ -15,12 +15,12 @@ re-sharding.
 
 At 100 TB: `shard_assignment` is one hash-partition exchange plus a
 per-shard sort (the window's partition IS the write partition — one
-shuffle total, plan-pinned); `write_training_shards` is the same
-exchange feeding `partitionBy(shard)` with rows pre-sorted, so every
-shard directory holds its documents already in read order. Shard count
-sizes the sort: pick n_shards so a shard fits an executor's sort
-spill budget (~shard = corpus/n_shards bytes); `max_records_per_file`
-splits a shard into sequentially numbered files for streaming loaders.
+shuffle total, plan-pinned). An exporter writes that frame with
+`partitionBy("shard")` after sorting within partitions, so every shard
+directory holds its documents already in read order. Shard count sizes
+the sort: pick n_shards so a shard fits an executor's sort spill budget
+(~shard = corpus/n_shards bytes). The registry row
+`corpus_shuffle_shards` grades the assignment against a SQL window.
 
 The reference has no export/shuffle stage at all (its warehouse IS the
 endpoint — SURVEY §2); this is part of the LLM-extension surface.
@@ -59,89 +59,11 @@ def shard_assignment(
 ) -> DataFrame:
     """(id, shard, pos): every document's shard and its 1-based position
     in the shard's shuffled read order. ONE exchange (hash on shard) +
-    a per-shard sort — the verifiable twin of write_training_shards'
-    physical layout, graded against a plain SQL window."""
+    a per-shard sort, graded against a plain SQL window."""
     shard, order_key = shard_key_cols(n_shards, id_col, salt)
     w = Window.partitionBy("shard").orderBy("__ok", id_col)
     return (
         docs.select(id_col, shard.alias("shard"), order_key.alias("__ok"))
         .withColumn("pos", F.row_number().over(w).cast("long"))
         .select(id_col, "shard", "pos")
-    )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    salt: str = "shard",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Materialize `<path>/shard=<k>/` directories with rows stored in
-    their shuffled read order. repartition(n_shards, shard) routes each
-    shard to exactly one task (order inside its files is total);
-    sortWithinPartitions orders rows before the writer splits files, so
-    sequentially numbered part files preserve the stream order for
-    shard-at-a-time training loaders."""
-    shard, order_key = shard_key_cols(n_shards, id_col, salt)
-    out = (
-        docs.withColumn("shard", shard)
-        .withColumn("__ok", order_key)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "__ok", id_col)
-        .drop("__ok")
-    )
-    writer = out.write.mode("overwrite").partitionBy("shard")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def shard_manifest(shards_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Per-shard integrity manifest: (shard, n_docs, checksum) where
-    checksum is the bit-xor of a 60-bit md5 fold of the ids —
-    order-insensitive and incrementally recomputable, so a manifest of
-    the written export can be compared against one computed from the
-    source snapshot without re-reading either in any particular order.
-    One partial-aggregated shuffle of |shards| rows."""
-    fold = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-    )
-    return shards_df.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.bit_xor(fold).alias("checksum"),
-    )
-
-
-def verify_shards(
-    docs: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    salt: str = "shard",
-) -> DataFrame:
-    """Compare a written export against the source snapshot it claims
-    to hold: rows where the written manifest differs from the expected
-    one (missing shard, row-count drift, membership drift via the xor
-    checksum). Empty result == export verified. Reads only id_col from
-    the export (column-pruned scan)."""
-    spark = docs.sparkSession
-    shard, _ = shard_key_cols(n_shards, id_col, salt)
-    expected = shard_manifest(
-        docs.select(id_col, shard.alias("shard")), id_col
-    ).withColumnRenamed("n_docs", "exp_n").withColumnRenamed("checksum", "exp_sum")
-    written = shard_manifest(
-        spark.read.parquet(path).select(id_col, "shard"), id_col
-    )
-    return (
-        expected.join(written, "shard", "full_outer")
-        .filter(
-            F.col("n_docs").isNull()
-            | F.col("exp_n").isNull()
-            | (F.col("n_docs") != F.col("exp_n"))
-            | (F.col("checksum") != F.col("exp_sum"))
-        )
-        .select("shard", "exp_n", "n_docs", "exp_sum", "checksum")
     )

@@ -523,9 +523,6 @@ def group_centroids(
     long (group, pos, mean) form is oracle-checkable; assemble=True
     reassembles array<double> centroids (order pinned by array_sort on
     pos, because collect_list order is shuffle-dependent).
-
-    This is the aggregation half of distributed k-means — see
-    ivf_train_centroids_distributed.
     """
     exploded = embeddings.select(
         F.col(group_col).alias("grp"),
@@ -551,130 +548,6 @@ def group_centroids_sql(table: str = "embeddings", group_col: str = "label") -> 
     SELECT grp, pos, round(avg(val), {SIM_DP}) AS mean_val
     FROM x GROUP BY 1, 2
     """
-
-
-def evenly_spaced_init_ids(
-    df: DataFrame, n_lists: int, id_col: str = "vec_id"
-) -> DataFrame:
-    """Deterministic k-means init pick WITHOUT a global sort: n_lists
-    evenly-spaced id targets over [min_id, max_id]; each row maps to the
-    bucket of its preceding target and each bucket keeps its min id.
-    One partial-aggregated shuffle of (bucket, id) pairs — the 100 TB
-    replacement for `row_number().over(Window.orderBy(id))`, which is a
-    single-task sort of the entire corpus. For dense ids this returns
-    exactly the evenly-spaced rank ids; sparse gaps can drop buckets
-    (callers top up from a bounded TakeOrderedAndProject)."""
-    lo, hi = df.agg(F.min(id_col), F.max(id_col)).first()
-    if lo is None:  # empty frame: no ids to pick
-        return df.select(id_col).limit(0)
-    span = max(n_lists - 1, 1)
-    targets = [float(lo) + (float(hi) - float(lo)) * i / span for i in range(n_lists)]
-    arr = F.array(*[F.lit(t) for t in targets])
-    bucket = F.size(F.filter(arr, lambda t: t <= F.col(id_col).cast("double")))
-    return (
-        df.select(id_col)
-        .groupBy(bucket.alias("__b"))
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-
-
-def ivf_train_centroids_distributed(
-    embeddings: DataFrame,
-    n_lists: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Distributed Lloyd iterations over the WHOLE corpus — the 100 TB
-    form of ivf_train_centroids (which trains on a bounded driver-side
-    sample): assignment is a map-only BLAS pass (centroids broadcast),
-    the centroid update is group_centroids' partial-aggregated shuffle,
-    and only the n_lists x d centroid matrix (tiny) ever reaches the
-    driver, once per iteration. Init is evenly_spaced_init_ids —
-    deterministic and sort-free (a no-partition row_number window here
-    would funnel the whole corpus through a single task).
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    spark = embeddings.sparkSession
-    init = (
-        embeddings.join(
-            evenly_spaced_init_ids(embeddings, n_lists, id_col=id_col),
-            on=id_col,
-            how="semi",
-        )
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if len(init) < n_lists:
-        # sparse id gaps dropped buckets: top up with the smallest unused
-        # ids — TakeOrderedAndProject, bounded per-partition heap
-        seen = [r[0] for r in init]
-        init.extend(
-            embeddings.filter(~F.col(id_col).isin(seen))
-            .orderBy(id_col)
-            .limit(n_lists - len(init))
-            .select(id_col, vec_col)
-            .collect()
-        )
-    init.sort(key=lambda r: r[0])
-    if not init:
-        raise ValueError("ivf_train_centroids_distributed: empty corpus")
-    if len(init) < n_lists:
-        # corpus has fewer rows than n_lists even after top-up: train
-        # with what exists rather than silently mis-sizing the matrix
-        n_lists = len(init)
-    C = np.stack([np.array(r[1], dtype=np.float64) for r in init])
-    assert C.shape[0] == n_lists
-    C = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("list_id", T.IntegerType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    for _ in range(n_iters):
-        bc = spark.sparkContext.broadcast(C)
-
-        # mapInArrow (guide §4.2): the vector passes through as the
-        # input's own Arrow buffer (cast to list<double> exactly as the
-        # old pandas path upcast it) and the matrix is a values-buffer
-        # reshape — no per-row object arrays per Lloyd iteration
-        def assign(batches):
-            import pyarrow as pa
-
-            Cb = bc.value
-            dim = Cb.shape[1]
-            tgt_emb = pa.list_(pa.field("element", pa.float64()))
-            for batch in batches:
-                m = batch.num_rows
-                if m == 0:
-                    continue
-                vec = batch.column(0)
-                M = _batch_matrix(vec, m, dim, np.float64)
-                norms = np.linalg.norm(M, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                lists = np.argmax((M / norms) @ Cb.T, axis=1).astype(np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(lists, pa.int32()), vec.cast(tgt_emb)],
-                    ["list_id", "embedding"],
-                )
-
-        assigned = embeddings.select(F.col(vec_col).alias("__vec")).mapInArrow(
-            assign, assign_schema
-        )
-        means = group_centroids(
-            assigned, group_col="list_id", vec_col="embedding", assemble=True
-        ).collect()
-        for r in means:
-            c = np.array(r["centroid"], dtype=np.float64)
-            nrm = np.linalg.norm(c)
-            if nrm > 0:
-                C[r["grp"]] = c / nrm
-    return C
 
 
 # ---------------------------------------------------------------------------

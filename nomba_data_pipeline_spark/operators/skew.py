@@ -1,4 +1,4 @@
-"""Skew mitigation: key salting for hot-key aggregations and joins.
+"""Skew mitigation: key salting for hot-key aggregations.
 
 AQE's skew-join handling (on in session.py) covers sort-merge joins at
 runtime; salting covers the cases AQE cannot: skewed AGGREGATIONS
@@ -15,7 +15,7 @@ min/max); averages decompose into (sum, count).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -56,20 +56,3 @@ def salted_sum_count(
     return phase1.groupBy(*key_cols).agg(
         F.sum("__s").alias("sum_v"), F.sum("__c").alias("cnt")
     )
-
-
-def broadcast_salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    across all salts, join on (key, salt). Use when the small side is
-    broadcastable but the big side's key distribution would skew a
-    shuffled join's tasks (e.g. a stateful downstream op repartitions by
-    the join key anyway)."""
-    salts = small.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("__salt"))
-    big_s = salted(big, n_salts)
-    small_r = small.crossJoin(F.broadcast(salts))
-    return big_s.join(small_r, on=[on, "__salt"], how="left").drop("__salt")

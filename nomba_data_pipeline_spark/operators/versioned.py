@@ -87,6 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from nomba_data_pipeline_spark.functions.zorder import zorder_arrange
 from nomba_data_pipeline_spark.operators.footers import (
     local_path,
     read_footer,
@@ -304,6 +305,14 @@ class ConcurrentWriteError(RuntimeError):
     where the CREATE-EXCLUSIVE manifest rename (_publish_manifest) is
     the CAS: exactly one wins, the loser gets this error and retries
     against the winner's now-visible commit."""
+
+
+def _zorder_pair(zorder_by: list[str]) -> tuple[str, str]:
+    """The two z-order columns of a checkpoint/optimize `zorder_by`."""
+    if len(zorder_by) != 2:
+        raise ValueError(f"zorder_by takes exactly two columns, got {zorder_by}")
+    col_a, col_b = zorder_by
+    return col_a, col_b
 
 
 class VersionedTable:
@@ -1909,8 +1918,10 @@ class VersionedTable:
         man = self._resolve(None)
         df = self.read()
         if zorder_by:
-            df = self._zorder_arrange(df, zorder_by, bits, target_files)
-            files = self._write_gen(df)  # layout already arranged
+            arranged = zorder_arrange(df, *_zorder_pair(zorder_by), bits,
+                                      target_files)
+            # layout already arranged (or nothing to order)
+            files = self._write_gen(df if arranged is None else arranged)
         else:
             files = self._write_gen(df, cluster_by=cluster_by,
                                     target_files=target_files)
@@ -1919,44 +1930,6 @@ class VersionedTable:
             {"compacted_files": len(man["files"])},
             expected_parent=man["version"], cdf="empty",
         )
-
-    def _zorder_arrange(self, df: DataFrame, zorder_by: list[str],
-                        bits: int, target_files: int | None) -> DataFrame:
-        """Range-partition `df` by the Morton key of the two zorder_by
-        columns (functions/zorder.py — the same interleave
-        ParquetTable.zorder uses): one tiny bounds agg, one shuffle,
-        key dropped before write."""
-        from nomba_data_pipeline_spark.functions.zorder import (
-            bounded_code,
-            zorder_key,
-        )
-
-        if len(zorder_by) != 2:
-            raise ValueError(
-                f"zorder_by takes exactly two columns, got {zorder_by}"
-            )
-        col_a, col_b = zorder_by
-        bounds = df.agg(
-            F.min(col_a).alias("alo"), F.max(col_a).alias("ahi"),
-            F.min(col_b).alias("blo"), F.max(col_b).alias("bhi"),
-        ).first()
-        if bounds is None or bounds["alo"] is None or bounds["blo"] is None:
-            return df  # empty / all-NULL dimension: nothing to order
-
-        def code(col, lo, hi):
-            if lo == hi:  # constant column carries no ordering signal
-                return F.lit(0).cast("bigint")
-            return bounded_code(col, lo, hi, bits)
-
-        keyed = (
-            df.withColumn("__za", code(col_a, bounds["alo"], bounds["ahi"]))
-            .withColumn("__zb", code(col_b, bounds["blo"], bounds["bhi"]))
-            .withColumn("__zkey", zorder_key("__za", "__zb", bits))
-        )
-        rng = (keyed.repartitionByRange(target_files, "__zkey")
-               if target_files else keyed.repartitionByRange("__zkey"))
-        return (rng.sortWithinPartitions("__zkey")
-                .drop("__za", "__zb", "__zkey"))
 
     # -- CHECK constraints (write-time enforcement, Delta parity) --------
     def constraints(self) -> dict[str, str]:
@@ -2109,7 +2082,8 @@ class VersionedTable:
 
         zorder_by=[a, b] (VERDICT r14 #6 ask for r15) lays the MERGED
         generation out along the Morton interleave of the two columns
-        (the same _zorder_arrange the O(table) checkpoint uses), so
+        (the same functions/zorder.zorder_arrange the O(table)
+        checkpoint uses), so
         manifest stats on the merge output stay narrow on BOTH
         dimensions under steady CDC — without ever paying a full
         rewrite. Only the small-file rows shuffle; carried files are
@@ -2149,8 +2123,10 @@ class VersionedTable:
             target_files if target_files else int(total // target_bytes),
         ))
         if zorder_by:
+            arranged = zorder_arrange(merged, *_zorder_pair(zorder_by), bits,
+                                      n_out)
             new_files = self._write_gen(
-                self._zorder_arrange(merged, zorder_by, bits, n_out)
+                merged if arranged is None else arranged
             )
         elif cluster_by:
             new_files = self._write_gen(merged, cluster_by=cluster_by,

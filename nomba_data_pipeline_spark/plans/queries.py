@@ -1140,8 +1140,7 @@ def q_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/shards.py): (doc_id, shard, pos) where shard is an md5
     bucket and pos the document's position in the shard's shuffled
     read order (an independent md5 stream breaks shard/order
-    correlation). One hash-partition exchange + per-shard sort — the
-    same physical layout write_training_shards materializes, graded
+    correlation). One hash-partition exchange + per-shard sort, graded
     here as a window query so the export order itself is
     oracle-checked."""
     from nomba_data_pipeline_spark.operators.shards import shard_assignment
@@ -10205,10 +10204,10 @@ FROM final GROUP BY 1
 
 
 def q_sql_time_travel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL TIME TRAVEL (VersionedTable.register_sql_views /
-    catalog.version_as_of — Delta's `VERSION AS OF` as per-version
-    temp views): orders load as v1, a correction+insert batch makes
-    v2, and the graded result is computed ENTIRELY in spark.sql —
+    """SQL TIME TRAVEL (VersionedTable.register_sql_views — Delta's
+    `VERSION AS OF` as per-version temp views): orders load as v1, a
+    correction+insert batch makes v2, and the graded result is
+    computed ENTIRELY in spark.sql —
     the per-status rollup of version 1 full-outer-joined against the
     current version, read through the registered `ords_tt__v1` /
     `ords_tt` views. Grading both sides catches a view bound to the
@@ -10553,7 +10552,7 @@ def q_sql_table_changes_roundtrip(spark: SparkSession,
     """SQL surface for the persisted change feed (catalog.table_changes
     — Delta's ``table_changes('<t>', v_after[, v_to])`` as a
     registered view; VERDICT r14 #5, completing the SQL family
-    version_as_of started): orders load as v1, a correction+insert
+    register_sql_views started): orders load as v1, a correction+insert
     batch makes v2, a predicate delete makes v3, and the graded result
     is computed ENTIRELY in spark.sql over the registered view — the
     per-(change_type, commit, status) rollup of the feed in (1,

@@ -903,7 +903,6 @@ class PipelineRunner:
         open_old = open_t.read() if open_t.exists() else None
         key = spec.scd2_key or spec.upsert_key[0]
         if open_old is not None and self.table(spec.name + "__closed").exists():
-            self._migrate_legacy_closed(closed_path)
             unmarked = self._unmarked_batch_dirs(closed_path)
             if unmarked:
                 existing = (
@@ -975,7 +974,6 @@ class PipelineRunner:
             # derive from (both plans read the old open files)
             bid = None
             if stats["n"] > 0:
-                self._migrate_legacy_closed(closed_path)
                 bid = f"{(stats['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{stats['n']}"
                 self._rm_dir(os.path.join(closed_path, f"batch_id={bid}"))
                 closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
@@ -988,41 +986,6 @@ class PipelineRunner:
             closed_now.unpersist()
         if bid is not None:  # the commit point: swap done -> mark the batch
             self._touch(os.path.join(closed_path, f"batch_id={bid}", "_COMMITTED"))
-
-    def _migrate_legacy_closed(self, closed_path: str) -> None:
-        """One-time layout upgrade: closed history written before the
-        replay-safe batch ids is partitioned by close_date only. Mixing
-        the two depths under one root makes Spark's partition discovery
-        throw 'Conflicting directory structures', so any top-level
-        `close_date=` dirs are renamed under a `batch_id=legacy`
-        umbrella before the first new-layout append (metadata-only FS
-        renames; 'legacy' cannot collide with real ids, which are
-        16-hex + '-' + count)."""
-        from nomba_data_pipeline_spark.operators.merge import fs_and_path
-
-        jvm = self.spark._jvm
-        fs, jpath = fs_and_path(self.spark, closed_path)
-        if not fs.exists(jpath):
-            return
-        legacy = [
-            st.getPath()
-            for st in fs.listStatus(jpath)
-            if st.isDirectory() and st.getPath().getName().startswith("close_date=")
-        ]
-        if not legacy:
-            return
-        umbrella = jvm.org.apache.hadoop.fs.Path(closed_path + "/batch_id=legacy")
-        fs.mkdirs(umbrella)
-        for src in legacy:
-            dst = jvm.org.apache.hadoop.fs.Path(
-                f"{closed_path}/batch_id=legacy/{src.getName()}"
-            )
-            if not fs.rename(src, dst):
-                raise IOError(f"legacy closed-history migration failed: {src}")
-        # pre-batch-id history predates replay safety — its rows cannot
-        # be attributed to an append, so it is grandfathered committed
-        self._touch(closed_path + "/batch_id=legacy/_COMMITTED")
-        self.spark.catalog.refreshByPath(closed_path)
 
     def _unmarked_batch_dirs(self, closed_path: str) -> list[str]:
         """batch_id= dirs missing the `_COMMITTED` marker — the orphan

@@ -145,25 +145,3 @@ def _date_vote(df: DataFrame, col: str) -> T.DataType:
     if d_hits / n > DATE_VOTE_THRESHOLD:
         return T.DateType()
     return T.StringType()
-
-
-def read_with_inferred_schema(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Production read: explicit schema (no second inference pass), with
-    string->timestamp/date casts applied for the promoted columns."""
-    schema = schema or infer_stage_schema(spark, path)
-    raw_fields = [
-        T.StructField(f.name, T.StringType() if isinstance(f.dataType, (T.TimestampType, T.DateType)) else f.dataType)
-        for f in schema.fields
-    ]
-    df = spark.read.schema(T.StructType(raw_fields)).json(path)
-    for f in schema.fields:
-        # backtick-quoted references: dotted JSON keys must not be
-        # parsed as nested-field paths (withColumn's TARGET name is
-        # literal, only the reading side needs quoting)
-        if isinstance(f.dataType, T.TimestampType):
-            df = df.withColumn(f.name, F.to_timestamp(F.col(_quote(f.name))))
-        elif isinstance(f.dataType, T.DateType):
-            df = df.withColumn(f.name, F.to_date(F.col(_quote(f.name))))
-    return df

@@ -70,81 +70,3 @@ class JdbcSource:
 
             df = df.filter(F.col(tracking_column) > F.lit(last_value))
         return df
-
-
-@dataclass(frozen=True)
-class JdbcSink:
-    """JDBC warehouse sink with an idempotent upsert — the load-mode
-    surface (S5's full/append/upsert) pointed at an RDBMS target
-    instead of the parquet lake.
-
-    Spark's JDBC writer only knows append/overwrite; MERGE must happen
-    database-side. `merge_upsert` therefore stages the delta with a
-    distributed overwrite write (every executor opens its own
-    connection — the reference streams single-connection,
-    base_loader.py:190-193), then executes ONE `MERGE INTO` statement
-    on the target: a single atomic statement, so a replayed batch
-    re-stages the same rows and merges to the identical end state —
-    exactly-once effect without sink-side dedup columns. At 100 TB
-    scale the staging write is the parallel part (numPartitions
-    connections); the merge cost is the database's problem, which is
-    why lake-side targets (operators/merge.py) stay the default.
-    """
-
-    url: str
-    table: str
-    user: str
-    password: str
-    batch_size: int = 10000
-
-    def _writer(self, df: DataFrame, table: str, mode: str):
-        return (
-            df.write.format("jdbc")
-            .option("url", self.url)
-            .option("dbtable", table)
-            .option("user", self.user)
-            .option("password", self.password)
-            .option("batchsize", str(self.batch_size))
-            .mode(mode)
-        )
-
-    def write_append(self, df: DataFrame) -> None:
-        """O10-style append load."""
-        self._writer(df, self.table, "append").save()
-
-    def write_full(self, df: DataFrame) -> None:
-        """O9 full load (TRUNCATE + INSERT via JDBC overwrite)."""
-        self._writer(df, self.table, "overwrite").save()
-
-    def merge_upsert(self, spark: SparkSession, df: DataFrame, keys: list[str]) -> None:
-        """O7 incremental upsert: stage + one atomic MERGE INTO."""
-        stage = f"{self.table}_stage"
-        self._writer(df, stage, "overwrite").save()
-        # Spark's JDBC writer creates columns as case-sensitive QUOTED
-        # identifiers matching the DataFrame's names — the merge SQL
-        # must quote them the same way or the database folds the case
-        # (Derby/Postgres uppercase/lowercase unquoted names) and the
-        # columns don't resolve. Target tables must use the same
-        # quoted-lowercase convention.
-        def q(c: str) -> str:
-            return '"' + c.replace('"', '""') + '"'
-
-        cols = df.columns
-        non_keys = [c for c in cols if c not in keys]
-        on = " AND ".join(f"t.{q(k)} = s.{q(k)}" for k in keys)
-        set_clause = ", ".join(f"{q(c)} = s.{q(c)}" for c in non_keys)
-        col_list = ", ".join(q(c) for c in cols)
-        val_list = ", ".join(f"s.{q(c)}" for c in cols)
-        merge_sql = (
-            f"MERGE INTO {self.table} t USING {stage} s ON {on} "
-            + (f"WHEN MATCHED THEN UPDATE SET {set_clause} " if non_keys else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({col_list}) VALUES ({val_list})"
-        )
-        jvm = spark._jvm
-        conn = jvm.java.sql.DriverManager.getConnection(self.url, self.user, self.password)
-        try:
-            st = conn.createStatement()
-            st.executeUpdate(merge_sql)
-            st.close()
-        finally:
-            conn.close()

@@ -170,56 +170,3 @@ def extract_mongo_stage(
             if dtype.startswith("struct"):
                 df = df.withColumn(name, F.to_json(name))
     return _strip_dollar_names(df)
-
-
-def mongo_ingest(
-    spark: SparkSession,
-    stage_path: str,
-    table,
-    keys: list[str] | None = None,
-    tracking_column: str | None = None,
-    mode: str = "incremental",
-    **extract_kwargs,
-) -> int:
-    """End-to-end S1 flow: stage -> extract -> load, in any of the
-    reference loader's four load types (mongo_to_clickhouse.py load_type
-    param; writers in operators/merge.py):
-
-      full        -> O9 truncate+insert (overwrite)
-      incremental -> O7 HWM-filtered upsert (the idempotent CDC loop;
-                     last_value comes from the TARGET's high-water mark)
-      dedup       -> O8 'special': upsert + keep-latest-per-key by the
-                     tracking column
-      snapshot    -> O10 append stamped with today's date, idempotent
-                     per day
-
-    Returns rows extracted for the load.
-    """
-    hwm = None
-    if mode in ("incremental", "dedup") and tracking_column:
-        hwm = table.high_water_mark(tracking_column)
-    delta = extract_mongo_stage(
-        spark,
-        stage_path,
-        tracking_column=tracking_column if hwm is not None else None,
-        last_value=hwm,
-        **extract_kwargs,
-    )
-    # the count below and the load each trigger an action; checkpoint
-    # lazily so the extraction plan (JSON scan, parsing, filters,
-    # flatten) runs ONCE instead of once per action
-    delta = delta.localCheckpoint(eager=False)
-    n = delta.count()
-    if mode == "full":
-        table.overwrite(delta)
-    elif mode == "snapshot":
-        table.snapshot_append(delta)
-    elif mode == "dedup":
-        if n:
-            table.merge_upsert_dedup(delta, keys, tracking_column)
-    elif mode == "incremental":
-        if n:
-            table.merge_upsert(delta, keys)
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    return n

@@ -9,6 +9,12 @@ arrival (O7). The idiomatic Spark upgrade is Structured Streaming with
 checkpointing replaces the hand-rolled hwm, and `foreachBatch` reuses
 the SAME merge writers as batch — one code path for both.
 
+Every runner here is reached from a registry row, the CLI or a named
+test: the AvailableNow merge streams (O7, and the versioned form whose
+txn commit gives exactly-once), the versioned change-feed consumer of a
+maintained aggregate, complete-mode rollups graded against their batch
+twins, streaming ANN index maintenance and streaming corpus dedup.
+
 At scale: the file source lists incrementally (maxFilesPerTrigger
 bounds batch size), stateful aggs are bounded by the watermark, and the
 merge inside foreachBatch is the same broadcast-delta join as batch O7.
@@ -31,22 +37,6 @@ def stream_events(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
         .parquet(source_dir)
-    )
-
-
-def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Tumbling-window counts with late-data watermark — the streaming
-    twin of queries.q_minute_rollup."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
 
 
@@ -129,93 +119,6 @@ def run_versioned_merge_stream(
     )
 
 
-def run_agg_view_fact_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    agg_path: str,
-    dim: DataFrame,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming FACT CDC into an aggregate-over-join view
-    (operators/agg_join_view.AggJoinView): each micro-batch re-enriches
-    against the static dim, upserts the underlying join view, and
-    refreshes exactly the touched buckets' rollup partials — the
-    stream-maintained GROUP BY over a join. Replay-convergent without a
-    txn guard: the view merge is an idempotent keyed rewrite and the
-    partial refresh RECOMPUTES (never folds), so the redelivered
-    in-flight batch after a crash lands on the same state; a crash
-    between the view apply and the refresh heals from the bucket-intent
-    sidecar on the next batch. Blocks until the backlog is consumed."""
-    from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
-
-    agg = AggJoinView.open(spark, agg_path)
-    _run_merge_stream(
-        spark,
-        source_dir,
-        schema,
-        checkpoint_dir,
-        lambda df, bid: agg.apply_fact_delta(df, dim),
-    )
-
-
-def run_agg_view_versioned_cdf_stream(
-    spark: SparkSession,
-    table_path: str,
-    agg_path: str,
-    dim: DataFrame,
-    checkpoint_dir: str,
-    starting_version: int | None = None,
-) -> None:
-    """ALWAYS-ON maintenance of an aggregate-over-join view from a
-    versioned fact's persisted change feed: `readStream.format(
-    "versioned_cdf")` (offsets = table versions, one task per feed
-    file) -> foreachBatch -> AggJoinView.apply_fact_cdf — inserts,
-    updates AND deletes reach the rollup at O(touched buckets) per
-    commit, with zero polling logic (the HWM-filter form of streaming
-    CDC cannot see deletes at any cost).
-
-    Ordering inside a micro-batch: one batch may span SEVERAL commits,
-    and apply_fact_cdf's disjoint-keys contract holds per commit, not
-    per batch (a key updated at v5 and deleted at v6 appears twice) —
-    so the batch is applied one `_commit_version` at a time, ascending.
-    Replay convergence: each per-version apply is an idempotent keyed
-    rewrite + bucket recompute (never a fold), so the redelivered
-    in-flight batch after a crash lands on the same state, and a crash
-    between the view apply and the partial refresh heals from the
-    bucket-intent sidecar. Blocks until the backlog is consumed
-    (availableNow)."""
-    from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
-    from nomba_data_pipeline_spark.sources.versioned_stream import register
-
-    register(spark)
-    agg = AggJoinView.open(spark, agg_path)
-
-    def _apply(batch: DataFrame, _bid: int) -> None:
-        versions = sorted(
-            r["_commit_version"]
-            for r in batch.select("_commit_version").distinct().collect()
-        )
-        for v in versions:
-            agg.apply_fact_cdf(
-                batch.filter(F.col("_commit_version") == v)
-                .drop("_commit_version"),
-                dim,
-            )
-
-    reader = spark.readStream.format("versioned_cdf").option("path", table_path)
-    if starting_version is not None:
-        reader = reader.option("starting_version", str(starting_version))
-    (
-        reader.load()
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
 def run_agg_changes_stream(
     spark: SparkSession,
     table_path: str,
@@ -228,10 +131,9 @@ def run_agg_changes_stream(
 ) -> None:
     """ALWAYS-ON maintenance of a PLAIN maintained aggregate
     (operators/incremental_agg.IncrementalAggTable) from a versioned
-    fact's persisted change feed — VERDICT r14 #4: the delete/update-
-    capable `apply_changes` wired into the streaming lifecycle the way
-    its AggJoinView twin (run_agg_view_versioned_cdf_stream) already
-    is. `readStream.format("versioned_cdf")` with
+    fact's persisted change feed: the delete/update-capable
+    `apply_changes` wired into the streaming lifecycle.
+    `readStream.format("versioned_cdf")` with
     include_preimages=true (a group-moving update's OLD group is
     located from its 'update_preimage' twin) -> foreachBatch ->
     apply_changes per `_commit_version` ASCENDING: one micro-batch may
@@ -340,28 +242,6 @@ def sessionized_counts(
             "n_events",
         )
     )
-
-
-def run_windowed_agg_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    out_path: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-) -> None:
-    """Windowed aggregation streamed to parquet (append mode: only
-    watermark-finalized windows are emitted)."""
-    agg = windowed_counts(stream_events(spark, source_dir, schema), ts_col=ts_col)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def minute_rollup_stream(
@@ -497,113 +377,6 @@ def stream_static_enriched_counts(
     )
     q.awaitTermination()
     return spark.table(query_name)
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "rts",
-    upper: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream inner equi-join with an event-time interval bound:
-    right rows match a left row with the same key when
-    `left_ts <= right_ts <= left_ts + upper`.
-
-    Both sides carry watermarks, so Spark bounds each side's join state
-    to the watermark horizon plus the interval — without the time bound
-    a stream-stream join would have to buffer BOTH streams forever.
-    This is the streaming twin of the batch range join
-    (operators/rangejoin.py): same interval predicate, but evaluated
-    incrementally with O(keys x horizon) state instead of a bucketed
-    equi-join over data at rest. Works on batch frames too (the
-    interval condition degrades to a plain non-equi join), which the
-    test suite uses to pin stream/batch equivalence."""
-    l = left.alias("l")
-    r = right.alias("r")
-    if left.isStreaming:
-        l = left.withWatermark(left_ts, watermark).alias("l")
-    if right.isStreaming:
-        r = right.withWatermark(right_ts, watermark).alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (
-            F.col(f"r.{right_ts}")
-            <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {upper}")
-        )
-    )
-    return l.join(r, cond, "inner").select(
-        F.col(f"l.{key}").alias(key),
-        F.col(f"l.{left_ts}").alias(left_ts),
-        F.col(f"r.{right_ts}").alias(right_ts),
-    )
-
-
-def run_sketch_rollup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    sketch_path: str,
-    checkpoint_dir: str,
-    group_col: str = "event_type",
-    value_col: str = "user_id",
-    max_files: int = 100,
-) -> None:
-    """Incremental sketch maintenance — the streaming half of the
-    mergeable-rollup pattern (`sketch_rollup_distinct` is the batch
-    half). Each micro-batch aggregates to per-group HLL sketches (KBs)
-    and MERGES them into a persisted sketch table via hll_union with a
-    full-outer join on the group key; distinct-count questions then read
-    the sketch table only. State per group is one fixed-size register
-    array regardless of stream length — the property exact streaming
-    distinct (dropDuplicates state) fundamentally lacks, since its
-    state grows with the number of distinct values seen. Blocks until
-    the available backlog drains (availableNow).
-
-    Replay-safe without any batch-id bookkeeping: a crash between the
-    store swap and the checkpoint commit replays the batch, and HLL
-    union is IDEMPOTENT (registers merge by max), so re-merging the
-    same delta is a no-op — the sketch algebra provides the
-    exactly-once effect the exact-count path needs machinery for.
-    """
-    store = ParquetTable(spark, sketch_path)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = batch_df.groupBy(group_col).agg(
-            F.hll_sketch_agg(value_col).alias("sk")
-        )
-        if store.exists():
-            cur = store.read()
-            merged = (
-                cur.withColumnRenamed("sk", "sk_old")
-                .join(delta.withColumnRenamed("sk", "sk_new"), group_col, "full_outer")
-                .select(
-                    group_col,
-                    F.when(
-                        F.col("sk_old").isNotNull() & F.col("sk_new").isNotNull(),
-                        F.hll_union("sk_old", "sk_new"),
-                    )
-                    .otherwise(F.coalesce("sk_new", "sk_old"))
-                    .alias("sk"),
-                )
-            )
-        else:
-            merged = delta
-        store.overwrite(merged)
-
-    q = (
-        stream_events(spark, source_dir, schema, max_files=max_files)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_index_maintenance_stream(
@@ -815,87 +588,3 @@ def run_corpus_dedup_stream(
         .start()
     )
     q.awaitTermination()
-
-
-def run_json_ingest_stream_with_dlq(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    good_path: str,
-    dlq_path: str,
-    checkpoint_dir: str,
-    max_files: int = 100,
-) -> None:
-    """Streaming twin of sources/staged.py read_stage_with_dlq: a JSON
-    file stream where malformed lines are quarantined per micro-batch
-    (raw record + source file under `dlq_path/batch_id=<micro-batch>`)
-    and good rows append to `good_path`. Exactly-once shape: the
-    checkpoint replays an uncommitted micro-batch with the SAME batch
-    id, the DLQ write overwrites its own batch partition, and the good
-    append goes through foreachBatch with the batch-scoped overwrite
-    pattern (`good_path/batch=<id>`), so a replay rewrites the same
-    partitions instead of duplicating. PERMISSIVE corrupt-record
-    routing needs the batch cached for the split — micro-batches are
-    bounded by maxFilesPerTrigger, so the cache is batch-sized."""
-    full = T.StructType(list(schema.fields)).add("_corrupt_record", T.StringType())
-    stream = (
-        spark.readStream.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("maxFilesPerTrigger", max_files)
-        .json(source_dir)
-    )
-
-    def apply_batch(df, bid: int) -> None:
-        batch = df.withColumn("_src_file", F.input_file_name()).cache()
-        try:
-            bad = batch.filter(F.col("_corrupt_record").isNotNull()).select(
-                F.col("_corrupt_record").alias("record"),
-                F.col("_src_file").alias("src_file"),
-            )
-            if bad.limit(1).count():
-                bad.write.mode("overwrite").parquet(f"{dlq_path}/batch_id={bid}")
-            good = batch.filter(F.col("_corrupt_record").isNull()).drop(
-                "_corrupt_record", "_src_file"
-            )
-            good.write.mode("overwrite").parquet(f"{good_path}/batch={bid}")
-        finally:
-            batch.unpersist(False)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_incremental_merge_stream_cdf(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    target_path: str,
-    cdf_path: str,
-    keys: list[str],
-    checkpoint_dir: str,
-) -> None:
-    """Streaming O7 that also PUBLISHES a change-data-feed: each
-    micro-batch merges into the target via merge_upsert_cdf, emitting
-    the batch's insert/update pre+post rows under
-    `cdf_path/batch_id=<zero-padded micro-batch id>` — downstream
-    replicas follow with ParquetTable.apply_cdf instead of re-reading
-    the table. End-to-end exactly-once effect: a crashed micro-batch
-    replays under the SAME id, the feed overwrite and the merge both
-    converge, and the zero-padding keeps lexicographic feed order ==
-    commit order for the consumer."""
-    target = ParquetTable(spark, target_path)
-    _run_merge_stream(
-        spark,
-        source_dir,
-        schema,
-        checkpoint_dir,
-        lambda df, bid: target.merge_upsert_cdf(
-            df, keys, cdf_path, f"{bid:012d}"
-        ),
-    )

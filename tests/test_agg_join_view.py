@@ -456,50 +456,6 @@ def test_erasure_sweeps_agg_view_underlying_view_and_partials(spark, tmp_path):
     assert removed2["seg_rollup__view"] == 0
 
 
-def test_streaming_fact_cdc_maintains_rollup(spark, tmp_path):
-    """Streaming fact CDC through run_agg_view_fact_stream: the rollup
-    tracks the declarative aggregate batch over batch, and a rerun with
-    no new files changes nothing."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_agg_view_fact_stream,
-    )
-
-    a, v, fact, dim = _mk(spark, tmp_path, n=100)
-    schema = T.StructType([
-        T.StructField("fk", T.LongType()),
-        T.StructField("dk", T.LongType()),
-        T.StructField("amt", T.DoubleType()),
-    ])
-    src = os.path.join(str(tmp_path), "cdc")
-    ckpt = os.path.join(str(tmp_path), "ckpt")
-
-    def emit(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 0: update fk=1, insert fk=500
-    emit([(1, 1, 999.0), (500, 3, 7.0)])
-    run_agg_view_fact_stream(spark, src, schema, a.path, dim, ckpt)
-    cur = [t for t in [(r["fk"], r["dk"], r["amt"]) for r in fact.collect()]
-           if t[0] not in (1, 500)] + [(1, 1, 999.0), (500, 3, 7.0)]
-    f_df = spark.createDataFrame(cur, "fk long, dk long, amt double")
-    assert _got(a) == _expected(f_df, dim)
-    # batch 1: dim-key migration for fk=2 (dk 2 -> 0)
-    emit([(2, 0, -5.0)])
-    run_agg_view_fact_stream(spark, src, schema, a.path, dim, ckpt)
-    cur = [t for t in cur if t[0] != 2] + [(2, 0, -5.0)]
-    f_df = spark.createDataFrame(cur, "fk long, dk long, amt double")
-    assert _got(a) == _expected(f_df, dim)
-    # no new files: nothing changes
-    run_agg_view_fact_stream(spark, src, schema, a.path, dim, ckpt)
-    assert _got(a) == _expected(f_df, dim)
-
-
 def test_cli_aggview_lifecycle(spark, tmp_path, capsys):
     import json as _json
     import os

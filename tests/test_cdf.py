@@ -203,65 +203,6 @@ def test_apply_cdf_catches_up_incrementally(spark, tmp_path):
     assert sorted(map(tuple, replica.read().collect())) == [(1, "a", 77)]
 
 
-def test_streaming_merge_publishes_feed_replica_follows(spark, tmp_path):
-    """Streaming CDC end-to-end: file stream -> merge+feed -> replica
-    catches up via apply_cdf and equals the primary, across two
-    drains with an update in between."""
-    import shutil
-
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_incremental_merge_stream_cdf,
-    )
-
-    src = os.path.join(tmp_path, "src")
-    os.makedirs(src)
-    primary_p = os.path.join(tmp_path, "primary")
-    cdf = os.path.join(tmp_path, "cdf")
-    ckpt = os.path.join(tmp_path, "ckpt")
-    primary = ParquetTable(spark, primary_p)
-    replica = ParquetTable(spark, os.path.join(tmp_path, "replica"))
-
-    spark.createDataFrame([(1, "a", 10), (2, "b", 20)], SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp_path, "stage1"))
-    shutil.copy(
-        next(
-            os.path.join(tmp_path, "stage1", f)
-            for f in os.listdir(os.path.join(tmp_path, "stage1"))
-            if f.endswith(".parquet")
-        ),
-        os.path.join(src, "chunk1.parquet"),
-    )
-    schema = spark.createDataFrame([], SCHEMA).schema
-    run_incremental_merge_stream_cdf(
-        spark, src, schema, primary_p, cdf, ["id"], ckpt
-    )
-    replica.apply_cdf(cdf, ["id"])
-    assert sorted(map(tuple, replica.read().collect())) == sorted(
-        map(tuple, primary.read().collect())
-    )
-
-    # second drain: an update + an insert
-    spark.createDataFrame([(2, "b", 99), (3, "c", 30)], SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp_path, "stage2"))
-    shutil.copy(
-        next(
-            os.path.join(tmp_path, "stage2", f)
-            for f in os.listdir(os.path.join(tmp_path, "stage2"))
-            if f.endswith(".parquet")
-        ),
-        os.path.join(src, "chunk2.parquet"),
-    )
-    run_incremental_merge_stream_cdf(
-        spark, src, schema, primary_p, cdf, ["id"], ckpt
-    )
-    replica.apply_cdf(cdf, ["id"])
-    rows = sorted(map(tuple, replica.read().collect()))
-    assert rows == [(1, "a", 10), (2, "b", 99), (3, "c", 30)]
-    assert rows == sorted(map(tuple, primary.read().collect()))
-
-
 def test_apply_cdf_widens_replica_on_schema_drift(spark, tmp_path):
     """A column the primary gains must reach the replica, not be
     silently dropped by the align-to-target projection."""

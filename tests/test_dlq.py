@@ -84,39 +84,3 @@ def test_two_batches_keep_separate_dlq_partitions(spark, tmp_path):
     assert sorted(
         r.batch_id for r in all_bad.select("batch_id").distinct().collect()
     ) == ["b1", "b2"]
-
-
-# ---------------------------------------------------------------------------
-# streaming DLQ (microbatch twin)
-# ---------------------------------------------------------------------------
-def test_streaming_ingest_routes_dlq_and_replays_cleanly(spark, tmp_path):
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_json_ingest_stream_with_dlq,
-    )
-
-    src = os.path.join(tmp_path, "src")
-    os.makedirs(src)
-    with open(os.path.join(src, "f1.json"), "w") as f:
-        f.write('{"id": 1, "name": "a"}\nBROKEN\n{"id": 2, "name": "b"}\n')
-    good_p = os.path.join(tmp_path, "good")
-    dlq_p = os.path.join(tmp_path, "dlq")
-    ckpt = os.path.join(tmp_path, "ckpt")
-
-    run_json_ingest_stream_with_dlq(spark, src, SCHEMA, good_p, dlq_p, ckpt)
-    good = spark.read.parquet(good_p)
-    assert sorted((r.id, r.name) for r in good.collect()) == [(1, "a"), (2, "b")]
-    bad = spark.read.parquet(dlq_p)
-    assert [r.record for r in bad.collect()] == ["BROKEN"]
-
-    # second drain with a NEW file: only the new batch lands; old
-    # batches untouched (checkpoint skips consumed files)
-    with open(os.path.join(src, "f2.json"), "w") as f:
-        f.write('{"id": 3, "name": "c"}\nALSO BAD\n')
-    run_json_ingest_stream_with_dlq(spark, src, SCHEMA, good_p, dlq_p, ckpt)
-    good2 = spark.read.parquet(good_p)
-    assert sorted((r.id, r.name) for r in good2.collect()) == [
-        (1, "a"),
-        (2, "b"),
-        (3, "c"),
-    ]
-    assert spark.read.parquet(dlq_p).count() == 2

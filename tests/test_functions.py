@@ -49,16 +49,6 @@ def test_text_functions(spark):
     assert rows[2].n == 0 and rows[2].q == 0.0
 
 
-def test_sanitize_mongo_json(spark):
-    from nomba_data_pipeline_spark.functions.text import sanitize_mongo_json
-
-    df = spark.createDataFrame(
-        [('{"_id": {"$oid": "abc"}, "ts": {"$date": "2024-01-01"}}',)], "doc string"
-    )
-    out = df.select(sanitize_mongo_json("doc").alias("clean")).first().clean
-    assert out == '{"_id": {"oid": "abc"}, "ts": {"date": "2024-01-01"}}'
-
-
 def test_corrupt_json_drift_tolerance(spark, tmp_path):
     """Reference drift tolerance (input_format_skip_unknown_fields,
     base_loader.py:830-841): corrupt lines land in _corrupt_record
@@ -115,16 +105,16 @@ def test_inference_type_vote_degrades_mixed_to_string(spark, tmp_path):
 
 
 def test_inference_vote_reads_values_as_literals(spark, tmp_path):
-    """A voted-String column must still be readable: numbers arrive as
-    their literal text."""
-    from nomba_data_pipeline_spark.sources.inference import read_with_inferred_schema
+    """A voted-String column must still be readable through the stage
+    extractor: numbers arrive as their literal text."""
+    from nomba_data_pipeline_spark.sources.mongo import extract_mongo_stage
 
     path = os.path.join(tmp_path, "stage_vote2")
     rows = ['{"v": 1}', '{"v": "x"}', '{"v": 2.5}']
     spark.createDataFrame([(r,) for r in rows], "value string").write.mode(
         "overwrite"
     ).text(path)
-    out = read_with_inferred_schema(spark, path)
+    out = extract_mongo_stage(spark, path)
     assert dict(out.dtypes)["v"] == "string"
     assert sorted(r.v for r in out.collect()) == ["1", "2.5", "x"]
 

@@ -89,58 +89,3 @@ def test_incremental_predicate_reaches_jdbc_scan(spark):
     # (v1 JDBCRelation renders it as PushedFilters in the scan node)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "UPDATED_AT" in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# JdbcSink: load modes against embedded Derby (same writer code that
-# points at Postgres/MySQL on a cluster)
-# ---------------------------------------------------------------------------
-def _sink_rows(spark, db, table="tgt"):
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:memory:{db}")
-    st = conn.createStatement()
-    rs = st.executeQuery(f'SELECT "id", "v" FROM {table} ORDER BY "id"')
-    out = []
-    while rs.next():
-        out.append((rs.getInt(1), rs.getString(2)))
-    conn.close()
-    return out
-
-
-def test_jdbc_sink_upsert_and_replay(spark):
-    from nomba_data_pipeline_spark.sources.jdbc import JdbcSink
-
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
-        "jdbc:derby:memory:sink_db;create=true"
-    )
-    st = conn.createStatement()
-    st.executeUpdate('CREATE TABLE tgt ("id" INT PRIMARY KEY, "v" VARCHAR(10))')
-    st.executeUpdate("INSERT INTO tgt VALUES (1, 'a'), (2, 'b')")
-    conn.close()
-
-    sink = JdbcSink(
-        url="jdbc:derby:memory:sink_db", table="tgt", user="app", password="x"
-    )
-    delta = spark.createDataFrame([(2, "b2"), (3, "c")], "id int, v string")
-    sink.merge_upsert(spark, delta, ["id"])
-    assert _sink_rows(spark, "sink_db") == [(1, "a"), (2, "b2"), (3, "c")]
-    # replayed batch converges to the same end state
-    sink.merge_upsert(spark, delta, ["id"])
-    assert _sink_rows(spark, "sink_db") == [(1, "a"), (2, "b2"), (3, "c")]
-
-
-def test_jdbc_sink_append_and_full(spark):
-    from nomba_data_pipeline_spark.sources.jdbc import JdbcSink
-
-    sink = JdbcSink(
-        url="jdbc:derby:memory:sink_db2;create=true",
-        table="tgt2",
-        user="app",
-        password="x",
-    )
-    sink.write_append(spark.createDataFrame([(1, "a")], "id int, v string"))
-    sink.write_append(spark.createDataFrame([(2, "b")], "id int, v string"))
-    assert _sink_rows(spark, "sink_db2", "tgt2") == [(1, "a"), (2, "b")]
-    sink.write_full(spark.createDataFrame([(9, "z")], "id int, v string"))
-    assert _sink_rows(spark, "sink_db2", "tgt2") == [(9, "z")]

@@ -417,52 +417,6 @@ def test_sweep_tmp_keeps_backup_when_live_table_missing(spark, tmp_path, base_df
     assert os.path.exists(os.path.join(tmp_path, "gone.old-deadbeef"))
 
 
-# ---------------------------------------------------------------------------
-# inferred members (Kimball late-arriving dimension)
-# ---------------------------------------------------------------------------
-def test_inferred_members_seed_then_real_row_replaces(spark, tmp_path):
-    from nomba_data_pipeline_spark.operators.merge import ensure_inferred_members
-
-    dim = ParquetTable(spark, os.path.join(tmp_path, "dim"))
-    dim.overwrite(
-        spark.createDataFrame(
-            [(1, "retail", "NG")], "plan_id int, segment string, country string"
-        )
-    )
-    fact = spark.createDataFrame(
-        [(101, 1), (102, 7), (103, 7), (104, None)], "txn_id int, plan_id int"
-    )
-    n = ensure_inferred_members(dim, fact, "plan_id", {"segment": "UNKNOWN"})
-    assert n == 1  # plan 7 once (dedup), NULL key skipped
-    rows = {r.plan_id: (r.segment, r.country) for r in dim.read().collect()}
-    assert rows == {1: ("retail", "NG"), 7: ("UNKNOWN", None)}
-    # replay infers nothing new
-    assert ensure_inferred_members(dim, fact, "plan_id", {"segment": "UNKNOWN"}) == 0
-    # the real dimension row later replaces the placeholder wholesale
-    dim.merge_upsert(
-        spark.createDataFrame(
-            [(7, "corporate", "KE")], "plan_id int, segment string, country string"
-        ),
-        ["plan_id"],
-    )
-    rows = {r.plan_id: (r.segment, r.country) for r in dim.read().collect()}
-    assert rows[7] == ("corporate", "KE")
-
-
-def test_inferred_members_missing_dim_refuses(spark, tmp_path):
-    """Bootstrapping a dim from a placeholder would freeze its schema
-    at key+defaults and silently truncate every later real load (the
-    merge aligns deltas to the target schema) — must refuse."""
-    import pytest
-
-    from nomba_data_pipeline_spark.operators.merge import ensure_inferred_members
-
-    dim = ParquetTable(spark, os.path.join(tmp_path, "dim"))
-    fact = spark.createDataFrame([(1, 5)], "txn_id int, plan_id int")
-    with pytest.raises(ValueError, match="does not exist"):
-        ensure_inferred_members(dim, fact, "plan_id")
-
-
 # -- type-promotion schema evolution (promote_types) ------------------------
 
 

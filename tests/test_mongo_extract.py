@@ -1,5 +1,6 @@
-"""S1 composed Mongo-stage extraction: option semantics + the
-incremental HWM ingest loop end-to-end (stage -> extract -> upsert)."""
+"""S1 composed Mongo-stage extraction: option semantics. The ingest
+loop end to end (stage -> extract -> load) is the registry row
+`mongo_extract_events`."""
 
 from __future__ import annotations
 
@@ -7,10 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from nomba_data_pipeline_spark.operators.merge import ParquetTable
 from nomba_data_pipeline_spark.sources.mongo import (
     extract_mongo_stage,
-    mongo_ingest,
     stage_mongo_dump,
 )
 
@@ -61,63 +60,6 @@ def test_extract_projection_prunes_before_processing(spark, tmp_path):
     )
     assert sorted(out.columns) == ["doc_id", "nested_a", "nested_b"]
     assert out.count() == 3
-
-
-def test_mongo_ingest_incremental_hwm_loop(spark, tmp_path):
-    """Two-round CDC: round 2 re-stages with one new + one updated doc;
-    the HWM filter ingests only those, and a rerun is a no-op upsert."""
-    path = _stage(spark, tmp_path, DOCS)
-    t = ParquetTable(spark, os.path.join(str(tmp_path), "warehouse", "docs"))
-    kwargs = dict(
-        keys=["doc_id"],
-        tracking_column="updated_at",
-        fields_to_delete=["secret", "nested.b"],
-        flatten_nested=True,
-    )
-    assert mongo_ingest(spark, path, t, **kwargs) == 3
-
-    docs2 = DOCS + [
-        ("a2", 2, "2024-01-05 09:00:00", "fixed", {"a": 22, "b": "y2"}, "s2"),
-        ("a4", 4, "2024-01-06 09:00:00", "new", {"a": 4, "b": "w"}, "s4"),
-    ]
-    _stage(spark, tmp_path, docs2)
-    # >= HWM re-reads the boundary doc (reference $gte semantics); the
-    # upsert makes that idempotent, so only 2 rows actually change
-    assert mongo_ingest(spark, path, t, **kwargs) == 3
-    state = {r.doc_id: (r.status, r.nested_a) for r in t.read().collect()}
-    assert state == {1: ("ok", 1), 2: ("fixed", 22), 3: ("bad", 3), 4: ("new", 4)}
-    # steady-state rerun: same stage, HWM now at the max -> boundary only
-    assert mongo_ingest(spark, path, t, **kwargs) == 1
-    assert {r.doc_id: (r.status, r.nested_a) for r in t.read().collect()} == state
-
-
-def test_mongo_ingest_other_load_modes(spark, tmp_path):
-    """full / dedup / snapshot modes dispatch to the matching writers
-    (reference load_type param)."""
-    path = _stage(spark, tmp_path, DOCS)
-    # full: overwrite everything, twice = same
-    t_full = ParquetTable(spark, os.path.join(str(tmp_path), "wh", "full"))
-    assert mongo_ingest(spark, path, t_full, mode="full", flatten_nested=True) == 3
-    assert mongo_ingest(spark, path, t_full, mode="full", flatten_nested=True) == 3
-    assert t_full.read().count() == 3
-
-    # dedup: stage contains two versions of doc 2 -> keep latest
-    docs_dup = DOCS + [("a2", 2, "2024-01-09 00:00:00", "late", {"a": 99, "b": "z"}, "s")]
-    path2 = _stage(spark, tmp_path, docs_dup, name="stage_dup")
-    t_d = ParquetTable(spark, os.path.join(str(tmp_path), "wh", "dedup"))
-    mongo_ingest(
-        spark, path2, t_d, keys=["doc_id"], tracking_column="updated_at",
-        mode="dedup", flatten_nested=True,
-    )
-    state = {r.doc_id: r.status for r in t_d.read().collect()}
-    assert state[2] == "late" and len(state) == 3
-
-    # snapshot: same-day re-append does not duplicate
-    t_s = ParquetTable(spark, os.path.join(str(tmp_path), "wh", "snap"))
-    mongo_ingest(spark, path, t_s, mode="snapshot", flatten_nested=True)
-    mongo_ingest(spark, path, t_s, mode="snapshot", flatten_nested=True)
-    assert t_s.read().count() == 3
-    assert "ingest_date" in t_s.read().columns
 
 
 def test_strip_dollar_collision_is_safe(spark):

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: binary columns, mapInPandas feature
-extraction (deterministic stub), frame sampling, metadata-only stats."""
+extraction (deterministic stub), frame sampling."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from nomba_data_pipeline_spark.operators.multimodal import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
     extract_features,
-    media_stats,
     sample_frames,
 )
 
@@ -45,31 +44,3 @@ def test_sample_frames_row_multiplication(spark, media):
     # only the video row (duration 3500ms) -> frames at 0,1000,2000,3000
     assert sorted(r.frame_ts_ms for r in frames) == [0, 1000, 2000, 3000]
     assert all(r.media_id == 4 for r in frames)
-
-
-def test_media_stats_prunes_payload(spark, media):
-    stats = {r.kind: (r.n, r.null_payloads) for r in media_stats(media).collect()}
-    assert stats["image"] == (3, 1)
-    assert stats["video"] == (1, 0)
-
-
-def test_resize_media_dims_payload_and_determinism(spark, media):
-    """Aspect-preserving fit math is real (floor scale, never upscale,
-    min dim 1); the stubbed resample's output size tracks the area
-    ratio like a real pixel resample's count would; images only."""
-    from nomba_data_pipeline_spark.operators.multimodal import resize_media
-
-    out = {r["media_id"]: r for r in resize_media(media, max_w=4, max_h=2).collect()}
-    assert set(out) == {1, 2, 5}  # image rows only
-    assert (out[1]["out_w"], out[1]["out_h"]) == (2, 2)  # 8x8 into 4x2
-    assert (out[2]["out_w"], out[2]["out_h"]) == (2, 2)  # 4x4 into 4x2
-    assert (out[5]["out_w"], out[5]["out_h"]) == (1, 1)  # never upscale 1x1
-    assert out[5]["resized_payload"] == b""  # NULL payload -> empty
-    # 8x8 -> 2x2 is area ratio 1/16: 256-byte payload -> 16 bytes kept
-    assert len(out[1]["resized_payload"]) == 16
-    again = {
-        r["media_id"]: r for r in resize_media(media, max_w=4, max_h=2).collect()
-    }
-    assert {k: bytes(v["resized_payload"]) for k, v in out.items()} == {
-        k: bytes(v["resized_payload"]) for k, v in again.items()
-    }

@@ -56,20 +56,6 @@ def test_range_join_is_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivf_init_pick_has_no_global_sort(spark):
-    """The distributed trainer's init pick must never funnel the corpus
-    through one task: no window, no single-partition exchange, no global
-    Sort — just a partial-aggregated (bucket, min id) shuffle."""
-    from nomba_data_pipeline_spark.operators.similarity import evenly_spaced_init_ids
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    plan = _plan(evenly_spaced_init_ids(emb, 8))
-    assert "Window" not in plan
-    assert "SinglePartition" not in plan
-    assert "Sort " not in plan and "GlobalSort" not in plan
-    assert "HashAggregate" in plan
-
-
 def test_range_join_count_duplicate_left_rows(spark):
     """Content-addressed regroup: fully-duplicate left rows must each
     produce their own (identical) output row — multiset in, multiset out

@@ -180,61 +180,6 @@ def test_split_scd2_replay_after_crash_is_exactly_once(spark, tmp_path, monkeypa
     assert dup_open == 0
 
 
-def test_split_scd2_migrates_legacy_close_date_layout(spark, tmp_path):
-    """A closed-history table written by the pre-batch-id layout
-    (close_date= dirs at the root) must be migrated under
-    batch_id=legacy/ on the first new-layout append — mixing the two
-    depths under one root makes Spark's partition discovery throw
-    'Conflicting directory structures'."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from nomba_data_pipeline_spark.operators.merge import ParquetTable
-    from nomba_data_pipeline_spark.plans import models as M
-    from nomba_data_pipeline_spark.plans.cdc_sim import simulate_user_updates
-    from nomba_data_pipeline_spark.plans.pipeline import build_pipeline
-    from tests.conftest import SF_SMALL
-
-    wh = os.path.join(tmp_path, "wh")
-    runner = build_pipeline(spark, wh, SF_SMALL)
-    runner.run(only=["users_snapshot"])
-
-    # fabricate a LEGACY-layout closed table: close_date= at the root.
-    # The rows must look like GENUINE history — a (key, valid_from)
-    # still open in the open table is the orphan signature the replay
-    # sweep deletes — so shift valid_from into the past
-    closed_path = os.path.join(wh, "users_snapshot__closed")
-    legacy_rows = (
-        runner.read_model("users_snapshot")
-        .limit(5)
-        .withColumn("valid_from", F.expr("valid_from - INTERVAL 365 DAYS"))
-    )
-    legacy_rows.withColumn("close_date", F.lit("2025-12-31")).write.mode(
-        "overwrite"
-    ).partitionBy("close_date").parquet(closed_path)
-    assert os.path.isdir(os.path.join(closed_path, "close_date=2025-12-31"))
-
-    # first post-upgrade CDC run appends the (batch_id, close_date) layout
-    override = {
-        "stg_users": lambda s, sf: simulate_user_updates(
-            M.stg_users(s, sf), fraction=0.1
-        )
-    }
-    runner2 = build_pipeline(spark, wh, SF_SMALL, source_override=override)
-    runner2.run(only=["users_snapshot"])
-
-    # legacy dirs now live under the umbrella; root is single-depth
-    assert os.path.isdir(
-        os.path.join(closed_path, "batch_id=legacy", "close_date=2025-12-31")
-    )
-    assert not os.path.isdir(os.path.join(closed_path, "close_date=2025-12-31"))
-    # and the reassembled read works (no conflicting-structures throw)
-    closed = ParquetTable(spark, closed_path).read()
-    assert closed.count() >= 5
-    assert runner2.read_model("users_snapshot").count() > 0
-
-
 def test_default_load_ts_is_frozen_across_actions(spark, gen1):
     """scd2_apply's default timestamp must be a driver-frozen literal:
     the split runner materializes closed rows and the new open state in

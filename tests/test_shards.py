@@ -1,15 +1,12 @@
-"""Training-shard export: reproducibility under arbitrary input
-partitioning, on-disk read order, and the single-exchange plan shape.
+"""Training-shard assignment: reproducibility under arbitrary input
+partitioning, salt independence, and the single-exchange plan shape.
 Oracle parity of the graded window form lives in
 test_queries_vs_duckdb.py (corpus_shuffle_shards)."""
 
 from pyspark.sql import functions as F
 
 from nomba_data_pipeline_spark.catalog import load_table
-from nomba_data_pipeline_spark.operators.shards import (
-    shard_assignment,
-    write_training_shards,
-)
+from nomba_data_pipeline_spark.operators.shards import shard_assignment
 from tests.conftest import SF_SMALL
 
 
@@ -32,26 +29,6 @@ def test_assignment_invariant_to_input_partitioning(spark):
         per_shard.setdefault(shard, []).append(pos)
     for shard, ps in per_shard.items():
         assert sorted(ps) == list(range(1, len(ps) + 1)), shard
-
-
-def test_written_shards_hold_rows_in_read_order(spark, tmp_path):
-    """Each shard=<k> directory must store documents already in their
-    shuffled read order (file row order == pos order), and the written
-    layout must agree with shard_assignment exactly."""
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path, n_shards=4)
-    expected = {
-        (r.doc_id, r.shard): r.pos for r in shard_assignment(docs, 4).collect()
-    }
-    seen = 0
-    for shard in range(4):
-        # single file per shard (one task per shard): row order is total
-        pdf = spark.read.parquet(f"{path}/shard={shard}").toPandas()
-        for i, doc_id in enumerate(pdf["doc_id"], start=1):
-            assert expected[(doc_id, shard)] == i, (shard, doc_id)
-            seen += 1
-    assert seen == docs.count()
 
 
 def test_resalting_reshuffles_without_resharding(spark):
@@ -91,49 +68,3 @@ def test_assignment_plan_is_single_exchange(spark):
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-
-
-def test_manifest_verifies_export_and_catches_tampering(spark, tmp_path):
-    """verify_shards is empty for a faithful export; deleting one
-    shard's file surfaces exactly that shard (count + checksum drift),
-    and a same-count membership swap is caught by the xor checksum."""
-    import glob
-    import os
-
-    from nomba_data_pipeline_spark.operators.shards import verify_shards
-
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path, n_shards=4)
-    assert verify_shards(docs, path, 4).count() == 0
-
-    # drop one shard's data file -> that shard reports missing/short
-    victim = glob.glob(path + "/shard=2/*.parquet")[0]
-    os.remove(victim)
-    spark.catalog.refreshByPath(path)
-    bad = verify_shards(docs, path, 4).collect()
-    assert [r.shard for r in bad] == [2]
-
-    # same-shard, same-count membership swap: counts agree everywhere,
-    # so ONLY the xor checksum can catch it. Engineer a replacement id
-    # that buckets into the same shard as an existing id.
-    import hashlib
-
-    def py_shard(i: int, n: int = 4) -> int:
-        return int(hashlib.md5(f"{i}:shard".encode()).hexdigest()[:8], 16) % n
-
-    write_training_shards(docs, path, n_shards=4)
-    victim_id = docs.agg(F.min("doc_id")).first()[0]
-    replacement = next(
-        i for i in range(10**6, 10**6 + 10**4)
-        if py_shard(i) == py_shard(victim_id)
-    )
-    swapped = docs.withColumn(
-        "doc_id",
-        F.when(F.col("doc_id") == victim_id, F.lit(replacement)).otherwise(
-            F.col("doc_id")
-        ),
-    )
-    drift = verify_shards(swapped, path, 4).collect()
-    assert [r.shard for r in drift] == [py_shard(victim_id)]
-    assert drift[0].exp_n == drift[0].n_docs  # counts agree: checksum caught it

@@ -200,30 +200,6 @@ def test_lsh_single_table_matches_first_table_of_multi(spark):
     assert one <= multi
 
 
-def test_distributed_ivf_training_matches_scale_contract(spark):
-    """Distributed Lloyd: only the n_lists x d matrix reaches the driver;
-    centroids are unit-norm, deterministic across runs, and usable by
-    cosine_topk_ivf's assignment kernel."""
-    import numpy as np
-
-    from nomba_data_pipeline_spark.operators.similarity import (
-        ivf_train_centroids_distributed,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    C1 = ivf_train_centroids_distributed(emb, n_lists=8, n_iters=2)
-    C2 = ivf_train_centroids_distributed(emb, n_lists=8, n_iters=2)
-    assert C1.shape == (8, 64)
-    assert np.allclose(np.linalg.norm(C1, axis=1), 1.0)
-    assert np.allclose(C1, C2)
-    # every list is non-degenerate on this clustered corpus
-    pdf = emb.select("embedding").toPandas()
-    M = np.stack(pdf["embedding"].to_numpy()).astype(float)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    assign = np.argmax(M @ C1.T, axis=1)
-    assert len(set(assign.tolist())) >= 6
-
-
 def test_group_centroids_assembled_order(spark):
     """assemble=True must pin element order by position (collect_list is
     shuffle-order-dependent without the sort)."""

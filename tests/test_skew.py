@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nomba_data_pipeline_spark.operators.skew import broadcast_salted_join, salted_sum_count
+from nomba_data_pipeline_spark.operators.skew import salted_sum_count
 
 
 def test_salted_sum_count_matches_plain(spark):
@@ -20,18 +20,6 @@ def test_salted_sum_count_matches_plain(spark):
         r.k: (r.s, r.c)
         for r in df.groupBy("k").agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c")).collect()
     }
-    assert got == want
-
-
-def test_broadcast_salted_join_matches_plain(spark):
-    big = spark.range(0, 2000).select(
-        (F.col("id") % 3).alias("k"), F.col("id").alias("payload")
-    )
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c"), (9, "zz")], "k long, label string")
-    got = sorted(
-        (r.k, r.payload, r.label) for r in broadcast_salted_join(big, small, "k").collect()
-    )
-    want = sorted((r.k, r.payload, r.label) for r in big.join(small, "k", "left").collect())
     assert got == want
 
 

@@ -1,18 +1,14 @@
 """Structured Streaming micro-batch tests: availableNow drain + merge,
-windowed agg with watermark, incremental pickup of new files."""
+incremental pickup of new files."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nomba_data_pipeline_spark.operators.merge import ParquetTable
-from nomba_data_pipeline_spark.streaming.microbatch import (
-    run_incremental_merge_stream,
-    run_windowed_agg_stream,
-)
+from nomba_data_pipeline_spark.streaming.microbatch import run_incremental_merge_stream
 
 SCHEMA = T.StructType(
     [
@@ -74,35 +70,6 @@ def test_dedup_stream_drops_watermark_duplicates(spark, tmp_path):
     q.awaitTermination()
     got = sorted((r.id, r.v) for r in spark.read.parquet(out).collect())
     assert got == [(1, 1.0), (2, 2.0)]  # first occurrence kept, dup dropped
-
-
-def test_windowed_agg_stream(spark, tmp_path):
-    src = os.path.join(tmp_path, "src")
-    out = os.path.join(tmp_path, "out")
-    ckpt = os.path.join(tmp_path, "ckpt")
-    from datetime import datetime
-
-    rows = [
-        (1, datetime(2026, 1, 1, 0, 0, 10), 1.0),
-        (2, datetime(2026, 1, 1, 0, 0, 40), 1.0),
-        (3, datetime(2026, 1, 1, 0, 1, 10), 1.0),
-        (4, datetime(2026, 1, 1, 0, 30, 0), 1.0),  # advances watermark far ahead
-    ]
-    spark.createDataFrame(rows, SCHEMA).withColumn("event_type", F.lit("click")).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-    # StructType.add mutates in place — copy so the module-level SCHEMA
-    # stays 3 fields for the tests that run after this one
-    schema = T.StructType(SCHEMA.fields + [T.StructField("event_type", T.StringType())])
-    run_windowed_agg_stream(spark, src, schema, out, ckpt)
-    got = {
-        (str(r.window_start), r.n)
-        for r in spark.read.parquet(out).collect()
-    }
-    # windows finalized below the watermark: the two 00:00/00:01 minutes
-    assert ("2026-01-01 00:00:00", 2) in got
-    assert ("2026-01-01 00:01:00", 1) in got
 
 
 def test_session_window_stream_and_batch_equivalence(spark, tmp_path):
@@ -283,111 +250,3 @@ def test_dedup_stream_state_evicts_beyond_watermark(spark, tmp_path):
     run_once()
     ones = sorted(r.v for r in spark.read.parquet(out).filter("id = 1").collect())
     assert ones == [1.0, 1.1], "evicted key must be re-emitted, proving bounded state"
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """interval_join_streams: drain two file-source streams through a
-    watermarked stream-stream interval join; the emitted pairs must
-    equal the same join run as a plain batch non-equi join. Watermark
-    spans the data so no candidate pair is evicted before its partner
-    arrives."""
-    import os
-    from datetime import datetime, timedelta
-
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        interval_join_streams,
-    )
-
-    base = datetime(2026, 1, 1)
-    lrows = [(u, base + timedelta(minutes=m)) for u in (1, 2) for m in (0, 30)]
-    rrows = [
-        (1, base + timedelta(minutes=5)),    # joins 1@00:00 (within 10m)
-        (1, base + timedelta(minutes=29)),   # joins nothing (29m after 00:00, before 30:00)
-        (1, base + timedelta(minutes=31)),   # joins 1@00:30
-        (2, base + timedelta(minutes=45)),   # joins nothing (>10m after 00:30)
-        (3, base + timedelta(minutes=1)),    # no matching key
-    ]
-    lsrc = os.path.join(tmp_path, "ljoin_src")
-    rsrc = os.path.join(tmp_path, "rjoin_src")
-    lb = spark.createDataFrame(lrows, "user_id long, ts timestamp")
-    rb = spark.createDataFrame(rrows, "user_id long, rts timestamp")
-    lb.coalesce(1).write.parquet(lsrc)
-    rb.coalesce(1).write.parquet(rsrc)
-
-    ls = spark.readStream.schema(lb.schema).parquet(lsrc)
-    rs = spark.readStream.schema(rb.schema).parquet(rsrc)
-    q = (
-        interval_join_streams(ls, rs, upper="10 minutes", watermark="2 hours")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssij")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {tuple(map(str, r)) for r in spark.table("ssij").collect()}
-
-    want = {
-        tuple(map(str, r))
-        for r in interval_join_streams(lb, rb, upper="10 minutes").collect()
-    }
-    assert got == want
-    # and the batch truth is what the scenario says it is
-    assert len(want) == 2
-
-
-def test_sketch_rollup_stream_matches_exact_distinct(spark, tmp_path):
-    """Incremental HLL maintenance across micro-batches: after draining
-    the backlog (one file per trigger), estimates read from the sketch
-    STORE equal exact batch count(DISTINCT) — including re-observing
-    the same values in later batches (sketch union is idempotent on
-    duplicates) and groups that appear only in later batches."""
-    import pandas as pd
-
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_sketch_rollup_stream,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    src = os.path.join(tmp_path, "sksrc")
-    ckpt = os.path.join(tmp_path, "skckpt")
-    store = os.path.join(tmp_path, "skstore")
-
-    def w(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    w([("a", 1), ("a", 2), ("b", 10)])
-    w([("a", 2), ("a", 3), ("b", 10), ("b", 11)])  # overlaps batch 1
-    w([("c", 100)])  # new group late
-
-    run_sketch_rollup_stream(
-        spark, src, schema, store, ckpt,
-        group_col="event_type", value_col="user_id", max_files=1,
-    )
-
-    est = {
-        r["event_type"]: r["n"]
-        for r in ParquetTable(spark, store)
-        .read()
-        .select("event_type", F.hll_sketch_estimate("sk").alias("n"))
-        .collect()
-    }
-    assert est == {"a": 3, "b": 2, "c": 1}
-
-    # a second drain over an already-consumed source adds nothing
-    run_sketch_rollup_stream(
-        spark, src, schema, store, ckpt, group_col="event_type", value_col="user_id"
-    )
-    est2 = {
-        r["event_type"]: r["n"]
-        for r in ParquetTable(spark, store)
-        .read()
-        .select("event_type", F.hll_sketch_estimate("sk").alias("n"))
-        .collect()
-    }
-    assert est2 == est

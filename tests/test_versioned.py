@@ -1891,12 +1891,10 @@ def test_changes_between_hides_preimages_by_default(spark, tmp_path):
 
 # -- r14: SQL time travel ----------------------------------------------------
 def test_sql_time_travel_views_match_dataframe_reads(spark, tmp_path):
-    """VERDICT r14 #4: spark.sql over `name__v<N>` / version_as_of
-    must equal read(version=N) at BOTH the value and the PLAN level
-    (same optimized plan — the view is the same logical scan, nothing
+    """VERDICT r14 #4: spark.sql over `name__v<N>` must equal
+    read(version=N) at BOTH the value and the PLAN level (same
+    optimized plan — the view is the same logical scan, nothing
     materialized)."""
-    from nomba_data_pipeline_spark.catalog import version_as_of
-
     t = VersionedTable(spark, os.path.join(str(tmp_path), "ords_v"))
     t.overwrite(_base(spark, 1_000), cluster_by=["k"], target_files=4)
     t.merge_upsert(spark.createDataFrame(
@@ -1921,17 +1919,11 @@ def test_sql_time_travel_views_match_dataframe_reads(spark, tmp_path):
         t.read(version=1).filter("k < 10").select("k", "v")
     )._jdf.queryExecution().optimizedPlan()
     assert df_plan.sameResult(sql_plan)
-    # the convenience entry point registers one version on demand
-    vname = version_as_of(spark, t.path, 1)
-    assert vname == "ords_v__v1"
-    assert spark.sql(f"SELECT count(*) AS n FROM {vname}").first()["n"] == 1_000
 
 
 def test_sql_views_skip_vacuumed_versions(spark, tmp_path):
     """A reclaimed version gets NO view (better absent than a view
-    that dies mid-scan); version_as_of refuses loudly."""
-    from nomba_data_pipeline_spark.catalog import version_as_of
-
+    that dies mid-scan)."""
     t = VersionedTable(spark, os.path.join(str(tmp_path), "tbl_vac"))
     t.overwrite(_base(spark, 100))
     t.overwrite(_base(spark, 50))
@@ -1940,8 +1932,6 @@ def test_sql_views_skip_vacuumed_versions(spark, tmp_path):
     names = t.register_sql_views("tbl_vac")
     assert "tbl_vac__v1" not in names
     assert {"tbl_vac", "tbl_vac__v2", "tbl_vac__v3"} <= set(names)
-    with pytest.raises(ValueError, match="reclaimed by vacuum|does not exist"):
-        version_as_of(spark, t.path, 1)
 
 
 # -- r14: observe-folded stats (no second scan on unclustered writes) -------

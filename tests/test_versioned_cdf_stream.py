@@ -221,71 +221,6 @@ def test_stream_fails_loudly_on_full_marker(spark, tmp_path):
         _start_stream(spark, t, "vcdf_full", starting_version=1)
 
 
-def test_stream_maintains_agg_view_end_to_end(spark, tmp_path):
-    """versioned writes -> persisted feed -> stream -> foreachBatch ->
-    AggJoinView equals the declarative aggregate, including the delete
-    retraction and the multi-commit per-version ordering (a key updated
-    at one version and deleted at the next inside ONE micro-batch)."""
-    from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
-    from nomba_data_pipeline_spark.operators.incremental_join import (
-        JoinViewTable,
-    )
-    from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_agg_view_versioned_cdf_stream,
-    )
-
-    fact = spark.range(120).select(
-        F.col("id").alias("fk"), (F.col("id") % 10).alias("dk"),
-        (F.col("id") * 1.0).alias("amt"),
-    )
-    dim = spark.range(10).select(
-        F.col("id").alias("dk"),
-        F.concat(F.lit("g"), (F.col("id") % 3).cast("string")).alias("grp"),
-    )
-    t = VersionedTable(spark, os.path.join(str(tmp_path), "fact_v"),
-                       write_cdf=True)
-    t.overwrite(fact)  # v1 (FULL — stream starts after it)
-    v = JoinViewTable(
-        spark, os.path.join(str(tmp_path), "view"),
-        fact_key=["fk"], dim_key="dk", dim_cols=["grp"], n_buckets=4,
-    )
-    v.build(t.read(), dim)
-    a = AggJoinView(
-        spark, os.path.join(str(tmp_path), "agg"),
-        view=v, group_keys=["grp"], measures=["amt"],
-    )
-    a.build()
-    # v2: update fk=8 (dk 8 -> 1: bucket migration) + insert fk=500
-    t.merge_upsert(spark.createDataFrame(
-        [(8, 1, -8.0), (500, 2, 9.0)], "fk long, dk long, amt double"
-    ), ["fk"])
-    # v3: delete the row just updated at v2 PLUS an original row —
-    # the same key appears twice across the batch's commits
-    t.delete_keys(spark.createDataFrame([(8,), (11,)], "fk long"), ["fk"])
-
-    run_agg_view_versioned_cdf_stream(
-        spark, t.path, a.path, dim,
-        checkpoint_dir=os.path.join(str(tmp_path), "ckpt"),
-        starting_version=1,
-    )
-    final_fact = fact.filter("fk not in (8, 11)").unionByName(
-        spark.createDataFrame([(500, 2, 9.0)], "fk long, dk long, amt double")
-    )
-    want = {
-        (r["grp"], r["cnt"], r["s"])
-        for r in final_fact.join(dim, "dk", "left").groupBy("grp").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("amt").cast("decimal(38,4)")), 2)
-            .cast("double").alias("s"),
-        ).collect()
-    }
-    got = {
-        (r["grp"], r["cnt"], r["sum_amt"])
-        for r in a.result().collect()
-    }
-    assert got == want
-
-
 # -- r13 code-review regressions ----------------------------------------------
 def test_orphan_feed_from_crashed_commit_is_never_replayed(spark, tmp_path):
     """FAULT INJECTION (review): a crash AFTER the feed+manifest writes
@@ -482,16 +417,16 @@ def test_stream_to_stream_chain_through_versioned_table(spark, tmp_path):
     """STREAM-TO-STREAM composition with the versioned table as the
     durable boundary: file-source stream -> run_versioned_merge_stream
     (txn-idempotent commits, write_cdf=True) -> versioned_cdf stream ->
-    AggJoinView. The rollup equals the declarative aggregate of
-    everything ingested, across TWO drain cycles."""
+    run_agg_changes_stream (IncrementalAggTable). The rollup equals the
+    declarative aggregate of everything ingested, across TWO drain
+    cycles."""
     from pyspark.sql import types as T
 
-    from nomba_data_pipeline_spark.operators.agg_join_view import AggJoinView
-    from nomba_data_pipeline_spark.operators.incremental_join import (
-        JoinViewTable,
+    from nomba_data_pipeline_spark.operators.incremental_agg import (
+        IncrementalAggTable,
     )
     from nomba_data_pipeline_spark.streaming.microbatch import (
-        run_agg_view_versioned_cdf_stream,
+        run_agg_changes_stream,
         run_versioned_merge_stream,
     )
 
@@ -503,10 +438,6 @@ def test_stream_to_stream_chain_through_versioned_table(spark, tmp_path):
         T.StructField("dk", T.LongType()),
         T.StructField("amt", T.DoubleType()),
     ])
-    dim = spark.range(8).select(
-        F.col("id").alias("dk"),
-        F.concat(F.lit("g"), (F.col("id") % 2).cast("string")).alias("grp"),
-    )
     b1 = spark.range(40).select(
         F.col("id").alias("fk"), (F.col("id") % 8).alias("dk"),
         (F.col("id") * 1.0).alias("amt"),
@@ -515,65 +446,50 @@ def test_stream_to_stream_chain_through_versioned_table(spark, tmp_path):
 
     t = VersionedTable(spark, os.path.join(root, "fact_v"), write_cdf=True)
     t.overwrite(b1.limit(0))  # empty v1 (FULL marker — stream starts past it)
+    agg_path = os.path.join(root, "agg")
 
-    def drain():
+    def ingest():
         run_versioned_merge_stream(
             spark, src, schema, t.path, ["fk"],
             checkpoint_dir=os.path.join(root, "ckpt_in"),
             app="ingest", write_cdf=True,
         )
-        run_agg_view_versioned_cdf_stream(
-            spark, t.path, a.path, dim,
+
+    def drain():
+        ingest()
+        run_agg_changes_stream(
+            spark, t.path, agg_path, keys=["dk"], measure=["amt"],
             checkpoint_dir=os.path.join(root, "ckpt_out"),
             starting_version=1,
         )
 
-    run_versioned_merge_stream(
-        spark, src, schema, t.path, ["fk"],
-        checkpoint_dir=os.path.join(root, "ckpt_in"),
-        app="ingest", write_cdf=True,
-    )  # v2: batch1 ingested
-    v = JoinViewTable(
-        spark, os.path.join(root, "view"),
-        fact_key=["fk"], dim_key="dk", dim_cols=["grp"], n_buckets=4,
-    )
-    v.build(t.read(), dim)
-    a = AggJoinView(
-        spark, os.path.join(root, "agg"),
-        view=v, group_keys=["grp"], measures=["amt"],
-    )
-    a.build()
-    # downstream starts at v1: re-applying the already-built v2 feed is
-    # an idempotent keyed upsert — the replay-convergence contract
+    def expect(facts):
+        return {
+            (r["dk"], r["cnt"], r["s"])
+            for r in facts.groupBy("dk").agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.round(F.sum(F.col("amt").cast("decimal(38,4)")), 2)
+                .cast("double").alias("s"),
+            ).collect()
+        }
+
+    ingest()  # v2: batch1 ingested
+    a = IncrementalAggTable(spark, agg_path, keys=["dk"], measure=["amt"])
+    a.rebuild(t.read(), t.latest_version())
+    # downstream starts at v1: the redelivered, already-built v2 feed is
+    # a marker-ledger no-op — the replay-convergence contract
     drain()
-    expect1 = {
-        (r["grp"], r["cnt"], r["s"])
-        for r in b1.join(dim, "dk", "left").groupBy("grp").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("amt").cast("decimal(38,4)")), 2)
-            .cast("double").alias("s"),
-        ).collect()
-    }
-    got1 = {(r["grp"], r["cnt"], r["sum_amt"]) for r in a.result().collect()}
-    assert got1 == expect1
-    # second cycle: late corrections land, both streams resume off
-    # their checkpoints and the rollup tracks
+    got1 = {(r["dk"], r["cnt"], r["sum_amt"]) for r in a.result().collect()}
+    assert got1 == expect(b1)
+    # second cycle: late corrections land (fk=5 moves group dk 5 -> 1),
+    # both streams resume off their checkpoints and the rollup tracks
     b2 = spark.createDataFrame(
         [(5, 1, -50.0), (100, 2, 7.0)], "fk long, dk long, amt double"
     )
     b2.write.mode("append").parquet(src)
     drain()
-    final = b1.filter("fk <> 5").unionByName(b2)
-    expect2 = {
-        (r["grp"], r["cnt"], r["s"])
-        for r in final.join(dim, "dk", "left").groupBy("grp").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("amt").cast("decimal(38,4)")), 2)
-            .cast("double").alias("s"),
-        ).collect()
-    }
-    got2 = {(r["grp"], r["cnt"], r["sum_amt"]) for r in a.result().collect()}
-    assert got2 == expect2
+    got2 = {(r["dk"], r["cnt"], r["sum_amt"]) for r in a.result().collect()}
+    assert got2 == expect(b1.filter("fk <> 5").unionByName(b2))
 
 
 def test_write_cdf_is_a_table_property_not_a_handle_flag(spark, tmp_path):
