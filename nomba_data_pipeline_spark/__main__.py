@@ -21,6 +21,8 @@ import os
 import sys
 import time
 
+from nomba_data_pipeline_spark.catalog import read_parquet
+
 
 def _spark(args):
     from nomba_data_pipeline_spark.session import get_spark
@@ -137,7 +139,7 @@ def cmd_view(args) -> int:
             dim_key=args.dim_key[0] if len(args.dim_key) == 1 else args.dim_key,
             dim_cols=args.dim_cols, n_buckets=args.n_buckets,
         )
-        v.build(spark.read.parquet(args.fact), spark.read.parquet(args.dim))
+        v.build(read_parquet(spark, args.fact), read_parquet(spark, args.dim))
         print(json.dumps({"built": args.path, "rows": v.read().count()}))
         return 0
     v = JoinViewTable.open(spark, args.path)
@@ -145,14 +147,14 @@ def cmd_view(args) -> int:
         if not args.dim:
             print(json.dumps({"error": "patch-dim requires --dim"}))
             return 1
-        v.apply_dim_delta(spark.read.parquet(args.dim))
+        v.apply_dim_delta(read_parquet(spark, args.dim))
         print(json.dumps({"patched": args.path, "rows": v.read().count()}))
     elif args.action == "apply-fact":
         if not (args.fact and args.dim):
             print(json.dumps({"error": "apply-fact requires --fact and --dim"}))
             return 1
         v.apply_fact_delta(
-            spark.read.parquet(args.fact), spark.read.parquet(args.dim)
+            read_parquet(spark, args.fact), read_parquet(spark, args.dim)
         )
         print(json.dumps({"applied": args.path, "rows": v.read().count()}))
     elif args.action == "chain-patch":
@@ -176,8 +178,8 @@ def cmd_view(args) -> int:
         down = JoinViewTable.open(spark, args.downstream)
         chain_dim_patch(
             v, down,
-            spark.read.parquet(args.dim),
-            spark.read.parquet(args.downstream_dim),
+            read_parquet(spark, args.dim),
+            read_parquet(spark, args.downstream_dim),
         )
         print(
             json.dumps(
@@ -195,7 +197,7 @@ def cmd_view(args) -> int:
         if not args.dim:
             print(json.dumps({"error": "retire-dim requires --dim (key parquet)"}))
             return 1
-        keys = spark.read.parquet(args.dim)
+        keys = read_parquet(spark, args.dim)
         v.retire_dim_keys(keys)
         print(
             json.dumps(
@@ -206,7 +208,7 @@ def cmd_view(args) -> int:
         from pyspark.sql import functions as F
 
         rows = (
-            spark.read.parquet(args.path)
+            read_parquet(spark, args.path)
             .groupBy("__dim_bucket")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("__dim_bucket")
@@ -321,21 +323,21 @@ def cmd_aggview(args) -> int:
         if not args.dim:
             print(json.dumps({"error": "patch-dim requires --dim"}))
             return 1
-        buckets = a.apply_dim_delta(spark.read.parquet(args.dim))
+        buckets = a.apply_dim_delta(read_parquet(spark, args.dim))
         print(json.dumps({"patched": args.path, "buckets": buckets}))
     elif args.action == "apply-fact":
         if not (args.fact and args.dim):
             print(json.dumps({"error": "apply-fact requires --fact and --dim"}))
             return 1
         buckets = a.apply_fact_delta(
-            spark.read.parquet(args.fact), spark.read.parquet(args.dim)
+            read_parquet(spark, args.fact), read_parquet(spark, args.dim)
         )
         print(json.dumps({"applied": args.path, "buckets": buckets}))
     elif args.action == "retire-dim":
         if not args.dim:
             print(json.dumps({"error": "retire-dim requires --dim (key parquet)"}))
             return 1
-        buckets = a.retire_dim_keys(spark.read.parquet(args.dim))
+        buckets = a.retire_dim_keys(read_parquet(spark, args.dim))
         print(json.dumps({"retired": args.path, "buckets": buckets}))
     elif args.action == "heal":
         print(json.dumps({"healed_buckets": a.heal()}))
@@ -370,9 +372,9 @@ def cmd_index(args) -> int:
             print(json.dumps({"built": "minhash", "path": args.path}))
         elif args.action == "append":
             delta = docs.filter(f"doc_id % 100 < {args.pct}") if args.pct else docs
-            n0 = spark.read.parquet(args.path).count()
+            n0 = read_parquet(spark, args.path).count()
             DD.minhash_index_append(delta, args.path)
-            n1 = spark.read.parquet(args.path).count()
+            n1 = read_parquet(spark, args.path).count()
             print(json.dumps({"appended_band_rows": n1 - n0}))
         elif args.action == "dedup":
             batch = docs.filter("doc_id % 10 = 0")
@@ -398,14 +400,14 @@ def cmd_index(args) -> int:
                 spark, work + "/src", batch.schema, args.path,
                 work + "/flags", work + "/ckpt", max_files=1,
             )
-            flags = spark.read.parquet(work + "/flags")
+            flags = read_parquet(spark, work + "/flags")
             print(json.dumps({
                 "batches": flags.select("batch").distinct().count(),
                 "docs": flags.count(),
                 "flagged_dup": flags.filter("is_dup").count(),
             }))
         else:  # stats
-            n = spark.read.parquet(args.path).count()
+            n = read_parquet(spark, args.path).count()
             print(json.dumps({"band_rows": n}))
         return 0
     if args.action == "build":
@@ -421,12 +423,12 @@ def cmd_index(args) -> int:
         # skip_existing guards the demo slice (and any operator rerun)
         # against re-appending already-indexed ids — the raw append is
         # not replay-idempotent.
-        n_before = spark.read.parquet(args.path + "/lists").count()
+        n_before = read_parquet(spark, args.path + "/lists").count()
         if args.family == "lsh":
             S.lsh_index_append(delta, args.path, skip_existing=True)
         else:
             S.ivf_index_append(delta, args.path, skip_existing=True)
-        n_after = spark.read.parquet(args.path + "/lists").count()
+        n_after = read_parquet(spark, args.path + "/lists").count()
         print(json.dumps({"appended": n_after - n_before}))
     else:  # stats
         if args.family == "ivf":
@@ -514,7 +516,7 @@ def cmd_sql(args) -> int:
         if d.startswith(("_", ".")) or not os.path.isdir(path):
             continue
         try:
-            spark.read.parquet(path).createOrReplaceTempView(d)
+            read_parquet(spark, path).createOrReplaceTempView(d)
             registered.append(d)
         except Exception as e:
             # non-table dirs (marker ledgers) land here too, but a

@@ -2,8 +2,8 @@
 
 The reference reads staged JSON through ClickHouse's ``s3()`` table
 function (reference dagster_code/clickhouse_load_tool/base_loader.py:326-341);
-here the at-rest format is parquet and the scan is a plain
-``spark.read.parquet`` so Catalyst gets predicate pushdown, column
+here the at-rest format is parquet and the scan is a plain parquet
+read (`read_parquet`) so Catalyst gets predicate pushdown, column
 pruning and partition pruning for free.
 """
 
@@ -65,9 +65,28 @@ def _scan_splits(spark: SparkSession, path: str) -> tuple[int, int]:
     return (max(1, splits), sum(sizes))
 
 
+def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """The package's one batch parquet reader: `spark.read.parquet`
+    with the data schema Spark would infer handed over up front when
+    the driver can compute it from local footers
+    (`footers.spark_schema`), so the read submits no one-task
+    schema-inference job. Otherwise (a non-local path, a footer outside
+    the closed rule, an empty directory, any option but `basePath`) it
+    is the plain read, and Spark infers and errs exactly as before."""
+    from nomba_data_pipeline_spark.operators.footers import spark_schema
+
+    reader = spark.read.options(**options) if options else spark.read
+    schema = None if set(options) - {"basePath"} else spark_schema(spark, paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str,
                spread: bool = False) -> DataFrame:
-    """Scan one testdata table. Pure `spark.read.parquet` — filters and
+    """Scan one testdata table through `read_parquet` — no Spark job
+    runs until the caller acts when the file's footer answers the
+    schema on the driver (`footers.spark_schema`). Filters and
     projections applied by callers are pushed into the scan by Catalyst
     (both push through the spreading Repartition below).
 
@@ -104,7 +123,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     if name in _NANO_TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     for col in _NANO_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))

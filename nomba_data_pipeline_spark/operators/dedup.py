@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.functions.hashing import h64, h64_sql
 from nomba_data_pipeline_spark.functions.text import (
     fingerprint,
@@ -662,7 +663,7 @@ def _not_indexed(df: DataFrame, path: str) -> DataFrame:
     """`df` minus the doc_ids the band index at `path` already holds —
     one column-pruned doc_id scan, because a raw parquet append is not
     replay-idempotent."""
-    existing = df.sparkSession.read.parquet(path).select("doc_id").distinct()
+    existing = read_parquet(df.sparkSession, path).select("doc_id").distinct()
     return df.join(existing, "doc_id", "left_anti")
 
 
@@ -674,7 +675,7 @@ def _append_bands(bands: DataFrame, path: str) -> None:
 
 
 def minhash_index_read(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path).select(
+    return read_parquet(spark, path).select(
         "doc_id", F.col("band").cast("int").alias("band"), "band_sig"
     )
 

@@ -43,6 +43,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.operators import footers
 
 
@@ -192,7 +193,7 @@ class ParquetTable:
 
     # -- reads ---------------------------------------------------------------
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
     def high_water_mark(self, tracking_col: str):
         """A2: MAX(tracking_column) from the target, None if table absent.
@@ -592,7 +593,7 @@ class ParquetTable:
             )
             if not fs.exists(spath):
                 break
-            feed = self.spark.read.parquet(f"{cdf_path}/batch_id={bid}")
+            feed = read_parquet(self.spark, f"{cdf_path}/batch_id={bid}")
             post = feed.filter(F.col("_op") != "update_preimage").drop("_op")
             # the replica's hive layout is not handed to apply_cdf, so
             # derive it from the directory structure — otherwise the
@@ -767,7 +768,7 @@ class ParquetTable:
         if not flat:
             return
         paths = [p.toString() for p in flat]
-        if self.spark.read.parquet(*paths).limit(1).count() > 0:
+        if read_parquet(self.spark, *paths).limit(1).count() > 0:
             raise ValueError(
                 f"{self.path} holds non-empty root-level data files (flat "
                 "layout); a partition-scoped rewrite would lose the rows "

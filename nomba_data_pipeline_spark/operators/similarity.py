@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark.catalog import read_parquet
+
 SIM_DP = 6  # rounding for cross-engine determinism
 
 # cap on the (batch x query-chunk x tables) collision tensor: 1<<25
@@ -1553,7 +1555,7 @@ def _drop_indexed(new_vectors: DataFrame, path: str, id_col: str) -> DataFrame:
     batch that carries the same vector twice (a re-delivered source file
     landing in the same trigger as its original): the anti-join alone
     would index both copies."""
-    existing = new_vectors.sparkSession.read.parquet(path + "/lists").select(
+    existing = read_parquet(new_vectors.sparkSession, path + "/lists").select(
         F.col("vec_id").alias(id_col)
     )
     return new_vectors.dropDuplicates([id_col]).join(existing, id_col, "left_anti")
@@ -1571,7 +1573,7 @@ def ivf_index_centroids(spark: SparkSession, path: str):
             zip(t.column("list_id").to_pylist(), t.column("centroid").to_pylist())
         )
         return np.asarray([c for _, c in pairs], dtype=np.float64)
-    rows = spark.read.parquet(path + "/centroids").orderBy("list_id").collect()
+    rows = read_parquet(spark, path + "/centroids").orderBy("list_id").collect()
     return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
 
 
@@ -1580,7 +1582,7 @@ def ivf_index_read(spark: SparkSession, path: str) -> DataFrame:
     returns) — feed to cosine_topk_ivf_indexed with
     centroids=ivf_index_centroids(...) so probing uses the frozen
     quantizer, not a retrain over the drifted corpus."""
-    return spark.read.parquet(path + "/lists").select(
+    return read_parquet(spark, path + "/lists").select(
         "vec_id", "embedding", F.col("list_id").cast("int").alias("list_id")
     )
 
@@ -1590,7 +1592,7 @@ def ivf_index_stats(spark: SparkSession, path: str) -> DataFrame:
     distribution after appends means the frozen quantizer no longer
     fits the corpus: rebuild (retrain) on the maintenance cadence."""
     return (
-        spark.read.parquet(path + "/lists")
+        read_parquet(spark, path + "/lists")
         .groupBy("list_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -1633,7 +1635,7 @@ def _read_lsh_params(spark: SparkSession, path: str) -> dict:
     t = read_table_sidecar_local(path + "/params")
     if t is not None:
         return {c: t.column(c)[0].as_py() for c in t.column_names}
-    return spark.read.parquet(path + "/params").first().asDict()
+    return read_parquet(spark, path + "/params").first().asDict()
 
 
 def lsh_index_write(
@@ -1701,7 +1703,7 @@ def lsh_index_append(
 
 def lsh_index_read(spark: SparkSession, path: str) -> DataFrame:
     """The persisted index as a DataFrame (lsh_index schema)."""
-    return spark.read.parquet(path + "/lists").select("vec_id", "embedding", "buckets")
+    return read_parquet(spark, path + "/lists").select("vec_id", "embedding", "buckets")
 
 
 # ---------------------------------------------------------------------------

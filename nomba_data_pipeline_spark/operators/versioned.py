@@ -87,6 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.functions.zorder import zorder_arrange
 from nomba_data_pipeline_spark.operators.footers import (
     local_path,
@@ -144,7 +145,7 @@ def read_json_sidecar(spark: SparkSession, p: str, col: str = "j"):
 
             payload = pq.read_table(files[0], columns=[col]).column(col)[0]
             return json.loads(payload.as_py())
-    return json.loads(spark.read.parquet(p).first()[col])
+    return json.loads(read_parquet(spark, p).first()[col])
 
 
 def _write_sidecar_local(spark: SparkSession, p: str, table) -> None:
@@ -2431,7 +2432,7 @@ class VersionedTable:
             ):
                 continue
             frames.append(
-                self.spark.read.parquet(self._cdf_dir(v)).withColumn(
+                read_parquet(self.spark, self._cdf_dir(v)).withColumn(
                     "_commit_version", F.lit(v).cast("bigint")
                 )
             )

@@ -17,7 +17,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nomba_data_pipeline_spark.catalog import load_table
+from nomba_data_pipeline_spark.catalog import load_table, read_parquet
 from nomba_data_pipeline_spark.functions import text as T
 from nomba_data_pipeline_spark.functions.timeutil import epoch_seconds
 from nomba_data_pipeline_spark.operators import dedup as D
@@ -4435,7 +4435,7 @@ def q_streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         work + "/ckpt",
         max_files=1,
     )
-    return spark.read.parquet(work + "/flags").select("doc_id", "is_dup")
+    return read_parquet(spark, work + "/flags").select("doc_id", "is_dup")
 
 
 SQL_STREAMING_CORPUS_DEDUP = D.streaming_corpus_dedup_sql()
@@ -6986,7 +6986,7 @@ def q_cluster_shipdate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ParquetTable(spark, path).cluster(["l_shipdate"], target_files=8)
 
     path = _stage_dir("clustered_lineitem", sf_dir, _write)
-    clustered = spark.read.parquet(path)
+    clustered = read_parquet(spark, path)
     return (
         clustered.filter(
             (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
@@ -7043,7 +7043,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("upsert_orders", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7076,7 +7076,7 @@ def q_snapshot_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("snapshot_customer", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7290,7 +7290,7 @@ def q_delete_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.write.mode("overwrite").parquet(src)
         spec = ModelSpec(
             name="orders_di",
-            fn=lambda s, d: s.read.parquet(d),
+            fn=lambda s, d: read_parquet(s, d),
             materialization="incremental",
             upsert_key=["o_orderkey"],
             tracking_column="o_orderdate",
@@ -7313,7 +7313,7 @@ def q_delete_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _stage_dir("delete_insert", sf_dir, _write)
     return (
-        spark.read.parquet(os.path.join(root, "wh", "orders_di"))
+        read_parquet(spark, os.path.join(root, "wh", "orders_di"))
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7374,7 +7374,7 @@ def q_full_load_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             r.register(
                 ModelSpec(
                     name="stg_orders_fl",
-                    fn=lambda s, d: s.read.parquet(d),
+                    fn=lambda s, d: read_parquet(s, d),
                     materialization="incremental",
                     upsert_key=["o_orderkey"],
                     tracking_column="o_orderdate",
@@ -7384,7 +7384,7 @@ def q_full_load_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ModelSpec(
                     name="orders_month_fl",
                     fn=lambda s, d: (
-                        s.read.parquet(os.path.join(wh, "stg_orders_fl"))
+                        read_parquet(s, os.path.join(wh, "stg_orders_fl"))
                         .groupBy(
                             F.date_format("o_orderdate", "yyyy-MM").alias("month")
                         )
@@ -7406,7 +7406,7 @@ def q_full_load_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mk_runner().full_refresh(["stg_orders_fl"])
 
     root = _stage_dir("full_load", sf_dir, _write)
-    return spark.read.parquet(os.path.join(root, "wh", "orders_month_fl")).select(
+    return read_parquet(spark, os.path.join(root, "wh", "orders_month_fl")).select(
         "month", "n_rows", "sum_price"
     )
 
@@ -7455,7 +7455,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("compact_events", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7502,7 +7502,7 @@ def q_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("zorder_lineitem", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter((F.col("l_partkey") >= 100) & (F.col("l_partkey") < 200))
         .groupBy("l_returnflag")
         .agg(
@@ -7569,7 +7569,7 @@ def q_cdf_replication_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _stage_dir("cdf_replication", sf_dir, _write)
     return (
-        spark.read.parquet(os.path.join(root, "replica"))
+        read_parquet(spark, os.path.join(root, "replica"))
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7684,7 +7684,7 @@ def q_join_view_dim_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("join_view", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7757,7 +7757,7 @@ def q_erasure_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = _stage_dir("erasure_wh", sf_dir, _write)
     dim = (
-        spark.read.parquet(os.path.join(wh, "dim_users"))
+        read_parquet(spark, os.path.join(wh, "dim_users"))
         .groupBy("segment")
         .agg(
             F.count(F.lit(1)).alias("n_users"),
@@ -7767,7 +7767,7 @@ def q_erasure_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     plans = (
-        spark.read.parquet(os.path.join(wh, "dim_plans"))
+        read_parquet(spark, os.path.join(wh, "dim_plans"))
         .groupBy("segment")
         .agg(
             F.count(F.lit(1)).alias("n_plans"),
@@ -7777,7 +7777,7 @@ def q_erasure_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fact = (
-        spark.read.parquet(os.path.join(wh, "fact_transactions"))
+        read_parquet(spark, os.path.join(wh, "fact_transactions"))
         .groupBy("segment")
         .agg(
             F.count(F.lit(1)).alias("n_txns"),
@@ -7841,7 +7841,7 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _stage_dir("schema_evo", sf_dir, _write)
     return (
-        spark.read.parquet(os.path.join(root, "wh", "orders_evo"))
+        read_parquet(spark, os.path.join(root, "wh", "orders_evo"))
         .groupBy("o_channel")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7945,7 +7945,7 @@ def q_type_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.write.mode("overwrite").parquet(src)
         spec = ModelSpec(
             name="orders_tev",
-            fn=lambda s, d: s.read.parquet(d),
+            fn=lambda s, d: read_parquet(s, d),
             materialization="incremental",
             upsert_key=["o_orderkey"],
             tracking_column="o_orderdate",
@@ -7981,7 +7981,7 @@ def q_type_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _stage_dir("type_evo", sf_dir, _write)
     return (
-        spark.read.parquet(os.path.join(root, "wh", "orders_tev"))
+        read_parquet(spark, os.path.join(root, "wh", "orders_tev"))
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8052,7 +8052,7 @@ def q_join_view_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("join_view_tomb", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8131,7 +8131,7 @@ def q_join_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
             r.register(
                 ModelSpec(
                     name="f_li",
-                    fn=lambda s, d: s.read.parquet(src_f),
+                    fn=lambda s, d: read_parquet(s, src_f),
                     materialization="incremental",
                     upsert_key=["txn_id"],
                     tracking_column="l_shipdate",
@@ -8140,7 +8140,7 @@ def q_join_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
             r.register(
                 ModelSpec(
                     name="d_ord",
-                    fn=lambda s, d: s.read.parquet(src_d),
+                    fn=lambda s, d: read_parquet(s, src_d),
                     materialization="incremental",
                     upsert_key=["o_orderkey"],
                     tracking_column="o_orderdate",
@@ -8185,7 +8185,7 @@ def q_join_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
     root = _stage_dir("join_view_pipe", sf_dir, _write)
     return (
-        spark.read.parquet(os.path.join(root, "wh", "mart"))
+        read_parquet(spark, os.path.join(root, "wh", "mart"))
         .groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8296,7 +8296,7 @@ def q_join_view_star_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     return (
-        spark.read.parquet(os.path.join(root, "v2"))
+        read_parquet(spark, os.path.join(root, "v2"))
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8412,7 +8412,7 @@ def q_join_view_composite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 
     path = _stage_dir("join_view_composite", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("tier")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8499,7 +8499,7 @@ def q_join_view_evolve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _stage_dir("join_view_evolve", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("region_key", F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8589,7 +8589,7 @@ def q_join_view_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
     path = _stage_dir("join_view_rebucket", sf_dir, _write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("seg")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -8705,7 +8705,7 @@ def q_join_view_chain_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     return (
-        spark.read.parquet(os.path.join(root, "v3"))
+        read_parquet(spark, os.path.join(root, "v3"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -9085,12 +9085,12 @@ def q_agg_view_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         def mk() -> PipelineRunner:
             r = PipelineRunner(spark, wh, src_f)
             r.register(ModelSpec(
-                name="f_li", fn=lambda s, d: s.read.parquet(src_f),
+                name="f_li", fn=lambda s, d: read_parquet(s, src_f),
                 materialization="incremental", upsert_key=["txn_id"],
                 tracking_column="l_shipdate",
             ))
             r.register(ModelSpec(
-                name="d_ord", fn=lambda s, d: s.read.parquet(src_d),
+                name="d_ord", fn=lambda s, d: read_parquet(s, src_d),
                 materialization="incremental", upsert_key=["o_orderkey"],
                 tracking_column="o_orderdate",
             ))
@@ -9193,7 +9193,7 @@ def q_versioned_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         def mk() -> PipelineRunner:
             r = PipelineRunner(spark, wh, src)
             r.register(ModelSpec(
-                name="ledger", fn=lambda s, d: s.read.parquet(src),
+                name="ledger", fn=lambda s, d: read_parquet(s, src),
                 materialization="versioned_incremental",
                 upsert_key=["o_orderkey"], tracking_column="o_orderdate",
                 partition_by=["o_orderkey"],
@@ -9286,7 +9286,7 @@ def q_versioned_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         def mk() -> PipelineRunner:
             r = PipelineRunner(spark, wh, src)
             r.register(ModelSpec(
-                name="orders_vev", fn=lambda s, d: s.read.parquet(src),
+                name="orders_vev", fn=lambda s, d: read_parquet(s, src),
                 materialization="versioned_incremental",
                 upsert_key=["o_orderkey"], tracking_column="o_orderdate",
                 on_schema_change="append_new_columns",
@@ -9464,7 +9464,7 @@ def q_versioned_cdf_view_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         def mk() -> PipelineRunner:
             r = PipelineRunner(spark, wh, src)
             r.register(ModelSpec(
-                name="ords_v", fn=lambda s, d: s.read.parquet(src + "/fact"),
+                name="ords_v", fn=lambda s, d: read_parquet(s, src + "/fact"),
                 materialization="versioned_incremental",
                 upsert_key=["o_orderkey"], tracking_column="o_orderdate",
             ))
@@ -9761,7 +9761,7 @@ def q_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _stage_dir("versioned_cdf_stream", sf_dir, _write)
     return (
-        spark.read.parquet(root + "/sink")
+        read_parquet(spark, root + "/sink")
         .groupBy("change_type", "status")
         .agg(
             F.count(F.lit(1)).alias("cnt"),

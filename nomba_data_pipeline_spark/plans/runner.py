@@ -28,6 +28,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.operators.merge import ParquetTable
 from nomba_data_pipeline_spark.plans.quality import QualitySpec
 
@@ -906,8 +907,7 @@ class PipelineRunner:
             unmarked = self._unmarked_batch_dirs(closed_path)
             if unmarked:
                 existing = (
-                    self.spark.read.option("basePath", closed_path)
-                    .parquet(*unmarked)
+                    read_parquet(self.spark, *unmarked, basePath=closed_path)
                     .select(key, S2.VALID_FROM, "batch_id")
                 )
                 orphaned = _semi_anti_null_safe(
@@ -1217,7 +1217,7 @@ class PipelineRunner:
                 .parquet(plan_map_path)
             )
         if pm_fs.exists(pm_jp):
-            staged = self.spark.read.parquet(plan_map_path)
+            staged = read_parquet(self.spark, plan_map_path)
             if staged.limit(1).count() > 0:
                 # hint only when CDC-sized; a bulk erasure's plan set
                 # must not be forced through a driver-side broadcast
@@ -1359,7 +1359,7 @@ class PipelineRunner:
         n_hist = 0
         if fs.exists(root):
             affected = (
-                self.spark.read.parquet(closed_path)
+                read_parquet(self.spark, closed_path)
                 .join(F.broadcast(ids_df), "user_id", "left_semi")
                 .select(
                     F.col("batch_id").cast("string"),
@@ -1376,7 +1376,7 @@ class PipelineRunner:
                     f"batch_id={r['batch_id']}",
                     f"close_date={r['close_date']}",
                 )
-                cur = self.spark.read.parquet(part)
+                cur = read_parquet(self.spark, part)
                 kept = cur.join(F.broadcast(ids_df), "user_id", "left_anti")
                 n_before, n_kept = cur.count(), kept.count()
                 n_hist += n_before - n_kept

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nomba_data_pipeline_spark.functions.nested import drop_field_paths, flatten_structs
-from nomba_data_pipeline_spark.sources.inference import infer_stage_schema
+from nomba_data_pipeline_spark.sources.inference import _quote, infer_stage_schema
 
 # micro-precision; Spark's default JSON timestampFormat truncates to
 # millis, which would corrupt round-tripped event times
@@ -145,9 +145,9 @@ def extract_mongo_stage(
             # DIRECTLY as NTZ: routing through to_timestamp (session-tz
             # LTZ) shifts wall times that fall in a DST spring-forward
             # gap by an hour before the cast back
-            df = df.withColumn(f.name, F.to_timestamp_ntz(f.name))
+            df = df.withColumn(f.name, F.to_timestamp_ntz(_quote(f.name)))
         elif isinstance(f.dataType, T.DateType):
-            df = df.withColumn(f.name, F.to_date(f.name))
+            df = df.withColumn(f.name, F.to_date(_quote(f.name)))
 
     # server-side query semantics first (pushed into the scan)
     if tracking_column is not None and last_value is not None:

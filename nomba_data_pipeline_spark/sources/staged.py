@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nomba_data_pipeline_spark.catalog import read_parquet
+
 
 def write_stage(df: DataFrame, stage_path: str, fmt: str = "parquet") -> None:
     """S3-sink equivalent: distributed write, no driver-side buffering
@@ -64,7 +66,7 @@ def read_stage(
         if schema is not None:
             return reader.schema(schema).csv(stage_path)
         return reader.option("inferSchema", "true").csv(stage_path)
-    return spark.read.parquet(stage_path)
+    return read_parquet(spark, stage_path)
 
 
 def read_stage_with_dlq(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.operators.merge import ParquetTable
 
 
@@ -518,7 +519,7 @@ def corpus_dedup_apply_batch(
         has_index = fs.exists(jp)
         if has_index:
             idx = (
-                spark.read.parquet(index_path)
+                read_parquet(spark, index_path)
                 .select("doc_id", "band", "band_sig")
                 # replay determinism: a crashed prior attempt may have
                 # appended THIS batch already — its rows must not count

@@ -93,3 +93,23 @@ def test_stage_preserves_all_null_columns(spark, tmp_path):
     back = extract_mongo_stage(spark, stage, projection=["id", "secret"])
     assert sorted(back.columns) == ["id", "secret"]
     assert back.filter("secret IS NULL").count() == 2
+
+
+def test_extract_casts_dotted_key(spark, tmp_path):
+    """A staged key holding '.' is one column, not a nested path: the
+    timestamp cast must resolve `meta.ts` as a name (UNRESOLVED_COLUMN
+    otherwise)."""
+    import datetime as dt
+
+    stage = tmp_path / "dotted"
+    stage.mkdir()
+    (stage / "part-0.json").write_text(
+        '{"id": 1, "meta.ts": "2024-01-01 10:00:00"}\n'
+        '{"id": 2, "meta.ts": "2024-01-02 11:30:00"}\n'
+    )
+    out = extract_mongo_stage(spark, str(stage))
+    assert dict(out.dtypes)["meta.ts"] == "timestamp_ntz"
+    rows = sorted(out.select("id", F.col("`meta.ts`")).collect())
+    assert [r[1] for r in rows] == [
+        dt.datetime(2024, 1, 1, 10, 0), dt.datetime(2024, 1, 2, 11, 30),
+    ]
