@@ -40,6 +40,8 @@ def cmd_run(args) -> int:
     out = {
         "model_rows": counts,  # total post-run rows per model (quality-gate count)
         "model_seconds": runner.last_timings,
+        # gate form per model: write / unchanged / full: <reason>
+        "model_gates": runner.last_gates,
         "total_seconds": round(time.perf_counter() - t0, 3),
     }
     print(json.dumps(out))

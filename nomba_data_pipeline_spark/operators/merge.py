@@ -140,6 +140,38 @@ def _semi_anti_null_safe(
     return left.join(F.broadcast(renamed), on=cond, how=how)
 
 
+def _partition_values(rows, cols: list[str]):
+    """Null-safe `(cols) IN rows` over partition columns only, so Spark
+    prunes the scan to those directories. A NULL value matches the NULL
+    partition: its pre-existing rows must be in a rewrite slice, or the
+    directory swap would drop them."""
+    if len(cols) == 1:
+        c = F.col(cols[0])
+        vals = [r[cols[0]] for r in rows]
+        pred = c.isin([v for v in vals if v is not None])
+        return pred | c.isNull() if None in vals else pred
+    pred = F.lit(False)
+    for r in rows:
+        match = F.lit(True)
+        for c in cols:
+            match = match & F.col(c).eqNullSafe(F.lit(r[c]))
+        pred = pred | match
+    return pred
+
+
+class _Ungated:
+    """The merge hooks a write-time quality gate observes through
+    (plans/quality.WriteGate); without a gate each is the identity."""
+
+    def rows(self, df: DataFrame) -> DataFrame:
+        return df
+
+    delta = delta_keys = rows
+
+
+_UNGATED = _Ungated()
+
+
 class ParquetTable:
     """A managed parquet table at a directory path with atomic replace.
 
@@ -373,6 +405,7 @@ class ParquetTable:
         keys: list[str],
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
+        gate=None,
     ) -> list | None:
         """O7 incremental upsert (base_loader.py:344-417).
 
@@ -410,7 +443,12 @@ class ParquetTable:
         float->double, decimal growth — anything else raises rather
         than narrow silently); after the one-time rewrite, merges carry
         the evolved schema at the usual O(touched) cost.
+
+        `gate` (plans/quality.WriteGate) observes the written rows, the
+        delta rows and the delta's distinct keys inside the write itself
+        (an existing target only).
         """
+        gate = gate or _UNGATED
         if not self.exists():
             self.overwrite(delta, partition_by=partition_by)
             return None
@@ -424,20 +462,22 @@ class ParquetTable:
             # cast-to-target lose values silently
             self.widen_to(delta, partition_by=partition_by)
             self.promote_types(delta, partition_by=partition_by)
-        if partition_by:
-            return self._merge_scoped_partitions(
-                delta,
-                keys,
-                partition_by,
-                lambda target_slice, d, dkeys: _semi_anti_null_safe(
-                    target_slice, dkeys, keys, "left_anti"
-                ).unionByName(d),
-            )
         target = self.read()
         delta = _align_to_target(delta, target)
-        kept = _semi_anti_null_safe(target, delta.select(*keys), keys, "left_anti")
-        merged = kept.unionByName(delta)
-        self.overwrite(merged)
+
+        def combine(target_part: DataFrame, d: DataFrame, dkeys: DataFrame):
+            kept = _semi_anti_null_safe(
+                target_part, gate.delta_keys(dkeys), keys, "left_anti"
+            )
+            return gate.rows(kept.unionByName(gate.delta(d)))
+
+        if partition_by:
+            return self._merge_scoped_partitions(
+                target, delta, keys, partition_by, combine
+            )
+        self.overwrite(
+            combine(target, delta, delta.select(*keys).dropDuplicates(keys))
+        )
         return None  # whole table rewritten — no scoped-partition list
 
     def merge_upsert_cdf(
@@ -647,6 +687,7 @@ class ParquetTable:
 
     def _merge_scoped_partitions(
         self,
+        target: DataFrame,
         delta: DataFrame,
         keys: list[str],
         partition_by: list[str],
@@ -655,13 +696,13 @@ class ParquetTable:
         """Rewrite only the partitions the delta touches, returning the
         affected partition-value rows (the maintenance hook downstream
         materializations — e.g. AggJoinView — scope THEIR refresh by).
-        `combine` maps (target_slice, aligned delta, deduplicated delta
-        keys) -> merged content for those partitions. Affected = where
-        the delta's rows land UNION where its keys currently live, so a
-        key whose partition value changed leaves its OLD partition too.
+        `target` is the caller's read of this table and `delta` is
+        already aligned to it. `combine` maps (target_slice, delta,
+        deduplicated delta keys) -> merged content for those partitions.
+        Affected = where the delta's rows land UNION where its keys
+        currently live, so a key whose partition value changed leaves
+        its OLD partition too.
         """
-        target = self.read()
-        delta = _align_to_target(delta, target)
         dkeys = delta.select(*keys).dropDuplicates(keys)
         # null-safe: a NULL-key row's partition must still be located
         affected = (
@@ -676,9 +717,10 @@ class ParquetTable:
         affected_rows = affected.collect()
         if not affected_rows:
             return []
-        # null-safe: the NULL partition's pre-existing rows must be in the
-        # rewrite slice, or the directory swap below would drop them
-        target_slice = _semi_anti_null_safe(target, affected, partition_by, "left_semi")
+        # the slice filters on the COLLECTED partition values: the scan
+        # prunes to the affected directories, and the write does not
+        # locate the delta's keys in the target a second time
+        target_slice = target.filter(_partition_values(affected_rows, partition_by))
         merged = combine(target_slice, delta, dkeys)
         self._stage_and_swap_partitions(merged, partition_by, affected_rows)
         return affected_rows
@@ -1060,6 +1102,7 @@ class ParquetTable:
         tracking_col: str,
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
+        gate=None,
     ) -> None:
         """O8 'special' load (base_loader.py:419-555): upsert then keep only
         the latest row per key by tracking column.
@@ -1078,8 +1121,11 @@ class ParquetTable:
 
         Schema drift follows merge_upsert's policy exactly: dropped /
         cast-to-target by default (reference parity), or widened +
-        type-promoted first with evolve_schema=True.
+        type-promoted first with evolve_schema=True. `gate` observes the
+        written rows as in merge_upsert; the window leaves one row per
+        key, so there are no duplicate keys to observe.
         """
+        gate = gate or _UNGATED
 
         def keep_latest(base: DataFrame) -> DataFrame:
             value_cols = [c for c in base.columns if c != "__is_delta"]
@@ -1107,22 +1153,20 @@ class ParquetTable:
             self.promote_types(delta, partition_by=partition_by)
         target = self.read()
         delta = _align_to_target(delta, target)
+
+        def combine(target_part: DataFrame, d: DataFrame, _dkeys=None):
+            return gate.rows(keep_latest(
+                target_part.withColumn("__is_delta", F.lit(0)).unionByName(
+                    d.withColumn("__is_delta", F.lit(1))
+                )
+            ))
+
         if partition_by:
             self._merge_scoped_partitions(
-                delta,
-                keys,
-                partition_by,
-                lambda target_slice, d, _dkeys: keep_latest(
-                    target_slice.withColumn("__is_delta", F.lit(0)).unionByName(
-                        d.withColumn("__is_delta", F.lit(1))
-                    )
-                ),
+                target, delta, keys, partition_by, combine
             )
             return
-        base = target.withColumn("__is_delta", F.lit(0)).unionByName(
-            delta.withColumn("__is_delta", F.lit(1))
-        )
-        self.overwrite(keep_latest(base))
+        self.overwrite(combine(target, delta))
 
     def snapshot_append(self, df: DataFrame, derived_col: str = "ingest_date") -> None:
         """O10 snapshot load (base_loader.py:606-677): stamp today's date,

@@ -5,19 +5,31 @@ models/staging/schema.yml:9-84 and models/marts/schema.yml:6-97, run
 with `dbt build` (dbt_assets.py:24-27). Expressed as DataFrame checks;
 each returns the violation count so callers can assert == 0.
 
-All declared checks for a model run as ONE aggregation pass
-(`profile`): per-column null counts, distinct counts (for unique) and
-out-of-set counts fold into a single `df.agg(...)`, so a model pays one
-scan for its whole test battery + row count instead of one action per
-test — at 100 TB the difference between "tests are free-ish" and
-"tests double the load time".
+A model's checks run in one of two forms, and both hand their raw
+metrics to ONE decoder (`QualitySpec._decode`), so the check set, the
+`{check: count}` keys and the failure message never drift between them:
+
+  * the FULL gate (`violations` / `assert_ok`): one aggregation pass
+    over a stored table — per-column null counts, distinct counts (for
+    unique), out-of-set counts and relationship orphans fold into a
+    single `df.agg(...)`, so a model pays one scan for its whole test
+    battery + row count instead of one action per test. First builds,
+    `table` models, the CLI `validate` verb and every refresh whose
+    stored files are not the ones an earlier gate certified run this.
+  * the WRITE gate (`WriteGate`): the same metrics as Observations on
+    the rows a refresh already writes — no read-back, no extra Spark
+    action. Exact only against a certified target: rows the merge
+    carries over unchanged were counted by the gate that certified
+    them, so only the written rows need counting (the runner decides
+    when that holds).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -39,21 +51,16 @@ class QualitySpec:
     accepted_values: dict[str, list] = field(default_factory=dict)
     min_rows: int = 0  # volume floor: catch an accidentally-empty build
     # dbt `relationships`: child col -> (parent model name, parent col).
-    # Referential checks need the parent table, so they cannot ride the
-    # fused single-scan aggregation — assert_ok runs them as separate
-    # anti-join counts when given a resolver (the runner passes
-    # read_model); without a resolver they are skipped, preserving the
-    # one-scan contract for standalone QualitySpec users.
+    # Referential checks need the parent table: with a resolver (the
+    # runner passes read_model) each becomes a left join to the parent's
+    # keys riding the same aggregation or observation; without one they
+    # are skipped, so standalone QualitySpec users never need a parent.
     relationships: dict[str, tuple[str, str]] = field(default_factory=dict)
 
-    def _build_aggs(self) -> list:
-        """The one aggregation list both profile() and profile_df() run:
-        a change to any check's counting semantics lands in both the
-        collected gate and the graded long-form profile."""
+    def _row_aggs(self) -> list:
+        """The per-row metrics: row count, non-null counts, out-of-set
+        counts. Plain aggregates, so they run inside `observe` too."""
         aggs = [F.count(F.lit(1)).alias("__total")]
-        for c in self.unique:
-            aggs.append(F.count(c).alias(f"__u_cnt:{c}"))
-            aggs.append(F.countDistinct(c).alias(f"__u_dst:{c}"))
         for c in self.not_null:
             aggs.append(F.count(c).alias(f"__nn:{c}"))  # count(col) skips NULLs
         for c, vals in self.accepted_values.items():
@@ -62,6 +69,16 @@ class QualitySpec:
                     F.when(F.col(c).isNotNull() & ~F.col(c).isin(vals), 1).otherwise(0)
                 ).alias(f"__av:{c}")
             )
+        return aggs
+
+    def _build_aggs(self) -> list:
+        """The one aggregation list both profile() and profile_df() run:
+        a change to any check's counting semantics lands in both the
+        collected gate and the graded long-form profile."""
+        aggs = self._row_aggs()
+        for c in self.unique:
+            aggs.append(F.count(c).alias(f"__u_cnt:{c}"))
+            aggs.append(F.countDistinct(c).alias(f"__u_dst:{c}"))
         return aggs
 
     def profile(self, df: DataFrame) -> tuple[dict[str, int], int]:
@@ -121,9 +138,17 @@ class QualitySpec:
         one `sum(child key present AND parent marker absent)` aggregate
         riding the fused scan — a model with N relationship tests pays
         one action, not 1 + N."""
+        joined, rel_aggs, _ = self._relationship_join(df, resolve)
+        row = joined.agg(*self._build_aggs(), *rel_aggs).first()
+        return self._decode(row, resolve is not None), row["__total"]
+
+    def _relationship_join(self, df: DataFrame, resolve):
+        """(df left-joined to each declared parent's deduplicated keys,
+        the orphan-count aggregates, the marker columns to drop). At
+        most one parent row matches a child row, so every other metric
+        over the joined frame is unchanged."""
         joined = df
-        rel_aggs = []
-        rel_names = []
+        rel_aggs, marks = [], []
         for i, (col, (parent_name, parent_col)) in enumerate(
             self.relationships.items() if resolve is not None else ()
         ):
@@ -144,8 +169,12 @@ class QualitySpec:
                     ).otherwise(0)
                 ).alias(f"__rel{i}")
             )
-            rel_names.append(f"relationship:{col}->{parent_name}.{parent_col}")
-        row = joined.agg(*self._build_aggs(), *rel_aggs).first()
+            marks.append(rm)
+        return joined, rel_aggs, marks
+
+    def _decode(self, row, with_relationships: bool) -> dict[str, int]:
+        """{check: violations} from one fused-aggregate row — the ONE
+        decoder behind both gate forms."""
         total = row["__total"]
         results: dict[str, int] = {}
         for c in self.unique:
@@ -156,9 +185,13 @@ class QualitySpec:
             results[f"accepted_values:{c}"] = row[f"__av:{c}"] or 0
         if self.min_rows > 0:
             results["min_rows"] = max(0, self.min_rows - total)
-        for i, name in enumerate(rel_names):
-            results[name] = row[f"__rel{i}"] or 0
-        return results, total
+        for i, (col, (parent, parent_col)) in enumerate(
+            self.relationships.items() if with_relationships else ()
+        ):
+            results[f"relationship:{col}->{parent}.{parent_col}"] = (
+                row[f"__rel{i}"] or 0
+            )
+        return results
 
     def assert_ok(self, df: DataFrame, model: str = "", resolve=None) -> int:
         """Assert zero violations; returns the row count (free — it
@@ -166,7 +199,83 @@ class QualitySpec:
         relationships their parent tables; each declared relationship
         costs one key-pruned anti-join on top of the fused scan."""
         results, total = self.violations(df, resolve=resolve)
-        bad = {k: v for k, v in results.items() if v > 0}
-        if bad:
-            raise AssertionError(f"quality failures on {model or 'model'}: {bad}")
+        _raise_failures(results, model)
+        return total
+
+
+def _raise_failures(results: dict[str, int], model: str = "") -> None:
+    """The gate's verdict: raise naming every failed check, else pass."""
+    bad = {k: v for k, v in results.items() if v > 0}
+    if bad:
+        raise AssertionError(f"quality failures on {model or 'model'}: {bad}")
+
+
+class WriteGate:
+    """A model's checks as Observations on the write a refresh already
+    does. The merge calls the hooks on the frames it writes:
+
+      * `rows(df)`: every row the write materializes — row count,
+        not_null, accepted_values and relationship orphans (a left join
+        to the parent's deduplicated keys, observed, its marker column
+        dropped again before the write);
+      * `delta(df)` / `delta_keys(df)`: the delta rows it writes and a
+        deduplicated frame of their keys — `count(key)` on each, because
+        Spark rejects `countDistinct` inside `observe`. Their difference
+        is the table's excess-duplicate count: the anti-join makes the
+        carried keys disjoint from the delta's, and the certified target
+        held each carried key once. A keep-latest merge writes one row
+        per key and calls neither hook: its excess is 0 by construction.
+
+    Each hook wraps a NEW frame that only the write's plan reaches, once
+    — an observed node on two branches of one plan would count twice,
+    and one reached by an earlier action would report that action.
+    `violations(total)` decodes with QualitySpec's own decoder, over
+    the stored row count (parquet footers); rows the merge carried over
+    count as certified clean."""
+
+    def __init__(self, spec: QualitySpec, model: str, resolve=None):
+        self.spec = spec
+        self.model = model
+        self.resolve = resolve
+        self._observed: list[Observation] = []
+
+    def _observe(self, df: DataFrame, aggs: list) -> DataFrame:
+        obs = Observation()
+        self._observed.append(obs)
+        return df.observe(obs, *aggs)
+
+    def rows(self, df: DataFrame) -> DataFrame:
+        joined, rel_aggs, marks = self.spec._relationship_join(df, self.resolve)
+        return self._observe(joined, self.spec._row_aggs() + rel_aggs).drop(*marks)
+
+    def delta(self, df: DataFrame) -> DataFrame:
+        return self._count_unique(df, "__u_cnt")
+
+    def delta_keys(self, df: DataFrame) -> DataFrame:
+        return self._count_unique(df, "__u_dst")
+
+    def _count_unique(self, df: DataFrame, metric: str) -> DataFrame:
+        if not self.spec.unique:
+            return df
+        return self._observe(
+            df, [F.count(c).alias(f"{metric}:{c}") for c in self.spec.unique]
+        )
+
+    def violations(self, total: int) -> tuple[dict[str, int], int]:
+        """({check: count}, total) — `violations`' result over the
+        stored table, given that the written rows were observed and the
+        rest is certified."""
+        seen: dict = defaultdict(int)
+        for o in self._observed:
+            for k, v in o.get.items():
+                seen[k] += v or 0
+        row = defaultdict(int, seen)
+        row["__total"] = total
+        for c in self.spec.not_null:  # nulls written; carried rows hold none
+            row[f"__nn:{c}"] = total - (seen["__total"] - seen[f"__nn:{c}"])
+        return self.spec._decode(row, self.resolve is not None), total
+
+    def assert_ok(self, total: int) -> int:
+        results, total = self.violations(total)
+        _raise_failures(results, self.model)
         return total

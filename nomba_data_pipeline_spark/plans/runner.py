@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -29,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nomba_data_pipeline_spark.catalog import read_parquet
+from nomba_data_pipeline_spark.operators import footers
 from nomba_data_pipeline_spark.operators.merge import ParquetTable
-from nomba_data_pipeline_spark.plans.quality import QualitySpec
+from nomba_data_pipeline_spark.plans.quality import QualitySpec, WriteGate
 
 ModelFn = Callable[[SparkSession, str], DataFrame]
 
@@ -130,6 +132,11 @@ class PipelineRunner:
         # report the delta-load cost per model (the reference publishes
         # a single-table "~5 s delta" number; this makes ours comparable)
         self.last_timings: dict[str, float] = {}
+        # which gate form certified each model in the LAST run():
+        # "write" (checks observed on the refresh's own write),
+        # "unchanged" (nothing written; the stored files are the ones an
+        # earlier gate certified) or "full: <reason>" (read-back scan)
+        self.last_gates: dict[str, str] = {}
 
     def register(self, spec: ModelSpec) -> None:
         if spec.materialization in ("join_view", "agg_view",
@@ -205,6 +212,7 @@ class PipelineRunner:
                 add(name)
             ordered = [s for s in ordered if s.name in wanted]
         self.last_timings = {}
+        self.last_gates = {}
         # default 3 in flight — measured r16 (interleaved 1,3,3,1 at
         # sf0.1/local[32]): e2e fresh-warehouse build 25.4/27.5s -> 9.6/
         # 10.7s, unchanged rerun 7.1/8.7 -> 4.5/4.9, CDC rerun 8.7/11.6
@@ -267,6 +275,9 @@ class PipelineRunner:
                     else:
                         done[n], timings[n] = f.result()
         self.last_timings = {n: timings[n] for n in names if n in timings}
+        self.last_gates = {
+            n: self.last_gates[n] for n in names if n in self.last_gates
+        }
         if errors:
             raise errors[min(errors, key=names.index)]
         return {n: done[n] for n in names}
@@ -274,6 +285,9 @@ class PipelineRunner:
     def run_model(self, name: str) -> int:
         spec = self.models[name]
         target = self.table(spec.name)
+        if spec.materialization not in ("table", "incremental", "scd2",
+                                        "insert_overwrite"):
+            self.last_gates[name] = f"full: {spec.materialization} model"
         if spec.materialization in ("join_view", "agg_view"):
             return self._run_view(spec)
         if spec.materialization == "versioned_incremental":
@@ -303,23 +317,27 @@ class PipelineRunner:
                 # steady-state short-circuit: an empty delta skips the
                 # whole merge (incl. the key-location scan over the
                 # target) — the delta plan itself is cheap because the
-                # hwm predicate pushes into the source scan. No write
-                # happened, so the table is byte-identical to the state
-                # the previous run's gate certified: re-running the
-                # battery would re-prove a verdict over unchanged bytes.
-                # The returned count comes from parquet footer metadata
-                # (row_count_stats — zero Spark jobs on local layouts),
-                # exact by construction. Out-of-band corruption checks
-                # remain the CLI `validate` verb's job, as before.
+                # hwm predicate pushes into the source scan. Nothing is
+                # written, so when the stored files are the ones an
+                # earlier gate certified, that verdict still holds and
+                # the count comes from parquet footers (zero Spark
+                # jobs). Any other stored state — a gate that failed, a
+                # crashed write, an out-of-band file — takes the full
+                # gate, so a rejected row never passes by standing still.
                 if df.limit(1).count() == 0:
-                    n = target.row_count_stats()
-                    if n is not None:
-                        return n
-                    out = self.read_model(spec.name)
-                    return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
+                    return self._unchanged(spec, *self._certificate(spec))
 
+        if spec.materialization == "incremental":
+            self._apply_schema_policy(spec, target, df)
+        # decided after every schema rewrite and immediately before the
+        # write: only a certified target lets the checks ride the write
+        cert, why = self._gate_form(spec)
+        gate = None if why else WriteGate(
+            spec.quality, spec.name, resolve=self.read_model
+        )
+        wrote = True
         if spec.materialization == "scd2":
-            self._run_scd2_split(spec, df)
+            wrote = self._run_scd2_split(spec, df, gate)
         elif spec.materialization == "insert_overwrite":
             # dbt insert_overwrite strategy: the model's delta replaces
             # whole partitions (backfill/reprocess semantics) — requires
@@ -333,20 +351,179 @@ class PipelineRunner:
             target.insert_overwrite_partitions(df, spec.partition_by)
         elif spec.materialization == "incremental":
             pb = spec.partition_by or None
-            self._apply_schema_policy(spec, target, df)
             if spec.dedup and spec.tracking_column:
                 target.merge_upsert_dedup(
-                    df, spec.upsert_key, spec.tracking_column, partition_by=pb
+                    df, spec.upsert_key, spec.tracking_column,
+                    partition_by=pb, gate=gate,
                 )
             else:
-                target.merge_upsert(df, spec.upsert_key, partition_by=pb)
+                target.merge_upsert(df, spec.upsert_key, partition_by=pb, gate=gate)
         else:  # table
             target.overwrite(df, partition_by=spec.partition_by or None)
 
-        # one fused aggregation runs the whole test battery AND returns
-        # the row count — a model pays one post-write scan, not one per test
-        out = self.read_model(spec.name)
-        return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
+        if gate is None:
+            # one fused aggregation runs the whole test battery AND
+            # returns the row count — one post-write scan, not one per test
+            return self._full_gate(spec, why, cert)
+        if not wrote:
+            return self._unchanged(spec, cert, why)
+        total = self._stored_rows(spec)
+        self.last_gates[name] = "write"
+        try:
+            gate.assert_ok(total)
+        except AssertionError:
+            self._rm_dir(self._certificate_path(spec))
+            raise
+        self._certify(spec, cert["chain"])
+        return total
+
+    # -- gate certificates ---------------------------------------------------
+    # A passing gate on an incremental or scd2 model leaves
+    # `<warehouse>/<model>._certified`: the fingerprint of the data files
+    # it certified, a chain id, and the chain id of each relationship
+    # parent at that moment. A refresh whose stored files still match
+    # the fingerprint may run its checks on the write (WriteGate); every
+    # other state — no certificate, a failed or crashed run, a schema
+    # rewrite, erasure, full_refresh, an out-of-band file — runs the full
+    # gate. A gate that began from certified files continues their chain
+    # (the run only upserted into them, and an upsert never drops a
+    # key); a gate over any other files starts a new one. So a parent
+    # whose chain still matches the child's record has lost no key the
+    # child's unchecked rows could point at.
+    def _certificate_path(self, spec: ModelSpec) -> str:
+        return os.path.join(self.warehouse_dir, spec.name) + "._certified"
+
+    @staticmethod
+    def _stored_tables(spec: ModelSpec) -> list[str]:
+        if spec.materialization == "scd2":
+            return [spec.name + "__open", spec.name + "__closed"]
+        return [spec.name]
+
+    def _fingerprint(self, spec: ModelSpec) -> dict | None:
+        """{table: sorted [relative path, size, mtime_ns]} over the data
+        files Spark would read for the model, or None off the driver's
+        local filesystem (no certificate is kept there)."""
+        out = {}
+        for t in self._stored_tables(spec):
+            root = footers.local_path(os.path.join(self.warehouse_dir, t))
+            if root is None:
+                return None
+            out[t] = [
+                [os.path.relpath(f, root), st.st_size, st.st_mtime_ns]
+                for f in footers.data_files(root) or ()
+                for st in (os.stat(f),)
+            ]
+        return out
+
+    def _certificate(self, spec: ModelSpec) -> tuple[dict | None, str]:
+        """(certificate, "") when the model's stored files are exactly
+        the ones its last passing gate certified, else (None, reason)."""
+        from nomba_data_pipeline_spark.operators.versioned import (
+            UNREADABLE_SIDECAR,
+            read_json_sidecar,
+        )
+
+        fp = self._fingerprint(spec)
+        path = self._certificate_path(spec)
+        if fp is None or not os.path.isdir(footers.local_path(path)):
+            return None, "no certificate"
+        try:
+            cert = read_json_sidecar(self.spark, path)
+        except UNREADABLE_SIDECAR:
+            return None, "no certificate"
+        if cert.get("files") != fp:
+            return None, "files changed"
+        return cert, ""
+
+    def _gate_form(self, spec: ModelSpec) -> tuple[dict | None, str]:
+        """(the model's valid certificate or None, why the full gate
+        runs — "" when this refresh's checks may ride its write)."""
+        if spec.materialization not in ("incremental", "scd2"):
+            return None, f"{spec.materialization} model"
+        if not self.table(self._stored_tables(spec)[0]).exists():
+            return None, "first build"
+        cert, why = self._certificate(spec)
+        q = spec.quality
+        if cert is not None and q.unique and (
+            spec.materialization == "scd2"
+            or len(spec.upsert_key) != 1
+            or set(q.unique) != set(spec.upsert_key)
+        ):
+            why = "unique off the upsert key"
+        # rows the write carries over unchanged (untouched partitions,
+        # closed SCD2 history) are not re-joined to the parent
+        carries = spec.partition_by or spec.materialization == "scd2"
+        if cert is not None and carries and not self._parents_hold(spec, cert):
+            why = "parent not certified incremental"
+        return cert, why
+
+    def _parents_hold(self, spec: ModelSpec, cert: dict) -> bool:
+        """True when every relationship parent is an incremental model
+        on the certificate chain the child recorded: it has dropped no
+        key that the child's unchecked rows could point at."""
+        for parent, _ in spec.quality.relationships.values():
+            chain = self._chain(parent)
+            if chain is None or chain != cert["parents"].get(parent):
+                return False
+        return True
+
+    def _unchanged(self, spec: ModelSpec, cert: dict | None, why: str) -> int:
+        """A run that wrote nothing: the certified verdict stands, with
+        the count from parquet footers; without a certificate, or when
+        a relationship parent may have dropped keys, the full gate."""
+        if cert is None:
+            return self._full_gate(spec, why, None)
+        if not self._parents_hold(spec, cert):
+            return self._full_gate(spec, "parent not certified incremental", cert)
+        self.last_gates[spec.name] = "unchanged"
+        return self._stored_rows(spec)
+
+    def _chain(self, name: str) -> str | None:
+        """The chain id of an incremental model whose stored files are
+        certified, else None."""
+        spec = self.models.get(name)
+        if spec is None or spec.materialization != "incremental":
+            return None
+        cert, _ = self._certificate(spec)
+        return None if cert is None else cert["chain"]
+
+    def _certify(self, spec: ModelSpec, chain: str | None) -> None:
+        """Record the passing gate; `chain` None starts a new chain."""
+        from nomba_data_pipeline_spark.operators.versioned import write_json_sidecar
+
+        fp = self._fingerprint(spec)
+        if fp is None:
+            return
+        write_json_sidecar(self.spark, self._certificate_path(spec), {
+            "files": fp,
+            "chain": chain or uuid.uuid4().hex,
+            "parents": {p: self._chain(p)
+                        for p, _ in spec.quality.relationships.values()},
+        })
+
+    def _full_gate(self, spec: ModelSpec, why: str, cert: dict | None) -> int:
+        """The read-back gate over the stored model; certifies a pass
+        for the models whose refresh can use a certificate. `cert` is
+        the certificate that held BEFORE this run's write, if any: the
+        write was then an upsert over certified files, which drops no
+        key, so its chain continues."""
+        self.last_gates[spec.name] = f"full: {why}"
+        try:
+            total = spec.quality.assert_ok(
+                self.read_model(spec.name), model=spec.name, resolve=self.read_model
+            )
+        except AssertionError:
+            self._rm_dir(self._certificate_path(spec))
+            raise
+        if spec.materialization in ("incremental", "scd2"):
+            self._certify(spec, cert and cert["chain"])
+        return total
+
+    def _stored_rows(self, spec: ModelSpec) -> int:
+        """The model's stored row count from parquet footers."""
+        return sum(
+            self.table(t).row_count_stats() or 0 for t in self._stored_tables(spec)
+        )
 
     def _run_view(self, spec: ModelSpec) -> int:
         """Materialize/maintain a `join_view` or `agg_view` mart — the
@@ -864,9 +1041,13 @@ class PipelineRunner:
             return open_df
         return self.table(name).read()
 
-    def _run_scd2_split(self, spec: ModelSpec, batch: DataFrame) -> None:
+    def _run_scd2_split(self, spec: ModelSpec, batch: DataFrame,
+                        gate: WriteGate | None = None) -> bool:
         """Split SCD2 materialization: overwrite the (small) open table,
         append newly-closed rows partitioned by (batch_id, close date).
+        Returns whether anything was written. `gate` observes the open
+        overwrite and the closed append (closed history already stored
+        is carried unchanged).
 
         Idempotency: an unchanged rerun closes zero rows, so the append
         is a no-op; the open overwrite converges. Replay safety: a crash
@@ -899,6 +1080,7 @@ class PipelineRunner:
         from nomba_data_pipeline_spark.operators import scd2 as S2
         from nomba_data_pipeline_spark.operators.merge import _semi_anti_null_safe
 
+        observe = (lambda df: df) if gate is None else gate.rows
         open_t = self.table(spec.name + "__open")
         closed_path = os.path.join(self.warehouse_dir, spec.name + "__closed")
         open_old = open_t.read() if open_t.exists() else None
@@ -969,23 +1151,26 @@ class PipelineRunner:
                 F.coalesce(F.sum(1 - F.col("c")), F.lit(0)).alias("n_new"),
             ).first()
             if open_old is not None and stats["n"] == 0 and stats["n_new"] == 0:
-                return
+                return False
             # materialize closed rows BEFORE swapping the open table they
             # derive from (both plans read the old open files)
             bid = None
             if stats["n"] > 0:
                 bid = f"{(stats['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{stats['n']}"
                 self._rm_dir(os.path.join(closed_path, f"batch_id={bid}"))
-                closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
+                # observed on a frame only this append reaches: the
+                # persisted closed_now already fed the stats action
+                observe(closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
                     "close_date", F.to_date(F.col(S2.VALID_TO)).cast("string")
-                ).write.mode("append").partitionBy("batch_id", "close_date").parquet(
+                )).write.mode("append").partitionBy("batch_id", "close_date").parquet(
                     closed_path
                 )
-            open_t.overwrite(open_new)
+            open_t.overwrite(observe(open_new))
         finally:
             closed_now.unpersist()
         if bid is not None:  # the commit point: swap done -> mark the batch
             self._touch(os.path.join(closed_path, f"batch_id={bid}", "_COMMITTED"))
+        return True
 
     def _unmarked_batch_dirs(self, closed_path: str) -> list[str]:
         """batch_id= dirs missing the `_COMMITTED` marker — the orphan
@@ -1121,7 +1306,7 @@ class PipelineRunner:
             # run hit the maintenance branch against a dropped partials
             # table and raise forever
             for suffix in (
-                "", "__open", "__closed", "._view_meta", "._view_state",
+                "", "__open", "__closed", "._certified", "._view_meta", "._view_state",
                 "._agg_meta", "._agg_intent",
                 "__view", "__view._view_meta",
                 "__view._view_meta.rebucket-intent",

@@ -127,6 +127,46 @@ def test_null_partition_dedup_merge(spark, tmp_path):
     assert _state(t) == [(1, "zz", None), (9, "z", None)]
 
 
+def test_two_column_partitioned_merge_with_null_values(spark, tmp_path):
+    """Two partition columns, NULL in either: each touched (m, g)
+    directory keeps its unmatched rows, and a key that moves leaves its
+    old directory."""
+    schema = "id int, v string, m string, g string"
+    t = ParquetTable(spark, os.path.join(tmp_path, "t2c"))
+    t.overwrite(
+        spark.createDataFrame([
+            (1, "a", "2026-01", None), (2, "b", "2026-01", None),
+            (3, "c", None, "x"), (4, "d", None, "x"), (5, "e", "2026-02", "x"),
+        ], schema),
+        partition_by=["m", "g"],
+    )
+    delta = spark.createDataFrame(
+        [(1, "a2", "2026-01", None), (3, "c2", "2026-02", "x")], schema
+    )
+    t.merge_upsert(delta, ["id"], partition_by=["m", "g"])
+    assert sorted(tuple(r) for r in t.read().select("id", "v", "m", "g").collect()) == [
+        (1, "a2", "2026-01", None), (2, "b", "2026-01", None),
+        (3, "c2", "2026-02", "x"), (4, "d", None, "x"), (5, "e", "2026-02", "x"),
+    ]
+
+
+def test_rewrite_slice_prunes_to_affected_partitions(spark, tmp_path):
+    """The merge's rewrite slice is a filter on the collected partition
+    values (NULL included), so the target scan prunes directories."""
+    from pyspark.sql import Row
+
+    from nomba_data_pipeline_spark.operators.merge import _partition_values
+
+    t = _t(spark, tmp_path, [(1, "a", "2026-01"), (2, "b", None), (3, "c", "2026-02")])
+    sl = t.read().filter(_partition_values([Row(m="2026-01"), Row(m=None)], ["m"]))
+    assert sorted(r.id for r in sl.collect()) == [1, 2]
+    plan = sl._sc._jvm.PythonSQLUtils.explainString(
+        sl._jdf.queryExecution(), "formatted"
+    )
+    pf = [line for line in plan.splitlines() if "PartitionFilters" in line]
+    assert pf and "PartitionFilters: []" not in pf[0]
+
+
 # ---------------------------------------------------------------------------
 # insert_overwrite (dbt incremental strategy: replace whole partitions)
 # ---------------------------------------------------------------------------
