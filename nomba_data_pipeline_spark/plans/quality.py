@@ -15,7 +15,8 @@ metrics to ONE decoder (`QualitySpec._decode`), so the check set, the
     single `df.agg(...)`, so a model pays one scan for its whole test
     battery + row count instead of one action per test. First builds,
     `table` models, the CLI `validate` verb and every refresh whose
-    stored files are not the ones an earlier gate certified run this.
+    stored files or declared checks are not the ones an earlier gate
+    certified run this.
   * the WRITE gate (`WriteGate`): the same metrics as Observations on
     the rows a refresh already writes — no read-back, no extra Spark
     action. Exact only against a certified target: rows the merge

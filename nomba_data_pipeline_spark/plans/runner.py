@@ -20,10 +20,11 @@ data itself — no external state store, same as the reference
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -135,7 +136,8 @@ class PipelineRunner:
         # which gate form certified each model in the LAST run():
         # "write" (checks observed on the refresh's own write),
         # "unchanged" (nothing written; the stored files are the ones an
-        # earlier gate certified) or "full: <reason>" (read-back scan)
+        # earlier gate certified under the same checks) or
+        # "full: <reason>" (read-back scan)
         self.last_gates: dict[str, str] = {}
 
     def register(self, spec: ModelSpec) -> None:
@@ -380,16 +382,17 @@ class PipelineRunner:
     # -- gate certificates ---------------------------------------------------
     # A passing gate on an incremental or scd2 model leaves
     # `<warehouse>/<model>._certified`: the fingerprint of the data files
-    # it certified, a chain id, and the chain id of each relationship
-    # parent at that moment. A refresh whose stored files still match
-    # the fingerprint may run its checks on the write (WriteGate); every
-    # other state — no certificate, a failed or crashed run, a schema
-    # rewrite, erasure, full_refresh, an out-of-band file — runs the full
+    # it certified, the checks it ran, a chain id, and the chain id of
+    # each relationship parent at that moment. A refresh whose stored
+    # files and declared checks still match may run its checks on the
+    # write (WriteGate); every other state — no certificate, a failed or
+    # crashed run, a schema rewrite, erasure, full_refresh, an
+    # out-of-band file, an added or tightened check — runs the full
     # gate. A gate that began from certified files continues their chain
     # (the run only upserted into them, and an upsert never drops a
     # key); a gate over any other files starts a new one. So a parent
-    # whose chain still matches the child's record has lost no key the
-    # child's unchecked rows could point at.
+    # whose chain still matches the child's record has lost no upsert
+    # key the child's unchecked rows could point at.
     def _certificate_path(self, spec: ModelSpec) -> str:
         return os.path.join(self.warehouse_dir, spec.name) + "._certified"
 
@@ -415,9 +418,15 @@ class PipelineRunner:
             ]
         return out
 
+    @staticmethod
+    def _checks(spec: ModelSpec) -> str:
+        """The model's declared checks, as its certificate records them."""
+        return json.dumps(asdict(spec.quality), sort_keys=True, default=str)
+
     def _certificate(self, spec: ModelSpec) -> tuple[dict | None, str]:
         """(certificate, "") when the model's stored files are exactly
-        the ones its last passing gate certified, else (None, reason)."""
+        the ones its last passing gate certified, under the checks it
+        declares now, else (None, reason)."""
         from nomba_data_pipeline_spark.operators.versioned import (
             UNREADABLE_SIDECAR,
             read_json_sidecar,
@@ -433,6 +442,8 @@ class PipelineRunner:
             return None, "no certificate"
         if cert.get("files") != fp:
             return None, "files changed"
+        if cert.get("checks") != self._checks(spec):
+            return None, "checks changed"
         return cert, ""
 
     def _gate_form(self, spec: ModelSpec) -> tuple[dict | None, str]:
@@ -458,10 +469,14 @@ class PipelineRunner:
         return cert, why
 
     def _parents_hold(self, spec: ModelSpec, cert: dict) -> bool:
-        """True when every relationship parent is an incremental model
-        on the certificate chain the child recorded: it has dropped no
-        key that the child's unchecked rows could point at."""
-        for parent, _ in spec.quality.relationships.values():
+        """True when every relationship points at an upsert key of an
+        incremental parent on the certificate chain the child recorded:
+        it has dropped no key that the child's unchecked rows could point
+        at. An upsert may rewrite any other parent column."""
+        for parent, parent_col in spec.quality.relationships.values():
+            pspec = self.models.get(parent)
+            if pspec is None or parent_col not in pspec.upsert_key:
+                return False
             chain = self._chain(parent)
             if chain is None or chain != cert["parents"].get(parent):
                 return False
@@ -496,6 +511,7 @@ class PipelineRunner:
             return
         write_json_sidecar(self.spark, self._certificate_path(spec), {
             "files": fp,
+            "checks": self._checks(spec),
             "chain": chain or uuid.uuid4().hex,
             "parents": {p: self._chain(p)
                         for p, _ in spec.quality.relationships.values()},
@@ -1078,9 +1094,12 @@ class PipelineRunner:
         from pyspark.storagelevel import StorageLevel
 
         from nomba_data_pipeline_spark.operators import scd2 as S2
-        from nomba_data_pipeline_spark.operators.merge import _semi_anti_null_safe
+        from nomba_data_pipeline_spark.operators.merge import (
+            _UNGATED,
+            _semi_anti_null_safe,
+        )
 
-        observe = (lambda df: df) if gate is None else gate.rows
+        gate = gate or _UNGATED
         open_t = self.table(spec.name + "__open")
         closed_path = os.path.join(self.warehouse_dir, spec.name + "__closed")
         open_old = open_t.read() if open_t.exists() else None
@@ -1160,12 +1179,12 @@ class PipelineRunner:
                 self._rm_dir(os.path.join(closed_path, f"batch_id={bid}"))
                 # observed on a frame only this append reaches: the
                 # persisted closed_now already fed the stats action
-                observe(closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
+                gate.rows(closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
                     "close_date", F.to_date(F.col(S2.VALID_TO)).cast("string")
                 )).write.mode("append").partitionBy("batch_id", "close_date").parquet(
                     closed_path
                 )
-            open_t.overwrite(observe(open_new))
+            open_t.overwrite(gate.rows(open_new))
         finally:
             closed_now.unpersist()
         if bid is not None:  # the commit point: swap done -> mark the batch

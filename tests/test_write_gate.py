@@ -151,6 +151,65 @@ def test_failed_gate_is_not_forgotten_by_the_next_run(spark, tmp_path):
     assert r.last_gates == {"m": "full: no certificate"}
 
 
+@pytest.mark.parametrize("rows", [
+    [(1, "X", 1), (2, "F", 2)],  # a clean delta
+    [(1, "X", 1)],               # an empty delta
+], ids=["clean_delta", "empty_delta"])
+def test_changed_checks_take_the_full_gate(spark, tmp_path, rows):
+    """A check tightened after the model was certified: the stored files
+    still match the certificate, but not the checks it ran, so the next
+    run re-checks every stored row and rejects the one that breaks the
+    new check."""
+
+    def runner(accepted, src):
+        r = PipelineRunner(spark, str(tmp_path / "wh"), SF_SMALL)
+        r.register(ModelSpec(
+            name="m",
+            fn=lambda s, _sf: s.createDataFrame(src, "id int, status string, v int"),
+            materialization="incremental", upsert_key=["id"], tracking_column="v",
+            quality=QualitySpec(accepted_values={"status": accepted}),
+        ))
+        return r
+
+    assert runner(["F", "O", "X"], [(1, "X", 1)]).run() == {"m": 1}
+    r = runner(["F", "O"], rows)
+    with pytest.raises(AssertionError, match=r"accepted_values:status': 1"):
+        r.run()
+    assert r.last_gates == {"m": "full: checks changed"}
+
+
+def test_non_key_relationship_takes_the_full_gate(spark, tmp_path):
+    """A relationship to a parent column outside the parent's upsert key:
+    an upsert may rewrite that column, orphaning rows in the child's
+    untouched partitions, so the child's refresh runs the full gate."""
+    src = {"p": [(1, "a", 1)], "c": [(10, "a", "x", 1)]}
+
+    def runner():
+        r = PipelineRunner(spark, str(tmp_path / "wh"), SF_SMALL)
+        r.register(ModelSpec(
+            name="p",
+            fn=lambda s, _sf: s.createDataFrame(src["p"], "id int, code string, v int"),
+            materialization="incremental", upsert_key=["id"], tracking_column="v",
+        ))
+        r.register(ModelSpec(
+            name="c",
+            fn=lambda s, _sf: s.createDataFrame(
+                src["c"], "id int, code string, part string, v int"),
+            materialization="incremental", upsert_key=["id"], tracking_column="v",
+            partition_by=["part"], depends_on=["p"],
+            quality=QualitySpec(relationships={"code": ("p", "code")}),
+        ))
+        return r
+
+    assert runner().run() == {"p": 1, "c": 1}
+    src["p"] = [(1, "b", 2)]  # key 1 keeps its row, code 'a' is gone
+    src["c"] = [(10, "a", "x", 1), (11, "b", "y", 2)]
+    r = runner()
+    with pytest.raises(AssertionError, match=r"relationship:code->p.code': 1"):
+        r.run()
+    assert r.last_gates == {"p": "write", "c": "full: parent not certified incremental"}
+
+
 def test_out_of_band_file_takes_the_full_gate(spark, tmp_path, capsys):
     """A data file copied into a certified table behind the runner's
     back changes its file fingerprint: the next refresh runs the full
