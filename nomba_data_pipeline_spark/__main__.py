@@ -42,6 +42,8 @@ def cmd_run(args) -> int:
         "model_seconds": runner.last_timings,
         # gate form per model: write / unchanged / full: <reason>
         "model_gates": runner.last_gates,
+        # per scd2 model: versions closed, brand-new keys, batch id
+        "model_scd2": runner.last_scd2,
         "total_seconds": round(time.perf_counter() - t0, 3),
     }
     print(json.dumps(out))

@@ -29,7 +29,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# parquet TIMESTAMP(NANOS) columns: Spark reads them as long (nanosAsLong
+# columns a regenerated fixture may store as parquet TIMESTAMP(NANOS)
+# (the current testdata footers hold MICROS, so this never fires on them;
+# tests/test_testdata_schema.py): Spark reads NANOS as long (nanosAsLong
 # conf, session.py); convert to microsecond timestamps on load, truncating
 # exactly like DuckDB's ns->us coercion so oracles agree.
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}

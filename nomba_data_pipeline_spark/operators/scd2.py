@@ -58,10 +58,12 @@ def scd2_apply(
     load_ts: Column | None = None,
     order_within_batch: str | None = None,
     hard_delete: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Core SCD2 step against the OPEN rows only.
 
-    Returns (new_open_state, newly_closed_rows). Closed history never
+    Returns (new_open_state, newly_closed_rows, new_key_rows): the last
+    is the open versions of brand-new keys, a subset of new_open_state
+    from the same deduplicated batch. Closed history never
     participates — which is what lets the runner store it append-only
     and keep the per-run rewrite cost O(open rows), not O(history).
 
@@ -97,7 +99,7 @@ def scd2_apply(
 
     if open_rows is None:
         stamped = _stamp(batch, key, ts)
-        return stamped, stamped.limit(0)
+        return stamped, stamped.limit(0), stamped
 
     attrs = batch.columns  # the business columns tracked by the snapshot
     cur = open_rows.alias("cur")
@@ -145,7 +147,7 @@ def scd2_apply(
         ts,
     )
     new_open = carried_open.unionByName(opened_changed).unionByName(opened_new)
-    return new_open, closed_now
+    return new_open, closed_now, opened_new
 
 
 def scd2_merge(
@@ -158,11 +160,13 @@ def scd2_merge(
 ) -> DataFrame:
     """Return the new snapshot table state (closed + carried + opened rows)."""
     if snapshot is None:
-        open_new, _ = scd2_apply(None, batch, key, check_cols, load_ts, order_within_batch)
+        open_new, _, _ = scd2_apply(
+            None, batch, key, check_cols, load_ts, order_within_batch
+        )
         return open_new
     open_rows = snapshot.filter(F.col(VALID_TO).isNull())
     closed_rows = snapshot.filter(F.col(VALID_TO).isNotNull())
-    open_new, closed_now = scd2_apply(
+    open_new, closed_now, _ = scd2_apply(
         open_rows, batch, key, check_cols, load_ts, order_within_batch
     )
     return closed_rows.unionByName(closed_now).unionByName(open_new)

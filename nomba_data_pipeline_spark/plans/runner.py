@@ -139,6 +139,11 @@ class PipelineRunner:
         # earlier gate certified under the same checks) or
         # "full: <reason>" (read-back scan)
         self.last_gates: dict[str, str] = {}
+        # per scd2 model in the LAST run(): {closed, new_keys, batch_id}
+        # as the close's own write observed them (new_keys None on a
+        # first build, which counts nothing; batch_id None when nothing
+        # closed)
+        self.last_scd2: dict[str, dict] = {}
 
     def register(self, spec: ModelSpec) -> None:
         if spec.materialization in ("join_view", "agg_view",
@@ -215,6 +220,7 @@ class PipelineRunner:
             ordered = [s for s in ordered if s.name in wanted]
         self.last_timings = {}
         self.last_gates = {}
+        self.last_scd2 = {}
         # default 3 in flight — measured r16 (interleaved 1,3,3,1 at
         # sf0.1/local[32]): e2e fresh-warehouse build 25.4/27.5s -> 9.6/
         # 10.7s, unchanged rerun 7.1/8.7 -> 4.5/4.9, CDC rerun 8.7/11.6
@@ -279,6 +285,9 @@ class PipelineRunner:
         self.last_timings = {n: timings[n] for n in names if n in timings}
         self.last_gates = {
             n: self.last_gates[n] for n in names if n in self.last_gates
+        }
+        self.last_scd2 = {
+            n: self.last_scd2[n] for n in names if n in self.last_scd2
         }
         if errors:
             raise errors[min(errors, key=names.index)]
@@ -1065,22 +1074,38 @@ class PipelineRunner:
         overwrite and the closed append (closed history already stored
         is carried unchanged).
 
-        Idempotency: an unchanged rerun closes zero rows, so the append
-        is a no-op; the open overwrite converges. Replay safety: a crash
-        BETWEEN the closed append and the open swap leaves the appended
-        batch on disk while the rerun — still seeing the old open table —
-        recomputes the same closed set. Each append therefore carries a
-        deterministic batch id (order-independent bit_xor of
-        xxhash64(key, valid_from) — stable across replays because
+        One plan computes the close and its identity. The closed rows
+        (c=1) and one row per brand-new key (c=0, taken from
+        scd2_apply's own deduplicated batch) pass one Observation: the
+        batch id's order-independent bit_xor of xxhash64(key,
+        valid_from) ((key, valid_from) is unique within a batch, so the
+        xor never self-cancels), the close count n and the new-key count
+        n_new. The c=1 rows are then appended, partitioned by close
+        date, into a hidden staging dir `.batch_id=<txn>.staging` under
+        the closed root. Once the write has run, the driver knows the
+        batch id: it wipes any `batch_id=<id>` an earlier attempt left
+        and renames the staging dir to it; when nothing closed, it
+        deletes the staging dir instead. n == 0 and n_new == 0 means
+        the open state is EXACTLY open_old (carried_open keeps every
+        current row untouched), so the open overwrite is skipped: an
+        unchanged rerun costs one small write job and no table rewrite.
+        A first build closes nothing and writes the open table alone.
+
+        Replay safety. The batch id is stable across replays because
         valid_from comes from history, while valid_to is the replay's
-        NOW()), and the writer wipes any existing `batch_id=<id>`
-        subtree first. The same-bid wipe alone is not enough when the
-        SOURCE changes between the crash and the replay (different
-        closed set => different bid, stale orphans survive), so runs
-        also sweep ORPHANED batch dirs — a closed (key, valid_from)
-        whose version is still OPEN can only come from an uncommitted
-        append, because a committed close always swaps that version out
-        of the open table.
+        NOW(). A crash before the rename leaves only a hidden staging
+        dir, which no reader lists and the next run (or erase_subject)
+        deletes, together with a closed root it leaves empty. A crash
+        BETWEEN the rename and the open swap leaves the
+        batch on disk while the rerun — still seeing the old open table
+        — recomputes the same closed set, so the same-id wipe replaces
+        it. The same-id wipe alone is not enough when the SOURCE changes
+        between the crash and the replay (different closed set =>
+        different id, stale orphans survive), so runs also sweep
+        ORPHANED batch dirs — a closed (key, valid_from) whose version
+        is still OPEN can only come from an uncommitted append, because
+        a committed close always swaps that version out of the open
+        table.
 
         A committed batch dir carries a `_COMMITTED` marker (written
         AFTER the open swap), so the steady-state sweep is a pure
@@ -1091,17 +1116,19 @@ class PipelineRunner:
         marker) and get marked. The dedup itself stays a directory
         delete, never a shuffle over history.
         """
-        from pyspark.storagelevel import StorageLevel
+        from pyspark.sql import Observation
 
         from nomba_data_pipeline_spark.operators import scd2 as S2
         from nomba_data_pipeline_spark.operators.merge import (
             _UNGATED,
             _semi_anti_null_safe,
+            fs_and_path,
         )
 
         gate = gate or _UNGATED
         open_t = self.table(spec.name + "__open")
         closed_path = os.path.join(self.warehouse_dir, spec.name + "__closed")
+        self._sweep_closed_staging(closed_path)
         open_old = open_t.read() if open_t.exists() else None
         key = spec.scd2_key or spec.upsert_key[0]
         if open_old is not None and self.table(spec.name + "__closed").exists():
@@ -1129,67 +1156,81 @@ class PipelineRunner:
                     bid_ = d.rsplit("batch_id=", 1)[-1]
                     if bid_ not in orphan_bids:
                         self._touch(os.path.join(d, "_COMMITTED"))
-        open_new, closed_now = S2.scd2_apply(
+        open_new, closed_now, opened_new = S2.scd2_apply(
             open_old,
             batch,
             key=key,
             check_cols=spec.check_cols,
             order_within_batch=spec.tracking_column,
         )
-        # the closed set is computed twice (stats pass + append) — cache
-        # it so the change-detection join runs once; it is delta-sized
-        # (only versions closing this run), so the footprint is bounded
-        closed_now = closed_now.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # one pass gives the emptiness check, the batch identity
-            # ((key, valid_from) is unique within a batch, so the xor
-            # never self-cancels) AND — riding the same action — the
-            # count of brand-new keys (batch keys with no open version).
-            # n == 0 and n_new == 0 means the open state is EXACTLY
-            # open_old (carried_open preserves every cur row untouched
-            # when nothing changed and nothing closed), so the open
-            # overwrite — a full rewrite of the open table plus a second
-            # evaluation of the change-detection join — can be skipped
-            # outright: the unchanged-source rerun becomes one small
-            # aggregation instead of a table rewrite.
-            stats_src = closed_now.select(
-                F.xxhash64(F.col(key), F.col(S2.VALID_FROM)).alias("h"),
-                F.lit(1).alias("c"),
-            )
-            if open_old is not None:
-                new_keys = _semi_anti_null_safe(
-                    batch.select(key).dropDuplicates([key]),
-                    open_old.select(key),
-                    [key],
-                    "left_anti",
-                ).select(F.lit(0).cast("long").alias("h"), F.lit(0).alias("c"))
-                stats_src = stats_src.unionByName(new_keys)
-            stats = stats_src.agg(
-                F.expr("bit_xor(if(c = 1, h, 0L))").alias("x"),
-                F.coalesce(F.sum("c"), F.lit(0)).alias("n"),
-                F.coalesce(F.sum(1 - F.col("c")), F.lit(0)).alias("n_new"),
-            ).first()
-            if open_old is not None and stats["n"] == 0 and stats["n_new"] == 0:
-                return False
-            # materialize closed rows BEFORE swapping the open table they
-            # derive from (both plans read the old open files)
-            bid = None
-            if stats["n"] > 0:
-                bid = f"{(stats['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{stats['n']}"
-                self._rm_dir(os.path.join(closed_path, f"batch_id={bid}"))
-                # observed on a frame only this append reaches: the
-                # persisted closed_now already fed the stats action
-                gate.rows(closed_now.withColumn("batch_id", F.lit(bid)).withColumn(
-                    "close_date", F.to_date(F.col(S2.VALID_TO)).cast("string")
-                )).write.mode("append").partitionBy("batch_id", "close_date").parquet(
-                    closed_path
-                )
+        if open_old is None:  # first build: nothing can close
             open_t.overwrite(gate.rows(open_new))
-        finally:
-            closed_now.unpersist()
+            self.last_scd2[spec.name] = {
+                "closed": 0, "new_keys": None, "batch_id": None,
+            }
+            return True
+        obs = Observation()
+        marked = closed_now.withColumn("c", F.lit(1)).unionByName(
+            opened_new.select(key, F.lit(0).alias("c")), allowMissingColumns=True
+        ).observe(
+            obs,
+            F.bit_xor(F.when(
+                F.col("c") == 1, F.xxhash64(F.col(key), F.col(S2.VALID_FROM))
+            ).otherwise(F.lit(0).cast("long"))).alias("x"),
+            F.count(F.when(F.col("c") == 1, 1)).alias("n"),
+            F.count(F.when(F.col("c") == 0, 1)).alias("n_new"),
+        )
+        # the closed rows, materialized BEFORE swapping the open table
+        # they derive from (both plans read the old open files)
+        staging = os.path.join(closed_path, f".batch_id={uuid.uuid4().hex}.staging")
+        gate.rows(
+            marked.filter(F.col("c") == 1).drop("c").withColumn(
+                "close_date", F.to_date(F.col(S2.VALID_TO)).cast("string")
+            )
+        ).write.partitionBy("close_date").parquet(staging)
+        stats = obs.get
+        n, n_new = stats["n"], stats["n_new"]
+        bid = None
+        if n > 0:
+            bid = f"{(stats['x'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{n}"
+            final = os.path.join(closed_path, f"batch_id={bid}")
+            self._rm_dir(final)
+            fs, jstaging = fs_and_path(self.spark, staging)
+            if not fs.rename(jstaging, fs_and_path(self.spark, final)[1]):
+                raise IOError(f"closed batch rename failed: {staging} -> {final}")
+            self.spark.catalog.refreshByPath(closed_path)
+        else:
+            self._sweep_closed_staging(closed_path)
+        self.last_scd2[spec.name] = {
+            "closed": n, "new_keys": n_new, "batch_id": bid,
+        }
+        if n == 0 and n_new == 0:
+            return False
+        open_t.overwrite(gate.rows(open_new))
         if bid is not None:  # the commit point: swap done -> mark the batch
             self._touch(os.path.join(closed_path, f"batch_id={bid}", "_COMMITTED"))
         return True
+
+    def _sweep_closed_staging(self, closed_path: str) -> None:
+        """Delete every `.batch_id=*.staging` dir under the closed root
+        (an append that crashed before its rename, or one that closed
+        nothing), then the root itself when it holds no visible entry:
+        read_model and exists() must never meet a table with no files.
+        Single-writer, like the append it cleans up after."""
+        from nomba_data_pipeline_spark.operators.merge import fs_and_path
+
+        fs, root = fs_and_path(self.spark, closed_path)
+        if not fs.exists(root):
+            return
+        visible = False
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith(".batch_id=") and name.endswith(".staging"):
+                fs.delete(st.getPath(), True)
+            elif not name.startswith(("_", ".")):
+                visible = True
+        if not visible:
+            fs.delete(root, True)
 
     def _unmarked_batch_dirs(self, closed_path: str) -> list[str]:
         """batch_id= dirs missing the `_COMMITTED` marker — the orphan
@@ -1557,8 +1598,11 @@ class PipelineRunner:
                 vt.purge_keys(match_df.select(col), [col])
             removed[name] = n_before - vt.read().count()
 
-        # closed SCD2 history: partition-scoped rewrite
+        # closed SCD2 history: partition-scoped rewrite. A crashed
+        # close's staging dir is hidden from the scan below but holds
+        # subject rows too — drop it first
         closed_path = os.path.join(self.warehouse_dir, "users_snapshot__closed")
+        self._sweep_closed_staging(closed_path)
         fs, root = fs_and_path(self.spark, closed_path)
         n_hist = 0
         if fs.exists(root):

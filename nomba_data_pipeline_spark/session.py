@@ -55,8 +55,10 @@ def get_spark(
         # and min/max pruning on timestamp columns; TIMESTAMP_MICROS is
         # the modern standards-track physical type WITH stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark cannot
-        # scan natively; read as long and convert in catalog.load_table
+        # a guard for regenerated fixtures: the current testdata footers
+        # store events.ts as TIMESTAMP(MICROS), but a TIMESTAMP(NANOS)
+        # column would not scan at all without this; catalog.load_table
+        # converts such a long (tests/test_testdata_schema.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

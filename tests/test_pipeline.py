@@ -36,8 +36,13 @@ def test_full_pipeline_and_idempotent_rerun(spark, warehouse):
     )
     # rerun with unchanged sources: incremental models see empty deltas,
     # SCD2 sees no changes -> identical tables
-    counts2 = build_pipeline(spark, warehouse, SF_SMALL).run()
+    runner2 = build_pipeline(spark, warehouse, SF_SMALL)
+    counts2 = runner2.run()
     assert counts2 == counts1
+    # the close's own write observed its counts: nothing closed, no new key
+    assert runner2.last_scd2 == {
+        "users_snapshot": {"closed": 0, "new_keys": 0, "batch_id": None}
+    }
     fact2 = sorted(
         (r.transaction_id, r.amount, r.region)
         for r in runner.table("fact_transactions").read().collect()

@@ -93,9 +93,9 @@ def test_duplicate_key_in_batch_latest_wins(spark):
 def test_hard_delete_closes_absent_keys(spark, gen1):
     from nomba_data_pipeline_spark.operators.scd2 import scd2_apply
 
-    open1, _ = scd2_apply(None, gen1, "id", ["state", "occupation"], load_ts=ts("2026-01-01"))
+    open1, _, _ = scd2_apply(None, gen1, "id", ["state", "occupation"], load_ts=ts("2026-01-01"))
     batch2 = spark.createDataFrame([(1, "a", "LA", "eng")], SCHEMA)  # ids 2,3 gone
-    open2, closed2 = scd2_apply(
+    open2, closed2, _ = scd2_apply(
         open1, batch2, "id", ["state", "occupation"], load_ts=ts("2026-02-01"),
         hard_delete=True,
     )
@@ -103,7 +103,7 @@ def test_hard_delete_closes_absent_keys(spark, gen1):
     closed = {r.id: str(r.valid_to)[:10] for r in closed2.collect()}
     assert closed == {2: "2026-02-01", 3: "2026-02-01"}
     # default (reference parity): absentees carried open
-    open2b, closed2b = scd2_apply(
+    open2b, closed2b, _ = scd2_apply(
         open1, batch2, "id", ["state", "occupation"], load_ts=ts("2026-02-01")
     )
     assert sorted(r.id for r in open2b.collect()) == [1, 2, 3]
@@ -188,9 +188,9 @@ def test_default_load_ts_is_frozen_across_actions(spark, gen1):
     successor's valid_from (no valid version at any t in the gap)."""
     from nomba_data_pipeline_spark.operators.scd2 import scd2_apply
 
-    open1, _ = scd2_apply(None, gen1, "id", ["state", "occupation"], load_ts=ts("2026-01-01"))
+    open1, _, _ = scd2_apply(None, gen1, "id", ["state", "occupation"], load_ts=ts("2026-01-01"))
     changed = spark.createDataFrame([(1, "a", "KAN", "eng")], SCHEMA)
-    open2, closed2 = scd2_apply(open1, changed, "id", ["state", "occupation"])
+    open2, closed2, _ = scd2_apply(open1, changed, "id", ["state", "occupation"])
     # two separate actions, the way the runner drives them
     closed_rows = {r.id: r.valid_to for r in closed2.collect()}
     import time
@@ -337,3 +337,153 @@ def test_vacuum_closed_expires_history_partition_scoped(spark, tmp_path):
     assert runner.vacuum_closed("users_snapshot", "9999-12-31") == 0
     with pytest.raises(ValueError, match="YYYY-MM-DD"):
         runner.vacuum_closed("users_snapshot", "eventually")
+
+
+@pytest.mark.slow
+def test_split_scd2_replay_after_crash_before_rename_is_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after the closed append reached its staging dir and before
+    the rename publishes it as `batch_id=<id>`: the replay must sweep the
+    staging dir and give exactly the closed history of a run that never
+    crashed — the same (user_id, valid_from) multiset — with no staging
+    dir left behind."""
+    import os
+    import shutil
+
+    from nomba_data_pipeline_spark.plans import models as M
+    from nomba_data_pipeline_spark.plans.cdc_sim import simulate_user_updates
+    from nomba_data_pipeline_spark.plans.pipeline import build_pipeline
+    from nomba_data_pipeline_spark.plans.runner import PipelineRunner
+    from tests.conftest import SF_SMALL
+
+    wh = os.path.join(tmp_path, "wh")
+    ref = os.path.join(tmp_path, "ref")
+    build_pipeline(spark, wh, SF_SMALL).run(only=["users_snapshot"])
+    shutil.copytree(wh, ref)  # same first build: same valid_from per version
+    override = {
+        "stg_users": lambda s, sf: simulate_user_updates(
+            M.stg_users(s, sf), fraction=0.1
+        )
+    }
+    build_pipeline(spark, ref, SF_SMALL, source_override=override).run(
+        only=["users_snapshot"]
+    )
+
+    orig = PipelineRunner._rm_dir
+    state = {"crashed": False}
+
+    def crash_before_rename(self, path):
+        # the same-id wipe runs right before the rename
+        if not state["crashed"] and "__closed/batch_id=" in path:
+            state["crashed"] = True
+            raise RuntimeError("injected crash between staged append and rename")
+        return orig(self, path)
+
+    monkeypatch.setattr(PipelineRunner, "_rm_dir", crash_before_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_pipeline(spark, wh, SF_SMALL, source_override=override).run(
+            only=["users_snapshot"]
+        )
+    closed_root = os.path.join(wh, "users_snapshot__closed")
+    entries = os.listdir(closed_root)
+    assert [e for e in entries if e.startswith(".batch_id=")], entries
+    assert not [e for e in entries if e.startswith("batch_id=")], entries
+
+    runner = build_pipeline(spark, wh, SF_SMALL, source_override=override)
+    runner.run(only=["users_snapshot"])
+    entries = os.listdir(closed_root)
+    assert not [e for e in entries if e.startswith(".batch_id=")], entries
+
+    def closed_versions(w: str) -> list:
+        snap = build_pipeline(spark, w, SF_SMALL).read_model("users_snapshot")
+        return sorted(
+            tuple(r)
+            for r in snap.filter(F.col("valid_to").isNotNull())
+            .select("user_id", "valid_from")
+            .collect()
+        )
+
+    got = closed_versions(wh)
+    assert got and got == closed_versions(ref)
+
+
+@pytest.fixture
+def plan_confs(spark):
+    """The confs the SCD2 cycle shape depends on, pinned for the test
+    and restored after it."""
+    pins = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+    saved = {k: spark.conf.get(k) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def test_split_scd2_close_caches_nothing_and_bounds_jobs(
+    spark, tmp_path, monkeypatch, plan_confs
+):
+    """Cycle shape of a refresh that closes versions: the closed rows,
+    their batch id and the change counts come from one plan, so nothing
+    is persisted (the cache manager is empty while the open table is
+    swapped) and the snapshot runs at most MAX_JOBS Spark jobs: 12 at
+    sf0.001, where a separate stats action over a cached change set ran
+    16."""
+    import os
+
+    from nomba_data_pipeline_spark.operators.merge import ParquetTable
+    from nomba_data_pipeline_spark.plans import models as M
+    from nomba_data_pipeline_spark.plans.cdc_sim import simulate_user_updates
+    from nomba_data_pipeline_spark.plans.pipeline import build_pipeline
+    from tests.conftest import SF_SMALL
+
+    MAX_JOBS = 12
+    wh = os.path.join(tmp_path, "wh")
+    build_pipeline(spark, wh, SF_SMALL).run(only=["users_snapshot"])
+    runner = build_pipeline(spark, wh, SF_SMALL, source_override={
+        "stg_users": lambda s, sf: simulate_user_updates(
+            M.stg_users(s, sf), fraction=0.1
+        )
+    })
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    orig = ParquetTable.overwrite
+    cached_at_swap = []
+
+    def overwrite(self, df, partition_by=None):
+        if self.path.endswith("users_snapshot__open"):
+            cached_at_swap.append(not cache.isEmpty())
+        return orig(self, df, partition_by=partition_by)
+
+    monkeypatch.setattr(ParquetTable, "overwrite", overwrite)
+    sc = spark.sparkContext
+    group = "scd2-cycle-shape"
+    sc.setJobGroup(group, "scd2 cycle shape")
+    try:
+        runner.run(only=["users_snapshot"])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+
+    stats = runner.last_scd2["users_snapshot"]
+    assert stats["closed"] > 0 and stats["batch_id"], stats
+    assert os.path.exists(os.path.join(
+        wh, "users_snapshot__closed", f"batch_id={stats['batch_id']}", "_COMMITTED"
+    ))
+    assert cached_at_swap == [False]
+    assert cache.isEmpty()
+
+    # the status store fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = [
+        store.job(i).description()
+        for i in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    n_jobs = sum(d.isDefined() and d.get() == "model:users_snapshot" for d in descs)
+    assert 0 < n_jobs <= MAX_JOBS, n_jobs
