@@ -1187,17 +1187,3 @@ class ParquetTable:
             "partitionOverwriteMode", "dynamic"
         ).parquet(self.path)
         self.spark.catalog.refreshByPath(self.path)
-
-    def describe(self) -> dict[str, str]:
-        """S6 schema introspection (reference get_clickhouse_table_schema,
-        base_loader.py:124-148): {column: spark type string}."""
-        if not self.exists():
-            return {}
-        return dict(self.read().dtypes)
-
-    # -- quality helper ------------------------------------------------------
-    def duplicate_key_groups(self, keys: list[str]) -> int:
-        """A4 duplicate-group detector (base_loader.py:496-507)."""
-        return (
-            self.read().groupBy(*keys).count().filter(F.col("count") > 1).count()
-        )

@@ -2151,7 +2151,7 @@ class VersionedTable:
         list exceeds `max_files`. Every small CoW delta adds a
         generation; unbounded, a year of hourly CDC is ~9k file-list
         entries per scan plan and a widening manifest — this is the
-        policy knob a pipeline sets once (ModelSpec.versioned_max_files)
+        policy knob a caller sets once (the `max_files` bound)
         instead of scheduling compaction out-of-band. What fires is the
         INCREMENTAL optimize_small_files by default — O(small-file
         bytes) per trip, large files carried by reference — because an

@@ -73,7 +73,7 @@ class QualitySpec:
         return aggs
 
     def _build_aggs(self) -> list:
-        """The one aggregation list both profile() and profile_df() run:
+        """The one aggregation list both violations() and profile_df() run:
         a change to any check's counting semantics lands in both the
         collected gate and the graded long-form profile."""
         aggs = self._row_aggs()
@@ -82,21 +82,16 @@ class QualitySpec:
             aggs.append(F.countDistinct(c).alias(f"__u_dst:{c}"))
         return aggs
 
-    def profile(self, df: DataFrame) -> tuple[dict[str, int], int]:
-        """All declared checks + the row count in ONE aggregation pass,
-        relationships left out. Returns ({check_name: violations},
-        total_rows). The `unique` metric is excess duplicate rows
-        (count - countDistinct over non-null values); 0 iff unique
-        holds, same assert semantics as the dbt test."""
-        return self.violations(df)
-
     def profile_df(self, df: DataFrame) -> DataFrame:
-        """The same fused single-pass profile as `profile`, but returned
-        as a DataFrame in long (check, violations) form — nothing is
-        collected, so the test battery itself is gradeable against a
-        SQL oracle and composable downstream (e.g. append per-run
-        profiles to a quality-history table). One aggregation producing
-        ONE row, then a stack() unpivot: still exactly one scan."""
+        """The same fused single-pass profile as `violations` (without
+        relationships), but returned as a DataFrame in long (check,
+        violations) form — nothing is collected, so the test battery
+        itself is gradeable against a SQL oracle and composable
+        downstream (e.g. append per-run profiles to a quality-history
+        table). One aggregation producing ONE row, then a stack()
+        unpivot: still exactly one scan. The `unique` metric is excess
+        duplicate rows (count - countDistinct over non-null values); 0
+        iff unique holds, same assert semantics as the dbt test."""
         one = df.agg(*self._build_aggs())
         pairs: list = []
         for c in self.unique:
@@ -128,7 +123,7 @@ class QualitySpec:
         """All checks, plus relationships when `resolve` is given;
         returns ({check: count}, total_rows) with EVERY check present
         (zero = clean). The one decoder of the fused aggregate row,
-        behind profile, assert_ok (pipeline gate) and the CLI `validate`
+        behind assert_ok (pipeline gate) and the CLI `validate`
         verb — the check set and key format must never drift between
         them.
 

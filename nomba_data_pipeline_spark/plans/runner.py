@@ -29,6 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NullType, StructType
 
 from nomba_data_pipeline_spark.catalog import read_parquet
 from nomba_data_pipeline_spark.operators import footers
@@ -47,15 +48,40 @@ def _past(df: DataFrame, col: str, hwm: str | None) -> DataFrame:
     return df.filter(F.col(col) > F.lit(hwm).cast(dict(df.dtypes)[col]))
 
 
+def _fail_on_drift(model: str, current: StructType, df: DataFrame) -> None:
+    """dbt on_schema_change='fail', for every materialization that takes
+    it: raise when `df` has a column the stored `current` schema lacks,
+    or a shared column whose type changed. An all-NULL (void) column
+    carries no concrete type yet, so it is not type drift."""
+    types = {f.name: f.dataType.simpleString() for f in current.fields}
+    new_cols = [c for c in df.columns if c not in types]
+    drifted = [
+        f"{f.name}: {types[f.name]} -> {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if f.name in types
+        and f.dataType.simpleString() != types[f.name]
+        and not isinstance(f.dataType, NullType)
+    ]
+    if new_cols or drifted:
+        raise ValueError(
+            f"model {model}: source schema drifted "
+            f"(new columns {new_cols}, type drift {drifted}) "
+            "and on_schema_change='fail'"
+        )
+
+
 @dataclass
 class ModelSpec:
     name: str
     fn: ModelFn
-    # table | incremental | insert_overwrite | scd2 | versioned_incremental
-    # | join_view | agg_view | incremental_agg. scd2 is SPLIT storage:
-    # open rows in a small rewritable `<name>__open`, closed history
-    # append-only in `<name>__closed` by close date, so a run costs
-    # O(open rows), not O(history); read_model() returns the union.
+    # table (overwrite) | incremental (merge upsert) | scd2 (snapshot):
+    # the reference's dbt materializations, which the medallion
+    # pipeline declares; versioned_incremental | join_view | agg_view:
+    # the maintained tables and marts registry rows declare. scd2 is
+    # SPLIT storage: open rows in a small rewritable `<name>__open`,
+    # closed history append-only in `<name>__closed` by close date, so
+    # a run costs O(open rows), not O(history); read_model() returns
+    # the union.
     materialization: str = "table"
     dedup: bool = False  # incremental + keep-latest-per-key (reference O8 'special')
     upsert_key: list[str] = field(default_factory=list)
@@ -99,26 +125,8 @@ class ModelSpec:
     # for the underlying fact ⋈ dim layer (owned by this model at
     # <name>__view); the rollup's bucket partials live at <name>, and
     # read_model() returns the finalized rollup.
-    # materialization="incremental_agg": the PLAIN delete-capable
-    # maintained aggregate (operators/incremental_agg) over a
-    # versioned fact's change feed — no join layer; `view_fact` names
-    # the versioned_incremental fact model, these agg_* fields define
-    # the state, the marker ledger is the commit cursor
-    # (_run_incremental_agg).
     agg_group_keys: list[str] = field(default_factory=list)
     agg_measures: list[str] = field(default_factory=list)
-    # approx-distinct rollup columns (HLL sketch partials; see
-    # operators/incremental_agg.agg_state `distinct=`)
-    agg_distinct_cols: list[str] = field(default_factory=list)
-    # versioned_incremental only: persist commit-time row-level change
-    # feeds (VersionedTable write_cdf) so downstream view syncs and the
-    # `versioned_cdf` streaming source read plain parquet instead of
-    # re-deriving diffs with joins
-    versioned_write_cdf: bool = False
-    # versioned_incremental only: auto-compact (checkpoint) when the
-    # manifest's file list exceeds this bound — unbounded CoW deltas
-    # grow scan fan-out and manifest size; None = never
-    versioned_max_files: int | None = None
 
 
 class PipelineRunner:
@@ -146,8 +154,12 @@ class PipelineRunner:
         self.last_scd2: dict[str, dict] = {}
 
     def register(self, spec: ModelSpec) -> None:
-        if spec.materialization in ("join_view", "agg_view",
-                                    "incremental_agg"):
+        if spec.on_schema_change not in ("ignore", "append_new_columns", "fail"):
+            raise ValueError(
+                f"model {spec.name}: unknown on_schema_change "
+                f"{spec.on_schema_change!r}"
+            )
+        if spec.materialization in ("join_view", "agg_view"):
             for side in (spec.view_fact, spec.view_dim):
                 if side and side not in spec.depends_on:
                     spec.depends_on.append(side)
@@ -296,15 +308,12 @@ class PipelineRunner:
     def run_model(self, name: str) -> int:
         spec = self.models[name]
         target = self.table(spec.name)
-        if spec.materialization not in ("table", "incremental", "scd2",
-                                        "insert_overwrite"):
+        if spec.materialization not in ("table", "incremental", "scd2"):
             self.last_gates[name] = f"full: {spec.materialization} model"
         if spec.materialization in ("join_view", "agg_view"):
             return self._run_view(spec)
         if spec.materialization == "versioned_incremental":
             return self._run_versioned(spec)
-        if spec.materialization == "incremental_agg":
-            return self._run_incremental_agg(spec)
         df = spec.fn(self.spark, self.sf_dir)
 
         if spec.materialization == "incremental" and target.exists() and spec.tracking_column:
@@ -349,17 +358,6 @@ class PipelineRunner:
         wrote = True
         if spec.materialization == "scd2":
             wrote = self._run_scd2_split(spec, df, gate)
-        elif spec.materialization == "insert_overwrite":
-            # dbt insert_overwrite strategy: the model's delta replaces
-            # whole partitions (backfill/reprocess semantics) — requires
-            # partition_by. Deliberately NOT hwm-gated: a backfill
-            # recomputes partitions whose rows predate the high-water
-            # mark; the model fn itself decides which partitions to emit
-            if not spec.partition_by:
-                raise ValueError(
-                    f"model {spec.name}: insert_overwrite requires partition_by"
-                )
-            target.insert_overwrite_partitions(df, spec.partition_by)
         elif spec.materialization == "incremental":
             pb = spec.partition_by or None
             if spec.dedup and spec.tracking_column:
@@ -568,12 +566,13 @@ class PipelineRunner:
         an agg_view). Later runs: dim rows past the stored dim-HWM patch
         FIRST, so the fact delta joins the already-patched dim; then
         fact rows past the fact-HWM upsert — or, for a versioned fact,
-        its change feed since the stored version folds in, deletes
-        included. HWM state persists in the `._view_state` sidecar,
-        written AFTER the applies — every apply is an idempotent keyed
-        rewrite, so a crash between apply and state write replays
-        safely, and AggJoinView's own bucket-intent sidecar additionally
-        heals a crash BETWEEN the view apply and the partial refresh.
+        its changes since the stored version, diffed from the
+        manifests, fold in, deletes included. HWM state persists in the
+        `._view_state` sidecar, written AFTER the applies — every apply
+        is an idempotent keyed rewrite, so a crash between apply and
+        state write replays safely, and AggJoinView's own bucket-intent
+        sidecar additionally heals a crash BETWEEN the view apply and
+        the partial refresh.
         The dim side must be unique per key (apply_dim_delta raises on
         duplicates — register the dim model with a `unique` gate)."""
         from nomba_data_pipeline_spark.operators.incremental_join import _key_cols
@@ -637,10 +636,13 @@ class PipelineRunner:
             )
             fact_hwm, fact_version = state["fact_hwm"], None
             if vt is not None:
-                # versioned fact: consume its change feed between the
-                # last-applied and current version — inserts/updates
+                # versioned fact: fold in its changes between the
+                # last-applied and current version, diffed from the
+                # manifests into one key-unique frame — inserts/updates
                 # upsert, DELETES tombstone (the HWM path below can
-                # never see a delete). O(changed files) per refresh.
+                # never see a delete). O(changed files) per refresh, and
+                # an idempotent keyed rewrite, so a crash before the
+                # state save replays safely.
                 fact_version = vt.latest_version()
                 applied = state["fact_version"]
                 if applied is None:
@@ -650,9 +652,11 @@ class PipelineRunner:
                     build()
                 elif fact_version is not None and fact_version > applied:
                     try:
-                        self._apply_fact_changes(
-                            vt, target, applied, fact_version,
-                            spec.upsert_key, dim,
+                        target.apply_fact_cdf(
+                            vt.diff_versions(
+                                applied, fact_version, spec.upsert_key
+                            ),
+                            dim,
                         )
                     except ValueError:
                         # the cursor version is unreplayable (vacuum
@@ -698,7 +702,6 @@ class PipelineRunner:
             self.spark, path,
             view=view, group_keys=spec.agg_group_keys,
             measures=spec.agg_measures,
-            distinct_cols=spec.agg_distinct_cols or None,
         )
 
     def _run_versioned(self, spec: ModelSpec) -> int:
@@ -721,16 +724,8 @@ class PipelineRunner:
                 f"model {spec.name}: versioned_incremental requires "
                 "upsert_key and tracking_column"
             )
-        vt = VersionedTable(
-            self.spark, os.path.join(self.warehouse_dir, spec.name),
-            write_cdf=spec.versioned_write_cdf,
-        )
+        vt = VersionedTable(self.spark, os.path.join(self.warehouse_dir, spec.name))
         df = spec.fn(self.spark, self.sf_dir)
-        if spec.on_schema_change not in ("ignore", "append_new_columns", "fail"):
-            raise ValueError(
-                f"model {spec.name}: unknown on_schema_change "
-                f"{spec.on_schema_change!r}"
-            )
         if not vt.exists():
             vt.overwrite(df, cluster_by=(spec.partition_by or None))
         else:
@@ -743,130 +738,15 @@ class PipelineRunner:
             if spec.on_schema_change == "append_new_columns":
                 vt.evolve_schema_to(df)
             elif spec.on_schema_change == "fail":
-                cur = dict(vt.read().dtypes)
-                # void (all-NULL) columns carry no concrete type yet —
-                # not drift, same tolerance as _apply_schema_policy
-                drift = [
-                    c for c, t in df.dtypes
-                    if t != "void" and (c not in cur or cur[c] != t)
-                ]
-                if drift:
-                    raise ValueError(
-                        f"model {spec.name}: source schema drifted on "
-                        f"{drift} and on_schema_change='fail'"
-                    )
+                _fail_on_drift(spec.name, vt.read().schema, df)
             delta = _past(
                 df, spec.tracking_column,
                 vt.high_water_mark_str(spec.tracking_column),
             )
             if delta.limit(1).count() > 0:
                 vt.merge_upsert(delta, spec.upsert_key)
-            if spec.versioned_max_files is not None:
-                # bounded compaction AFTER the merge: fires only when
-                # the file list outgrew the bound (one manifest read
-                # otherwise); the checkpoint's feed is EMPTY so view
-                # syncs and streams pass over it
-                vt.maybe_checkpoint(
-                    spec.versioned_max_files,
-                    cluster_by=(spec.partition_by or None),
-                )
         out = self.read_model(spec.name)
         return spec.quality.assert_ok(out, model=spec.name, resolve=self.read_model)
-
-    def _run_incremental_agg(self, spec: ModelSpec) -> int:
-        """Materialize/maintain a `materialization="incremental_agg"`
-        mart — the PLAIN delete-capable maintained aggregate
-        (operators/incremental_agg.IncrementalAggTable) as a runner
-        materialization (VERDICT r14 #4): a GROUP BY over a VERSIONED
-        fact kept fresh from the fact's change feed, deletes and
-        group-moving updates included, without the join layer an
-        agg_view carries.
-
-        `fn` is unused (pass None): the fact is another registered
-        model with materialization="versioned_incremental" named by
-        `view_fact`; `agg_group_keys`/`agg_measures` (and optional
-        `agg_distinct_cols`) define the state. The CURSOR is the
-        marker ledger itself — applied commit versions ARE the batch
-        ids, so no sidecar state can drift from what was actually
-        folded, and a crash anywhere replays idempotently.
-
-        Per run: commits in (ledger hwm, fact latest] apply per
-        `_commit_version` ASCENDING through apply_changes with
-        include_preimages feeds (group-moving updates retract their
-        OLD group) and source = the fact read AS OF that commit —
-        insert-only commits fold at group cardinality, retraction
-        commits pay one broadcast semi-join of the affected groups'
-        rows, never a history rescan. First run, a feed gap, or a
-        wholesale-content commit in the span (`_CDF_FULL`:
-        overwrite / rollback / purge) re-syncs via rebuild(): ONE
-        aggregation of the current fact — the cost the overwrite
-        already implies."""
-        from nomba_data_pipeline_spark.operators.incremental_agg import (
-            IncrementalAggTable,
-        )
-
-        required = {
-            "view_fact": spec.view_fact,
-            "agg_group_keys": spec.agg_group_keys,
-            "agg_measures": spec.agg_measures,
-        }
-        missing = [k for k, v in required.items() if not v]
-        if missing:
-            raise ValueError(
-                f"model {spec.name}: incremental_agg requires {missing}"
-            )
-        vt = self._fact_versioned_table(spec)
-        if vt is None:
-            raise ValueError(
-                f"model {spec.name}: incremental_agg requires view_fact "
-                f"{spec.view_fact!r} to be a versioned_incremental model "
-                "(the change feed is the maintenance source)"
-            )
-        latest = vt.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"model {spec.name}: fact {spec.view_fact!r} has no "
-                "committed versions yet — run the fact model first"
-            )
-        agg = IncrementalAggTable(
-            self.spark, os.path.join(self.warehouse_dir, spec.name),
-            keys=spec.agg_group_keys, measure=spec.agg_measures,
-            distinct=spec.agg_distinct_cols or None,
-        )
-        hwm, _ = agg._applied_state()
-        if not agg._table.exists():
-            agg.rebuild(vt.read(), latest)
-        elif latest > hwm:
-            versions = None
-            try:
-                ch = vt.changes_between(hwm, latest,
-                                        include_preimages=True)
-                versions = sorted(
-                    r["_commit_version"]
-                    for r in ch.select("_commit_version")
-                    .distinct().collect()
-                )
-            except ValueError:
-                # a _CDF_FULL marker / reclaimed feed in the span:
-                # re-sync from the current snapshot (the same refusal
-                # + re-sync every versioned_cdf consumer performs)
-                agg.rebuild(vt.read(), latest)
-            if versions is not None:
-                for v in versions:
-                    try:
-                        src = vt.read(version=v)
-                    except ValueError:
-                        # that commit's files left retention mid-replay
-                        agg.rebuild(vt.read(), latest)
-                        break
-                    agg.apply_changes(
-                        ch.filter(F.col("_commit_version") == v)
-                        .drop("_commit_version"),
-                        batch_id=v, source=src,
-                    )
-        out = self.read_model(spec.name)
-        return spec.quality.assert_ok(out, model=spec.name,
-                                      resolve=self.read_model)
 
     def _fact_versioned_table(self, spec: ModelSpec):
         """The VersionedTable behind the mart's fact side, or None when
@@ -885,38 +765,8 @@ class PipelineRunner:
         )
 
         return VersionedTable(
-            self.spark, os.path.join(self.warehouse_dir, spec.view_fact),
-            write_cdf=fact_spec.versioned_write_cdf,
+            self.spark, os.path.join(self.warehouse_dir, spec.view_fact)
         )
-
-    def _apply_fact_changes(self, vt, target, v_from: int, v_to: int,
-                            keys: list[str], dim: DataFrame) -> None:
-        """Fold a versioned fact's changes in (v_from, v_to] into a
-        maintained view/agg. Prefers the PERSISTED per-commit feeds
-        (plain file reads; applied one commit at a time ascending —
-        apply_fact_cdf's disjoint-keys contract holds per commit, a key
-        updated then deleted appears twice across commits); falls back
-        to the manifest-derived diff_versions (joins, but collapsed to
-        one key-unique frame) when feeds are absent or a FULL marker
-        spans the range. Either path is an idempotent keyed rewrite, so
-        a crash before the state save replays safely."""
-        try:
-            feed = vt.changes_between(v_from, v_to)
-        except ValueError:
-            target.apply_fact_cdf(
-                vt.diff_versions(v_from, v_to, keys), dim
-            )
-            return
-        versions = sorted(
-            r["_commit_version"]
-            for r in feed.select("_commit_version").distinct().collect()
-        )
-        for v in versions:
-            target.apply_fact_cdf(
-                feed.filter(F.col("_commit_version") == v)
-                .drop("_commit_version"),
-                dim,
-            )
 
     # -- view-state sidecar helpers (shared by join_view / agg_view) -----
     def _hwm_str(self, df: DataFrame, col: str) -> str | None:
@@ -968,9 +818,9 @@ class PipelineRunner:
         return {"fact_hwm": None, "dim_hwm": None, "fact_version": None}
 
     def _apply_schema_policy(self, spec: ModelSpec, target, df: DataFrame) -> None:
-        """dbt `on_schema_change` for incremental models: validate the
-        configured policy, then apply it against the target's CURRENT
-        schema. Schema-only (no data scan), so the HWM path can run it
+        """dbt `on_schema_change` for incremental models (register()
+        validated the policy name): apply it against the target's
+        CURRENT schema. Schema-only (no data scan), so the HWM path can run it
         before the empty-delta short-circuit — drift surfaces even when
         the introducing batch carries no rows past the high-water mark.
 
@@ -987,36 +837,15 @@ class PipelineRunner:
         target schema and a second call is a no-op, so running it in
         both the HWM block and the merge branch costs one extra schema
         read, never a second rewrite."""
-        if spec.on_schema_change not in ("ignore", "append_new_columns", "fail"):
-            raise ValueError(
-                f"model {spec.name}: unknown on_schema_change "
-                f"{spec.on_schema_change!r}"
-            )
         if spec.on_schema_change == "ignore" or not target.exists():
             return
-        from pyspark.sql.types import NullType
-
-        pb = spec.partition_by or None
-        existing = {f.name: f.dataType for f in target.read().schema.fields}
-        new_cols = [c for c in df.columns if c not in existing]
+        current = target.read().schema
         if spec.on_schema_change == "fail":
-            drifted = [
-                f"{f.name}: {existing[f.name].simpleString()} -> "
-                f"{f.dataType.simpleString()}"
-                for f in df.schema.fields
-                if f.name in existing
-                and f.dataType != existing[f.name]
-                and not isinstance(f.dataType, NullType)
-            ]
-            if new_cols or drifted:
-                raise ValueError(
-                    f"model {spec.name}: source schema drifted "
-                    f"(new columns {new_cols}, type drift {drifted}) "
-                    "and on_schema_change='fail'"
-                )
+            _fail_on_drift(spec.name, current, df)
             return
         # append_new_columns
-        if new_cols:
+        pb = spec.partition_by or None
+        if set(df.columns) - set(current.fieldNames()):
             target.widen_to(df, partition_by=pb)
         target.promote_types(df, partition_by=pb)
 
@@ -1044,17 +873,6 @@ class PipelineRunner:
             return VersionedTable(
                 self.spark, os.path.join(self.warehouse_dir, name)
             ).read()
-        if spec is not None and spec.materialization == "incremental_agg":
-            # the finalized presentation rows from the stored partials
-            from nomba_data_pipeline_spark.operators.incremental_agg import (
-                IncrementalAggTable,
-            )
-
-            return IncrementalAggTable(
-                self.spark, os.path.join(self.warehouse_dir, name),
-                keys=spec.agg_group_keys, measure=spec.agg_measures,
-                distinct=spec.agg_distinct_cols or None,
-            ).result()
         if spec is not None and spec.materialization == "scd2":
             open_t = self.table(name + "__open")
             closed_t = self.table(name + "__closed")
@@ -1578,16 +1396,7 @@ class PipelineRunner:
                 VersionedTable,
             )
 
-            # write_cdf-aware handle: purge_keys both vacuums AND
-            # redacts its own delete feed (a plain delete_keys on a
-            # write_cdf table would leave the erased subject's OLD
-            # IMAGES in _cdf/v<N> and later feed reads would hit a
-            # misleading missing-feed error instead of the designed
-            # _CDF_FULL re-sync refusal)
-            vt = VersionedTable(
-                self.spark, os.path.join(self.warehouse_dir, name),
-                write_cdf=spec.versioned_write_cdf,
-            )
+            vt = VersionedTable(self.spark, os.path.join(self.warehouse_dir, name))
             if not vt.exists():
                 continue
             cur = vt.read()

@@ -60,7 +60,6 @@ _SLOW_TIER = {
     "test_versioned.py::test_erasure_purges_versioned_marts",  # 11s
     "test_versioned.py::test_purge_where_removes_subject_from_every_version",  # 11s
     "test_versioned.py::test_rebase_refuses_when_rewritten_file_got_merged",  # 13s
-    "test_versioned.py::test_runner_incremental_agg_materialization",  # 14s
     "test_versioned.py::test_source_vacuum_refuses_with_live_clone_then_breaks_loudly",  # 14s
     "test_versioned.py::test_vacuum_prunes_stale_clone_registry_entries",  # 11s
     "test_versioned.py::test_versioned_incremental_materialization",  # 10s
@@ -150,7 +149,6 @@ _SLOW_TIER = {
     "test_versioned.py::test_rebase_refuses_on_concurrent_compaction_and_schema_change",  # 44s
     "test_versioned.py::test_rollback_restores_and_preserves_history",  # 27s
     "test_versioned.py::test_row_count_answers_from_manifest_metadata",  # 16s
-    "test_versioned.py::test_runner_versioned_max_files_autocompacts",  # 38s
     "test_versioned.py::test_shallow_clone_zero_copy_and_cow_local_divergence",  # 18s
     "test_versioned.py::test_txn_map_is_per_app_and_carried_forward",  # 33s
     "test_versioned.py::test_txn_replayed_batch_is_skipped",  # 89s
@@ -166,7 +164,6 @@ _SLOW_TIER = {
     "test_versioned_cdf_stream.py::test_stream_fails_loudly_on_full_marker",  # 20s
     "test_versioned_cdf_stream.py::test_stream_to_stream_chain_through_versioned_table",  # 18s
     "test_versioned_cdf_stream.py::test_vacuum_reclaims_feeds_with_versions",  # 17s
-    "test_versioned_cdf_view.py::test_versioned_fact_with_persisted_feeds_applies_per_commit",  # 19s
 }
 
 

@@ -351,73 +351,6 @@ def test_agg_join_view_distinct_survives_recompute(spark, tmp_path):
         assert abs(est - exact[g]) <= max(1, exact[g] * 0.05), (g, est, exact[g])
 
 
-def test_agg_view_pipeline_distinct_cols(spark, tmp_path):
-    """ModelSpec.agg_distinct_cols flows through _run_view: the
-    mart's finalized rollup carries approx_distinct_<col>, maintained
-    across a second run's fact delta."""
-    import os
-
-    from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
-
-    src = os.path.join(str(tmp_path), "src")
-    wh = os.path.join(str(tmp_path), "wh")
-    os.makedirs(src)
-    fact = spark.range(90).select(
-        F.col("id").alias("fk"), (F.col("id") % 6).alias("dk"),
-        (F.col("id") % 11).alias("uid"),
-        (F.col("id") * 1.0).alias("amt"), F.lit(1).alias("ver"),
-    )
-    dim = spark.range(6).select(
-        F.col("id").alias("dk"),
-        F.concat(F.lit("g"), (F.col("id") % 2).cast("string")).alias("grp"),
-        F.lit(1).alias("dver"),
-    )
-    fact.write.parquet(src + "/fact")
-    dim.write.parquet(src + "/dim")
-
-    def mk():
-        r = PipelineRunner(spark, wh, src)
-        r.register(ModelSpec(
-            name="f", fn=lambda s, d: s.read.parquet(src + "/fact"),
-            materialization="table",
-        ))
-        r.register(ModelSpec(
-            name="d", fn=lambda s, d: s.read.parquet(src + "/dim"),
-            materialization="table",
-        ))
-        r.register(ModelSpec(
-            name="mart", fn=None, materialization="agg_view",
-            view_fact="f", view_dim="d", view_dim_key="dk",
-            view_dim_cols=["grp"], view_dim_tracking="dver",
-            upsert_key=["fk"], tracking_column="ver", view_buckets=4,
-            agg_group_keys=["grp"], agg_measures=["amt"],
-            agg_distinct_cols=["uid"],
-        ))
-        return r
-
-    mk().run()
-    spark.createDataFrame(
-        [(500, 0, 99, 1.0, 2), (501, 1, 99, 2.0, 2)],
-        "fk long, dk long, uid long, amt double, ver int",
-    ).write.mode("append").parquet(src + "/fact")
-    r2 = mk()
-    r2.run()
-    final = fact.unionByName(spark.createDataFrame(
-        [(500, 0, 99, 1.0, 2), (501, 1, 99, 2.0, 2)],
-        "fk long, dk long, uid long, amt double, ver int",
-    ))
-    exact = {
-        r["grp"]: r["x"]
-        for r in final.join(dim, "dk", "left").groupBy("grp")
-        .agg(F.count_distinct("uid").alias("x")).collect()
-    }
-    out = r2.read_model("mart")
-    assert "approx_distinct_uid" in out.columns
-    for r in out.collect():
-        x = exact[r["grp"]]
-        assert abs(r["approx_distinct_uid"] - x) <= max(1, x * 0.05)
-
-
 # -- r13: rollup serving (MV navigation) --------------------------------------
 def test_rollup_state_serves_coarser_grouping_exactly(spark):
     """result over rollup_state(keys⊂state) must equal the one-shot

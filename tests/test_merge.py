@@ -128,7 +128,8 @@ def test_merge_upsert_dedup_keeps_latest(spark, tmp_path, base_df):
     )
     t.merge_upsert_dedup(delta, ["id"], "v")
     assert _rows(t) == [(1, "new", 99), (2, "b", 10), (3, "c", 10)]
-    assert t.duplicate_key_groups(["id"]) == 0  # A4
+    # A4: no key appears in more than one row
+    assert t.read().groupBy("id").count().filter("count > 1").count() == 0
 
 
 def test_snapshot_append_same_day_idempotent(spark, tmp_path, base_df):

@@ -1,11 +1,19 @@
 """No package code that only its own tests reach.
 
-Every top-level `def` or `class` in the package must be reachable from
-code that runs outside the test suite: the package itself, `bench.py`,
-`tools/`, `perfbench/` (its own tests excepted) and the driver entry
-`__spark_entry__.py`. A definition nothing else calls costs review and
-upkeep and proves nothing about the pipeline; delete it with its tests,
-or list it in KEEP with the reason it stays.
+Every top-level `def` or `class` in the package, and every method of a
+package class, must be reachable from code that runs outside the test
+suite: the package itself, `bench.py`, `tools/`, `perfbench/` (its own
+tests excepted) and the entry module `__spark_entry__.py`. A definition
+nothing else calls costs review and upkeep and proves nothing about the
+pipeline; delete it with its tests, or list it in KEEP with the reason
+it stays. Dunder methods, and the callbacks Spark itself invokes on a
+Python data source or UDTF class, are exempt.
+
+The runner's options answer to the same rule: every `materialization`
+the runner compares against, and every defaulted `ModelSpec` field,
+must be set (to a value other than its default) by some `ModelSpec(...)`
+call outside the tests. A branch or field only tests declare is the
+same dead code one level down.
 
 Reachability is by name, with `ast` only. A reference is a `Name`, an
 `Attribute`, an `ImportFrom` alias or a string constant (perfbench's
@@ -13,9 +21,11 @@ Reachability is by name, with `ast` only. A reference is a `Name`, an
 non-package file above, the package's module-level statements
 (decorators and base classes included) and the KEEP entries; a
 definition is live once a live body or a root names it, so a helper
-that only dead code calls is dead too. Name matching is deliberately
-loose (any `x.run` keeps every `run` alive), so the scan errs toward
-missing dead code. A definition reached only through a name built
+that only dead code calls is dead too. A method is reached the same
+way; a live class's whole body, every method included, counts as one
+live body. Name matching is deliberately loose (any `x.run` keeps
+every `run` alive), so the scan errs toward missing dead code. A
+definition reached only through a name built
 at run time (getattr on a computed string) is flagged wrongly and
 needs a KEEP entry.
 """
@@ -67,9 +77,21 @@ KEEP = {
         "CDC simulation fixture (reference simulate_cdc.py)",
     "plans.cdc_sim.simulate_user_updates":
         "CDC simulation fixture (reference simulate_cdc.py)",
+    "operators.merge.ParquetTable.sweep_tmp":
+        "crash-orphan recovery: drops the staging dirs a write that "
+        "crashed before its swap left behind",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+# methods Spark calls on a Python data source / reader / UDTF class
+_PROTOCOL = frozenset({
+    "name", "schema", "reader", "writer", "streamReader",
+    "simpleStreamReader", "streamWriter", "partitions", "read",
+    "readBetweenOffsets", "initialOffset", "latestOffset", "commit",
+    "stop", "eval", "terminate", "cleanup", "analyze",
+})
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -84,6 +106,14 @@ def _names(node: ast.AST) -> set[str]:
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             out.add(n.value)
     return out
+
+
+def _is_protocol_class(node: ast.ClassDef) -> bool:
+    """Subclasses a PySpark `DataSource*` base, or is a `@udtf`."""
+    named = set()
+    for expr in node.bases + node.decorator_list:
+        named |= _names(expr)
+    return any(n.startswith("DataSource") or n == "udtf" for n in named)
 
 
 def _outside_files() -> list[pathlib.Path]:
@@ -107,13 +137,23 @@ def _scan() -> tuple[dict[str, ast.AST], frozenset[str]]:
             if not isinstance(node, _DEFS):
                 roots |= _names(node)
                 continue
-            defs[f"{module}.{node.name}".lstrip(".")] = node
+            qual = f"{module}.{node.name}".lstrip(".")
+            defs[qual] = node
             # decorators and bases run at import, whoever calls the def
             for expr in node.decorator_list:
                 roots |= _names(expr)
-            if isinstance(node, ast.ClassDef):
-                for expr in node.bases + node.keywords:
-                    roots |= _names(expr)
+            if not isinstance(node, ast.ClassDef):
+                continue
+            for expr in node.bases + node.keywords:
+                roots |= _names(expr)
+            protocol = _is_protocol_class(node)
+            for meth in node.body:
+                if not isinstance(meth, _FUNCS):
+                    continue
+                if (meth.name.startswith("__") and meth.name.endswith("__")
+                        or protocol and meth.name in _PROTOCOL):
+                    continue  # called by Python or Spark, never by name
+                defs[f"{qual}.{meth.name}"] = meth
     return defs, frozenset(roots)
 
 
@@ -142,6 +182,58 @@ def test_every_package_definition_runs_outside_tests():
     assert not dead, (
         "reached only from tests (delete them with their tests, or add "
         "them to KEEP with the reason they stay):\n" + "\n".join(dead)
+    )
+
+
+def _default_src(value: ast.expr) -> str:
+    """Source of the value a dataclass field default stands for."""
+    if isinstance(value, ast.Call) and getattr(value.func, "id", "") == "field":
+        for kw in value.keywords:
+            if kw.arg == "default_factory":
+                factory = ast.unparse(kw.value)
+                return {"list": "[]", "dict": "{}"}.get(factory, factory + "()")
+    return ast.unparse(value)
+
+
+def undeclared_options() -> list[str]:
+    """Materializations the runner compares against and defaulted
+    ModelSpec fields that no `ModelSpec(...)` call outside the tests
+    sets to a non-default value."""
+    runner = ast.parse((PKG / "plans" / "runner.py").read_text())
+    compared, defaults = set(), {}
+    for node in ast.walk(runner):
+        if isinstance(node, ast.Compare):
+            sides = [node.left, *node.comparators]
+            if any(getattr(x, "attr", "") == "materialization" for x in sides):
+                for x in sides:
+                    for c in ast.walk(x):
+                        if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                            compared.add(c.value)
+        elif isinstance(node, ast.ClassDef) and node.name == "ModelSpec":
+            for stmt in node.body:
+                if isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+                    defaults[stmt.target.id] = _default_src(stmt.value)
+    declared, set_fields = set(), set()
+    files = _outside_files() + sorted(PKG.rglob("*.py"))
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (isinstance(node, ast.Call) and "ModelSpec" in (
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None))):
+                continue
+            for kw in node.keywords:
+                if kw.arg in defaults and ast.unparse(kw.value) != defaults[kw.arg]:
+                    set_fields.add(kw.arg)
+                if kw.arg == "materialization" and isinstance(kw.value, ast.Constant):
+                    declared.add(kw.value.value)
+    return sorted(compared - declared) + sorted(set(defaults) - set_fields)
+
+
+def test_every_runner_option_is_declared_outside_tests():
+    undeclared = undeclared_options()
+    assert not undeclared, (
+        "runner materializations / ModelSpec fields only tests declare "
+        "(delete the branch or field with its tests):\n"
+        + "\n".join(undeclared)
     )
 
 
@@ -176,13 +268,32 @@ def kept_helper():
 class Named:
     pass
 
+class Table:
+    def __init__(self):
+        self.used_method()
+
+    def used_method(self):
+        return 3
+
+    def dead_method(self):
+        return dead_method_helper()
+
+def dead_method_helper():
+    return 4
+
 TABLE = {"key": "Named"}
 x.used()
+Table()
 '''
     tree = ast.parse(src)
     defs = {n.name: n for n in tree.body if isinstance(n, _DEFS)}
+    table = defs["Table"]
+    defs.update({f"Table.{m.name}": m for m in table.body[1:]})
     roots = set()
     for node in tree.body:
         if not isinstance(node, _DEFS):
             roots |= _names(node)
-    assert unreached(defs, roots, {"kept"}) == ["dead", "dead_helper"]
+    # a live class's whole body counts as a reference, as with any def
+    assert unreached(defs, roots, {"kept"}) == [
+        "Table.dead_method", "dead", "dead_helper",
+    ]

@@ -214,26 +214,3 @@ def test_insert_overwrite_empty_delta_is_noop(spark, tmp_path):
         spark.createDataFrame([], SCHEMA), ["m"]
     )
     assert _state(t) == [(1, "a", "2026-01")]
-
-
-def test_runner_insert_overwrite_materialization(spark, tmp_path):
-    from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
-
-    wh = os.path.join(tmp_path, "wh")
-    state = {"rows": [(1, "a", "2026-01"), (2, "b", "2026-02")]}
-    runner = PipelineRunner(spark, wh, sf_dir="unused")
-    runner.register(
-        ModelSpec(
-            name="daily",
-            fn=lambda s, sf: s.createDataFrame(state["rows"], SCHEMA),
-            materialization="insert_overwrite",
-            partition_by=["m"],
-        )
-    )
-    runner.run()
-    t = runner.table("daily")
-    assert _state(t) == [(1, "a", "2026-01"), (2, "b", "2026-02")]
-    # backfill round: the model now emits ONLY the recomputed partition
-    state["rows"] = [(5, "a2", "2026-01")]
-    runner.run()
-    assert _state(t) == [(2, "b", "2026-02"), (5, "a2", "2026-01")]

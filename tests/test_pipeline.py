@@ -140,7 +140,7 @@ def test_quality_profile_single_pass_semantics(spark):
         accepted_values={"status": ["F", "O", "P"]},
         min_rows=10,
     )
-    results, total = spec.profile(df)
+    results, total = spec.violations(df)
     assert total == 4
     assert results["unique:k"] == 1  # one excess duplicate row (k=1 twice)
     assert results["not_null:k"] == 1

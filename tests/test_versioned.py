@@ -1272,47 +1272,6 @@ def test_maybe_checkpoint_bounds_file_list(spark, tmp_path):
         t.maybe_checkpoint(0)
 
 
-def test_runner_versioned_max_files_autocompacts(spark, tmp_path):
-    """ModelSpec.versioned_max_files keeps the pipeline model's scan
-    fan-out bounded across many CDC runs, without changing results."""
-    import os
-
-    from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
-
-    src = os.path.join(str(tmp_path), "src")
-    wh = os.path.join(str(tmp_path), "wh")
-    os.makedirs(src)
-    base = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
-        F.lit(0).alias("ver"),
-    )
-    base.write.parquet(src + "/t")
-
-    def mk():
-        r = PipelineRunner(spark, wh, src)
-        r.register(ModelSpec(
-            name="tv", fn=lambda s, d: s.read.parquet(src + "/t"),
-            materialization="versioned_incremental",
-            upsert_key=["k"], tracking_column="ver",
-            versioned_max_files=8,
-        ))
-        return r
-
-    mk().run()
-    for i in range(1, 7):  # six delta runs
-        spark.createDataFrame(
-            [(i * 3, -i, i)], "k long, v long, ver int"
-        ).write.mode("append").parquet(src + "/t")
-        mk().run()
-    vt = VersionedTable(spark, os.path.join(wh, "tv"))
-    assert len(vt._manifest(vt.latest_version())["files"]) <= 8
-    got = {(r["k"], r["v"]) for r in vt.read().collect()}
-    # keys 3,6,...,18 replaced by the delta runs
-    want = {(k, 2 * k) for k in range(1000)} - {(i * 3, 2 * i * 3) for i in range(1, 7)}
-    want |= {(i * 3, -i) for i in range(1, 7)}
-    assert got == want
-
-
 # -- r13: CHECK constraints ----------------------------------------------------
 def test_check_constraints_enforced_on_writes(spark, tmp_path):
     from nomba_data_pipeline_spark.operators.versioned import (
@@ -2495,85 +2454,6 @@ def test_table_changes_sql_surfaces_governed_errors(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="no change feed"):
         table_changes(spark, t2.path, 1)
-
-
-# -- r15: the plain maintained aggregate in the runner lifecycle -------------
-def test_runner_incremental_agg_materialization(spark, tmp_path):
-    """VERDICT r14 #4: materialization='incremental_agg' keeps a plain
-    delete-capable maintained aggregate fresh from a versioned fact's
-    change feed — commit-version cursor IS the marker ledger; a
-    wholesale-content commit re-syncs via rebuild."""
-    import os as _os
-
-    from nomba_data_pipeline_spark.plans.runner import (
-        ModelSpec,
-        PipelineRunner,
-    )
-
-    src = _os.path.join(str(tmp_path), "src")
-    wh = _os.path.join(str(tmp_path), "wh")
-    _os.makedirs(src)
-    base = spark.range(300).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 5).cast("string").alias("g"),
-        (F.col("id") * 1.0).alias("v"),
-        F.lit(1).alias("ver"),
-    )
-    base.write.parquet(src + "/fact")
-
-    def mk():
-        r = PipelineRunner(spark, wh, src)
-        r.register(ModelSpec(
-            name="fact", fn=lambda s, d: s.read.parquet(d + "/fact"),
-            materialization="versioned_incremental",
-            upsert_key=["k"], tracking_column="ver",
-            versioned_write_cdf=True,
-        ))
-        r.register(ModelSpec(
-            name="agg", fn=None, materialization="incremental_agg",
-            view_fact="fact", agg_group_keys=["g"], agg_measures=["v"],
-        ))
-        return r
-
-    def expect(runner):
-        vt = VersionedTable(spark, wh + "/fact")
-        want = {
-            (r["g"], r["cnt"])
-            for r in vt.read().groupBy("g")
-            .agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-        got = {
-            (r["g"], r["cnt"])
-            for r in runner.read_model("agg").select("g", "cnt").collect()
-        }
-        assert got == want
-
-    r1 = mk()
-    r1.run()
-    expect(r1)
-    vt = VersionedTable(spark, wh + "/fact")
-    # a delete lands on the fact outside the runner (erasure batch)
-    vt.delete_keys(
-        spark.createDataFrame([(7,), (12,)], "k long"), ["k"]
-    )
-    # and a group-moving update through a direct upsert
-    vt.merge_upsert(
-        spark.createDataFrame([(20, "zz", -5.0, 1)],
-                              "k long, g string, v double, ver int")
-        .coalesce(1),
-        ["k"],
-    )
-    r2 = mk()
-    r2.run_model("agg")
-    expect(r2)
-    # replay: nothing new — the ledger makes the rerun a no-op
-    r2.run_model("agg")
-    expect(r2)
-    # wholesale replacement (FULL marker): the maintainer re-syncs
-    vt.overwrite(base.filter("k < 100"))
-    r3 = mk()
-    r3.run_model("agg")
-    expect(r3)
 
 
 def test_json_sidecar_pyarrow_and_spark_paths_mix(spark, tmp_path):

@@ -253,50 +253,6 @@ def test_orphan_feed_from_crashed_commit_is_never_replayed(spark, tmp_path):
     assert got == {("update", 5, -5, 3)}
 
 
-def test_erase_subject_redacts_versioned_feed(spark, tmp_path):
-    """REVIEW: erase_subject on a versioned_write_cdf fact must purge
-    (vacuum + feed redaction), not leave the erased subject's old
-    images in _cdf or a misleading missing-feed hole."""
-    import glob
-
-    from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
-
-    src = os.path.join(str(tmp_path), "src")
-    wh = os.path.join(str(tmp_path), "wh")
-    os.makedirs(src)
-    spark.range(40).select(
-        F.col("id").alias("txn_id"), (F.col("id") % 5).alias("user_id"),
-        (F.col("id") * 1.0).alias("amt"), F.lit(1).alias("ver"),
-    ).write.parquet(src + "/fact")
-
-    def mk():
-        r = PipelineRunner(spark, wh, src)
-        r.register(ModelSpec(
-            name="txns_v", fn=lambda s, d: s.read.parquet(src + "/fact"),
-            materialization="versioned_incremental",
-            upsert_key=["txn_id"], tracking_column="ver",
-            versioned_write_cdf=True,
-        ))
-        return r
-
-    mk().run()
-    removed = mk().erase_subject([2], "er-vcdf")
-    assert removed.get("txns_v", 0) == 8
-    vt = VersionedTable(spark, os.path.join(wh, "txns_v"), write_cdf=True)
-    assert vt.read().filter("user_id = 2").count() == 0
-    # no parquet anywhere under the table (incl. _cdf) holds the subject
-    import pyarrow.parquet as pq
-
-    for f in glob.glob(os.path.join(vt.path, "**", "*.parquet"),
-                       recursive=True):
-        tbl = pq.read_table(f)
-        if "user_id" in tbl.column_names:
-            assert 2 not in set(tbl.column("user_id").to_pylist()), f
-    # the purge version's feed is a FULL marker, not a row feed
-    names = os.listdir(vt._cdf_dir(vt.latest_version()))
-    assert "_CDF_FULL" in names
-
-
 def test_unreplayable_cursor_rebuilds_instead_of_failing_forever(spark, tmp_path):
     """REVIEW: when vacuum reclaimed the sidecar's cursor version, the
     mart run must pay one rebuild, not raise on every invocation."""

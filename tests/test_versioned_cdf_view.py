@@ -334,65 +334,3 @@ def test_versioned_fact_lost_state_rebuilds_correctly(spark, tmp_path):
         for r in fact.filter("fk >= 10").join(dim, "dk", "left").collect()
     }
     assert got == want
-
-
-def test_versioned_fact_with_persisted_feeds_applies_per_commit(spark, tmp_path):
-    """versioned_write_cdf=True: the runner sync reads the persisted
-    per-commit feeds (no diff joins) and applies them one commit at a
-    time — pinned by a key that is UPDATED in one commit and DELETED in
-    the next between runs (a collapsed single-frame apply would violate
-    apply_fact_cdf's disjoint-keys contract; per-commit application
-    lands on the right final state)."""
-    from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
-
-    src = os.path.join(str(tmp_path), "src")
-    wh = os.path.join(str(tmp_path), "wh")
-    fact, dim = _seed_sources(spark, src)
-
-    def mk():
-        r = PipelineRunner(spark, wh, src)
-        r.register(ModelSpec(
-            name="f_v", fn=lambda s, d: s.read.parquet(src + "/fact"),
-            materialization="versioned_incremental",
-            upsert_key=["fk"], tracking_column="ver",
-            versioned_write_cdf=True,
-        ))
-        r.register(ModelSpec(
-            name="d_t", fn=lambda s, d: s.read.parquet(src + "/dim"),
-            materialization="table",
-        ))
-        r.register(ModelSpec(
-            name="mart", fn=None, materialization="agg_view",
-            view_fact="f_v", view_dim="d_t", view_dim_key="dk",
-            view_dim_cols=["grp"], view_dim_tracking="dver",
-            upsert_key=["fk"], tracking_column="ver", view_buckets=4,
-            agg_group_keys=["grp"], agg_measures=["amt"],
-        ))
-        return r
-
-    mk().run()
-    vt = VersionedTable(spark, os.path.join(wh, "f_v"), write_cdf=True)
-    # commit A: fk=7 migrates dk 7 -> 2 with a new amount ...
-    vt.merge_upsert(spark.createDataFrame(
-        [(7, 2, -70.0, 9)], "fk long, dk long, amt double, ver int"
-    ), ["fk"])
-    # ... commit B: the SAME key is deleted, plus an unrelated delete
-    vt.delete_keys(spark.createDataFrame([(7,), (20,)], "fk long"), ["fk"])
-    r2 = mk()
-    r2.run()
-    got = {
-        (r["grp"], r["cnt"], r["sum_amt"])
-        for r in r2.read_model("mart").collect()
-    }
-    want = {
-        (r["grp"], r["cnt"], r["s"])
-        for r in fact.filter("fk not in (7, 20)").join(dim, "dk", "left")
-        .groupBy("grp").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("amt").cast("decimal(38,4)")), 2)
-            .cast("double").alias("s"),
-        ).collect()
-    }
-    assert got == want
-    # the feeds exist on disk (the sync really had the no-join path)
-    assert os.path.isdir(vt._cdf_dir(2)) and os.path.isdir(vt._cdf_dir(3))
