@@ -32,9 +32,11 @@ def _spark(args):
 
 def cmd_run(args) -> int:
     from nomba_data_pipeline_spark.plans.pipeline import build_pipeline
+    from nomba_data_pipeline_spark.session import codegen_compiles
 
     spark = _spark(args)
     t0 = time.perf_counter()
+    compiled = codegen_compiles(spark)
     runner = build_pipeline(spark, args.warehouse, args.sf_dir)
     counts = runner.run(only=args.only or None)
     out = {
@@ -42,6 +44,8 @@ def cmd_run(args) -> int:
         "model_seconds": runner.last_timings,
         # gate form per model: write / unchanged / full: <reason>
         "model_gates": runner.last_gates,
+        # classes Janino compiled during the run (0 when all were cached)
+        "codegen_compiles": codegen_compiles(spark) - compiled,
         # per scd2 model: versions closed, brand-new keys, batch id
         "model_scd2": runner.last_scd2,
         "total_seconds": round(time.perf_counter() - t0, 3),

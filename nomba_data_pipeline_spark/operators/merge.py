@@ -1103,9 +1103,11 @@ class ParquetTable:
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
         gate=None,
-    ) -> None:
+    ) -> list | None:
         """O8 'special' load (base_loader.py:419-555): upsert then keep only
-        the latest row per key by tracking column.
+        the latest row per key by tracking column. Returns what
+        merge_upsert returns: the affected partition-value rows of a
+        partitioned target (empty when the delta is), else None.
 
         The reference does this as three server-side SQL passes (dup-count
         check :496-507, composite NOT IN delete :513-522); one window pass
@@ -1145,7 +1147,7 @@ class ParquetTable:
                 keep_latest(delta.withColumn("__is_delta", F.lit(1))),
                 partition_by=partition_by,
             )
-            return
+            return None
         if evolve_schema:
             # same one-time rewrite policy as merge_upsert: widen new
             # columns, promote widened shared types, refuse narrowing
@@ -1162,11 +1164,11 @@ class ParquetTable:
             ))
 
         if partition_by:
-            self._merge_scoped_partitions(
+            return self._merge_scoped_partitions(
                 target, delta, keys, partition_by, combine
             )
-            return
         self.overwrite(combine(target, delta))
+        return None
 
     def snapshot_append(self, df: DataFrame, derived_col: str = "ingest_date") -> None:
         """O10 snapshot load (base_loader.py:606-677): stamp today's date,

@@ -1971,19 +1971,6 @@ class VersionedTable:
             expected_parent=man["version"], cdf="empty",
         )
 
-    def drop_constraint(self, name: str) -> int:
-        """Remove a CHECK constraint — one metadata commit."""
-        man = self._resolve(None)
-        cons = dict(man.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(f"no constraint {name!r} on {self.path}")
-        del cons[name]
-        return self._commit(
-            list(man["files"]), "drop_constraint", man["schema"],
-            {"constraints": cons, "dropped_constraint": name},
-            expected_parent=man["version"], cdf="empty",
-        )
-
     def _violation_counts(self, df: DataFrame,
                           cons: dict[str, str], op: str) -> dict[str, int]:
         """Violations per constraint in ONE aggregate over `df` — the

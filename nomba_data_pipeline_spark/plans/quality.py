@@ -13,16 +13,18 @@ metrics to ONE decoder (`QualitySpec._decode`), so the check set, the
     over a stored table — per-column null counts, distinct counts (for
     unique), out-of-set counts and relationship orphans fold into a
     single `df.agg(...)`, so a model pays one scan for its whole test
-    battery + row count instead of one action per test. First builds,
-    `table` models, the CLI `validate` verb and every refresh whose
-    stored files or declared checks are not the ones an earlier gate
-    certified run this.
+    battery + row count instead of one action per test. First builds
+    of `incremental` and `scd2` models, the CLI `validate` verb, views,
+    `versioned_incremental` models and every refresh whose stored files
+    or declared checks are not the ones an earlier gate certified run
+    this.
   * the WRITE gate (`WriteGate`): the same metrics as Observations on
-    the rows a refresh already writes — no read-back, no extra Spark
-    action. Exact only against a certified target: rows the merge
-    carries over unchanged were counted by the gate that certified
-    them, so only the written rows need counting (the runner decides
-    when that holds).
+    the rows a write already materializes — no read-back, no extra
+    Spark action. A `table` model's overwrite writes every row, so its
+    gate is exact with no certificate. A merge's gate is exact only
+    against a certified target: rows the merge carries over unchanged
+    were counted by the gate that certified them, so only the written
+    rows need counting (the runner decides when that holds).
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from __future__ import annotations
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -220,7 +222,10 @@ class WriteGate:
         is the table's excess-duplicate count: the anti-join makes the
         carried keys disjoint from the delta's, and the certified target
         held each carried key once. A keep-latest merge writes one row
-        per key and calls neither hook: its excess is 0 by construction.
+        per key and calls neither hook: its excess is 0 by construction;
+      * `overwrite(df)`: every row of a `table` model's full overwrite,
+        `unique` included. Nothing is carried over, so this form needs
+        no certificate.
 
     Each hook wraps a NEW frame that only the write's plan reaches, once
     — an observed node on two branches of one plan would count twice,
@@ -240,9 +245,29 @@ class WriteGate:
         self._observed.append(obs)
         return df.observe(obs, *aggs)
 
-    def rows(self, df: DataFrame) -> DataFrame:
+    def rows(self, df: DataFrame, extra=(), drop=()) -> DataFrame:
         joined, rel_aggs, marks = self.spec._relationship_join(df, self.resolve)
-        return self._observe(joined, self.spec._row_aggs() + rel_aggs).drop(*marks)
+        return self._observe(
+            joined, self.spec._row_aggs() + [*extra, *rel_aggs]
+        ).drop(*marks, *drop)
+
+    def overwrite(self, df: DataFrame) -> DataFrame:
+        """`rows(df)` for a write that replaces the whole table, plus
+        `unique` counted in the same plan: `count(key)`, and the rows
+        numbered 1 within their key (one per distinct non-NULL key). The
+        numbering column is dropped again before the write."""
+        extra, numbered = [], []
+        for i, c in enumerate(self.spec.unique):
+            rn = f"__rn{i}"
+            df = df.withColumn(
+                rn, F.row_number().over(Window.partitionBy(c).orderBy(c))
+            )
+            extra += [
+                F.count(c).alias(f"__u_cnt:{c}"),
+                F.count(F.when(F.col(rn) == 1, F.col(c))).alias(f"__u_dst:{c}"),
+            ]
+            numbered.append(rn)
+        return self.rows(df, extra, numbered)
 
     def delta(self, df: DataFrame) -> DataFrame:
         return self._count_unique(df, "__u_cnt")

@@ -334,18 +334,31 @@ class PipelineRunner:
                 # empty-delta short-circuit (schema-only, no data scan)
                 if spec.on_schema_change != "ignore":
                     self._apply_schema_policy(spec, target, df)
-                # steady-state short-circuit: an empty delta skips the
-                # whole merge (incl. the key-location scan over the
-                # target) — the delta plan itself is cheap because the
-                # hwm predicate pushes into the source scan. Nothing is
-                # written, so when the stored files are the ones an
+                # steady-state short-circuit for an unpartitioned
+                # target, whose merge would rewrite the whole table even
+                # for an empty delta: a one-row probe skips the merge
+                # (incl. the key-location scan over the target) — the
+                # delta plan itself is cheap because the hwm predicate
+                # pushes into the source scan. A partitioned merge needs
+                # no probe: its affected-partition collect finds nothing
+                # to rewrite in an empty delta and writes nothing.
+                # Nothing written: when the stored files are the ones an
                 # earlier gate certified, that verdict still holds and
                 # the count comes from parquet footers (zero Spark
                 # jobs). Any other stored state — a gate that failed, a
                 # crashed write, an out-of-band file — takes the full
                 # gate, so a rejected row never passes by standing still.
-                if df.limit(1).count() == 0:
+                if not spec.partition_by and df.limit(1).count() == 0:
                     return self._unchanged(spec, *self._certificate(spec))
+
+        if spec.materialization == "table":
+            # a full overwrite writes every row: its checks ride the
+            # write with no certificate
+            gate = WriteGate(spec.quality, spec.name, resolve=self.read_model)
+            target.overwrite(
+                gate.overwrite(df), partition_by=spec.partition_by or None
+            )
+            return self._write_gate_verdict(spec, gate, None)
 
         if spec.materialization == "incremental":
             self._apply_schema_policy(spec, target, df)
@@ -355,35 +368,42 @@ class PipelineRunner:
         gate = None if why else WriteGate(
             spec.quality, spec.name, resolve=self.read_model
         )
-        wrote = True
         if spec.materialization == "scd2":
             wrote = self._run_scd2_split(spec, df, gate)
-        elif spec.materialization == "incremental":
+        else:  # incremental
             pb = spec.partition_by or None
             if spec.dedup and spec.tracking_column:
-                target.merge_upsert_dedup(
+                affected = target.merge_upsert_dedup(
                     df, spec.upsert_key, spec.tracking_column,
                     partition_by=pb, gate=gate,
                 )
             else:
-                target.merge_upsert(df, spec.upsert_key, partition_by=pb, gate=gate)
-        else:  # table
-            target.overwrite(df, partition_by=spec.partition_by or None)
+                affected = target.merge_upsert(
+                    df, spec.upsert_key, partition_by=pb, gate=gate
+                )
+            wrote = affected != []  # None: the whole table was written
 
+        if not wrote:
+            return self._unchanged(spec, cert, why)
         if gate is None:
             # one fused aggregation runs the whole test battery AND
             # returns the row count — one post-write scan, not one per test
             return self._full_gate(spec, why, cert)
-        if not wrote:
-            return self._unchanged(spec, cert, why)
+        return self._write_gate_verdict(spec, gate, cert)
+
+    def _write_gate_verdict(self, spec: ModelSpec, gate: WriteGate,
+                           cert: dict | None) -> int:
+        """Decode the write gate over the stored row count; a pass
+        continues a merge's certificate chain `cert`."""
         total = self._stored_rows(spec)
-        self.last_gates[name] = "write"
+        self.last_gates[spec.name] = "write"
         try:
             gate.assert_ok(total)
         except AssertionError:
             self._rm_dir(self._certificate_path(spec))
             raise
-        self._certify(spec, cert["chain"])
+        if cert is not None:
+            self._certify(spec, cert["chain"])
         return total
 
     # -- gate certificates ---------------------------------------------------
@@ -455,9 +475,8 @@ class PipelineRunner:
 
     def _gate_form(self, spec: ModelSpec) -> tuple[dict | None, str]:
         """(the model's valid certificate or None, why the full gate
-        runs — "" when this refresh's checks may ride its write)."""
-        if spec.materialization not in ("incremental", "scd2"):
-            return None, f"{spec.materialization} model"
+        runs — "" when this refresh's checks may ride its write), for
+        an incremental or scd2 model."""
         if not self.table(self._stored_tables(spec)[0]).exists():
             return None, "first build"
         cert, why = self._certificate(spec)

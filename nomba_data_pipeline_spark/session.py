@@ -21,6 +21,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Janino-compiled classes kept across queries. Spark's default of 100 is
+# less than one refresh cycle of the medallion DAG, so every cycle
+# compiled again what the previous one had compiled and then evicted: a
+# warm seed-7 `elt_cdc` cycle (sf0.01, 4-core box) compiled 185-188
+# classes. At 1024 (about five cycles' worth) warm cycles compiled
+# 24-34; those inline a new high-water-mark literal or carry renumbered
+# codegen stage ids. Static conf: it only applies when this factory
+# creates the session, so a host-supplied session keeps its own value.
+CODEGEN_CACHE_ENTRIES = 1024
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM has compiled since it started (Spark's codegen
+    compile counter); the difference over a run is that run's compiles."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
 
 def get_spark(
     app_name: str = "nomba-data-pipeline-spark",
@@ -50,6 +67,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # INT96 (the legacy default) writes NO column statistics, which
         # silently defeats footer-stat readers (high_water_mark_stats)
         # and min/max pruning on timestamp columns; TIMESTAMP_MICROS is

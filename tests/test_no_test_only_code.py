@@ -23,7 +23,9 @@ non-package file above, the package's module-level statements
 definition is live once a live body or a root names it, so a helper
 that only dead code calls is dead too. A method is reached the same
 way; a live class's whole body, every method included, counts as one
-live body. Name matching is deliberately loose (any `x.run` keeps
+live body, except that no def's own body counts as a reference to that
+def (a method that passes its own name as a string is not kept alive by
+it). Name matching is deliberately loose (any `x.run` keeps
 every `run` alive), so the scan errs toward missing dead code. A
 definition reached only through a name built
 at run time (getattr on a computed string) is flagged wrongly and
@@ -94,9 +96,15 @@ _PROTOCOL = frozenset({
 })
 
 
-def _names(node: ast.AST) -> set[str]:
+def _names(node: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """The names `node` references, leaving out the subtree `skip`."""
     out = set()
-    for n in ast.walk(node):
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        if n is skip:
+            continue
+        todo.extend(ast.iter_child_nodes(n))
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
@@ -159,20 +167,36 @@ def _scan() -> tuple[dict[str, ast.AST], frozenset[str]]:
 
 def unreached(defs, roots, keep) -> list[str]:
     """Qualified names of `defs` no root reaches, KEEP entries being
-    roots themselves."""
-    reached = set(roots)
+    roots themselves. A def's own body never reaches it: a live class
+    reaches one of its methods only when the rest of the class names
+    it."""
+    owner = {id(m): q for q, c in defs.items()
+             if isinstance(c, ast.ClassDef) for m in c.body}
+    named_by: dict[str, set[str]] = {}  # name -> live defs naming it
     live = set()
+
+    def mark(q: str) -> None:
+        live.add(q)
+        for name in _names(defs[q]):
+            named_by.setdefault(name, set()).add(q)
+
+    def reached(node) -> bool:
+        if node.name in roots:
+            return True
+        by = named_by.get(node.name, set())
+        cls = owner.get(id(node))
+        return bool(by - {cls}) or cls in by and node.name in _names(
+            defs[cls], skip=node)
+
     for q in keep:
         if q in defs:
-            live.add(q)
-            reached |= _names(defs[q])
+            mark(q)
     grew = True
     while grew:
         grew = False
         for q, node in defs.items():
-            if q not in live and node.name in reached:
-                live.add(q)
-                reached |= _names(node)
+            if q not in live and reached(node):
+                mark(q)
                 grew = True
     return sorted(set(defs) - live)
 
@@ -278,6 +302,9 @@ class Table:
     def dead_method(self):
         return dead_method_helper()
 
+    def self_named(self):
+        return self.commit("self_named")
+
 def dead_method_helper():
     return 4
 
@@ -293,7 +320,8 @@ Table()
     for node in tree.body:
         if not isinstance(node, _DEFS):
             roots |= _names(node)
-    # a live class's whole body counts as a reference, as with any def
+    # a live class's whole body counts as a reference, as with any def,
+    # but a method naming itself does not keep itself alive
     assert unreached(defs, roots, {"kept"}) == [
-        "Table.dead_method", "dead", "dead_helper",
+        "Table.dead_method", "Table.self_named", "dead", "dead_helper",
     ]

@@ -1,10 +1,11 @@
 """The quality gate's two forms: the full read-back gate and the
-write-time gate that rides a certified refresh's own write.
+write-time gate that rides a write: a `table` model's overwrite, or a
+certified refresh's merge.
 
-The write gate counts only the rows a refresh writes and trusts the rows
-it carries over because an earlier passing gate certified them. These
-tests pin when that trust holds (and when it must fall back to the full
-gate), and that both forms reach the same {check: count} verdicts."""
+A merge's write gate counts only the rows the refresh writes and trusts
+the rows it carries over because an earlier passing gate certified them.
+These tests pin when that trust holds (and when it must fall back to the
+full gate), and that both forms reach the same {check: count} verdicts."""
 
 from __future__ import annotations
 
@@ -23,8 +24,10 @@ from nomba_data_pipeline_spark.plans.quality import QualitySpec, WriteGate
 from nomba_data_pipeline_spark.plans.runner import ModelSpec, PipelineRunner
 from tests.conftest import SF_SMALL
 
-GATED = ("users_snapshot", "stg_plans", "dim_plans", "stg_transactions",
-         "fact_transactions")
+TABLES = ("stg_users", "dim_users")  # full overwrites: no certificate
+MERGED = ("users_snapshot", "stg_plans", "dim_plans", "stg_transactions",
+          "fact_transactions")
+GATED = TABLES + MERGED
 
 
 def _plans(k: int, bad: str | None = None):
@@ -86,15 +89,30 @@ def _txns(k: int, bad: str | None = None):
     return fn
 
 
-def _users(k: int):
-    return lambda s, sf: simulate_user_updates(
-        M.stg_users(s, sf), fraction=0.2, seed=k, new_segment=f"S{k}"
-    )
+def _users(k: int, bad: str | None = None):
+    """stg_users source for cycle k: 20% of users moved to segment S<k>.
+    `bad`: "dup" repeats one user, "null_name" blanks some full names."""
+
+    def fn(s, sf):
+        out = simulate_user_updates(
+            M.stg_users(s, sf), fraction=0.2, seed=k, new_segment=f"S{k}"
+        )
+        if bad == "dup":
+            out = out.unionByName(out.orderBy("user_id").limit(1))
+        if bad == "null_name":
+            out = out.withColumn(
+                "full_name",
+                F.when(F.pmod(F.col("user_id"), F.lit(50)) == 0, F.lit(None))
+                .otherwise(F.col("full_name")),
+            )
+        return out
+
+    return fn
 
 
 def _cycle(k: int, **bad) -> dict:
     return {
-        "stg_users": _users(k),
+        "stg_users": _users(k, bad.get("users")),
         "stg_plans": _plans(k, bad.get("plans")),
         "stg_transactions": _txns(k, bad.get("txns")),
     }
@@ -233,7 +251,8 @@ def test_out_of_band_file_takes_the_full_gate(spark, tmp_path, capsys):
 
 
 def test_gate_forms_are_reported(spark, tmp_path, capsys):
-    """last_gates (and the CLI `run` JSON): the first build runs full
+    """last_gates (and the CLI `run` JSON): a `table` model always runs
+    its checks on its overwrite; otherwise the first build runs full
     gates, a certified refresh runs its checks on the write, a run that
     writes nothing keeps the verdict, and after an erasure rewrote the
     tables the refresh runs full gates again."""
@@ -243,8 +262,8 @@ def test_gate_forms_are_reported(spark, tmp_path, capsys):
     r = build_pipeline(spark, wh, SF_SMALL)
     r.run()
     assert r.last_gates == {
-        "stg_users": "full: table model", "dim_users": "full: table model",
-        **{m: "full: first build" for m in GATED},
+        **{m: "write" for m in TABLES},
+        **{m: "full: first build" for m in MERGED},
     }
 
     r = build_pipeline(spark, wh, SF_SMALL, source_override=_cycle(1))
@@ -256,6 +275,7 @@ def test_gate_forms_are_reported(spark, tmp_path, capsys):
                  "--only", "stg_transactions"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["model_gates"] == {"stg_transactions": "unchanged"}
+    assert isinstance(out["codegen_compiles"], int) and out["codegen_compiles"] >= 0
 
     user = (r.table("fact_transactions").read()
             .filter(F.col("user_id").isNotNull()).select("user_id").first()[0])
@@ -265,9 +285,33 @@ def test_gate_forms_are_reported(spark, tmp_path, capsys):
     r = build_pipeline(spark, wh, SF_SMALL, source_override={
         "stg_users": _users(2), "stg_plans": _plans(2)})
     r.run()
-    assert {m: r.last_gates[m] for m in GATED} == {
-        m: "full: files changed" for m in GATED
+    assert r.last_gates == {
+        **{m: "write" for m in TABLES},
+        **{m: "full: files changed" for m in MERGED},
     }
+
+
+def test_unchanged_rerun_writes_nothing_to_the_partitioned_fact(spark, tmp_path):
+    """A rerun over unchanged sources: the partitioned fact's merge runs
+    without an emptiness probe in front of it, finds no partition to
+    rewrite, leaves the fact's files as they were and keeps its
+    certified verdict."""
+    wh = str(tmp_path / "wh")
+    build_pipeline(spark, wh, SF_SMALL).run()
+    r = build_pipeline(spark, wh, SF_SMALL)
+    fact = r.models["fact_transactions"]
+    before = r._fingerprint(fact)
+    sc = spark.sparkContext
+    sc.setJobGroup("unchanged_rerun", "unchanged rerun")
+    try:
+        r.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.last_gates["fact_transactions"] == "unchanged"
+    assert r._fingerprint(fact) == before
+    # 30 jobs while the fact probed its delta and the `table` models
+    # re-read their overwrite for the checks
+    assert len(sc.statusTracker().getJobIdsForGroup("unchanged_rerun")) < 30
 
 
 def test_write_gate_agrees_with_full_gate(spark, tmp_path, write_gates):
@@ -293,6 +337,12 @@ def test_write_gate_agrees_with_full_gate(spark, tmp_path, write_gates):
             r.run(only=[only])
         return r
 
+    # a duplicate key and a NULL in a `table` model's overwrite
+    for case, match in (("dup", "unique:user_id': 1"),
+                        ("null_name", "not_null:full_name")):
+        r = bad_run(f"users_{case}", "stg_users", match, users=case)
+        assert r.last_gates["stg_users"] == "write"
+        _assert_agree(r, write_gates)
     # a duplicate key in a non-dedup model; an out-of-set value
     for case, match in (("dup", "unique:plan_id': 1"), ("status", "accepted_values:status")):
         r = bad_run(case, "stg_plans", match, plans=case)
